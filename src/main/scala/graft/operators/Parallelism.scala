@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias}
 
 /** Adaptive scan fan-out for CPU-dense kernel passes (guide §2.5,
@@ -53,13 +54,15 @@ object Parallelism {
     * shapes whose `.rdd` probe plans cheaply and runs no job. Also used
     * by operators deciding whether a multi-consumer input needs a
     * materialization (a scan re-reads cheaply; a derived plan pays its
-    * kernels once per consumer). */
-  private[operators] def scanOnly(p: LogicalPlan): Boolean = p match {
-    case _: LeafNode => true
-    case _: Project | _: Filter | _: SubqueryAlias =>
-      p.children.forall(scanOnly)
-    case _ => false
-  }
+    * kernels once per consumer). A subquery in any expression is a
+    * second plan the probe would plan (and may run), so it disqualifies. */
+  private[graft] def scanOnly(p: LogicalPlan): Boolean =
+    !p.expressions.exists(SubqueryExpression.hasSubquery) && (p match {
+      case _: LeafNode => true
+      case _: Project | _: Filter | _: SubqueryAlias =>
+        p.children.forall(scanOnly)
+      case _ => false
+    })
 
   /** `df` repartitioned to the session's core count when it is a plain
     * scan whose physical plan would execute in fewer partitions; `df`

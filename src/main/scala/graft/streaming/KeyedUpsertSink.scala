@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, pmod}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, hash, lit, max, pmod}
+import org.apache.spark.storage.StorageLevel
 
 /** Keyed upsert into a hash-bucketed parquet table — the engine's
   * replacement for the reference's per-row `insert … on duplicate key
@@ -17,13 +19,22 @@ import org.apache.spark.sql.functions.{col, hash, pmod}
   * read-add-write which double-counts on replay (SURVEY.md §2.8).
   *
   * The table is partitioned into `bucket=<hash(key) mod N>` directories
-  * so an upsert's I/O is O(batch), not O(table): only buckets containing
-  * batch keys are read (partition-pruned), merged, and rewritten —
-  * untouched buckets are not opened and their files stay byte-identical.
-  * At detail-table scale this is the difference between a micro-batch
-  * rewriting gigabytes per trigger and rewriting only the generations it
-  * touched. The bucket count is fixed at table creation (persisted in
-  * `_graft_nbuckets`) so the key→bucket mapping never shifts.
+  * and an upsert reads, merges and rewrites only the buckets holding
+  * batch keys; untouched buckets are not opened and their files stay
+  * byte-identical. A batch of K distinct keys touches the fraction
+  * 1−e^{−K/N} of the N buckets, so its I/O is that fraction of the
+  * table — O(batch) only while K ≪ N. Each touched bucket is rewritten
+  * as one file, so a batch costs one file per touched bucket. The
+  * default N = 16 is sized on J2's traffic: ≤3,000 lines per batch
+  * (the reference's rate cap, SURVEY.md §6) over the 1,000-key domain
+  * of 50 users × 4 courses × 5 points the fixtures draw from
+  * (`FixtureProducers.qzLines`). There K is in the hundreds, every
+  * batch touches nearly every bucket whatever N is, and fewer buckets
+  * mean fewer files per batch. N also stays ≤ 32, Spark's
+  * parallel-listing threshold, so reading the touched directories
+  * never launches a listing job. The bucket count is fixed at table
+  * creation (persisted in `_graft_nbuckets`), so the key→bucket mapping
+  * never shifts: a table created with another count keeps it.
   *
   * Crash safety is the same recoverable-generation protocol as before,
   * now per bucket: the batch's merged buckets are written to
@@ -122,7 +133,7 @@ object KeyedUpsertSink {
     * `nBuckets` applies at table creation; existing tables keep their
     * persisted bucket count. */
   def upsert(rows: DataFrame, tableDir: String, keys: Seq[String],
-      nBuckets: Int = 256): Unit = {
+      nBuckets: Int = 16): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     require(!rows.columns.contains(BucketCol),
       s"upsert: rows already carry a '$BucketCol' column — it is the " +
@@ -137,16 +148,19 @@ object KeyedUpsertSink {
 
     val existingN = readMeta(fs, dir)
     val n = existingN.getOrElse(nBuckets)
-    // the batch is read twice (touched-bucket collect + merged write);
-    // persisting pins ONE evaluation, so a nondeterministic batch
-    // lineage cannot place a row in a bucket the collect never saw
-    // (whose swap would then drop that bucket's pre-existing keys)
     def withBucket(df: DataFrame): DataFrame =
-      df.withColumn(BucketCol, pmod(hash(keys.map(col): _*),
-        org.apache.spark.sql.functions.lit(n)))
-    val rowsB = withBucket(rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
+    // the batch is read twice (touched-bucket collect + merged write);
+    // persisting pins ONE evaluation, so a stateful or nondeterministic
+    // batch lineage runs once and cannot place a row in a bucket the
+    // collect never saw (whose swap would then drop that bucket's
+    // pre-existing keys)
+    val rowsB = withBucket(rows).persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      // one job, no shuffle: each partition's distinct buckets
+      val touched = rowsB.select(col(BucketCol)).as(Encoders.scalaInt)
+        .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+        .collect().toSet
       // root-level parquet files = a pre-bucketing (flat-layout) table:
       // fold them into this merge (one-time O(table) migration) and
       // remove them after the swap — otherwise their rows would be
@@ -157,46 +171,39 @@ object KeyedUpsertSink {
           !st.getPath.getName.startsWith("."))
           .map(_.getPath)
       else Seq.empty
+      if (touched.isEmpty && legacy.isEmpty) return
 
-      val buckets = bucketDirs(fs, dir)
-      // empty-bucket guard in the nonEmpty checks: a crash after the
-      // meta write but before the first swap leaves a table with zero
-      // bucket dirs — nothing to merge against (and nothing parquet
-      // could infer a schema from)
-      val merged =
-        if (legacy.nonEmpty) {
-          // migration pass: fold flat files + every bucket into one
-          // full rewrite. On the replay where a previous migration
-          // crashed after the swap but before the legacy delete, the
-          // same key exists in BOTH layouts and the bucketed copy is
-          // always at least as new — legacy rows whose key already has
-          // a bucketed row are discarded (an arbitrary-winner
-          // dropDuplicates could resurrect the stale legacy value).
-          val legacyDf =
-            withBucket(spark.read.parquet(legacy.map(_.toString): _*))
-          val sources =
-            if (buckets.isEmpty) legacyDf
-            else {
-              val bucketed = withBucket(
-                spark.read.parquet(buckets.map(_.toString): _*))
-              bucketed.unionByName(
-                legacyDf.join(bucketed.select(keys.map(col): _*),
-                  keys, "left_anti"))
-            }
-          sources
-            .join(rowsB.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(rowsB)
-        } else if (buckets.nonEmpty) {
-          // steady state: only buckets containing batch keys
-          // participate; the filter is a partition-pruning predicate,
-          // so untouched buckets are never even opened
-          val touched = rowsB.select(col(BucketCol)).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          spark.read.parquet(tableDir)
-            .filter(col(BucketCol).isin(touched: _*))
-            .join(rowsB.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(rowsB)
-        } else rowsB
+      // steady state reads only the touched buckets' directories,
+      // named on the driver and read with the batch's schema: no
+      // listing job, no schema-inference job, and untouched buckets are
+      // never opened. A migration folds every bucket and the flat files
+      // into one full rewrite.
+      val buckets = bucketDirs(fs, dir).filter(b => legacy.nonEmpty ||
+        touched.exists(t => b.getName == s"$BucketCol=$t"))
+      // every source row carries a precedence; per key only the rows of
+      // the highest one survive: the batch replaces stored rows, and on
+      // the replay of a migration that crashed after its swap, a
+      // bucketed row (always at least as new) beats the stale legacy
+      // copy of its key
+      val sources =
+        (if (legacy.isEmpty) Nil
+        else Seq(0 -> spark.read.parquet(legacy.map(_.toString): _*))) ++
+        (if (buckets.isEmpty) Nil
+        else Seq(1 -> spark.read.schema(rows.schema)
+          .parquet(buckets.map(_.toString): _*)))
+      val rank = "_graft_rank"
+      val top = "_graft_top"
+      // the window's keys include the bucket, so it runs inside the
+      // bucket exchange and the merge adds no shuffle of its own; each
+      // bucket lands in one task and is written as one file
+      val merged = sources
+        .map { case (r, df) => withBucket(df).withColumn(rank, lit(r)) }
+        .foldLeft(rowsB.withColumn(rank, lit(2)))(_ unionByName _)
+        .repartition(col(BucketCol))
+        .withColumn(top, max(col(rank)).over(
+          Window.partitionBy((BucketCol +: keys).map(col): _*)))
+        .filter(col(rank) === col(top))
+        .drop(rank, top)
       if (existingN.isEmpty) {
         fs.mkdirs(dir)
         writeMeta(fs, dir, n)
@@ -218,5 +225,5 @@ object KeyedUpsertSink {
   /** foreachBatch hook: upsert every micro-batch of full-state rows. */
   def foreachBatchUpsert(tableDir: String, keys: Seq[String])
       : (DataFrame, Long) => Unit =
-    (batch, _) => if (!batch.isEmpty) upsert(batch, tableDir, keys)
+    (batch, _) => upsert(batch, tableDir, keys)
 }

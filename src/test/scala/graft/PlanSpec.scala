@@ -333,6 +333,17 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("partial"), p) // map-side combine of the heap
   }
 
+  test("scanOnly: a projection carrying a scalar subquery is not a " +
+    "scan (its width probe would plan the subquery too)") {
+    import graft.operators.Parallelism.scanOnly
+    def analyzed(sql: String) = spark.sql(sql).queryExecution.analyzed
+    assert(scanOnly(analyzed("select id from range(10) where id > 2")))
+    assert(!scanOnly(analyzed(
+      "select id, (select max(id) from range(3)) as m from range(10)")))
+    assert(!scanOnly(analyzed(
+      "select id from range(10) where id > (select min(id) from range(3))")))
+  }
+
   test("no query plans a partition-less WindowExec (the single-task " +
     "global-sort plan; constant partition keys constant-fold to an " +
     "EMPTY spec, so this catches the whole lit-group bug class)") {

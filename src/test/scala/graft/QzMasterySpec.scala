@@ -257,6 +257,86 @@ class QzMasterySpec extends SparkTestBase {
       i -> (if (i == 7) 777L else i * 10L)).toMap)
   }
 
+  private def dataFiles(dir: java.io.File): Seq[String] =
+    Option(dir.listFiles()).toSeq.flatten.map(_.getName)
+      .filterNot(f => f.startsWith("_") || f.startsWith(".") ||
+        f.endsWith(".crc"))
+
+  private def tableBytes(table: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(table)
+    val s = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq)
+        .toMap
+    } finally s.close()
+  }
+
+  test("keyed-upsert sink: a batch into an existing table runs at most " +
+    "3 jobs, none wider than its inputs' splits, and leaves one file " +
+    "per touched bucket") {
+    import graft.streaming.KeyedUpsertSink
+    val table = java.nio.file.Files
+      .createTempDirectory("graft_jobs_").toString + "/detail"
+    val N = 16
+    KeyedUpsertSink.upsert((1 to 200).map(i => (i, i * 10L))
+      .toDF("uid", "v"), table, Seq("uid"), nBuckets = N)
+
+    // 40 replaced keys and 20 new ones
+    val batch = ((1 to 80 by 2).map(i => (i, -i.toLong)) ++
+      (201 to 220).map(i => (i, i * 10L))).toDF("uid", "v")
+    val (_, jobs) = jobsOf("upsert-jobcount") {
+      KeyedUpsertSink.upsert(batch, table, Seq("uid"))
+    }
+    // touched-bucket collect, bucket exchange, write — no isEmpty
+    // probe, no second evaluation of the batch, no listing or
+    // schema-inference job
+    assert(jobs.size <= 3, s"jobs (id, tasks): $jobs")
+    // no job grows with the bucket or file count (a parallel listing
+    // runs one task per directory): the widest job is the exchange's
+    // map stage, one task per batch partition plus the touched files
+    // packed into at most one split per core
+    val widest = batch.rdd.getNumPartitions +
+      spark.sparkContext.defaultParallelism
+    assert(jobs.forall(_._2 <= widest), s"jobs (id, tasks): $jobs")
+
+    val touched = batch.select(pmod(hash($"uid"), lit(N))).as[Int]
+      .collect().toSet
+    for (b <- touched) {
+      val files = dataFiles(new java.io.File(table, s"bucket=$b"))
+      assert(files.size === 1, s"bucket=$b holds $files")
+    }
+    assert(KeyedUpsertSink.read(spark, table).as[(Int, Long)].collect()
+      .toMap === ((1 to 200).map(i => i -> i * 10L) ++
+        (1 to 80 by 2).map(i => i -> -i.toLong) ++
+        (201 to 220).map(i => i -> i * 10L)).toMap)
+  }
+
+  test("keyed-upsert sink: an empty micro-batch runs one job and writes " +
+    "nothing") {
+    import graft.streaming.KeyedUpsertSink
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_empty_").toString
+    val table = base + "/detail"
+    val hook = KeyedUpsertSink.foreachBatchUpsert(table, Seq("uid"))
+    val empty = Seq.empty[(Int, Long)].toDF("uid", "v")
+
+    // fresh path: no table directory, no bucket-count file
+    assert(jobsOf("upsert-empty-fresh")(hook(empty, 0L))._2.size === 1)
+    assert(!new java.io.File(table).exists())
+    assert(!new java.io.File(table, "_graft_nbuckets").exists())
+
+    // existing table: every file stays byte-identical
+    hook(Seq((1, 10L), (2, 20L)).toDF("uid", "v"), 1L)
+    val before = tableBytes(table)
+    assert(jobsOf("upsert-empty-existing")(hook(empty, 2L))._2.size === 1)
+    assert(tableBytes(table) === before)
+    assert(new java.io.File(base).list().toSet === Set("detail"))
+  }
+
   test("merge is batch-split invariant") {
     val all = QzMasteryStream.merge(
       QzMasteryStream.MasteryState(Set.empty, 0, 0, ""), events)

@@ -211,23 +211,11 @@ class VocabSpec extends SparkTestBase {
     }
     val docs = rows.toDF("text")
     def jobsFor(n: Int): (Int, List[(Long, String, String, Long)]) = {
-      val group = s"bpe-jobcount-$n"
-      spark.sparkContext.setJobGroup(group, group,
-        interruptOnCancel = false)
-      val table =
-        try Vocab.bpeMerges(docs, col("text"), nMerges = n)
+      val (table, jobs) = jobsOf(s"bpe-jobcount-$n") {
+        Vocab.bpeMerges(docs, col("text"), nMerges = n)
           .as[(Long, String, String, Long)].collect().toList
-        finally spark.sparkContext.clearJobGroup()
-      // the status store is fed asynchronously — poll until stable
-      def count(): Int =
-        spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      var cur = count()
-      var waited = 0
-      while (cur != prev && waited < 5000) {
-        prev = cur; Thread.sleep(250); waited += 250; cur = count()
       }
-      (cur, table)
+      (jobs.size, table)
     }
     val (jobs8, got8) = jobsFor(8)
     val (jobs48, got48) = jobsFor(48)
