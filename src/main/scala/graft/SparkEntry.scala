@@ -379,8 +379,7 @@ object SparkEntry {
           Artifacts.tableFingerprint(dir, "embeddings")) { p =>
         graft.operators.IvfIndex.build(corpus, p, nLists = 16)
       } { p =>
-        graft.operators.IvfIndex.searchTopK(s, p, delta,
-          k = 10, nProbe = 12)
+        graft.operators.IvfIndex.search(s, p, delta, k = 10, nProbe = 12)
       }
       Similarity.recallGate(approx,
         Similarity.cosineTopK(corpus, delta, k = 10),
@@ -406,8 +405,7 @@ object SparkEntry {
         graft.operators.IvfIndex.build(base, p, nLists = 16)
         graft.operators.IvfIndex.append(s, p, delta)
       } { p =>
-        graft.operators.IvfIndex.searchTopK(s, p, queries,
-          k = 10, nProbe = 12)
+        graft.operators.IvfIndex.search(s, p, queries, k = 10, nProbe = 12)
       }
       Similarity.recallGate(approx,
         Similarity.cosineTopK(emb, queries, k = 10),
@@ -1571,13 +1569,15 @@ object SparkEntry {
     // weekly cohort retention in engine-independent integer weeks
     "x73_retention" -> ((s, dir) =>
       graft.analytics.Funnels.retention(Tables.events(s, dir))),
-    // PQ/ADC scan (the memory-bound half of IVF+PQ): codes-only
-    // scoring; recall-gated like the other seed-dependent ANN paths
+    // PQ/ADC scan (the memory-bound half of IVF+PQ): one cell holds
+    // the whole corpus, so every non-self vector is scored from its
+    // codes only; recall-gated like the other seed-dependent ANN paths
     "x83_ann_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
       Similarity.recallGate(
-        Similarity.pqTopK(emb, qs, k = 10, m = 32, ksub = 256),
+        Similarity.ivfTopK(emb, qs, k = 10, nLists = 1, nProbe = 1, m = 32,
+          ksub = 256),
         Similarity.cosineTopK(emb, qs, k = 10), floor = AnnPqRecallFloor)
     }),
     // the composed billion-scale index: IVF cuts candidates, PQ cuts
@@ -1590,7 +1590,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
       Similarity.recallGate(
-        Similarity.ivfPqTopK(emb, qs, k = 10, nLists = 16, nProbe = 1,
+        Similarity.ivfTopK(emb, qs, k = 10, nLists = 16, nProbe = 1,
           m = 32, ksub = 256, rerank = 50, probeMass = 0.9),
         Similarity.cosineTopK(emb, qs, k = 10),
         floor = AnnIvfPqRecallFloor)
@@ -1612,8 +1612,8 @@ object SparkEntry {
         graft.operators.IvfIndex.build(emb, p, nLists = 16, m = 32,
           ksub = 256)
       } { p =>
-        graft.operators.IvfIndex.searchPqTopK(s, p, qs, k = 10,
-          nProbe = 1, rerank = 50, probeMass = 0.9)
+        graft.operators.IvfIndex.search(s, p, qs, k = 10, nProbe = 1,
+          rerank = 50, probeMass = 0.9)
       }
       Similarity.recallGate(approx,
         Similarity.cosineTopK(emb, qs, k = 10),

@@ -29,22 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object ShingleOps {
   final val Seed = 42
 
-  /** Minimum xxhash64 over k-byte windows (winnowing-style rolling
-    * fingerprint). Caller guarantees numBytes >= k. */
-  def rollingMin(s: UTF8String, k: Int): Long = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val n = s.numBytes
-    var min = java.lang.Long.MAX_VALUE
-    var i = 0
-    while (i <= n - k) {
-      val h = XXH64.hashUnsafeBytes(base, off + i, k, Seed)
-      if (h < min) min = h
-      i += 1
-    }
-    min
-  }
-
   /** Unsigned-32-bit murmur3 hashes of every k-byte window (with
     * duplicates). Caller guarantees numBytes >= k. */
   private def windowHashes(s: UTF8String, k: Int): Array[Long] = {
@@ -350,30 +334,6 @@ private[functions] abstract class ShingleKernel extends UnaryExpression {
     defineCodeGen(ctx, ev, c => opsCall(c))
 }
 
-/** Winnowing-style rolling fingerprint column: min xxhash64 over k-byte
-  * windows; null for texts shorter than k bytes. */
-case class RollingMinHash(child: Expression, k: Int) extends ShingleKernel {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_rolling_minhash"
-  override protected def minBytes: Int = k
-  override protected def opsCall(input: String): String =
-    s"graft.functions.ShingleOps.rollingMin($input, $k)"
-
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[UTF8String]
-    if (s.numBytes < k) null else ShingleOps.rollingMin(s, k)
-  }
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |if ($c.numBytes() < $k) { ${ev.isNull} = true; }
-      |else { ${ev.value} = ${opsCall(c)}; }
-    """.stripMargin)
-  override protected def withNewChildInternal(c: Expression): RollingMinHash =
-    copy(child = c)
-}
-
 /** MinHash signature column (array<long> of 64 permutation minima);
   * null for texts shorter than k bytes. */
 case class MinHashSigExpr(child: Expression, k: Int) extends ShingleKernel {
@@ -582,8 +542,6 @@ object ShingleExprs {
   private def expr(c: Column) = GraftColumnBridge.expression(c)
   private def col(e: Expression) = GraftColumnBridge.column(e)
 
-  def rollingMinHash(text: Column, k: Int): Column =
-    col(RollingMinHash(expr(text), k))
   def minhashSignature(text: Column, k: Int): Column =
     col(MinHashSigExpr(expr(text), k))
   def shingleSet(text: Column, k: Int): Column =

@@ -73,13 +73,6 @@ object TextAnalysis {
   /** 64-bit content fingerprint (xxhash64 of the raw text). */
   def fingerprint(text: Column): Column = xxhash64(text)
 
-  /** Winnowing-style rolling fingerprint: minimum xxhash64 over k-byte
-    * windows — robust to local edits; a document-local codegen kernel
-    * (one pass, no intermediate array; see
-    * [[graft.functions.RollingMinHash]]). Null for texts under k bytes. */
-  def rollingFingerprint(text: Column, k: Int = 8): Column =
-    ShingleExprs.rollingMinHash(text, k)
-
   /** PII masking patterns, applied in order (most-specific first so a
     * span is claimed by its own class before a looser pattern can eat
     * part of it: IPv6 before IPv4, SSN/card before phone). All patterns
@@ -208,17 +201,4 @@ object TextAnalysis {
     * points. */
   def rollingPolyFingerprint(text: Column, k: Int = 8): Column =
     ShingleExprs.rollingPolyMin(text, k)
-
-  /** Character k-shingles (raw, with duplicates). Empty array for texts
-    * shorter than k; null for null text (matching the byte-window
-    * kernels in [[ShingleExprs]], which propagate null). */
-  def shingleArray(text: Column, k: Int): Column =
-    when(length(text) >= k,
-      transform(sequence(lit(1), length(text) - (k - 1)),
-        i => text.substr(i, lit(k))))
-      .otherwise(when(text.isNotNull, array()))
-
-  /** Distinct character n-grams. */
-  def ngramSet(text: Column, n: Int): Column =
-    array_distinct(shingleArray(text, n))
 }

@@ -678,18 +678,6 @@ object Dedup {
       b => struct(b.as("band"),
         xxhash64(slice(sig, b * RowsPerBand + 1, lit(RowsPerBand))).as("bh")))
 
-  /** MinHash signatures as one projection pass — the signature is a
-    * document-local computation (see [[graft.functions.MinHashSigExpr]]),
-    * so no explode and no shuffle: at corpus scale the explode→aggregate
-    * formulation shuffles ~15× the corpus size just to regroup shingles
-    * by the document they came from. Docs shorter than the shingle
-    * length are dropped (no signature). */
-  def minhashSignatures(docs: DataFrame, shingleLen: Int = 5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("id"),
-      ShingleExprs.minhashSignature(col(textCol), shingleLen).as("sig"))
-      .filter(col("sig").isNotNull)
-
   /** The full per-document dedup index relation — (id, sig, ng): minhash
     * signature for LSH banding plus the sorted distinct hashed-shingle set
     * for exact Jaccard verification. This is the relation to PERSIST

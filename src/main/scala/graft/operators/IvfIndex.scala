@@ -1,18 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.{PqExprs, VectorExprs}
 
 /** The PERSISTED IVF index — inverted lists included.
   *
-  * [[Similarity.ivfCentroids]]/[[Similarity.ivfTopKWithCentroids]]
-  * persist only the coarse quantizer: that eliminates per-batch
-  * RETRAINING, but every query batch still pays an O(|corpus|)
-  * assignment projection to rebuild the cell column. This object is
-  * the missing half — the layout every production IVF system (FAISS,
+  * [[Similarity.ivfTopK]] trains and assigns inside every query plan;
+  * this object is the layout every production IVF system (FAISS,
   * ScaNN, Milvus) actually ships: at build time the corpus is assigned
   * ONCE and written as a `(vec_id, v[, codes])` relation PARTITIONED
   * BY CELL, so a probe is a partition-pruned read of nProbe/nLists of
@@ -37,18 +31,16 @@ import graft.functions.{PqExprs, VectorExprs}
   *                  level makes [[append]] crash-safe: meta commits
   *                  the epoch COUNT last, so files of a torn append
   *                  sit in an epoch the readers never select;
-  *   - `codebooks/` (m > 0 only) the [[Similarity.pqCodebooks]]
-  *                  relation (j, c, pos, cval).
+  *   - `codebooks/` (m > 0 only) the PQ codebooks as a dense
+  *                  (j, c, pos, cval) relation.
   *
-  * Training is the shared deterministic contract
-  * ([[Similarity.trainFrame]] smallest-id byte-budgeted sample,
-  * [[KMeans.lloydIterateLocal]] — the ONE Lloyd trainer; for a PQ
-  * index the coarse quantizer and all m codebooks advance in the same
-  * grouped run, exactly [[Similarity.ivfPqTopK]]'s training), so the
-  * index is a pure function of the corpus and the searches here are
-  * provably row-for-row EQUAL to the recompute routes
-  * ([[Similarity.ivfTopKWithCentroids]] / [[Similarity.ivfPqTopK]]
-  * with the same geometry — the IvfIndexSpec load-path equality laws).
+  * Training is [[Similarity.ivfTopK]]'s ([[Similarity.trainIvf]]:
+  * smallest-id byte-budgeted sample, one grouped Lloyd run for the
+  * coarse quantizer and all m codebooks), and [[search]] runs the same
+  * kernel ([[Similarity.probeTopK]]) over the persisted lists, so the
+  * index is a pure function of the corpus and [[search]] is row-for-row
+  * EQUAL to [[Similarity.ivfTopK]] at the same geometry (the
+  * IvfIndexSpec load-path equality laws).
   *
   * Scale shape of a probe: centroids ride the plan as literals
   * (bounded nLists×dim collect); the probed CELL SET — ≤ nLists
@@ -73,31 +65,13 @@ object IvfIndex {
       maxTrainBytes: Long = 64L << 20): Unit = {
     require(nLists >= 1 && nLists <= 65536,
       s"IvfIndex.build: nLists must be in [1, 65536], got $nLists")
-    require(m >= 0, s"IvfIndex.build: m must be >= 0, got $m")
-    require(m == 0 || ksub >= 2,
-      s"IvfIndex.build: need ksub >= 2 for a PQ index, got $ksub")
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = Similarity.trainFrame(corpus, trainSample,
-      maxTrainBytes, "IvfIndex.build")
-    require(m == 0 || dim % m == 0,
-      s"IvfIndex.build: dim $dim is not divisible by m=$m")
-    val dsub = if (m > 0) dim / m else 0
-    // coarse quantizer and (for PQ) all m codebooks in ONE grouped
-    // Lloyd run — the ivfPqTopK training discipline
-    val specs = (0, dim, nLists) +:
-      (if (m > 0) Similarity.pqSpecs(m, ksub, dsub) else Seq.empty)
-    val all = Similarity.trainCenters(sample, specs, "IvfIndex.build")
-    val centers = all.head
-
-    val cbOpt =
-      if (m == 0) None
-      else Some(Similarity.flattenCodebooks(all.tail, m, ksub, dsub))
-    val assigned = assignRelation(corpus, centers, cbOpt, dim, m, ksub,
-      dsub, epoch = 0, what = "IvfIndex.build")
+    val corpus = Similarity.vectors(embeddings, idCol, embCol)
+    val (centers, pq) = Similarity.trainIvf(corpus, nLists, m, ksub,
+      trainSample, maxTrainBytes, "IvfIndex.build")
+    val assigned = Similarity.assign(corpus, centers, pq, "IvfIndex.build")
+      .withColumn("epoch", lit(0))
 
     // build in a sibling temp dir, rename into place: the committed
     // path either holds a COMPLETE index or nothing — a crash between
@@ -106,24 +80,22 @@ object IvfIndex {
     sweepTornBuilds(path, keep = tmp)
     deleteRecursively(new java.io.File(tmp))
     try {
-      // quantized-unit centroid relation, the KMeans artifact contract
-      val centRel = centers.zipWithIndex.map { case (c, i) =>
-        (i, c.map(_ * KMeans.Scale).toSeq)
-      }.toSeq.toDF("cluster", "centroid")
-      KMeans.saveCentroids(centRel, s"$tmp/quantizer")
+      KMeans.saveCentroids(Similarity.centroidRelation(spark, centers),
+        s"$tmp/quantizer")
       assigned.write.mode("overwrite").partitionBy("epoch", "cell")
         .parquet(s"$tmp/lists")
       // stats from the WRITTEN lists — a stamp of what is on disk, not
       // of what the plan intended (column-pruned: reads cell only)
       val nVecs = writeCellStats(spark, tmp)
-      cbOpt.foreach { cb =>
+      pq.foreach { p =>
         val rows = for {
-          j <- 0 until m; c <- 0 until ksub; d <- 0 until dsub
-        } yield (j, c, d, cb((j * ksub + c) * dsub + d))
+          j <- 0 until p.m; c <- 0 until p.ksub; d <- 0 until p.dsub
+        } yield (j, c, d, p.cb((j * p.ksub + c) * p.dsub + d))
         rows.toDF("j", "c", "pos", "cval")
           .coalesce(1).write.mode("overwrite").parquet(s"$tmp/codebooks")
       }
-      writeMeta(spark, tmp, nLists, dim, nVecs, m, ksub, nEpochs = 1)
+      writeMeta(spark, tmp, nLists, centers(0).length, nVecs, m, ksub,
+        nEpochs = 1)
 
       val target = new java.io.File(path)
       deleteRecursively(target)
@@ -210,27 +182,6 @@ object IvfIndex {
     }
   }
 
-  /** The shared assignment/encode projection of [[build]] and
-    * [[append]]: (vec_id, v[, codes], epoch, cell), one codegen pass. */
-  private def assignRelation(corpus: DataFrame,
-      centers: Array[Array[Double]], cbOpt: Option[Array[Double]],
-      dim: Int, m: Int, ksub: Int, dsub: Int, epoch: Int,
-      what: String): DataFrame = {
-    val cellCol = element_at(
-      Similarity.cellsRankedExpr(col("v"), centers), 1)("cell")
-    cbOpt match {
-      case None =>
-        corpus.select(col("vec_id"), col("v"),
-          lit(epoch).as("epoch"), cellCol.as("cell"))
-      case Some(cb) =>
-        corpus.select(col("vec_id"), col("v"),
-          PqExprs.encode(
-            Similarity.dimGuarded(col("v").cast("array<double>"), dim,
-              what), cb, m, ksub, dsub).as("codes"),
-          lit(epoch).as("epoch"), cellCol.as("cell"))
-    }
-  }
-
   /** Recompute `cellstats` from the WRITTEN lists (all epochs present
     * on disk — callers stamp the committed epoch count in meta
     * afterwards) and return the total row count. */
@@ -314,8 +265,8 @@ object IvfIndex {
     * [[graft.Artifacts.cached]]).
     *
     * Equality law (IvfIndexSpec): searching an appended index ≡
-    * [[Similarity.ivfTopKWithCentroids]] over (corpus ∪ delta) under
-    * the same frozen quantizer, row for row.
+    * the search kernel over (corpus ∪ delta) assigned by the same
+    * frozen quantizer, row for row.
     *
     * Scale shape: one assignment/encode projection over the DELTA
     * only plus a cell-keyed write — cost ∝ |delta|; the restamp is a
@@ -337,16 +288,7 @@ object IvfIndex {
     // apply in order, so checking only the LAST tag suffices.
     if (tag.isDefined && meta.lastTag == tag) return
     val centers = loadCenters(spark, path, meta)
-    val cbOpt =
-      if (meta.m == 0) None
-      else {
-        val (cb, m, ksub, dsub) = Similarity.collectCodebooks(
-          spark.read.parquet(s"$path/codebooks"), "IvfIndex.append")
-        require(m == meta.m && ksub == meta.ksub && m * dsub == meta.dim,
-          s"IvfIndex.append: codebooks are m=$m ksub=$ksub dsub=$dsub, " +
-            s"meta says m=${meta.m} ksub=${meta.ksub} dim=${meta.dim}")
-        Some(cb)
-      }
+    val pq = loadCodebooks(spark, path, meta)
     // sweep uncommitted epochs from a previously crashed append: their
     // files share the epoch number this append is about to write and
     // would otherwise be adopted (possibly duplicating the delta)
@@ -357,12 +299,9 @@ object IvfIndex {
           f.getName.drop("epoch=".length).toIntOption
             .exists(_ >= meta.nEpochs))
         .foreach(deleteRecursively)
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val dsub = if (meta.m > 0) meta.dim / meta.m else 0
-    assignRelation(corpus, centers, cbOpt, meta.dim, meta.m, meta.ksub,
-      dsub, epoch = meta.nEpochs, what = "IvfIndex.append")
+    Similarity.assign(Similarity.vectors(embeddings, idCol, embCol),
+        centers, pq, "IvfIndex.append")
+      .withColumn("epoch", lit(meta.nEpochs))
       .write.mode("append").partitionBy("epoch", "cell")
       .parquet(s"$path/lists")
     val nVecs = writeCellStats(spark, path)
@@ -384,6 +323,21 @@ object IvfIndex {
         s"meta says ${meta.nLists}×${meta.dim} — mixed artifact")
     centers
   }
+
+  /** The validated PQ codebooks of an `m > 0` index (None for m = 0),
+    * checked against the meta geometry. */
+  private def loadCodebooks(spark: SparkSession, path: String,
+      meta: Meta): Option[Similarity.Pq] =
+    Option.when(meta.m > 0) {
+      val pq = Similarity.collectCodebooks(
+        spark.read.parquet(s"$path/codebooks"), "IvfIndex")
+      require(pq.m == meta.m && pq.ksub == meta.ksub &&
+          pq.m * pq.dsub == meta.dim,
+        s"IvfIndex: codebooks are m=${pq.m} ksub=${pq.ksub} " +
+          s"dsub=${pq.dsub}, meta says m=${meta.m} ksub=${meta.ksub} " +
+          s"dim=${meta.dim} — mixed artifact")
+      pq
+    }
 
   /** Bounded validated cell masses (inverted-list lengths): dense over
     * observed cells, Σn must equal the meta row-count stamp — the
@@ -425,161 +379,25 @@ object IvfIndex {
         col("cell").isin(cells.map(Int.box): _*))
   }
 
-  /** Exact-cosine top-k through the persisted lists — the
-    * [[Similarity.ivfTopKWithCentroids]] semantics at ∝-probed-cells
-    * cost. Row-for-row EQUAL to that route on the same corpus and
-    * geometry (IvfIndexSpec law). */
-  def searchTopK(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int = 10, nProbe: Int = 4, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val meta = loadMeta(spark, path)
-    require(nProbe >= 1 && nProbe <= meta.nLists,
-      s"IvfIndex.searchTopK: need 1 <= nProbe <= ${meta.nLists}, " +
-        s"got $nProbe")
-    // overlap the two independent bounded loads (§2.6; see searchPqTopK)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fMasses = Future(loadCellMasses(spark, path, meta)) // stamp check
-    val centers = loadCenters(spark, path, meta)
-    Await.result(fMasses, Duration.Inf): Unit
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(embCol).as("qv"))
-      .filter(col("qv").isNotNull && !exists(col("qv"), _.isNull))
-      .select(col("query_id"), col("qv"),
-        explode(slice(Similarity.cellsRankedExpr(col("qv"), centers),
-          1, nProbe)("cell")).as("cell"))
-    val scored = prunedLists(spark, path, meta, probes).as("c")
-      .join(broadcast(probes).as("q"),
-        col("c.cell") === col("q.cell") &&
-          col("c.vec_id") =!= col("q.query_id"))
-      .select(col("q.query_id").as("query_id"),
-        col("c.vec_id").as("vec_id"),
-        round(Similarity.cosine(col("q.qv"), col("c.v")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
-
-  /** ADC top-k (+ optional IVFADC exact re-rank and adaptive mass
-    * probing) through a PQ index (`m > 0` at build) — the
-    * [[Similarity.ivfPqTopK]] semantics with every per-batch corpus
-    * pass replaced by index reads: candidates come from the pruned
-    * cell partitions' CODE columns, cell masses from `cellstats`
-    * (never a per-batch corpus aggregate), and the re-rank fetches
-    * raw vectors from the same pruned partitions (the shortlist lives
-    * inside probed cells by construction). Row-for-row EQUAL to
-    * [[Similarity.ivfPqTopK]] at the same geometry (IvfIndexSpec). */
-  def searchPqTopK(spark: SparkSession, path: String, queries: DataFrame,
+  /** [[Similarity.ivfTopK]] through the persisted index: exact cosine
+    * on a plain index, ADC `pq_cosine` (+ optional IVFADC exact
+    * re-rank) on a PQ index (`m` comes from the meta), with adaptive
+    * mass probing over the persisted `cellstats` — every per-batch
+    * corpus pass replaced by index reads. Candidates, their codes and
+    * the re-rank's raw vectors all come from the pruned cell
+    * partitions. The bounded artifact loads run one after another on
+    * the caller's thread. Row-for-row EQUAL to [[Similarity.ivfTopK]]
+    * at the same geometry (IvfIndexSpec). */
+  def search(spark: SparkSession, path: String, queries: DataFrame,
       k: Int = 10, nProbe: Int = 4, rerank: Int = 0,
       probeMass: Double = 0.0, nProbeMax: Int = 0,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val meta = loadMeta(spark, path)
-    require(meta.m > 0,
-      "IvfIndex.searchPqTopK: the index carries no PQ codes " +
-        "(built with m = 0) — use searchTopK")
-    require(nProbe >= 1 && nProbe <= meta.nLists,
-      s"IvfIndex.searchPqTopK: need 1 <= nProbe <= ${meta.nLists}, " +
-        s"got $nProbe")
-    require(rerank == 0 || rerank >= k,
-      s"IvfIndex.searchPqTopK: rerank must be 0 (off) or >= k, " +
-        s"got $rerank vs k=$k")
-    require(probeMass >= 0.0 && probeMass <= 1.0,
-      s"IvfIndex.searchPqTopK: probeMass must be in [0,1], got $probeMass")
-    val pMax = if (nProbeMax <= 0) meta.nLists else nProbeMax
-    require(pMax >= nProbe && pMax <= meta.nLists,
-      s"IvfIndex.searchPqTopK: need nProbe <= nProbeMax <= " +
-        s"${meta.nLists}, got $nProbe/$pMax/${meta.nLists}")
-    // the three bounded artifact loads (quantizer, codebooks, cell
-    // masses) are independent once meta is read — overlap them from a
-    // small driver pool (guide §2.6 "2-3 jobs in flight") instead of
-    // paying three sequential job round-trips; each is a bounded
-    // validated collect, read-only, so ordering is immaterial
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fCenters = Future(loadCenters(spark, path, meta))
-    val fCodebooks = Future(Similarity.collectCodebooks(
-      spark.read.parquet(s"$path/codebooks"), "IvfIndex.searchPqTopK"))
-    val fMasses = Future(loadCellMasses(spark, path, meta))
-    val centers = Await.result(fCenters, Duration.Inf)
-    val (cb, m, ksub, dsub) = Await.result(fCodebooks, Duration.Inf)
-    require(m == meta.m && ksub == meta.ksub && m * dsub == meta.dim,
-      s"IvfIndex.searchPqTopK: codebooks are m=$m ksub=$ksub " +
-        s"dsub=$dsub, meta says m=${meta.m} ksub=${meta.ksub} " +
-        s"dim=${meta.dim} — mixed artifact")
-    val sqn = Similarity.pqSqNorms(cb, m, ksub, dsub)
-    val dim = meta.dim
-    val massByCell = Await.result(fMasses, Duration.Inf)
-
-    val probeCol =
-      if (probeMass <= 0.0)
-        slice(Similarity.cellsRankedExpr(col("q"), centers), 1,
-          nProbe)("cell")
-      else {
-        // the adaptive-mass walk over the PERSISTED list lengths —
-        // identical arithmetic to ivfPqTopK's, with the per-batch
-        // corpus aggregate replaced by the index's own statistic
-        val target = math.ceil(probeMass * massByCell.sum).toLong
-        val massLit = typedlit(massByCell.toSeq)
-        val rankedCells = slice(
-          Similarity.cellsRankedExpr(col("q"), centers), 1, pMax)("cell")
-        val masses = transform(rankedCells,
-          c => coalesce(get(massLit, c), lit(0L)))
-        val idxs = sequence(lit(0), size(masses) - 1)
-        val cums = transform(idxs, i =>
-          aggregate(slice(masses, lit(1), i + 1), lit(0L), (a, x) => a + x))
-        val needed = coalesce(
-          element_at(filter(idxs, i => get(cums, i) >= lit(target)), 1) + 1,
-          size(cums))
-        slice(rankedCells, lit(1), greatest(needed, lit(nProbe)))
-      }
-    val qs = queries
-      .select(col(idCol).as("query_id"),
-        col(embCol).cast("array<double>").as("q"))
-      .filter(col("q").isNotNull && !exists(col("q"), _.isNull) &&
-        size(col("q")) === dim)
-      .select(col("query_id"),
-        explode(probeCol).as("cell"),
-        PqExprs.table(col("q"), cb, m, ksub, dsub).as("qt"),
-        sqrt(VectorExprs.dot(col("q"), col("q"))).as("qnorm"))
-    val cand = prunedLists(spark, path, meta, qs)
-    val scored = cand.as("c").join(broadcast(qs).as("p"),
-        col("c.cell") === col("p.cell") &&
-          col("c.vec_id") =!= col("p.query_id"))
-      .select(col("p.query_id").as("query_id"),
-        col("c.vec_id").as("vec_id"),
-        PqExprs.cosine(col("c.codes"), col("p.qt"), col("p.qnorm"), sqn,
-          m, ksub).as("pq_cosine"))
-      .filter(col("pq_cosine").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_cosine").desc, col("vec_id"))
-    if (rerank <= 0)
-      scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-    else {
-      val short = scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= rerank)
-        .select(col("query_id"), col("vec_id"))
-      val qv = queries
-        .select(col(idCol).as("query_id"),
-          col(embCol).cast("array<double>").as("_q"))
-        .filter(col("_q").isNotNull && !exists(col("_q"), _.isNull) &&
-          size(col("_q")) === dim)
-      // the shortlist's raw vectors come from the SAME pruned cell
-      // partitions (every shortlist row was a candidate, and every
-      // candidate lives in a probed cell) — the corpus table is never
-      // touched; cosine over the double-cast vector matches ivfPqTopK
-      // (float→double widening is exact)
-      val exact = prunedLists(spark, path, meta, qs)
-        .select(col("vec_id"), col("v").cast("array<double>").as("v"))
-        .join(broadcast(short), Seq("vec_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(Similarity.cosine(col("v"), col("_q")), 6).as("cosine"))
-        .filter(col("cosine").isNotNull)
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      exact.withColumn("rnk", row_number().over(w2)).filter(col("rnk") <= k)
-    }
+    val centers = loadCenters(spark, path, meta)
+    val pq = loadCodebooks(spark, path, meta)
+    val masses = loadCellMasses(spark, path, meta) // validates the stamp
+    Similarity.probeTopK(queries, centers, pq,
+      probes => prunedLists(spark, path, meta, probes), masses, k, nProbe,
+      nProbeMax, probeMass, rerank, idCol, embCol, "IvfIndex.search")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -47,7 +47,7 @@ object Similarity {
     * then a map-side-combinable max aggregate per id; no window, no
     * corpus shuffle beyond the id-keyed agg of (id, partial-max) rows.
     * For eval sets past broadcast size, compose the IVF route instead
-    * (assign corpus to cells via [[ivfCentroids]], probe cell-local).
+    * (assign corpus to cells, probe cell-local — the [[ivfTopK]] shape).
     *
     * Output: idCol, `max_cos` (null when the corpus vector has zero
     * norm or the eval set is empty), `contaminated`. Corpus rows never
@@ -261,324 +261,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** Product-quantization approximate top-k (ADC scan): train m
-    * per-subspace codebooks of ksub centroids on a bounded driver
-    * sample (the [[ivfTopK]] training contract), encode the corpus as
-    * m-code rows, and score each query against CODES ONLY — a per-query
-    * lookup table (computed once per query as a column) replaces every
-    * dot product, so the scan reads m·4 bytes per vector instead of
-    * dim·4 and the original embeddings are never re-read. This is the
-    * memory-bound half of the standard IVF+PQ index (compose with the
-    * IVF cell join to also cut the candidate count).
-    *
-    * Seed-dependent like the other ANN paths → verified through
-    * [[recallGate]] (exact k-th cosine + recall floor).
-    *
-    * Scale shape: training is the capped sample collect; encode is one
-    * codegen projection; the query side (table + norm per query) is a
-    * broadcast; scoring is the deliberate x5/x45 broadcast-scan shape
-    * over the code relation, top-k per query via the rank window. */
-  def pqTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
-      m: Int = 8, ksub: Int = 16, trainSample: Int = 100000,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      maxTrainBytes: Long = 64L << 20): DataFrame = {
-    require(m >= 1 && ksub >= 2,
-      s"pqTopK: need m >= 1 and ksub >= 2, got m=$m ksub=$ksub")
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "pqTopK")
-    require(dim % m == 0, s"pqTopK: dim $dim is not divisible by m=$m")
-    val dsub = dim / m
-    val cb = flattenCodebooks(
-      trainCenters(sample, pqSpecs(m, ksub, dsub), "pqTopK"),
-      m, ksub, dsub)
-    pqSearch(corpus, queries, cb, m, ksub, dsub, k, idCol, embCol)
-  }
-
-  /** The trained PQ codebooks as a PERSISTABLE relation — one row per
-    * (subspace, centroid, dimension): `j`, `c`, `pos`, `cval`. Write it
-    * out once and feed it to [[pqTopKWithCodebooks]]: a growing corpus
-    * re-encodes and searches without retraining — the same
-    * index-is-a-relation contract as [[ivfCentroids]] and the dedup
-    * signature tables. */
-  def pqCodebooks(embeddings: DataFrame, m: Int = 8, ksub: Int = 16,
-      trainSample: Int = 100000, idCol: String = "vec_id",
-      embCol: String = "embedding",
-      maxTrainBytes: Long = 64L << 20): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "pqCodebooks")
-    require(dim % m == 0, s"pqCodebooks: dim $dim is not divisible by m=$m")
-    val dsub = dim / m
-    val subs = trainCenters(sample, pqSpecs(m, ksub, dsub), "pqCodebooks")
-    val rows = for {
-      j <- 0 until m; c <- 0 until ksub; d <- 0 until dsub
-    } yield (j, c, d, subs(j)(c)(d))
-    rows.toDF("j", "c", "pos", "cval")
-  }
-
-  /** [[pqTopK]] against a persisted [[pqCodebooks]] relation: m, ksub,
-    * dsub are derived from the relation's shape; only the codebook
-    * (m·ksub·dsub small rows) is collected, never corpus data. */
-  def pqTopKWithCodebooks(codebooks: DataFrame, embeddings: DataFrame,
-      queries: DataFrame, k: Int = 10, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val (cb, m, ksub, dsub) = collectCodebooks(codebooks,
-      "pqTopKWithCodebooks")
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    pqSearch(corpus, queries, cb, m, ksub, dsub, k, idCol, embCol)
-  }
-
-  /** Bounded validating collect of a (j, c, pos, cval) codebook
-    * relation ([[pqCodebooks]] format): the relation must be DENSE
-    * (exactly m·ksub·dsub rows) — a truncated or mixed artifact fails
-    * loudly. Returns the flattened [j][c][d] array plus the inferred
-    * (m, ksub, dsub) geometry. */
-  private[operators] def collectCodebooks(codebooks: DataFrame,
-      what: String): (Array[Double], Int, Int, Int) = {
-    val rows = codebooks.select(col("j").cast("int"), col("c").cast("int"),
-      col("pos").cast("int"), col("cval").cast("double")).collect()
-    require(rows.nonEmpty, s"$what: empty codebook relation")
-    require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-        !r.isNullAt(2) && !r.isNullAt(3)),
-      s"$what: null codebook component — the relation/artifact is corrupt")
-    val m = rows.map(_.getInt(0)).max + 1
-    val ksub = rows.map(_.getInt(1)).max + 1
-    val dsub = rows.map(_.getInt(2)).max + 1
-    require(rows.length == m * ksub * dsub,
-      s"$what: ${rows.length} rows != $m*$ksub*$dsub — " +
-        "not a dense codebook relation")
-    val cb = new Array[Double](m * ksub * dsub)
-    rows.foreach { r =>
-      cb((r.getInt(0) * ksub + r.getInt(1)) * dsub + r.getInt(2)) =
-        r.getDouble(3)
-    }
-    (cb, m, ksub, dsub)
-  }
-
-  /** Per-centroid squared norms of a flattened codebook. */
-  private[operators] def pqSqNorms(cb: Array[Double], m: Int, ksub: Int,
-      dsub: Int): Array[Double] = {
-    val sqn = new Array[Double](m * ksub)
-    for (j <- 0 until m; c <- 0 until ksub) {
-      var s = 0.0
-      for (d <- 0 until dsub) {
-        val x = cb((j * ksub + c) * dsub + d); s += x * x
-      }
-      sqn(j * ksub + c) = s
-    }
-    sqn
-  }
-
-  /** IVF + PQ composed index — the standard billion-scale ANN layout:
-    * the coarse quantizer cuts CANDIDATES (each query scores only its
-    * nProbe cells ≈ nProbe/nLists of the corpus) and product
-    * quantization cuts BYTES (candidates are scored from m·4-byte code
-    * rows via the per-query ADC table; original vectors are never
-    * re-read at query time). Same training contract (one capped driver
-    * sample feeds both quantizers), same recall-gate verification as
-    * the other ANN paths.
-    *
-    * Scale shape: index build is one projection (cell + codes per
-    * vector); search is a cell-equality join against the broadcast
-    * probe set — never a full scan, never the raw embeddings.
-    *
-    * `rerank > 0` (recommended ≥ 4·k) enables the IVFADC refinement
-    * stage: the per-query ADC top-`rerank` shortlist is re-scored with
-    * exact cosine against raw vectors fetched by an id-keyed broadcast
-    * join, and the exact order cuts to k — the standard recall
-    * recovery whose cost is ∝ queries·rerank exact distances, NOT more
-    * cell probing. The raw embeddings ARE re-read for shortlist rows
-    * in this mode (column-pruned, id-filtered); the score column is
-    * then `cosine` (exact) instead of `pq_cosine`.
-    *
-    * `probeMass > 0` switches probing from a FIXED nearest-cell count
-    * to ADAPTIVE coverage (the re-rank sweep showed residual recall
-    * loss is unprobed-CELL coverage, not scoring): each query walks
-    * its nearest-cell ranking until the probed cells' cumulative
-    * corpus mass reaches `probeMass` of the indexed vectors, bounded
-    * below by `nProbe` and above by `nProbeMax` (0 ⇒ nLists). Cell
-    * masses are the inverted-list LENGTHS — the statistic a prebuilt
-    * IVF index carries for free, here one bounded nLists-row aggregate
-    * collected as a literal — so a query landing near small cells
-    * probes more of them and one near a giant cell stops early: the
-    * scored-candidate budget is ≈ probeMass · corpus for EVERY query,
-    * instead of nProbe/nLists on average with unbounded per-query
-    * variance. */
-  def ivfPqTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
-      nLists: Int = 16, nProbe: Int = 4, m: Int = 8, ksub: Int = 16,
-      trainSample: Int = 100000, idCol: String = "vec_id",
-      embCol: String = "embedding",
-      maxTrainBytes: Long = 64L << 20, rerank: Int = 0,
-      probeMass: Double = 0.0, nProbeMax: Int = 0): DataFrame = {
-    require(m >= 1 && ksub >= 2,
-      s"ivfPqTopK: need m >= 1 and ksub >= 2, got m=$m ksub=$ksub")
-    require(nProbe >= 1 && nProbe <= nLists,
-      s"ivfPqTopK: need 1 <= nProbe <= nLists, got $nProbe/$nLists")
-    require(rerank == 0 || rerank >= k,
-      s"ivfPqTopK: rerank must be 0 (off) or >= k, got $rerank vs k=$k")
-    require(probeMass >= 0.0 && probeMass <= 1.0,
-      s"ivfPqTopK: probeMass must be in [0,1], got $probeMass")
-    val pMax = if (nProbeMax <= 0) nLists else nProbeMax
-    require(pMax >= nProbe && pMax <= nLists,
-      s"ivfPqTopK: need nProbe <= nProbeMax <= nLists, got " +
-        s"$nProbe/$pMax/$nLists")
-    val corpus = embeddings
-      .select(col(idCol).as("vec_id"), col(embCol).cast("array<double>").as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "ivfPqTopK")
-    require(dim % m == 0, s"ivfPqTopK: dim $dim is not divisible by m=$m")
-    val dsub = dim / m
-    // the coarse quantizer and ALL m codebooks train in ONE grouped
-    // Lloyd run — one aggregate job per iteration, not 1 + m trainers
-    val all = trainCenters(sample,
-      (0, dim, nLists) +: pqSpecs(m, ksub, dsub), "ivfPqTopK")
-    val centers = all.head
-    val cb = flattenCodebooks(all.tail, m, ksub, dsub)
-    val sqn = pqSqNorms(cb, m, ksub, dsub)
-
-    // guard BEFORE encode: PqOps.encode reads dim doubles unchecked, so
-    // a mismatched row must raise from the encode input itself — relying
-    // on the cell column's raise_error firing first would couple
-    // correctness to projection evaluation order
-    val vg = dimGuarded(col("v"), dim, "ivfPqTopK")
-    // adaptive-mass probing consumes the assignment twice (cell-mass
-    // aggregate now, candidate join at action time) — materialize the
-    // assign+encode kernel once, fanned out across cores BEFORE the
-    // kernel runs, instead of paying the corpus pass per consumer (the
-    // fan-out is inert at production scan widths; without probeMass
-    // there is one consumer and the lazy plan is already minimal)
-    def assignEncode(in: DataFrame): DataFrame = in
-      .select(col("vec_id"),
-        element_at(cellsRankedExpr(vg, centers), 1)("cell").as("cell"),
-        PqExprs.encode(vg, cb, m, ksub, dsub).as("codes"))
-    val assigned =
-      if (probeMass <= 0.0) assignEncode(corpus)
-      else Materialize.eager(assignEncode(Parallelism.fanOutScan(corpus)))
-    // adaptive probing: the per-cell corpus masses (inverted-list
-    // lengths), one bounded nLists-row aggregate — column pruning drops
-    // the PQ codes from this pass, it reads cells only
-    val probeCol: Column =
-      if (probeMass <= 0.0)
-        slice(cellsRankedExpr(col("q"), centers), 1, nProbe)("cell")
-      else {
-        val counts = assigned.select(col("cell"))
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val massByCell = Array.tabulate(nLists)(i => counts.getOrElse(i, 0L))
-        val target = math.ceil(probeMass * massByCell.sum).toLong
-        val massLit = typedlit(massByCell.toSeq)
-        val rankedCells =
-          slice(cellsRankedExpr(col("q"), centers), 1, pMax)("cell")
-        val masses = transform(rankedCells,
-          c => coalesce(get(massLit, c), lit(0L)))
-        val idxs = sequence(lit(0), size(masses) - 1)
-        // prefix sums over ≤ nLists entries (bounded, per query row)
-        val cums = transform(idxs, i =>
-          aggregate(slice(masses, lit(1), i + 1), lit(0L), (a, x) => a + x))
-        val needed = coalesce(
-          element_at(filter(idxs, i => get(cums, i) >= lit(target)), 1) + 1,
-          size(cums))
-        slice(rankedCells, lit(1), greatest(needed, lit(nProbe)))
-      }
-    val qs = queries
-      .select(col(idCol).as("query_id"),
-        col(embCol).cast("array<double>").as("q"))
-      .filter(col("q").isNotNull && !exists(col("q"), _.isNull) &&
-        size(col("q")) === dim)
-      .select(col("query_id"),
-        explode(probeCol).as("cell"),
-        PqExprs.table(col("q"), cb, m, ksub, dsub).as("qt"),
-        sqrt(VectorExprs.dot(col("q"), col("q"))).as("qnorm"))
-    // one cell per corpus vector × distinct probe cells ⇒ each
-    // (query, vec) pair matches at most once — no distinct needed
-    val scored = assigned.join(broadcast(qs),
-      assigned("cell") === qs("cell") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        PqExprs.cosine(col("codes"), col("qt"), col("qnorm"), sqn, m, ksub)
-          .as("pq_cosine"))
-      .filter(col("pq_cosine").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_cosine").desc, col("vec_id"))
-    if (rerank <= 0)
-      scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-    else {
-      // IVFADC refinement (the standard re-rank stage): the ADC
-      // shortlist — top `rerank` per query by code distance — is
-      // re-scored with EXACT cosine against the raw vectors, then cut
-      // to k. Buys back the recall the lossy codes forfeit at a cost
-      // ∝ queries·rerank exact dot products instead of more probing
-      // (probing every cell scans the corpus; the shortlist fetch is
-      // an id-keyed broadcast join + a column-pruned corpus scan).
-      // Output score column is `cosine` (it IS the exact value).
-      val short = scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= rerank)
-        .select(col("query_id"), col("vec_id"))
-      val qv = queries
-        .select(col(idCol).as("query_id"),
-          col(embCol).cast("array<double>").as("_q"))
-        .filter(col("_q").isNotNull && !exists(col("_q"), _.isNull) &&
-          size(col("_q")) === dim)
-      val exact = corpus.join(broadcast(short), Seq("vec_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(cosine(col("v"), col("_q")), 6).as("cosine"))
-        .filter(col("cosine").isNotNull)
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      exact.withColumn("rnk", row_number().over(w2)).filter(col("rnk") <= k)
-    }
-  }
-
-  /** Raise-on-mismatch embedding guard: the uniform ANN contract (same
-    * as [[cellsRankedExpr]] / [[lshBucket]]) — a vector whose width
-    * disagrees with the trained dimension fails loudly instead of
-    * being silently dropped or read out of bounds. */
-  private[operators] def dimGuarded(v: Column, dim: Int,
-      what: String): Column =
-    when(size(v) === dim, v).otherwise(raise_error(concat(
-      lit(s"$what: embedding dim mismatch, expected $dim got "),
-      size(v).cast("string"))).cast("array<double>"))
-
-  private def pqSearch(corpus: DataFrame, queries: DataFrame,
-      cb: Array[Double], m: Int, ksub: Int, dsub: Int, k: Int,
-      idCol: String, embCol: String): DataFrame = {
-    val dim = m * dsub
-    val sqn = pqSqNorms(cb, m, ksub, dsub)
-    // loud on mismatch (was: silent drop) — consistent with the IVF and
-    // LSH paths, and the only behavior that cannot hide a garbled corpus
-    val codes = corpus
-      .select(col("vec_id"),
-        PqExprs.encode(dimGuarded(col("v"), dim, "pqTopK"), cb, m, ksub,
-          dsub).as("codes"))
-    val qs = queries
-      .select(col(idCol).as("query_id"),
-        col(embCol).cast("array<double>").as("q"))
-      .filter(col("q").isNotNull && !exists(col("q"), _.isNull) &&
-        size(col("q")) === dim)
-      .select(col("query_id"),
-        PqExprs.table(col("q"), cb, m, ksub, dsub).as("qt"),
-        sqrt(VectorExprs.dot(col("q"), col("q"))).as("qnorm"))
-    val scored = codes.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        PqExprs.cosine(col("codes"), col("qt"), col("qnorm"), sqn, m, ksub)
-          .as("pq_cosine"))
-      .filter(col("pq_cosine").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
-
   /** Recall gate for an approximate top-k result against the exact
     * brute-force top-k: one row per query with the exact k-th cosine
     * (the data-derived anchor an oracle can recompute independently)
@@ -747,7 +429,7 @@ object Similarity {
     * deterministic index, not one keyed to whichever row a scan
     * returns first. `corpus` must carry (vec_id, v) with nulls
     * excluded. */
-  private[operators] def trainFrame(corpus: DataFrame, trainSample: Int,
+  private def trainFrame(corpus: DataFrame, trainSample: Int,
       maxTrainBytes: Long, what: String): (DataFrame, Int) = {
     require(trainSample >= 1,
       s"$what: trainSample must be >= 1, got $trainSample")
@@ -780,7 +462,7 @@ object Similarity {
     * deterministic training path. Returns per-spec centroid matrices
     * DEQUANTIZED to input units (÷2^20 — exact, a power of two), the
     * domain the search expressions score in. */
-  private[operators] def trainCenters(sample: DataFrame,
+  private def trainCenters(sample: DataFrame,
       specs: Seq[(Int, Int, Int)], what: String,
       iters: Int = 10): Seq[Array[Array[Double]]] = {
     val kMax = specs.map(_._3).max
@@ -822,117 +504,309 @@ object Similarity {
       .map(_.map(_.map(_ / KMeans.Scale).toArray).toArray)
   }
 
-  /** Flatten per-subspace centroid matrices into the [j][c][d] codebook
-    * array the PQ kernels consume. */
-  private[operators] def flattenCodebooks(subs: Seq[Array[Array[Double]]],
-      m: Int, ksub: Int, dsub: Int): Array[Double] = {
-    val cb = new Array[Double](m * ksub * dsub)
-    for (j <- 0 until m; c <- 0 until ksub; d <- 0 until dsub)
-      cb((j * ksub + c) * dsub + d) = subs(j)(c)(d)
-    cb
-  }
-
-  /** PQ sub-space training specs: m contiguous dsub-wide slices. */
-  private[operators] def pqSpecs(m: Int, ksub: Int,
-      dsub: Int): Seq[(Int, Int, Int)] =
-    (0 until m).map(j => (j * dsub, dsub, ksub))
-
-  /** Approximate top-k via an IVF index: a k-means coarse quantizer
-    * partitions the corpus into `nLists` cells; each query probes its
-    * `nProbe` nearest cells and ranks candidates by exact cosine.
-    *
-    * Scale shape: training aggregates over a bounded materialized
-    * sample ([[trainFrame]] — the index-build step every IVF system
-    * has, here through the ONE Lloyd implementation,
-    * [[KMeans.lloydIterate]]); after that the driver holds only the
-    * nLists×dim centroid matrix, assignment is one codegen projection
-    * over the corpus, and the probe is a key-equality join on the cell
-    * id. Expected candidates per query ≈ |corpus|·nProbe/nLists.
-    * Deterministic (smallest-id sample + seed rule — no random
-    * state). */
-  def ivfTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
-      nLists: Int = 16, nProbe: Int = 4, trainSample: Int = 100000,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      maxTrainBytes: Long = 64L << 20): DataFrame = {
-    // null vectors AND vectors with null elements are non-neighbors
-    // (cosineTopK semantics) — exclude both up front: size() counts null
-    // elements, so such a vector would pass the dim guard, get a null
-    // dist2 for every centroid (arbitrary cell via nulls-first sort) and
-    // surface with a null cosine when a bucket runs short of candidates
-    val corpus = embeddings.select(col(idCol).as("vec_id"),
-      col(embCol).as("v"))
+  /** The corpus side of every IVF/PQ relation: (vec_id, v). Null
+    * vectors AND vectors with null elements are non-members
+    * (cosineTopK semantics) — `size()` counts null elements, so such a
+    * vector would pass the dim guard, get a null distance to every
+    * centroid and land in an arbitrary cell (nulls-first sort). */
+  private[graft] def vectors(embeddings: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    embeddings.select(col(idCol).as("vec_id"), col(embCol).as("v"))
       .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "ivfTopK")
-    val centers = trainCenters(sample, Seq((0, dim, nLists)), "ivfTopK").head
-    ivfSearch(corpus, queries, centers, k, nProbe, idCol, embCol)
+
+  /** A trained product quantizer: the flattened [j][c][d] codebook of
+    * `m` sub-spaces × `ksub` centroids × `dsub` components. */
+  private[graft] final case class Pq(cb: Array[Double], m: Int, ksub: Int,
+      dsub: Int)
+
+  /** The one IVF/PQ training step, shared by [[ivfTopK]] and
+    * [[IvfIndex.build]]: the coarse quantizer and, for `m > 0`, all m
+    * dsub-wide PQ codebooks advance in ONE grouped Lloyd run over one
+    * [[trainFrame]] sample — one bounded collect, not 1 + m trainers.
+    * Groups train independently, so the codebooks do not depend on
+    * `nLists`. `m = 0` trains the coarse quantizer only. */
+  private[operators] def trainIvf(corpus: DataFrame, nLists: Int, m: Int,
+      ksub: Int, trainSample: Int, maxTrainBytes: Long,
+      what: String): (Array[Array[Double]], Option[Pq]) = {
+    require(m >= 0, s"$what: m must be >= 0, got $m")
+    require(m == 0 || ksub >= 2,
+      s"$what: need ksub >= 2 for a PQ search, got $ksub")
+    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes, what)
+    require(m == 0 || dim % m == 0,
+      s"$what: dim $dim is not divisible by m=$m")
+    val dsub = if (m > 0) dim / m else 0
+    val subspaces = (0 until m).map(j => (j * dsub, dsub, ksub))
+    val all = trainCenters(sample, (0, dim, nLists) +: subspaces, what)
+    (all.head, Option.when(m > 0)(
+      Pq(all.tail.flatMap(_.flatten.toSeq).toArray, m, ksub, dsub)))
   }
 
-  /** The trained IVF coarse quantizer as a PERSISTABLE relation in the
+  /** The candidate relation of a corpus under a trained quantizer:
+    * (vec_id, v, cell[, codes]) — the nearest-centroid cell and, with a
+    * PQ, the m sub-space codes, in one codegen projection. */
+  private[graft] def assign(corpus: DataFrame,
+      centers: Array[Array[Double]], pq: Option[Pq],
+      what: String): DataFrame = {
+    val cell = element_at(cellsRankedExpr(col("v"), centers, what), 1)("cell")
+    // guard BEFORE encode: PqOps.encode reads dim doubles unchecked, so
+    // a mismatched row must raise from the encode input itself — relying
+    // on the cell column's raise_error firing first would couple
+    // correctness to projection evaluation order
+    val codes = pq.map(p => PqExprs.encode(
+      dimGuarded(col("v").cast("array<double>"), centers(0).length, what),
+      p.cb, p.m, p.ksub, p.dsub).as("codes"))
+    corpus.select(Seq(col("vec_id"), col("v"), cell.as("cell")) ++ codes: _*)
+  }
+
+  /** Approximate top-k through an IVF (inverted-file) index trained in
+    * the plan — the recompute route; [[IvfIndex.search]] is the same
+    * search over a persisted index. A k-means coarse quantizer
+    * partitions the corpus into `nLists` cells and each query scores
+    * only the candidates of its probed cells.
+    *
+    *   - `m = 0`: candidates are ranked by exact cosine (`cosine`).
+    *   - `m > 0`: product quantization — candidates are scored from
+    *     m-code rows via the per-query ADC table (`pq_cosine`), so the
+    *     scan reads m·4 bytes per vector instead of dim·4; dim must
+    *     divide by m. `nLists = 1, nProbe = 1` is the brute-force ADC
+    *     scan (every non-self vector is a candidate).
+    *   - `rerank > 0` (needs `m > 0`; recommended ≥ 4·k) adds the IVFADC
+    *     refinement: the per-query ADC top-`rerank` shortlist is
+    *     re-scored with exact cosine against the raw vectors and the
+    *     exact order cuts to k — recall recovery at a cost ∝
+    *     queries·rerank exact distances, not more cell probing. The
+    *     score column is then `cosine`.
+    *   - `probeMass > 0` switches probing from the fixed `nProbe`
+    *     nearest cells to ADAPTIVE coverage: each query walks its
+    *     nearest-cell ranking until the probed cells' cumulative
+    *     corpus mass (the inverted-list lengths, one bounded nLists-row
+    *     aggregate) reaches `probeMass` of the indexed vectors, bounded
+    *     below by `nProbe` and above by `nProbeMax` (0 ⇒ nLists) — the
+    *     scored-candidate budget is ≈ probeMass · corpus for EVERY
+    *     query instead of nProbe/nLists on average.
+    *
+    * Scale shape: training is the bounded deterministic driver sample
+    * ([[trainIvf]]); assignment and encoding are one codegen projection;
+    * the probe is a cell-equality join against the broadcast probe set.
+    * Seed-dependent like the other ANN paths → verified through
+    * [[recallGate]]. Deterministic (smallest-id sample + seed rule). */
+  def ivfTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
+      nLists: Int = 16, nProbe: Int = 4, m: Int = 0, ksub: Int = 16,
+      trainSample: Int = 100000, idCol: String = "vec_id",
+      embCol: String = "embedding",
+      maxTrainBytes: Long = 64L << 20, rerank: Int = 0,
+      probeMass: Double = 0.0, nProbeMax: Int = 0): DataFrame = {
+    val corpus = vectors(embeddings, idCol, embCol)
+    val (centers, pq) = trainIvf(corpus, nLists, m, ksub, trainSample,
+      maxTrainBytes, "ivfTopK")
+    // adaptive-mass probing consumes the assignment twice (cell-mass
+    // aggregate now, candidate join at action time) — materialize the
+    // assign+encode kernel once, fanned out across cores BEFORE the
+    // kernel runs, instead of paying the corpus pass per consumer (the
+    // fan-out is inert at production scan widths; without probeMass
+    // there is one consumer and the lazy plan is already minimal)
+    val assigned =
+      if (probeMass <= 0.0) assign(corpus, centers, pq, "ivfTopK")
+      else Materialize.eager(
+        assign(Parallelism.fanOutScan(corpus), centers, pq, "ivfTopK"))
+    def cellMasses: Array[Long] = {
+      val n = assigned.groupBy(col("cell")).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      Array.tabulate(nLists)(i => n.getOrElse(i, 0L))
+    }
+    probeTopK(queries, centers, pq, _ => assigned, cellMasses, k, nProbe,
+      nProbeMax, probeMass, rerank, idCol, embCol, "ivfTopK")
+  }
+
+  /** The one IVF/PQ search kernel behind [[ivfTopK]] and
+    * [[IvfIndex.search]]; its branches depend only on its inputs.
+    *
+    * Probe selection runs on the query side: the `nProbe` nearest
+    * cells, or — `probeMass > 0` — the adaptive walk over the per-cell
+    * `cellMasses` (evaluated only then) bounded by `nProbeMax`. `lists`
+    * maps that probe relation (query_id, q, cell, …) to the candidate
+    * relation (vec_id, v, cell[, codes]), which joins the broadcast
+    * probes on cell equality; each vector has one cell and the probed
+    * cells are distinct, so a (query, vec) pair matches at most once.
+    * Scoring is exact `round(cosine, 6)` without a codebook and ADC
+    * `pq_cosine` with one; `rerank > 0` re-scores the ADC shortlist
+    * with exact cosine over the CANDIDATES' raw vectors (a shortlist
+    * row lives in a probed cell by construction). A null ADC score
+    * (zero-norm query or reconstruction) drops the pair; a null exact
+    * cosine (zero-norm vector) ranks last. Output: query_id, vec_id,
+    * the score column, `rnk` ≤ k. */
+  private[graft] def probeTopK(queries: DataFrame,
+      centers: Array[Array[Double]], pq: Option[Pq],
+      lists: DataFrame => DataFrame, cellMasses: => Array[Long], k: Int,
+      nProbe: Int, nProbeMax: Int, probeMass: Double, rerank: Int,
+      idCol: String, embCol: String, what: String): DataFrame = {
+    val nLists = centers.length
+    require(nProbe >= 1 && nProbe <= nLists,
+      s"$what: need 1 <= nProbe <= nLists, got $nProbe/$nLists")
+    require(rerank == 0 || rerank >= k,
+      s"$what: rerank must be 0 (off) or >= k, got $rerank vs k=$k")
+    require(rerank == 0 || pq.isDefined,
+      s"$what: rerank re-scores PQ codes exactly and needs m > 0 — " +
+        "with m = 0 every score is already exact")
+    require(probeMass >= 0.0 && probeMass <= 1.0,
+      s"$what: probeMass must be in [0,1], got $probeMass")
+    val pMax = if (nProbeMax <= 0) nLists else nProbeMax
+    require(pMax >= nProbe && pMax <= nLists,
+      s"$what: need nProbe <= nProbeMax <= nLists, got " +
+        s"$nProbe/$pMax/$nLists")
+    def nearest(n: Int): Column =
+      slice(cellsRankedExpr(col("q"), centers, what), 1, n)("cell")
+    val probeCells =
+      if (probeMass <= 0.0) nearest(nProbe)
+      else {
+        val massByCell = cellMasses
+        val target = math.ceil(probeMass * massByCell.sum).toLong
+        val massLit = typedlit(massByCell.toSeq)
+        val rankedCells = nearest(pMax)
+        val masses = transform(rankedCells,
+          c => coalesce(get(massLit, c), lit(0L)))
+        val idxs = sequence(lit(0), size(masses) - 1)
+        // prefix sums over ≤ nLists entries (bounded, per query row)
+        val cums = transform(idxs, i =>
+          aggregate(slice(masses, lit(1), i + 1), lit(0L), (a, x) => a + x))
+        val needed = coalesce(
+          element_at(filter(idxs, i => get(cums, i) >= lit(target)), 1) + 1,
+          size(cums))
+        slice(rankedCells, lit(1), greatest(needed, lit(nProbe)))
+      }
+    // probe from the query side's own embeddings: external query
+    // vectors (ids absent from the corpus) are first-class
+    val qs = queries
+      .select(col(idCol).as("query_id"), col(embCol).as("q"))
+      .filter(col("q").isNotNull && !exists(col("q"), _.isNull))
+      .select(col("query_id"),
+        dimGuarded(col("q"), centers(0).length, what).as("q"))
+    // the ADC table and query norm: once per probe row, query side
+    val adc = pq.toSeq.flatMap(p => Seq(
+      PqExprs.table(col("q").cast("array<double>"), p.cb, p.m, p.ksub,
+        p.dsub).as("qt"),
+      sqrt(VectorExprs.dot(col("q"), col("q"))).as("qnorm")))
+    val probes = qs.select(
+      Seq(col("query_id"), col("q"), explode(probeCells).as("cell")) ++ adc: _*)
+    val cand = lists(probes)
+    val (score, scoreCol) = pq match {
+      case None => ("cosine", round(cosine(col("p.q"), col("c.v")), 6))
+      case Some(p) => ("pq_cosine", PqExprs.cosine(col("c.codes"),
+        col("p.qt"), col("p.qnorm"), pqSqNorms(p), p.m, p.ksub))
+    }
+    val pairs = cand.as("c").join(broadcast(probes).as("p"),
+        col("c.cell") === col("p.cell") &&
+          col("c.vec_id") =!= col("p.query_id"))
+      .select(col("p.query_id").as("query_id"),
+        col("c.vec_id").as("vec_id"), scoreCol.as(score))
+    // the ADC null filter lands in the join condition, which also makes
+    // the codes evaluate once per corpus row instead of once per matched
+    // probe row; exact scores skip it — a second cosine per pair costs
+    // more than ranking the rare zero-norm vector last
+    val scored = if (pq.isEmpty) pairs else pairs.filter(col(score).isNotNull)
+    if (rerank <= 0) topPerQuery(scored, score, k)
+    else {
+      val short = topPerQuery(scored, score, rerank)
+        .select(col("query_id"), col("vec_id"))
+      val exact = cand.select(col("vec_id"), col("v"))
+        .join(broadcast(short), Seq("vec_id"))
+        .join(broadcast(qs), Seq("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          round(cosine(col("v"), col("q")), 6).as("cosine"))
+        .filter(col("cosine").isNotNull)
+      topPerQuery(exact, "cosine", k)
+    }
+  }
+
+  private def topPerQuery(scored: DataFrame, score: String,
+      n: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= n)
+  }
+
+  /** Bounded validating collect of a persisted (j, c, pos, cval)
+    * codebook relation: it must be DENSE (exactly m·ksub·dsub rows) — a
+    * truncated or mixed artifact fails loudly. The geometry is inferred
+    * from the relation's shape. */
+  private[operators] def collectCodebooks(codebooks: DataFrame,
+      what: String): Pq = {
+    val rows = codebooks.select(col("j").cast("int"), col("c").cast("int"),
+      col("pos").cast("int"), col("cval").cast("double")).collect()
+    require(rows.nonEmpty, s"$what: empty codebook relation")
+    require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+        !r.isNullAt(2) && !r.isNullAt(3)),
+      s"$what: null codebook component — the relation/artifact is corrupt")
+    val m = rows.map(_.getInt(0)).max + 1
+    val ksub = rows.map(_.getInt(1)).max + 1
+    val dsub = rows.map(_.getInt(2)).max + 1
+    require(rows.length == m * ksub * dsub,
+      s"$what: ${rows.length} rows != $m*$ksub*$dsub — " +
+        "not a dense codebook relation")
+    val cb = new Array[Double](m * ksub * dsub)
+    rows.foreach { r =>
+      cb((r.getInt(0) * ksub + r.getInt(1)) * dsub + r.getInt(2)) =
+        r.getDouble(3)
+    }
+    Pq(cb, m, ksub, dsub)
+  }
+
+  /** Per-centroid squared norms of a codebook. */
+  private def pqSqNorms(p: Pq): Array[Double] =
+    Array.tabulate(p.m * p.ksub) { jc =>
+      var s = 0.0
+      for (d <- 0 until p.dsub) {
+        val x = p.cb(jc * p.dsub + d); s += x * x
+      }
+      s
+    }
+
+  /** Raise-on-mismatch embedding guard: the uniform ANN contract (same
+    * as [[cellsRankedExpr]] / [[lshBucket]]) — a vector whose width
+    * disagrees with the trained dimension fails loudly instead of
+    * being silently dropped or read out of bounds. */
+  private def dimGuarded(v: Column, dim: Int,
+      what: String): Column =
+    when(size(v) === dim, v).otherwise(raise_error(concat(
+      lit(s"$what: embedding dim mismatch, expected $dim got "),
+      size(v).cast("string"))))
+
+  /** The trained IVF coarse quantizer as a relation in the
     * [[KMeans.trainCentroids]] format — (`cluster` int, `centroid`
     * array&lt;double&gt;, QUANTIZED units), trained through the same
     * [[KMeans]] path (bounded deterministic [[trainFrame]] sample, k
-    * smallest-id seeds, exact-integer Lloyd updates), so
-    * [[KMeans.saveCentroids]]/[[KMeans.loadCentroids]] persist it
-    * verbatim — ONE artifact format for clustering models and ANN
-    * coarse quantizers. Feed it to [[ivfTopKWithCentroids]]: a growing
-    * corpus then reuses the index instead of retraining per query
-    * batch (the same index-is-a-relation contract as the dedup
-    * signature tables). */
-  def ivfCentroids(embeddings: DataFrame, nLists: Int = 16,
+    * smallest-id seeds, exact-integer Lloyd updates), so it equals
+    * [[KMeans.trainCentroids]] bit for bit on the same sample and
+    * [[KMeans.saveCentroids]] persists it verbatim — the quantizer
+    * artifact format of [[IvfIndex]]. */
+  private[graft] def ivfCentroids(embeddings: DataFrame, nLists: Int = 16,
       trainSample: Int = 100000, embCol: String = "embedding",
       maxTrainBytes: Long = 64L << 20, idCol: String = "vec_id",
       iters: Int = 10): DataFrame = {
-    val spark = embeddings.sparkSession
+    val (sample, dim) = trainFrame(vectors(embeddings, idCol, embCol),
+      trainSample, maxTrainBytes, "ivfCentroids")
+    centroidRelation(embeddings.sparkSession, trainCenters(sample,
+      Seq((0, dim, nLists)), "ivfCentroids", iters).head)
+  }
+
+  /** Requantize (×2^20 — the exact inverse of [[trainCenters]]'
+    * dequantize) into the KMeans quantized-unit centroid relation. */
+  private[operators] def centroidRelation(spark: SparkSession,
+      centers: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
-    val corpus = embeddings.select(col(idCol).as("vec_id"),
-      col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "ivfCentroids")
-    val centers = trainCenters(sample, Seq((0, dim, nLists)),
-      "ivfCentroids", iters).head
-    // requantize (×2^20 — exact inverse of trainCenters' dequantize):
-    // the relation carries the KMeans quantized-unit contract, equal
-    // bit for bit to KMeans.trainCentroids on the same sample
     centers.zipWithIndex.map { case (c, i) =>
       (i, c.map(_ * KMeans.Scale).toSeq)
     }.toSeq.toDF("cluster", "centroid")
   }
 
-  /** [[ivfTopK]] against a PERSISTED quantizer from [[ivfCentroids]]
-    * (or [[KMeans.loadCentroids]]): the centroid relation (nLists rows
-    * — bounded by index geometry, never by corpus size) is collected
-    * back into plan literals (validated by [[KMeans.collectCentroids]],
-    * dequantized to input units) and the search runs identically; no
-    * training sample is read, so query batches against a stable corpus
-    * skip the k-means entirely and produce assignments consistent with
-    * every previous batch — the incremental-ANN contract. Training and
-    * probing agree EXACTLY: [[ivfTopK]] on the same corpus equals this
-    * route on the [[ivfCentroids]] relation, row for row. */
-  def ivfTopKWithCentroids(centroids: DataFrame, embeddings: DataFrame,
-      queries: DataFrame, k: Int = 10, nProbe: Int = 4,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val centers = KMeans.collectCentroids(centroids)
-      .map(_.map(_ / KMeans.Scale).toArray).toArray
-    val corpus = embeddings.select(col(idCol).as("vec_id"),
-      col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    ivfSearch(corpus, queries, centers, k, nProbe, idCol, embCol)
-  }
-
-  /** Shared IVF search body: centroids ride the plan as literals,
-    * assignment is one codegen projection, the probe a cell-equality
-    * broadcast join. `corpus` must already carry (vec_id, v) with
-    * nulls excluded. */
   /** Ranked (distance, cell) array per vector — the coarse-quantizer
-    * assignment expression shared by the IVF and IVF+PQ paths. The
-    * centroid matrix rides in the plan as literals; a row whose
-    * embedding width disagrees with the trained dimension fails loudly
-    * instead of silently collapsing into one cell (a null dot product
-    * would rank every centroid equal). */
-  private[operators] def cellsRankedExpr(v: Column,
-      centers: Array[Array[Double]]): Column = {
+    * assignment expression of every IVF path. The centroid matrix
+    * rides in the plan as literals; a row whose embedding width
+    * disagrees with the trained dimension fails loudly instead of
+    * silently collapsing into one cell (a null dot product would rank
+    * every centroid equal). */
+  private def cellsRankedExpr(v: Column,
+      centers: Array[Array[Double]], what: String): Column = {
     val dim = centers(0).length
     def dist2(c: Array[Double]): Column =
       VectorExprs.dot(v, v) - lit(2.0) * VectorExprs.dot(v, typedlit(c.toSeq)) +
@@ -941,36 +815,8 @@ object Similarity {
       struct(dist2(c).as("d"), lit(i).as("cell"))
     }: _*))
     when(size(v) === dim, ranked).otherwise(raise_error(concat(
-      lit(s"ivfTopK: embedding dim mismatch, expected $dim got "),
+      lit(s"$what: embedding dim mismatch, expected $dim got "),
       size(v).cast("string"))).cast("array<struct<d:double,cell:int>>"))
-  }
-
-  private def ivfSearch(corpus: DataFrame, queries: DataFrame,
-      centers: Array[Array[Double]], k: Int, nProbe: Int,
-      idCol: String, embCol: String): DataFrame = {
-    def cellsRanked(v: Column): Column = cellsRankedExpr(v, centers)
-
-    val assigned = corpus
-      .withColumn("cell", element_at(cellsRanked(col("v")), 1)("cell"))
-    // probe from the query side's own embeddings: external query vectors
-    // (ids absent from the corpus) are first-class, matching cosineTopK
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(embCol).as("qv"))
-      .filter(col("qv").isNotNull && !exists(col("qv"), _.isNull))
-      .select(col("query_id"), col("qv"),
-        explode(slice(cellsRanked(col("qv")), 1, nProbe)("cell")).as("cell"))
-
-    // no distinct: each corpus vector has exactly one cell and probes
-    // are distinct cells, so a (query, vec) pair matches at most once
-    val scored = assigned.as("c")
-      .join(broadcast(probes).as("q"),
-        col("c.cell") === col("q.cell") &&
-          col("c.vec_id") =!= col("q.query_id"))
-      .select(col("q.query_id").as("query_id"), col("c.vec_id").as("vec_id"),
-        round(cosine(col("q.qv"), col("c.v")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
   }
 
   /** Approximate top-k: candidates share the query's LSH bucket, ranked by
@@ -1067,25 +913,11 @@ object Similarity {
       maxTrainBytes: Long = 64L << 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"semanticDedup: threshold must be in (0,1], got $threshold")
-    val corpus = embeddings.select(col(idCol).as("vec_id"),
-        col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
-    val (sample, dim) = trainFrame(corpus, trainSample, maxTrainBytes,
-      "semanticDedup")
-    val centers = trainCenters(sample, Seq((0, dim, nLists)),
-      "semanticDedup").head
-    def dist2(v: Column, c: Array[Double]): Column =
-      VectorExprs.dot(v, v) - lit(2.0) * VectorExprs.dot(v, typedlit(c.toSeq)) +
-        lit(c.map(x => x * x).sum)
-    val cell = {
-      val ranked = sort_array(array(centers.zipWithIndex.map { case (c, i) =>
-        struct(dist2(col("v"), c).as("d"), lit(i).as("cell"))
-      }: _*))
-      when(size(col("v")) === dim, element_at(ranked, 1)("cell"))
-        .otherwise(raise_error(concat(
-          lit(s"semanticDedup: embedding dim mismatch, expected $dim got "),
-          size(col("v")).cast("string"))).cast("int"))
-    }
+    val corpus = vectors(embeddings, idCol, embCol)
+    val (centers, _) = trainIvf(corpus, nLists, 0, 0, trainSample,
+      maxTrainBytes, "semanticDedup")
+    val cell = element_at(
+      cellsRankedExpr(col("v"), centers, "semanticDedup"), 1)("cell")
     val assigned = corpus.withColumn("cell", cell)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dropped = assigned.as("a")
@@ -1113,9 +945,7 @@ object Similarity {
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val sd = semanticDedup(embeddings, threshold, nLists,
       idCol = idCol, embCol = embCol)
-    val corpus = embeddings.select(col(idCol).as("vec_id"),
-        col(embCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
+    val corpus = vectors(embeddings, idCol, embCol)
     // round-6 like every oracle-compared cosine, so the droppable COUNT
     // is bit-stable between engines even for boundary-grazing pairs
     val droppable = corpus.as("a")

@@ -10,8 +10,8 @@ import graft.operators.IvfIndex
   * routes but no ingestion-time sink while every dedup index has one
   * ([[StreamCdc]], [[StreamMediaDedup]], [[StreamFrameOverlap]]).
   * Embeddings flowing off a production encoder land in the searchable
-  * index within a trigger; [[IvfIndex.searchTopK]] /
-  * [[IvfIndex.searchPqTopK]] read the growing artifact directly.
+  * index within a trigger; [[IvfIndex.search]] reads the growing
+  * artifact directly.
   *
   * The quantizer is FROZEN: the index must be pre-built from a
   * representative seed corpus ([[IvfIndex.build]] — the x146

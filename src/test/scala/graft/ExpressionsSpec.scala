@@ -208,20 +208,6 @@ class ExpressionsSpec extends SparkTestBase {
     assert(shortRow.isNullAt(0) && shortRow.isNullAt(1))
   }
 
-  test("rolling fingerprint: min xxhash64 over byte windows") {
-    val text = "hello world, hello graft"
-    val k = 8
-    val expected = (0 to text.length - k).map { i =>
-      val sub = UTF8String.fromString(text.substring(i, i + k))
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        sub.getBaseObject, sub.getBaseOffset, sub.numBytes, 42L)
-    }.min
-    val got = Seq(Tuple1(text)).toDF("text")
-      .select(ShingleExprs.rollingMinHash($"text", k).as("fp"))
-      .as[Long].head()
-    assert(got === expected)
-  }
-
   test("simhash64: bit-majority over token hashes; identical docs agree") {
     val df = Seq(
       (1L, "the quick brown fox"),
@@ -481,8 +467,6 @@ class ExpressionsSpec extends SparkTestBase {
     val s = UTF8String.fromString("abcdefghij")
     assert(ShingleOps.shingleSet(s, 3).toSeq ===
       ShingleOps.shingleSet(UTF8String.fromString("abcdefghij"), 3).toSeq)
-    assert(ShingleOps.rollingMin(s, 3) ===
-      ShingleOps.rollingMin(UTF8String.fromString("abcdefghij"), 3))
   }
 
   test("Bloom filter: no false negatives, retain preserves order, " +

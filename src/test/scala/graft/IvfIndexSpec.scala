@@ -10,9 +10,10 @@ import graft.operators.{IvfIndex, Similarity}
 /** The persisted-IVF-index contracts:
   *
   *   1. LOAD-PATH EQUALITY — searching through the on-disk lists
-  *      equals the recompute routes (ivfTopKWithCentroids /
-  *      ivfPqTopK) row for row, because build-time assignment and
-  *      query-time scoring share one deterministic training path.
+  *      equals the recompute route (ivfTopK, or the search kernel
+  *      under a frozen quantizer) row for row, because build-time
+  *      assignment and query-time scoring share one deterministic
+  *      training path and one search kernel.
   *   2. PRUNED PROBE PLAN — the search physical plan reads the lists
   *      relation with PartitionFilters on `cell` and NEVER scans the
   *      corpus table: delta-batch cost is ∝ probed cells (the
@@ -33,41 +34,54 @@ class IvfIndexSpec extends SparkTestBase {
   private def collectSorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("searchTopK through the persisted lists equals " +
-    "ivfTopKWithCentroids on the same corpus, row for row") {
+  test("search through the persisted lists equals ivfTopK on the " +
+    "same corpus, row for row") {
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 50)
     val path = tmpPath("ivf")
     IvfIndex.build(corpus, path, nLists = 16)
-    val viaIndex = IvfIndex.searchTopK(spark, path, delta,
-      k = 10, nProbe = 12)
-    val recompute = Similarity.ivfTopKWithCentroids(
-      Similarity.ivfCentroids(corpus), corpus, delta,
-      k = 10, nProbe = 12)
+    val viaIndex = IvfIndex.search(spark, path, delta, k = 10, nProbe = 12)
+    val recompute = Similarity.ivfTopK(corpus, delta, k = 10, nLists = 16,
+      nProbe = 12)
     assert(collectSorted(viaIndex) === collectSorted(recompute))
   }
 
-  test("searchPqTopK through the persisted codes equals ivfPqTopK at " +
-    "the same geometry (incl. adaptive mass probing + IVFADC re-rank)") {
+  test("search through the persisted PQ codes equals ivfTopK at the " +
+    "same geometry (incl. adaptive mass probing + IVFADC re-rank)") {
     val qs = emb.filter(col("vec_id") < 5)
     val path = tmpPath("ivfpq")
     IvfIndex.build(emb, path, nLists = 16, m = 32, ksub = 256)
-    val viaIndex = IvfIndex.searchPqTopK(spark, path, qs, k = 10,
+    val viaIndex = IvfIndex.search(spark, path, qs, k = 10,
       nProbe = 1, rerank = 50, probeMass = 0.9)
-    val recompute = Similarity.ivfPqTopK(emb, qs, k = 10, nLists = 16,
+    val recompute = Similarity.ivfTopK(emb, qs, k = 10, nLists = 16,
       nProbe = 1, m = 32, ksub = 256, rerank = 50, probeMass = 0.9)
     assert(collectSorted(viaIndex) === collectSorted(recompute))
   }
 
-  test("searchPqTopK without re-rank (pure ADC) also equals the " +
-    "recompute route — the code path x146 does not exercise") {
+  test("search through a PQ index without re-rank (pure ADC) also " +
+    "equals the recompute route — the code path x146 does not exercise") {
     val qs = emb.filter(col("vec_id") < 5)
     val path = tmpPath("ivfpq_adc")
     IvfIndex.build(emb, path, nLists = 16, m = 32, ksub = 256)
-    val viaIndex = IvfIndex.searchPqTopK(spark, path, qs, k = 10,
-      nProbe = 4)
-    val recompute = Similarity.ivfPqTopK(emb, qs, k = 10, nLists = 16,
+    val viaIndex = IvfIndex.search(spark, path, qs, k = 10, nProbe = 4)
+    val recompute = Similarity.ivfTopK(emb, qs, k = 10, nLists = 16,
       nProbe = 4, m = 32, ksub = 256)
+    assert(collectSorted(viaIndex) === collectSorted(recompute))
+  }
+
+  test("one cell is the brute-force ADC scan (x83): ivfTopK with " +
+    "nLists = 1 scores all |corpus| - 1 non-self vectors per query and " +
+    "equals search on an index built with the same geometry") {
+    val qs = emb.filter(col("vec_id") < 3)
+    val n = emb.count()
+    val path = tmpPath("pq_one_cell")
+    IvfIndex.build(emb, path, nLists = 1, m = 32, ksub = 256)
+    val recompute = Similarity.ivfTopK(emb, qs, k = n.toInt, nLists = 1,
+      nProbe = 1, m = 32, ksub = 256)
+    assert(recompute.groupBy("query_id").count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap ===
+      Map(0L -> (n - 1), 1L -> (n - 1), 2L -> (n - 1)))
+    val viaIndex = IvfIndex.search(spark, path, qs, k = n.toInt, nProbe = 1)
     assert(collectSorted(viaIndex) === collectSorted(recompute))
   }
 
@@ -78,7 +92,7 @@ class IvfIndexSpec extends SparkTestBase {
     val delta = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 50)
     val path = tmpPath("ivf_plan")
     IvfIndex.build(corpus, path, nLists = 16)
-    val p = IvfIndex.searchTopK(spark, path, delta, k = 10, nProbe = 4)
+    val p = IvfIndex.search(spark, path, delta, k = 10, nProbe = 4)
       .queryExecution.executedPlan.toString
     // the candidate side reads the lists relation through partition
     // pruning on the literal probed-cell set
@@ -101,7 +115,8 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("append under the frozen quantizer: searching the appended " +
-    "index equals ivfTopKWithCentroids over the union, row for row — " +
+    "index equals the frozen-quantizer kernel over the union, row for " +
+    "row — " +
     "and appended vectors are first-class neighbors") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0)
@@ -110,13 +125,12 @@ class IvfIndexSpec extends SparkTestBase {
     val path = tmpPath("ivf_append")
     IvfIndex.build(base, path, nLists = 16)
     IvfIndex.append(spark, path, delta)
-    val viaIndex = IvfIndex.searchTopK(spark, path, queries,
-      k = 10, nProbe = 12)
+    val viaIndex = IvfIndex.search(spark, path, queries, k = 10,
+      nProbe = 12)
     // the reference: the SAME frozen quantizer (trained on base only)
     // assigning the union inline
-    val recompute = Similarity.ivfTopKWithCentroids(
-      Similarity.ivfCentroids(base), base.unionAll(delta), queries,
-      k = 10, nProbe = 12)
+    val recompute = frozenIvfTopK(Similarity.ivfCentroids(base),
+      base.unionAll(delta), queries, k = 10, nProbe = 12)
     assert(collectSorted(viaIndex) === collectSorted(recompute))
     // delta vectors actually surface as neighbors (delta queries have
     // near-identical delta siblings only when vec_id % 10 == 0 pairs
@@ -133,8 +147,7 @@ class IvfIndexSpec extends SparkTestBase {
     val path = tmpPath("ivfpq_append")
     IvfIndex.build(base, path, nLists = 16, m = 32, ksub = 256)
     IvfIndex.append(spark, path, delta)
-    val viaIndex = IvfIndex.searchPqTopK(spark, path, qs, k = 10,
-      nProbe = 4)
+    val viaIndex = IvfIndex.search(spark, path, qs, k = 10, nProbe = 4)
     assert(viaIndex.count() > 0)
     // every returned candidate must carry a REAL pq_cosine (codes were
     // written for the appended rows too — a missing codes column would
@@ -150,7 +163,7 @@ class IvfIndexSpec extends SparkTestBase {
       col("vec_id") < 30)
     val path = tmpPath("ivf_torn_append")
     IvfIndex.build(base, path, nLists = 8)
-    val before = collectSorted(IvfIndex.searchTopK(spark, path, queries,
+    val before = collectSorted(IvfIndex.search(spark, path, queries,
       k = 5, nProbe = 8))
     // simulate a crash mid-append: epoch-1 list files exist, but
     // cellstats and meta were never restamped
@@ -160,18 +173,18 @@ class IvfIndexSpec extends SparkTestBase {
       .withColumn("cell", lit(0))
       .write.mode("append").partitionBy("epoch", "cell")
       .parquet(s"$path/lists")
-    val torn = collectSorted(IvfIndex.searchTopK(spark, path, queries,
+    val torn = collectSorted(IvfIndex.search(spark, path, queries,
       k = 5, nProbe = 8))
     assert(torn === before) // the orphan epoch is never read
     // a real append now sweeps the orphans and commits exactly one
     // copy of the delta: results equal a clean build+append
     IvfIndex.append(spark, path, delta)
-    val appended = collectSorted(IvfIndex.searchTopK(spark, path,
+    val appended = collectSorted(IvfIndex.search(spark, path,
       queries, k = 5, nProbe = 8))
     val cleanPath = tmpPath("ivf_clean_append")
     IvfIndex.build(base, cleanPath, nLists = 8)
     IvfIndex.append(spark, cleanPath, delta)
-    assert(appended === collectSorted(IvfIndex.searchTopK(spark,
+    assert(appended === collectSorted(IvfIndex.search(spark,
       cleanPath, queries, k = 5, nProbe = 8)))
   }
 
@@ -187,7 +200,7 @@ class IvfIndexSpec extends SparkTestBase {
     // rebuild with different geometry: the new index wins cleanly
     IvfIndex.build(emb, path, nLists = 4)
     val delta = emb.filter(col("vec_id") < 5)
-    assert(IvfIndex.searchTopK(spark, path, delta, k = 5,
+    assert(IvfIndex.search(spark, path, delta, k = 5,
       nProbe = 4).count() > 0)
     assert(parent.listFiles().forall(!_.getName.contains(".build-")),
       parent.listFiles().map(_.getName).mkString(", "))
@@ -245,12 +258,12 @@ class IvfIndexSpec extends SparkTestBase {
     assert(new java.io.File(s"$path/cellstats_new")
       .renameTo(new java.io.File(s"$path/cellstats")))
     val e = intercept[IllegalArgumentException] {
-      IvfIndex.searchTopK(spark, path, qs, k = 5, nProbe = 2)
+      IvfIndex.search(spark, path, qs, k = 5, nProbe = 2)
     }
     assert(e.getMessage.contains("n_vecs stamp"))
     deleteDir(new java.io.File(s"$path/quantizer"))
     intercept[Exception] {
-      IvfIndex.searchTopK(spark, path, qs, k = 5, nProbe = 2)
+      IvfIndex.search(spark, path, qs, k = 5, nProbe = 2)
     }
   }
 
@@ -266,7 +279,7 @@ class IvfIndexSpec extends SparkTestBase {
       builds += 1
       IvfIndex.build(emb, p, nLists = 4)
     } { p =>
-      IvfIndex.searchTopK(spark, p,
+      IvfIndex.search(spark, p,
         emb.filter(col("vec_id") < 3), k = 5, nProbe = 2).count()
     }
     assert(run() > 0 && builds === 1)
@@ -285,10 +298,5 @@ class IvfIndexSpec extends SparkTestBase {
     assert(a !== Artifacts.tableFingerprint(dir, "documents"))
     assert(a !== Artifacts.tableFingerprint("/root/testdata/sf0.01",
       "embeddings"))
-  }
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteDir)
-    f.delete(): Unit
   }
 }

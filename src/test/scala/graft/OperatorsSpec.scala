@@ -1658,15 +1658,16 @@ class OperatorsSpec extends SparkTestBase {
     val near = unit(0); near(1) = 0.02f
     val emb = ((0L, unit(0)) +: (1L, near) +:
       (2 until 40).map(i => (i.toLong, unit(i % dim)))).toDF("vec_id", "embedding")
-    val got = Similarity.pqTopK(emb, emb.filter($"vec_id" === 0), k = 5,
-      m = 16, ksub = 8)
+    val got = Similarity.ivfTopK(emb, emb.filter($"vec_id" === 0), k = 5,
+      nLists = 1, nProbe = 1, m = 16, ksub = 8)
     val first = got.filter($"rnk" === 1).select("vec_id").as[Long].head()
     assert(first === 1L)
     intercept[IllegalArgumentException] { // 64 not divisible by 7
-      Similarity.pqTopK(emb, emb.limit(1), m = 7)
+      Similarity.ivfTopK(emb, emb.limit(1), nLists = 1, nProbe = 1, m = 7)
     }
     intercept[IllegalArgumentException] { // sample smaller than ksub
-      Similarity.pqTopK(emb, emb.limit(1), ksub = 64)
+      Similarity.ivfTopK(emb, emb.limit(1), nLists = 1, nProbe = 1, m = 8,
+        ksub = 64)
     }
   }
 
@@ -1678,20 +1679,33 @@ class OperatorsSpec extends SparkTestBase {
     val near = unit(0); near(1) = 0.02f
     val emb = ((0L, unit(0)) +: (1L, near) +:
       (2 until 40).map(i => (i.toLong, unit(i % dim)))).toDF("vec_id", "embedding")
-    val cb = Similarity.pqCodebooks(emb, m = 16, ksub = 8)
-    assert(cb.count() === 16L * 8L * 4L)
-    val got = Similarity.pqTopKWithCodebooks(cb, emb,
-      emb.filter($"vec_id" === 0), k = 5)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_pq_index_").toString + "/idx"
+    graft.operators.IvfIndex.build(emb, path, nLists = 1, m = 16, ksub = 8)
+    assert(spark.read.parquet(s"$path/codebooks").count() === 16L * 8L * 4L)
+    val qs = emb.filter($"vec_id" === 0)
+    val got = graft.operators.IvfIndex.search(spark, path, qs, k = 5,
+      nProbe = 1)
     val first = got.filter($"rnk" === 1).select("vec_id").as[Long].head()
     assert(first === 1L)
     // identical training seed -> identical results to the inline path
-    val inline = Similarity.pqTopK(emb, emb.filter($"vec_id" === 0),
-      k = 5, m = 16, ksub = 8)
+    val inline = Similarity.ivfTopK(emb, qs, k = 5, nLists = 1, nProbe = 1,
+      m = 16, ksub = 8)
       .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)]
       .collect().toSet
     val persisted = got.select("query_id", "vec_id", "rnk")
       .as[(Long, Long, Int)].collect().toSet
     assert(persisted === inline)
+    // a truncated codebook relation is not dense: the load fails loudly
+    val cb = spark.read.parquet(s"$path/codebooks")
+    cb.limit(16 * 8 * 4 - 1).coalesce(1).write.parquet(s"$path/cb_torn")
+    deleteDir(new java.io.File(s"$path/codebooks"))
+    assert(new java.io.File(s"$path/cb_torn")
+      .renameTo(new java.io.File(s"$path/codebooks")))
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.IvfIndex.search(spark, path, qs, k = 5, nProbe = 1)
+    }
+    assert(e.getMessage.contains("not a dense codebook relation"))
   }
 
   test("ivf+pq composed index: near-identical vector ranks first; " +
@@ -1702,12 +1716,16 @@ class OperatorsSpec extends SparkTestBase {
     val near = unit(0); near(1) = 0.02f
     val emb = ((0L, unit(0)) +: (1L, near) +:
       (2 until 40).map(i => (i.toLong, unit(i % dim)))).toDF("vec_id", "embedding")
-    val got = Similarity.ivfPqTopK(emb, emb.filter($"vec_id" === 0),
+    val got = Similarity.ivfTopK(emb, emb.filter($"vec_id" === 0),
       k = 5, nLists = 4, nProbe = 2, m = 16, ksub = 8)
     val first = got.filter($"rnk" === 1).select("vec_id").as[Long].head()
     assert(first === 1L)
     intercept[IllegalArgumentException] { // nProbe > nLists
-      Similarity.ivfPqTopK(emb, emb.limit(1), nLists = 4, nProbe = 5)
+      Similarity.ivfTopK(emb, emb.limit(1), nLists = 4, nProbe = 5, m = 8)
+    }
+    intercept[IllegalArgumentException] { // re-rank of exact scores
+      Similarity.ivfTopK(emb, emb.limit(1), nLists = 4, nProbe = 2,
+        rerank = 10)
     }
   }
 
@@ -1725,13 +1743,13 @@ class OperatorsSpec extends SparkTestBase {
     assert(cents.select("cluster").distinct().count() === 4)
     // the persisted relation drives the same search (no training here:
     // the query batch reads centroids, not a sample)
-    val got = Similarity.ivfTopKWithCentroids(cents,
-      emb, emb.filter($"vec_id" === 0), k = 5, nProbe = 2)
+    val got = frozenIvfTopK(cents, emb, emb.filter($"vec_id" === 0),
+      k = 5, nProbe = 2)
     val first = got.filter($"rnk" === 1).select("vec_id").as[Long].head()
     assert(first === 1L)
     // two query batches against the same persisted index agree exactly
-    val again = Similarity.ivfTopKWithCentroids(cents,
-      emb, emb.filter($"vec_id" === 0), k = 5, nProbe = 2)
+    val again = frozenIvfTopK(cents, emb, emb.filter($"vec_id" === 0),
+      k = 5, nProbe = 2)
     assert(got.collect().toSet === again.collect().toSet)
     // training consolidation law: the persisted-quantizer route equals
     // the inline ivfTopK (same deterministic KMeans training path)
@@ -1744,8 +1762,8 @@ class OperatorsSpec extends SparkTestBase {
       .createTempDirectory("graft_ivf_index_").toString
     graft.operators.KMeans.saveCentroids(cents, dir)
     val loaded = graft.operators.KMeans.loadCentroids(spark, dir)
-    val fromDisk = Similarity.ivfTopKWithCentroids(loaded,
-      emb, emb.filter($"vec_id" === 0), k = 5, nProbe = 2)
+    val fromDisk = frozenIvfTopK(loaded, emb, emb.filter($"vec_id" === 0),
+      k = 5, nProbe = 2)
     assert(fromDisk.collect().toSet === got.collect().toSet)
   }
 
@@ -1771,7 +1789,8 @@ class OperatorsSpec extends SparkTestBase {
     assert(cents.select("cluster").distinct().count() === 4)
     // same guard on the PQ trainer
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.pqCodebooks(emb, m = 16, ksub = 8, maxTrainBytes = 100L)
+      Similarity.ivfTopK(emb, emb.limit(1), nLists = 1, nProbe = 1, m = 16,
+        ksub = 8, maxTrainBytes = 100L)
     }
     assert(e2.getMessage.contains("maxTrainBytes"))
     // the 64 MB default admits every sf-test corpus unchanged: full-
@@ -1795,12 +1814,12 @@ class OperatorsSpec extends SparkTestBase {
     // trainSample = 8 keeps training on the (clean) leading rows — the
     // mismatch must surface from the ENCODE guard, not from training
     val ex = intercept[Exception] {
-      Similarity.pqTopK(emb, good.limit(1), k = 3, m = 16, ksub = 8,
-        trainSample = 8).collect()
+      Similarity.ivfTopK(emb, good.limit(1), k = 3, nLists = 1, nProbe = 1,
+        m = 16, ksub = 8, trainSample = 8).collect()
     }
     assert(ex.getMessage.contains("dim mismatch"))
     val ex2 = intercept[Exception] {
-      Similarity.ivfPqTopK(emb, good.limit(1), k = 3, nLists = 4,
+      Similarity.ivfTopK(emb, good.limit(1), k = 3, nLists = 4,
         nProbe = 2, m = 16, ksub = 8, trainSample = 8).collect()
     }
     assert(ex2.getMessage.contains("dim mismatch"))

@@ -63,14 +63,14 @@ object RecallSweep {
         f"| $mn%.2f | $mean%.2f | $dt%.1f |")
     }
     for (m <- Seq(8, 16, 32); ksub <- Seq(16, 64, 256) if !rerankOnly && !massOnly) {
-      val (mn, mean, dt) = recalls(Similarity.pqTopK(emb, qs, k = 10,
-        m = m, ksub = ksub))
+      val (mn, mean, dt) = recalls(Similarity.ivfTopK(emb, qs, k = 10,
+        nLists = 1, nProbe = 1, m = m, ksub = ksub))
       println(f"| PQ | m=$m ksub=$ksub | $mn%.2f | $mean%.2f | $dt%.1f |")
     }
     for (nLists <- Seq(8, 16); nProbe <- Seq(4, 6, 8)
          if nProbe <= nLists && !rerankOnly && !massOnly; m <- Seq(16, 32);
          ksub <- Seq(64, 256)) {
-      val (mn, mean, dt) = recalls(Similarity.ivfPqTopK(emb, qs, k = 10,
+      val (mn, mean, dt) = recalls(Similarity.ivfTopK(emb, qs, k = 10,
         nLists = nLists, nProbe = nProbe, m = m, ksub = ksub))
       println(f"| IVF+PQ | nLists=$nLists nProbe=$nProbe m=$m ksub=$ksub " +
         f"| $mn%.2f | $mean%.2f | $dt%.1f |")
@@ -78,7 +78,7 @@ object RecallSweep {
     // the IVFADC refinement stage: exact re-rank of the ADC shortlist
     for ((nLists, nProbe) <- Seq((8, 4), (8, 6), (16, 8), (16, 10),
            (16, 12)); rr <- Seq(20, 50, 100) if !massOnly) {
-      val (mn, mean, dt) = recalls(Similarity.ivfPqTopK(emb, qs, k = 10,
+      val (mn, mean, dt) = recalls(Similarity.ivfTopK(emb, qs, k = 10,
         nLists = nLists, nProbe = nProbe, m = 32, ksub = 256, rerank = rr))
       println(f"| IVF+PQ+rerank | nLists=$nLists nProbe=$nProbe m=32 " +
         f"ksub=256 rerank=$rr | $mn%.2f | $mean%.2f | $dt%.1f |")
@@ -87,7 +87,7 @@ object RecallSweep {
     // corpus mass reaches tau — the probe ratio IS tau, so the row
     // reads as recall-at-coverage
     for (nLists <- Seq(16, 32, 64); tau <- Seq(0.3, 0.5, 0.7, 0.9)) {
-      val (mn, mean, dt) = recalls(Similarity.ivfPqTopK(emb, qs, k = 10,
+      val (mn, mean, dt) = recalls(Similarity.ivfTopK(emb, qs, k = 10,
         nLists = nLists, nProbe = 1, m = 32, ksub = 256, rerank = 50,
         probeMass = tau))
       println(f"| IVF+PQ+mass | nLists=$nLists tau=$tau m=32 ksub=256 " +

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{KMeans, Similarity}
 
 /** One shared local session per suite. */
 trait SparkTestBase extends AnyFunSuite {
@@ -27,6 +29,27 @@ trait SparkTestBase extends AnyFunSuite {
       prev = cur; Thread.sleep(250); waited += 250; cur = snapshot()
     }
     (result, cur)
+  }
+
+  def deleteDir(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteDir)
+    f.delete(): Unit
+  }
+
+  /** The frozen-quantizer reference of the IVF laws: the quantizer in
+    * `centroids` (a [[Similarity.ivfCentroids]] relation) assigns
+    * `corpus` inline, and the shared search kernel probes it — what
+    * an index built with that quantizer must return, row for row. */
+  def frozenIvfTopK(centroids: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val centers = KMeans.collectCentroids(centroids)
+      .map(_.map(_ / KMeans.Scale).toArray).toArray
+    val lists = Similarity.assign(
+      Similarity.vectors(corpus, "vec_id", "embedding"), centers, None,
+      "frozenIvfTopK")
+    Similarity.probeTopK(queries, centers, None, _ => lists, Array.empty,
+      k, nProbe, nProbeMax = 0, probeMass = 0.0, rerank = 0, "vec_id",
+      "embedding", "frozenIvfTopK")
   }
 }
 

@@ -61,10 +61,9 @@ class StreamAnnIngestSpec extends SparkTestBase {
 
     val queries = emb.filter(col("vec_id") % 10 === 0 &&
       col("vec_id") < 50)
-    val viaIndex = IvfIndex.searchTopK(spark, path, queries,
-      k = 10, nProbe = 12)
-    val recompute = Similarity.ivfTopKWithCentroids(
-      Similarity.ivfCentroids(seed),
+    val viaIndex = IvfIndex.search(spark, path, queries, k = 10,
+      nProbe = 12)
+    val recompute = frozenIvfTopK(Similarity.ivfCentroids(seed),
       seed.select(col("vec_id"), col("embedding"))
         .unionAll((b0 ++ b1 ++ b2).toDF("vec_id", "embedding")),
       queries, k = 10, nProbe = 12)
@@ -106,7 +105,7 @@ class StreamAnnIngestSpec extends SparkTestBase {
       emb.filter(col("vec_id") % 10 === 0), tag = Some("b1"))
     // the append committed through the staged rename; the index loads
     val queries = emb.filter(col("vec_id") < 30)
-    assert(IvfIndex.searchTopK(spark, path, queries, k = 5,
+    assert(IvfIndex.search(spark, path, queries, k = 5,
       nProbe = 8).count() > 0)
   }
 
