@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,11 +21,11 @@ import graft.operators.Dedup
   *     mass, never index×index; batch-internal pairs canonicalize via
   *     least/greatest, corpus-internal pairs cannot form
   *     ([[graft.operators.Dedup.cdcOverlapIncrement]]);
-  *  3. emitted pairs append to `outDir/pairs`, the batch's chunk keys
-  *     append to the chunk index, both batch_id-partitioned with
-  *     dynamic partition overwrite so a replayed batch overwrites
-  *     exactly its own contribution (the [[RegisterStream.dualSink]]
-  *     idempotence discipline).
+  *  3. emitted pairs append to the one-bucket `outDir/pairs` store, the
+  *     batch's chunk keys append to the chunk index — both
+  *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
+  *     its own contribution and both fold every `compactEvery`
+  *     batches.
   *
   * '''Index layout and maintenance''' live in [[TieredIndex]]: a
   * recent tier of per-batch dirs sub-partitioned by fingerprint
@@ -83,21 +83,15 @@ import graft.operators.Dedup
 object StreamCdc {
 
   private val keySchema = "fp bigint, len int, doc_id bigint"
-  private val pairSchema =
-    "doc_a bigint, doc_b bigint, shared_chunks bigint, " +
-      "shared_bytes bigint, batch_id bigint"
 
   private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  private def pairStore(outDir: String) = new TieredIndex(
+    s"$outDir/pairs",
+    "doc_a bigint, doc_b bigint, shared_chunks bigint, shared_bytes bigint")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(index(outDir), pairStore(outDir))
 
   /** The corpus chunk-key relation visible to batch `batchId`,
     * bucket-pruned to `buckets` (None = all buckets) — see
@@ -105,6 +99,44 @@ object StreamCdc {
   private[graft] def corpusKeys(spark: SparkSession, outDir: String,
       batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
     index(outDir).corpusKeys(spark, batchId, buckets)
+
+  /** One micro-batch: emit overlap pairs touching the batch and grow
+    * the chunk index ([[sink]] runs it per trigger, then the stores'
+    * maintenance). */
+  private[graft] def foldBatch(outDir: String, batch: DataFrame,
+      batchId: Long, w: Int = 16, maskBits: Int = 6, minLen: Int = 24,
+      minSharedBytes: Int = 48, maxDocsPerChunk: Int = 64,
+      idCol: String = "doc_id", textCol: String = "text",
+      minChunk: Int = 1, maxChunk: Int = Int.MaxValue,
+      nBuckets: Int = 64): Unit = {
+    val spark = batch.sparkSession
+    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    idx.ensureNBuckets(spark, nBuckets)
+    pairs.ensureNBuckets(spark, 1)
+    val keys = Dedup.cdcChunkIndex(batch, idCol, textCol, w,
+        maskBits, minLen, minChunk, maxChunk)
+      .withColumn("bucket",
+        pmod(col("fp"), lit(nBuckets)).cast("int"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // the batch's fingerprint buckets (≤ nBuckets values — a
+      // bounded collect) become partition filters on the index
+      // read: only directories that can hold a matching key are
+      // scanned
+      val buckets = keys.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // strictly-older batches only: a replayed batch must not see
+      // its own crashed partial write as "corpus"
+      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
+        .withColumnRenamed("doc_id", idCol)
+      pairs.append(Dedup.cdcOverlapIncrement(
+          keys.select(col("fp"), col("len"), col(idCol)), corpus,
+          idCol, minSharedBytes, maxDocsPerChunk)
+        .withColumn("bucket", lit(0)), batchId)
+      idx.append(keys.select(col("fp"), col("len"),
+        col(idCol).as("doc_id"), col("bucket")), batchId)
+    } finally { keys.unpersist(); () }
+  }
 
   /** Start the sink: for each micro-batch of documents, emit overlap
     * pairs touching the batch and grow the chunk index. `docs` must
@@ -122,44 +154,11 @@ object StreamCdc {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamCdc: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamCdc: compactEvery must be >= 2, got $compactEvery")
-    val idx = index(outDir)
     docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        val keys = Dedup.cdcChunkIndex(batch, idCol, textCol, w,
-            maskBits, minLen, minChunk, maxChunk)
-          .withColumn("bucket",
-            pmod(col("fp"), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's fingerprint buckets (≤ nBuckets values — a
-          // bounded collect) become partition filters on the index
-          // read: only directories that can hold a matching key are
-          // scanned
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not see
-          // its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-            .withColumnRenamed("doc_id", idCol)
-          Dedup.cdcOverlapIncrement(
-              keys.select(col("fp"), col("len"), col(idCol)), corpus,
-              idCol, minSharedBytes, maxDocsPerChunk)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys.select(col("fp"), col("len"),
-            col(idCol).as("doc_id"), col("bucket")), batchId)
-          // fold committed recent batches (strictly older than this
-          // one — they can never replay) once enough accumulate, plus
-          // at most one size-tiered merge
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[Row]("StreamCdc", stores(outDir),
+        compactEvery)(foldBatch(outDir, _, _, w, maskBits, minLen,
+          minSharedBytes, maxDocsPerChunk, idCol, textCol, minChunk,
+          maxChunk, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
@@ -170,9 +169,7 @@ object StreamCdc {
     * object doc). Empty (with the right schema) before the first
     * batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/pairs", pairSchema)
-      .select(col("doc_a"), col("doc_b"), col("shared_chunks"),
-        col("shared_bytes"))
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The accumulated chunk index — the [[Dedup.cdcChunkIndex]]
     * relation over every committed batch (base ∪ recent tiers),

@@ -21,8 +21,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * is replay-idempotent; a crash mid-write leaves an incomplete
   * generation that readers skip. Snapshots cost O(labeled nodes) per
   * batch: labeled nodes are ∝ DUPLICATES (nodes that appeared in some
-  * pair), not corpus — the same bound as the batch pair graph. Prune
-  * old generations on retention like any snapshot table.
+  * pair), not corpus — the same bound as the batch pair graph. Old
+  * generations prune themselves: once batch N's generation commits,
+  * every generation older than the base N read (N−1's, normally) is
+  * deleted, so at most two remain and a replay of N still finds its
+  * base.
   */
 object StreamClusters {
 
@@ -40,31 +43,40 @@ object StreamClusters {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** Highest complete generation strictly below `below` (None = no
-    * bound — the read path). */
-  private def latestGen(spark: SparkSession, dir: String,
-      below: Option[Long] = None): Option[Long] = {
+  /** Generation dirs under `dir` as (id, path, complete); a foreign
+    * `gen=<non-number>` dir is skipped. */
+  private def gens(spark: SparkSession,
+      dir: String): Seq[(Long, Path, Boolean)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val gens = fs.listStatus(p).toSeq
+    if (!fs.exists(p)) return Nil
+    fs.listStatus(p).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
       .filter(_.getName.startsWith("gen="))
-      .filter(gp => fs.exists(new Path(gp, "_SUCCESS")))
-      .map(_.getName.stripPrefix("gen=").toLong)
-      .filter(g => below.forall(g < _))
-    if (gens.isEmpty) None else Some(gens.max)
+      .flatMap(gp => gp.getName.stripPrefix("gen=").toLongOption
+        .map(g => (g, gp, fs.exists(new Path(gp, "_SUCCESS")))))
   }
+
+  /** Highest complete generation strictly below `below` (None = no
+    * bound — the read path). */
+  private def latestGen(spark: SparkSession, dir: String,
+      below: Option[Long] = None): Option[Long] =
+    gens(spark, dir)
+      .collect { case (g, _, true) if below.forall(g < _) => g }
+      .maxOption
 
   /** Fold one batch of pairs into the labels relation (the testable
     * core; [[sink]] adapts it to `foreachBatch`). Reads the latest
     * complete generation STRICTLY BELOW `batchId` so a replayed batch
-    * rebuilds from the same base it saw the first time. */
+    * rebuilds from the same base it saw the first time; once the new
+    * generation commits, the generations older than that base are
+    * deleted (no reader or replay can reach them again). */
   def foldBatch(dir: String, pairs: DataFrame, batchId: Long,
       srcCol: String = "doc_a", dstCol: String = "doc_b"): Unit = {
     val spark = pairs.sparkSession
-    val base = latestGen(spark, dir, below = Some(batchId)) match {
+    val baseGen = latestGen(spark, dir, below = Some(batchId))
+    val base = baseGen match {
       case Some(g) => spark.read.parquet(s"$dir/gen=$g")
         .select("node", "component")
       case None => spark.createDataFrame(
@@ -73,6 +85,12 @@ object StreamClusters {
     graft.operators.Graph
       .connectedComponentsDelta(base, pairs, srcCol, dstCol)
       .write.mode("overwrite").parquet(s"$dir/gen=$batchId")
+    baseGen.foreach { b =>
+      val fs = new Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      gens(spark, dir).collect { case (g, gp, _) if g < b => gp }
+        .foreach(gp => { fs.delete(gp, true); () })
+    }
   }
 
   /** `foreachBatch` adapter: `pairsStream.writeStream.foreachBatch(

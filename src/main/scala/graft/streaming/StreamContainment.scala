@@ -1,23 +1,21 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.operators.Dedup
 
 /** Streaming containment join — the x117 delta containment composed
-  * online with the [[StreamCorpusLoop]] delta-store protocol: one
+  * online with the [[StreamCorpusLoop]] store protocol: one
   * `foreachBatch` sink that, per micro-batch,
   *
   *   1. reads the growing prefix index (per-doc (id, ng, sz, prefix)
-  *      rows plus the corpus (gram, df) relation) from `_SUCCESS`-gated
-  *      `delta=`/`base=` parquet directories STRICTLY BELOW the batch;
+  *      rows plus the corpus (gram, df) relation) from one-bucket
+  *      [[TieredIndex]] stores, STRICTLY BELOW the batch;
   *   2. emits every ordered containment pair TOUCHING the batch via
   *      [[Dedup.containmentPairsDelta]] — delta-contained-in-(corpus ∪
   *      delta) and corpus-contained-in-delta, never corpus×corpus —
-  *      appended as the batch's `pairs/delta=<id>`;
+  *      appended to the `pairs` store as the batch's rows;
   *   3. appends the batch's own index rows
   *      ([[Dedup.jaccardIndexDelta]], prefixes ranked under the FROZEN
   *      corpus df order — x87) and its (gram, count) df contributions.
@@ -26,124 +24,91 @@ import graft.operators.Dedup
   * surfaces in precisely the batch where its LATER-arriving endpoint
   * is the delta (the earlier doc is then in the index; same-batch
   * pairs surface via the delta×delta route) — so the UNION of all
-  * `pairs` deltas over a closed corpus equals batch
+  * per-batch pair rows over a closed corpus equals batch
   * [[Dedup.containmentPairs]] over that corpus
-  * (`StreamContainmentSpec` proves it, incl. restart and
-  * post-compaction).
+  * (`StreamContainmentSpec` proves it, incl. restart and folds).
   *
-  * Replay safety is inherited from the protocol: reads see only
-  * complete deltas strictly below the batch id, writes overwrite the
-  * batch's own directories. [[compact]] folds deltas behind the
-  * committed watermark — pairs and index rows by plain union, the df
-  * relation by RE-AGGREGATION (per-batch gram counts sum into one
-  * row per gram), keeping listing cost and file counts bounded; wire
-  * it with `sink(..., compactEvery = K)` exactly like the corpus loop.
+  * Replay safety is the [[TieredIndex]] contract: reads see only
+  * batches strictly below the batch id, writes overwrite the batch's
+  * own directories. The sink folds committed batches every
+  * `compactEvery` triggers — pairs and index rows by plain union, the
+  * df store through its sum-by-gram fold/merge function, so every df
+  * epoch holds one row per gram.
   *
   * Scale shape: per-batch cost ∝ delta size + match rate (the
   * containmentPairsDelta contract); store reads are column-pruned
-  * parquet scans; nothing is ever rewritten except at compaction.
+  * parquet scans; nothing is ever rewritten except by the stores' LSM
+  * folds and merges.
   */
 object StreamContainment {
 
-  private val indexSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("ng", ArrayType(LongType, containsNull = false)),
-    StructField("sz", IntegerType),
-    StructField("prefix", ArrayType(LongType, containsNull = false))))
-  private val gramDfSchema = StructType(Seq(
-    StructField("gram", LongType), StructField("df", LongType)))
-  private val pairsSchema = StructType(Seq(
-    StructField("doc_a", LongType), StructField("doc_b", LongType),
-    StructField("containment", DoubleType)))
+  private def indexStore(dir: String) = new TieredIndex(s"$dir/cindex",
+    "id bigint, ng array<bigint>, sz int, prefix array<bigint>")
+  private def gramStore(dir: String) = new TieredIndex(s"$dir/cgramdf",
+    "gram bigint, df bigint",
+    _.groupBy(col("gram"), col("bucket")).agg(sum(col("df")).as("df")))
+  private def pairStore(dir: String) = new TieredIndex(s"$dir/pairs",
+    "doc_a bigint, doc_b bigint, containment double")
 
-  private def indexDir(dir: String) = s"$dir/cindex"
-  private def gramDir(dir: String) = s"$dir/cgramdf"
-  private def pairsDir(dir: String) = s"$dir/pairs"
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(dir: String): Seq[TieredIndex] =
+    Seq(indexStore(dir), gramStore(dir), pairStore(dir))
 
-  /** The corpus (gram, df) relation as of `below`: per-batch counts
-    * summed. The base written by [[compact]] is already aggregated;
-    * re-aggregating (base ∪ deltas) is the same sum. */
+  /** The corpus (gram, df) relation visible to batch `below`:
+    * per-batch counts (and per-epoch sums) summed. */
   private def gramDfBelow(spark: SparkSession, dir: String,
-      below: Option[Long]): DataFrame =
-    StreamCorpusLoop.readStore(spark, gramDir(dir), gramDfSchema, below)
+      below: Long): DataFrame =
+    gramStore(dir).corpusKeys(spark, below, None)
       .groupBy(col("gram")).agg(sum(col("df")).as("df"))
 
   /** Fold one micro-batch: emit its touching pairs, then append its
     * index rows and df contributions (the testable core; [[sink]]
-    * adapts it to `foreachBatch`). */
+    * adapts it to `foreachBatch` and runs the stores' maintenance). */
   def foldBatch(dir: String, batch: DataFrame, batchId: Long,
       threshold: Double = 0.9, n: Int = 12, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    val corpusDocs = StreamCorpusLoop.readStore(
-      spark, indexDir(dir), indexSchema, Some(batchId))
-    val corpusDf = gramDfBelow(spark, dir, Some(batchId))
-    val index = Dedup.JaccardIndex(corpusDocs, corpusDf, threshold, n)
-    Dedup.containmentPairsDelta(batch, index, idCol, textCol)
-      .write.mode("overwrite")
-      .parquet(s"${pairsDir(dir)}/delta=$batchId")
-    Dedup.jaccardIndexDelta(batch, corpusDf, threshold, n, idCol, textCol)
-      .write.mode("overwrite")
-      .parquet(s"${indexDir(dir)}/delta=$batchId")
-    batch
+    val (cindex, gramDf, pairs) =
+      (indexStore(dir), gramStore(dir), pairStore(dir))
+    Seq(cindex, gramDf, pairs).foreach(_.ensureNBuckets(spark, 1))
+    val corpusDf = gramDfBelow(spark, dir, batchId)
+    val index = Dedup.JaccardIndex(
+      cindex.corpusKeys(spark, batchId, None), corpusDf, threshold, n)
+    pairs.append(Dedup.containmentPairsDelta(batch, index, idCol, textCol)
+      .withColumn("bucket", lit(0)), batchId)
+    cindex.append(Dedup.jaccardIndexDelta(batch, corpusDf, threshold, n,
+        idCol, textCol)
+      .withColumn("bucket", lit(0)), batchId)
+    gramDf.append(batch
       .select(graft.functions.ShingleExprs
         .shingleSetChars(col(textCol), n).as("ng"))
       .filter(col("ng").isNotNull && size(col("ng")) >= 1)
       .select(explode(col("ng")).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite")
-      .parquet(s"${gramDir(dir)}/delta=$batchId")
+      .withColumn("bucket", lit(0)), batchId)
   }
 
-  /** `foreachBatch` adapter; `compactEvery = K` (0 = manual) compacts
-    * behind watermark N after folding batch N % K == 0 — safe inside
-    * the serialized callback (the [[StreamCorpusLoop.sink]] contract). */
+  /** `foreachBatch` adapter; after folding batch N it runs each
+    * store's [[TieredIndex.maintain]] (folds every `compactEvery`
+    * committed batches) — safe inside the serialized callback, the
+    * [[StreamCorpusLoop.sink]] contract. */
   def sink(dir: String, threshold: Double = 0.9, n: Int = 12,
       idCol: String = "doc_id", textCol: String = "text",
-      compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      foldBatch(dir, batch, batchId, threshold, n, idCol, textCol)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compact(batch.sparkSession, dir, below = batchId)
-    }
+      compactEvery: Int = 16): (DataFrame, Long) => Unit =
+    TieredIndex.trigger[Row]("StreamContainment", stores(dir),
+      compactEvery)(foldBatch(dir, _, _, threshold, n, idCol, textCol))
 
-  /** Fold every delta strictly below `below` into `base=<below>` per
-    * store and prune the subsumed directories — the
-    * [[StreamCorpusLoop.compact]] contract (atomic base commit before
-    * deletion, idempotent re-runs, byte-identical reads at or past
-    * `below`), with the df store compacted to its AGGREGATED form. */
-  def compact(spark: SparkSession, dir: String, below: Long): Unit = {
-    def one(sub: String, read: Option[Long] => DataFrame): Unit = {
-      val fs = new Path(sub)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val already = StreamCorpusLoop.completeDirs(spark, sub, "base=")
-        .exists(_._1 == below)
-      if (!already)
-        read(Some(below)).write.mode("overwrite").parquet(s"$sub/base=$below")
-      (StreamCorpusLoop.completeDirs(spark, sub, "delta=")
-          .filter(_._1 < below) ++
-        StreamCorpusLoop.completeDirs(spark, sub, "base=")
-          .filter(_._1 < below))
-        .foreach { case (_, p) => fs.delete(new Path(p), true) }
-    }
-    one(indexDir(dir), b => StreamCorpusLoop.readStore(
-      spark, indexDir(dir), indexSchema, b))
-    one(gramDir(dir), b => gramDfBelow(spark, dir, b))
-    one(pairsDir(dir), b => StreamCorpusLoop.readStore(
-      spark, pairsDir(dir), pairsSchema, b))
-  }
-
-  /** Every containment pair emitted so far (the union of complete
+  /** Every containment pair emitted so far (the union of committed
     * per-batch outputs) — over a closed corpus, equal to batch
     * [[Dedup.containmentPairs]]. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    StreamCorpusLoop.readStore(spark, pairsDir(dir), pairsSchema, None)
+    pairStore(dir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The growing prefix-index relation (id, ng, sz, prefix). */
   def index(spark: SparkSession, dir: String): DataFrame =
-    StreamCorpusLoop.readStore(spark, indexDir(dir), indexSchema, None)
+    indexStore(dir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The corpus (gram, df) relation (aggregated). */
   def gramDf(spark: SparkSession, dir: String): DataFrame =
-    gramDfBelow(spark, dir, None)
+    gramDfBelow(spark, dir, Long.MaxValue)
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
@@ -23,262 +21,103 @@ import graft.operators.Dedup
   *      pairs fold into the persisted (node, component) labeling.
   *
   * Storage protocol: stores 1, 2 and the accepted-ids output are
-  * APPEND-ONLY as per-batch `delta=<batchId>` parquet directories —
-  * delta-sized writes (never an O(corpus) snapshot), each committed
-  * atomically by the parquet job (`_SUCCESS`); store 3 reuses
-  * [[StreamClusters]]' full-snapshot generations (O(labeled nodes) ∝
-  * duplicates). Restart safety: every read for batch N unions only
-  * COMPLETE deltas / generations STRICTLY BELOW N, and every write
-  * overwrites batch N's own directory — a replayed batch rebuilds from
-  * exactly the base its first attempt saw, so the sink is
-  * replay-idempotent store-by-store and a crash between stores heals on
-  * replay. [[compact]] folds old deltas into a single `base=` directory
-  * behind the committed-batch watermark, so file counts stay bounded
-  * over an unbounded stream. Arrival-order contract: batches are
-  * ingestion slices (the x48 replay contract), so the first-arrival
-  * keep equals batch [[Dedup.exact]]'s min-id keep when ids are
-  * arrival-ordered.
+  * one-bucket [[TieredIndex]] stores under `dir/hash`, `dir/fps` and
+  * `dir/accepted` — per-batch delta-sized appends (never an O(corpus)
+  * snapshot), folded every `compactEvery` triggers into LSM base
+  * epochs by the sink itself; store 3 reuses [[StreamClusters]]'
+  * full-snapshot generations (O(labeled nodes) ∝ duplicates), which
+  * prune themselves. Restart safety: every read for batch N sees only
+  * rows STRICTLY BELOW N, and every write overwrites batch N's own
+  * directory — a replayed batch rebuilds from exactly the content its
+  * first attempt saw, so the sink is replay-idempotent store-by-store
+  * and a crash between stores heals on replay. Maintenance runs only
+  * inside the serialized `foreachBatch` (the [[TieredIndex]]
+  * single-writer contract), so no compaction ever races a batch.
+  * Arrival-order contract: batches are ingestion slices (the x48
+  * replay contract), so the first-arrival keep equals batch
+  * [[Dedup.exact]]'s min-id keep when ids are arrival-ordered.
   */
 object StreamCorpusLoop {
 
-  private val hashSchema = StructType(Seq(StructField("h", BinaryType)))
-  private val fpSchema = StructType(Seq(
-    StructField("id", LongType), StructField("simhash", LongType)))
-
-  private def hashDir(dir: String) = s"$dir/hash"
-  private def fpDir(dir: String) = s"$dir/fps"
+  private def hashStore(dir: String) =
+    new TieredIndex(s"$dir/hash", "h binary")
+  private def fpStore(dir: String) =
+    new TieredIndex(s"$dir/fps", "id bigint, simhash bigint")
+  private def acceptedStore(dir: String, idCol: String) =
+    new TieredIndex(s"$dir/accepted", s"`$idCol` bigint")
   private def labelsDir(dir: String) = s"$dir/labels"
-  private def acceptedDir(dir: String) = s"$dir/accepted"
 
-  /** Complete (`_SUCCESS`-marked) child directories of `dir` with the
-    * given `prefix=` naming, as (id, path). Foreign or leftover
-    * children whose suffix is not a number (`delta=3.bak`,
-    * `delta=tmp`) are SKIPPED, not fatal — a stray directory must
-    * never permanently brick every store read. */
-  private[streaming] def completeDirs(spark: SparkSession, dir: String,
-      prefix: String): Seq[(Long, String)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .filter(gp => fs.exists(new Path(gp, "_SUCCESS")))
-      .flatMap(gp => gp.getName.stripPrefix(prefix).toLongOption
-        .map(_ -> gp.toString))
-  }
-
-  /** Store read for batch `below` (None = the live read): the largest
-    * complete `base=b` with b ≤ below — a compacted union of every
-    * delta with id < b ([[compact]]) — plus the `delta=` dirs with
-    * b ≤ id < below. Content is identical before and after compaction
-    * for every batch at or past the compaction point, which is what
-    * keeps replays exact (see [[compact]]'s watermark contract). */
-  private[streaming] def readStore(spark: SparkSession, dir: String,
-      schema: StructType, below: Option[Long]): DataFrame = {
-    val bases = completeDirs(spark, dir, "base=")
-      .filter { case (b, _) => below.forall(b <= _) }
-    val base = if (bases.isEmpty) None else Some(bases.maxBy(_._1))
-    val lo = base.map(_._1).getOrElse(Long.MinValue)
-    val deltas = completeDirs(spark, dir, "delta=")
-      .filter { case (i, _) => i >= lo && below.forall(i < _) }
-      .map(_._2)
-    val paths = base.map(_._2).toSeq ++ deltas
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-  }
-
-  /** True when `e` (or anything in its cause chain) is a missing-file
-    * failure — the signature of a read whose file listing predates a
-    * concurrent [[compact]]'s delta pruning. */
-  private[graft] def isMissingFileFailure(e: Throwable): Boolean = {
-    var cur = e
-    var depth = 0
-    while (cur != null && depth < 16) {
-      val msg = if (cur.getMessage == null) "" else cur.getMessage
-      if (cur.isInstanceOf[java.io.FileNotFoundException] ||
-          msg.contains("FileNotFoundException") ||
-          msg.contains("does not exist") ||
-          msg.contains("FAILED_READ_FILE")) return true
-      cur = cur.getCause
-      depth += 1
-    }
-    false
-  }
-
-  /** Run `f` and, if it fails because a listed store path vanished
-    * under it (an out-of-band [[compact]] pruning subsumed deltas
-    * between this batch's file LISTING and its task execution), run it
-    * ONCE more. `f` must construct its plans from fresh [[readStore]]
-    * calls — the retry re-lists, and the post-compaction listing is
-    * content-identical by the [[compact]] watermark contract, so the
-    * retry computes exactly what the first attempt would have. One
-    * retry suffices for one concurrent compaction event; a second
-    * consecutive failure is a real fault and propagates. */
-  private[graft] def withStoreRetry[A](label: String)(f: => A): A =
-    try f catch {
-      case e: Throwable if isMissingFileFailure(e) =>
-        System.err.println(s"[StreamCorpusLoop] $label hit a vanished " +
-          s"store path (concurrent compact?) — rebuilding and retrying " +
-          s"once: ${e.getMessage}")
-        f
-    }
+  /** The loop's [[TieredIndex]] stores (labels are not one). */
+  private[graft] def stores(dir: String,
+      idCol: String = "doc_id"): Seq[TieredIndex] =
+    Seq(hashStore(dir), fpStore(dir), acceptedStore(dir, idCol))
 
   /** Fold one micro-batch of documents through all three artifacts
-    * (the testable core; [[sink]] adapts it to `foreachBatch`). Each
-    * store-consuming step builds its plan AND runs its action inside
-    * [[withStoreRetry]], so an out-of-band [[compact]] racing this
-    * batch degrades to one transparent re-list instead of a batch
-    * failure (the foreachBatch route never races by construction —
-    * see [[sink]]). */
+    * (the testable core; [[sink]] adapts it to `foreachBatch` and
+    * runs the stores' maintenance after it). */
   def foldBatch(dir: String, batch: DataFrame, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3): Unit = {
     val spark = batch.sparkSession
+    val (hash, fps, accepted) =
+      (hashStore(dir), fpStore(dir), acceptedStore(dir, idCol))
+    Seq(hash, fps, accepted).foreach(_.ensureNBuckets(spark, 1))
     val b = batch.select(col(idCol), col(textCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // 1. exact dedup against the growing hash index, then append the
     // batch's NEW hashes (left_anti keeps the index a set across deltas)
-    withStoreRetry("accepted delta") {
-      val idx = readStore(spark, hashDir(dir), hashSchema, Some(batchId))
-      Dedup.exactDelta(b, idx, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(s"${acceptedDir(dir)}/delta=$batchId")
-    }
-    withStoreRetry("hash delta") {
-      val idx = readStore(spark, hashDir(dir), hashSchema, Some(batchId))
-      Dedup.hashIndex(b, textCol).join(idx, Seq("h"), "left_anti")
-        .write.mode("overwrite")
-        .parquet(s"${hashDir(dir)}/delta=$batchId")
-    }
+    val idx = hash.corpusKeys(spark, batchId, None)
+    accepted.append(Dedup.exactDelta(b, idx, idCol, textCol)
+      .withColumn("bucket", lit(0)), batchId)
+    hash.append(Dedup.hashIndex(b, textCol).join(idx, Seq("h"), "left_anti")
+      .withColumn("bucket", lit(0)), batchId)
 
     // 2. near-dup pairs against corpus + batch fingerprints (delta
     // probes; corpus×corpus pairs structurally cannot form), then
     // append the batch's fingerprints
     // 3. fold the batch's pairs into the labels store (StreamClusters'
     // generation protocol is itself replay-idempotent)
-    withStoreRetry("simhash pairs + labels + fps delta") {
-      val corpusFps = readStore(spark, fpDir(dir), fpSchema, Some(batchId))
-      val dFps = Dedup.simhash(b, idCol, textCol, poly = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val pairs = Dedup
-        .simhashPairsDeltaFps(dFps, corpusFps, maxHamming)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        StreamClusters.foldBatch(labelsDir(dir),
-          pairs.select(col("doc_a"), col("doc_b")), batchId)
-        dFps.write.mode("overwrite").parquet(s"${fpDir(dir)}/delta=$batchId")
-      } finally {
-        // unpersist THIS attempt's handles even on failure, so a retry
-        // starts from fresh plans with no cached partial state behind
-        pairs.unpersist(false)
-        dFps.unpersist(false)
-      }
-    }
+    val dFps = Dedup.simhash(b, idCol, textCol, poly = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pairs = Dedup
+      .simhashPairsDeltaFps(dFps, fps.corpusKeys(spark, batchId, None),
+        maxHamming)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    StreamClusters.foldBatch(labelsDir(dir),
+      pairs.select(col("doc_a"), col("doc_b")), batchId)
+    fps.append(dFps.withColumn("bucket", lit(0)), batchId)
+    pairs.unpersist(false)
+    dFps.unpersist(false)
     b.unpersist(false)
   }
 
   /** `foreachBatch` adapter: `docsStream.writeStream.foreachBatch(
-    * StreamCorpusLoop.sink(dir)).start()`.
-    *
-    * `compactEvery = K` (0 = manual) wires [[compact]] into the loop:
-    * after folding batch N with N > 0 and N % K == 0, the sink
-    * compacts behind watermark N. Safe by construction — foreachBatch
-    * callbacks are serialized, so no other micro-batch of THIS stream
-    * is in flight while the compaction deletes subsumed deltas, and
-    * N's own reads already happened (a replay of N reads `base=N`,
-    * byte-identical per the [[compact]] contract). This is the
-    * recommended way to run the loop forever: the per-trigger listing
-    * cost and directory count stay bounded without any external
-    * maintenance job. */
+    * StreamCorpusLoop.sink(dir)).start()`. After folding batch N it
+    * runs each store's [[TieredIndex.maintain]]: once `compactEvery`
+    * committed batch dirs accumulate they fold into a base epoch, so
+    * a forever-running loop keeps O(compactEvery) recent dirs and
+    * O(log n) epochs per store without any external maintenance job. */
   def sink(dir: String, idCol: String = "doc_id",
       textCol: String = "text",
-      maxHamming: Int = 3, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      foldBatch(dir, batch, batchId, idCol, textCol, maxHamming)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compact(batch.sparkSession, dir, below = batchId, idCol = idCol)
-    }
-
-  /** Compact the loop's stores: fold every delta STRICTLY BELOW
-    * `below` into one `base=<below>` directory per store and prune the
-    * subsumed base/delta directories, plus every labels generation
-    * older than the newest one below `below` — the maintenance step
-    * that keeps a forever-running loop's file count (and per-trigger
-    * listing cost) bounded instead of growing one directory per
-    * micro-batch.
-    *
-    * Safety contract: call with `below` ≤ the stream's last COMMITTED
-    * batch id. Structured Streaming replays only batches past the
-    * commit-log frontier, so no future read asks for state strictly
-    * inside the compacted range — and every read at or past `below`
-    * sees byte-identical content before and after ([[readStore]]
-    * unions the base with the remaining deltas). Crash-safe and
-    * idempotent: the base commits atomically (`_SUCCESS`) BEFORE any
-    * deletion; a re-run that finds a complete `base=<below>` skips the
-    * rewrite and only re-prunes.
-    *
-    * CONCURRENCY: that contract covers committed-batch REPLAY; a
-    * micro-batch executing concurrently with the deletion is handled
-    * by [[foldBatch]]'s [[withStoreRetry]] wrappers — a read whose
-    * file listing predates the pruning fails with a missing-file
-    * error, and the step rebuilds its plans (re-listing the store)
-    * and retries once; the post-compaction listing is content-
-    * identical by this method's watermark contract, so the retry is
-    * exact, never lossy (StreamCorpusLoopSpec races an external
-    * compact against an in-flight foldBatch). The foreachBatch route
-    * (`sink(..., compactEvery = K)`) never races at all: compaction
-    * runs inside the serialized callback, where no batch of this
-    * stream can be in flight. */
-  def compact(spark: SparkSession, dir: String, below: Long,
-      idCol: String = "doc_id"): Unit = {
-    def one(sub: String, schema: StructType): Unit = {
-      val fs = new Path(sub)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val already = completeDirs(spark, sub, "base=").exists(_._1 == below)
-      if (!already)
-        readStore(spark, sub, schema, Some(below))
-          .write.mode("overwrite").parquet(s"$sub/base=$below")
-      (completeDirs(spark, sub, "delta=").filter(_._1 < below) ++
-        completeDirs(spark, sub, "base=").filter(_._1 < below))
-        .foreach { case (_, p) => fs.delete(new Path(p), true) }
-    }
-    one(hashDir(dir), hashSchema)
-    one(fpDir(dir), fpSchema)
-    one(acceptedDir(dir),
-      StructType(Seq(StructField(idCol, LongType))))
-    // labels are FULL snapshots — only the newest generation below the
-    // watermark can ever be read again
-    val gens = completeDirs(spark, labelsDir(dir), "gen=")
-      .filter(_._1 < below)
-    if (gens.nonEmpty) {
-      val keep = gens.maxBy(_._1)._1
-      val fs = new Path(labelsDir(dir))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      gens.filter(_._1 < keep)
-        .foreach { case (_, p) => fs.delete(new Path(p), true) }
-    }
-  }
+      maxHamming: Int = 3, compactEvery: Int = 16): (DataFrame, Long) => Unit =
+    TieredIndex.trigger[Row]("StreamCorpusLoop", stores(dir, idCol),
+      compactEvery)(foldBatch(dir, _, _, idCol, textCol, maxHamming))
 
   /** Accepted (first-arrival unique-content) doc ids across every
     * complete batch. */
   def acceptedIds(spark: SparkSession, dir: String,
       idCol: String = "doc_id"): DataFrame =
-    readStore(spark, acceptedDir(dir),
-      StructType(Seq(StructField(idCol, LongType))), None)
+    acceptedStore(dir, idCol).corpusKeys(spark, Long.MaxValue, None)
 
   /** The growing content-hash index (one 16-byte row per distinct
     * accepted content). */
   def hashIndex(spark: SparkSession, dir: String): DataFrame =
-    readStore(spark, hashDir(dir), hashSchema, None)
+    hashStore(dir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The growing fingerprint relation (id, simhash). */
   def fps(spark: SparkSession, dir: String): DataFrame =
-    readStore(spark, fpDir(dir), fpSchema, None)
+    fpStore(dir).corpusKeys(spark, Long.MaxValue, None)
 
   /** Current cluster labels (delegates to [[StreamClusters]]). */
   def labels(spark: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,9 +21,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   *     via [[Multimodal.paragraphEdgeIncrement]] (df-capped over the
   *     union frequency as of the batch), media pairs via
   *     [[Multimodal.nearDupIncrement]] (exact);
-  *  3. the tagged edge union appends to `outDir/pairs`; the batch's
-  *     postings append to their indexes — all batch_id-partitioned
-  *     with dynamic overwrite, so a replayed batch overwrites exactly
+  *  3. the tagged edge union appends to the one-bucket `outDir/pairs`
+  *     store; the batch's postings append to their indexes — all
+  *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
   *     its own contribution.
   *
   * Both indexes are [[TieredIndex]]es (LSM fold/merge, bucket-pruned
@@ -42,26 +42,67 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   * batches. */
 object StreamCrossModal {
 
-  private val textKeySchema = "doc_id bigint, h bigint"
-  private val mediaKeySchema = "media_id bigint, v array<float>, " +
-    "j int, k1 float, k2 float, k3 float, k4 float"
-  private val pairSchema =
-    "doc_a bigint, doc_b bigint, modality string, batch_id bigint"
-
   private def textIndex(outDir: String) =
-    new TieredIndex(s"$outDir/text", textKeySchema)
+    new TieredIndex(s"$outDir/text", "doc_id bigint, h bigint")
   private def mediaIndex(outDir: String) =
-    new TieredIndex(s"$outDir/media", mediaKeySchema)
+    new TieredIndex(s"$outDir/media", "media_id bigint, v array<float>, " +
+      "j int, k1 float, k2 float, k3 float, k4 float")
+  private def pairStore(outDir: String) = new TieredIndex(
+    s"$outDir/pairs", "doc_a bigint, doc_b bigint, modality string")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(textIndex(outDir), mediaIndex(outDir), pairStore(outDir))
+
+  /** One micro-batch: probe both indexes, append the tagged edges and
+    * the batch's postings ([[sink]] runs it per trigger, then the
+    * stores' maintenance). */
+  private[graft] def foldBatch(outDir: String, batch: DataFrame,
+      batchId: Long, delimiter: String = " the ", minParaLen: Int = 20,
+      maxParaDf: Int = 16, threshold: Double = 0.999,
+      decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
+    val spark = batch.sparkSession
+    val (tIdx, mIdx, pairs) =
+      (textIndex(outDir), mediaIndex(outDir), pairStore(outDir))
+    tIdx.ensureNBuckets(spark, nBuckets)
+    mIdx.ensureNBuckets(spark, nBuckets)
+    pairs.ensureNBuckets(spark, 1)
+    val paras = Multimodal
+      .paragraphKeys(batch, delimiter, minParaLen)
+      .withColumn("bucket",
+        pmod(col("h"), lit(nBuckets)).cast("int"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val mkeys = Multimodal
+      .nearDupIndex(Multimodal.docsAsMedia(batch), decoder)
+      .withColumn("bucket",
+        pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
+          col("k4")), lit(nBuckets)).cast("int"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // the batch's buckets (≤ nBuckets values each — bounded
+      // collects) become partition filters on the index reads
+      val tBuckets = paras.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val mBuckets = mkeys.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val textEdges = Multimodal.paragraphEdgeIncrement(
+        paras.drop("bucket"),
+        tIdx.corpusKeys(spark, batchId, Some(tBuckets)),
+        maxParaDf)
+      val mediaEdges = Multimodal.nearDupIncrement(
+        mkeys.drop("bucket"),
+        mIdx.corpusKeys(spark, batchId, Some(mBuckets)),
+        threshold)
+        .select(col("media_a").as("doc_a"),
+          col("media_b").as("doc_b"))
+      pairs.append(textEdges.withColumn("modality", lit("text"))
+        .unionByName(
+          mediaEdges.withColumn("modality", lit("media")))
+        .withColumn("bucket", lit(0)), batchId)
+      tIdx.append(paras, batchId)
+      mIdx.append(mkeys, batchId)
+    } finally { paras.unpersist(); mkeys.unpersist(); () }
+  }
 
   /** Start the sink over a stream of `(doc_id, text)` rows. */
   def sink(docs: DataFrame, outDir: String, checkpoint: String,
@@ -72,56 +113,10 @@ object StreamCrossModal {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamCrossModal: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamCrossModal: compactEvery must be >= 2, got $compactEvery")
-    val tIdx = textIndex(outDir)
-    val mIdx = mediaIndex(outDir)
     docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        tIdx.ensureNBuckets(spark, nBuckets)
-        mIdx.ensureNBuckets(spark, nBuckets)
-        val paras = Multimodal
-          .paragraphKeys(batch, delimiter, minParaLen)
-          .withColumn("bucket",
-            pmod(col("h"), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val mkeys = Multimodal
-          .nearDupIndex(Multimodal.docsAsMedia(batch), decoder)
-          .withColumn("bucket",
-            pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-              col("k4")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's buckets (≤ nBuckets values each — bounded
-          // collects) become partition filters on the index reads
-          val tBuckets = paras.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val mBuckets = mkeys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val textEdges = Multimodal.paragraphEdgeIncrement(
-            paras.drop("bucket"),
-            tIdx.corpusKeys(spark, batchId, Some(tBuckets)),
-            maxParaDf)
-          val mediaEdges = Multimodal.nearDupIncrement(
-            mkeys.drop("bucket"),
-            mIdx.corpusKeys(spark, batchId, Some(mBuckets)),
-            threshold)
-            .select(col("media_a").as("doc_a"),
-              col("media_b").as("doc_b"))
-          textEdges.withColumn("modality", lit("text"))
-            .unionByName(
-              mediaEdges.withColumn("modality", lit("media")))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          tIdx.append(paras, batchId)
-          mIdx.append(mkeys, batchId)
-          tIdx.maintain(spark, batchId, compactEvery)
-          mIdx.maintain(spark, batchId, compactEvery)
-        } finally { paras.unpersist(); mkeys.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[Row]("StreamCrossModal",
+        stores(outDir), compactEvery)(foldBatch(outDir, _, _, delimiter,
+          minParaLen, maxParaDf, threshold, decoder, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
@@ -143,8 +138,7 @@ object StreamCrossModal {
     * modality)`; text edges may repeat across batches (see object
     * doc). Empty (with the right schema) before the first batch. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/pairs", pairSchema)
-      .select(col("doc_a"), col("doc_b"), col("modality"))
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The cross-modal duplicate clusters over everything ingested so
     * far: components of [[pairsView]] — equal to batch

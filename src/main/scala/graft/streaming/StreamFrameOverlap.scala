@@ -22,9 +22,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     candidates, boilerplate cap over the union frequency as of
   *     this batch, each pair emitted exactly once when its later
   *     member arrives (corpus-internal pairs cannot form);
-  *  3. pairs append to `outDir/pairs`, the batch's postings append to
-  *     the index — both batch_id-partitioned with dynamic partition
-  *     overwrite, so a replayed batch overwrites exactly its own
+  *  3. pairs append to the one-bucket `outDir/pairs` store, the
+  *     batch's postings append to the index — both [[TieredIndex]]
+  *     stores, so a replayed batch overwrites exactly its own
   *     contribution.
   *
   * The index is a [[TieredIndex]] (the [[StreamCdc]] /
@@ -50,27 +50,51 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
 object StreamFrameOverlap {
 
   private val keySchema = "media_id bigint, fk array<float>"
-  private val pairSchema =
-    "media_a bigint, media_b bigint, shared_frames bigint, " +
-      "batch_id bigint"
 
   private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  private def pairStore(outDir: String) = new TieredIndex(
+    s"$outDir/pairs", "media_a bigint, media_b bigint, shared_frames bigint")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(index(outDir), pairStore(outDir))
 
   /** The corpus frame-posting relation visible to batch `batchId`,
     * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
   private[graft] def corpusKeys(spark: SparkSession, outDir: String,
       batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
     index(outDir).corpusKeys(spark, batchId, buckets)
+
+  /** One micro-batch: emit frame-level overlap pairs touching the
+    * batch and grow the posting index ([[sink]] runs it per trigger,
+    * then the stores' maintenance). */
+  private[graft] def foldBatch(outDir: String,
+      batch: Dataset[MediaRecord], batchId: Long, stride: Int = 1,
+      minSharedFrames: Int = 2, maxMediaPerFrame: Int = 64,
+      decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
+    val spark = batch.sparkSession
+    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    idx.ensureNBuckets(spark, nBuckets)
+    pairs.ensureNBuckets(spark, 1)
+    // decode once; only fixed-width (media_id, fk) postings persist
+    val keys = Multimodal.frameIndex(batch, stride, decoder)
+      .withColumn("bucket",
+        pmod(hash(col("fk")), lit(nBuckets)).cast("int"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // the batch's key buckets (≤ nBuckets values — a bounded
+      // collect) become partition filters on the index read
+      val buckets = keys.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // strictly-older batches only: a replayed batch must not
+      // see its own crashed partial write as "corpus"
+      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
+      pairs.append(Multimodal.frameOverlapIncrement(keys.drop("bucket"),
+          corpus, minSharedFrames, maxMediaPerFrame)
+        .withColumn("bucket", lit(0)), batchId)
+      idx.append(keys, batchId)
+    } finally { keys.unpersist(); () }
+  }
 
   /** Start the sink: for each micro-batch of media, emit frame-level
     * overlap pairs touching the batch (≥ `minSharedFrames` shared
@@ -82,37 +106,10 @@ object StreamFrameOverlap {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamFrameOverlap: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamFrameOverlap: compactEvery must be >= 2, got " +
-        s"$compactEvery")
-    val idx = index(outDir)
     media.writeStream
-      .foreachBatch { (batch: Dataset[MediaRecord], batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        // decode once; only fixed-width (media_id, fk) postings persist
-        val keys = Multimodal.frameIndex(batch, stride, decoder)
-          .withColumn("bucket",
-            pmod(hash(col("fk")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's key buckets (≤ nBuckets values — a bounded
-          // collect) become partition filters on the index read
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not
-          // see its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-          Multimodal.frameOverlapIncrement(keys.drop("bucket"), corpus,
-              minSharedFrames, maxMediaPerFrame)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys, batchId)
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamFrameOverlap",
+        stores(outDir), compactEvery)(foldBatch(outDir, _, _, stride,
+          minSharedFrames, maxMediaPerFrame, decoder, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
@@ -123,8 +120,7 @@ object StreamFrameOverlap {
     * between batches). Empty (with the right schema) before the first
     * batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/pairs", pairSchema)
-      .select(col("media_a"), col("media_b"), col("shared_frames"))
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The accumulated posting index — the [[Multimodal.frameIndex]]
     * relation over every committed batch, directly consumable by the

@@ -23,9 +23,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     batch-internal pairs canonicalize, corpus-internal pairs
   *     cannot form — each pair emitted exactly once, when its later
   *     member arrives;
-  *  3. pairs append to `outDir/pairs`, the batch's keys append to the
-  *     feature index — both batch_id-partitioned with dynamic
-  *     partition overwrite, so a replayed batch overwrites exactly
+  *  3. pairs append to the one-bucket `outDir/pairs` store, the
+  *     batch's keys append to the feature index — both
+  *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
   *     its own contribution.
   *
   * The index is a [[TieredIndex]] — the [[StreamCdc]] layout verbatim
@@ -51,26 +51,51 @@ object StreamMediaDedup {
 
   private val keySchema = "media_id bigint, v array<float>, j int, " +
     "k1 float, k2 float, k3 float, k4 float"
-  private val pairSchema =
-    "media_a bigint, media_b bigint, cosine double, batch_id bigint"
 
   private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  private def pairStore(outDir: String) = new TieredIndex(
+    s"$outDir/pairs", "media_a bigint, media_b bigint, cosine double")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(index(outDir), pairStore(outDir))
 
   /** The corpus feature-key relation visible to batch `batchId`,
     * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
   private[graft] def corpusKeys(spark: SparkSession, outDir: String,
       batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
     index(outDir).corpusKeys(spark, batchId, buckets)
+
+  /** One micro-batch: emit perceptual near-dup pairs touching the
+    * batch and grow the feature index ([[sink]] runs it per trigger,
+    * then the stores' maintenance). */
+  private[graft] def foldBatch(outDir: String,
+      batch: Dataset[MediaRecord], batchId: Long, threshold: Double = 0.9,
+      decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
+    val spark = batch.sparkSession
+    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    idx.ensureNBuckets(spark, nBuckets)
+    pairs.ensureNBuckets(spark, 1)
+    // decode once; only fixed-width feature rows persist
+    val keys = Multimodal.nearDupIndex(batch, decoder)
+      .withColumn("bucket",
+        pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
+          col("k4")), lit(nBuckets)).cast("int"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // the batch's feature buckets (≤ nBuckets values — a bounded
+      // collect) become partition filters on the index read
+      val buckets = keys.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // strictly-older batches only: a replayed batch must not
+      // see its own crashed partial write as "corpus"
+      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
+      pairs.append(Multimodal.nearDupIncrement(keys.drop("bucket"),
+          corpus, threshold)
+        .withColumn("bucket", lit(0)), batchId)
+      idx.append(keys, batchId)
+    } finally { keys.unpersist(); () }
+  }
 
   /** Start the sink: for each micro-batch of media, emit perceptual
     * near-dup pairs touching the batch (cosine ≥ `threshold`) and
@@ -82,39 +107,12 @@ object StreamMediaDedup {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamMediaDedup: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamMediaDedup: compactEvery must be >= 2, got $compactEvery")
     require(threshold > 0 && threshold <= 1,
       s"StreamMediaDedup: threshold must be in (0, 1], got $threshold")
-    val idx = index(outDir)
     media.writeStream
-      .foreachBatch { (batch: Dataset[MediaRecord], batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        // decode once; only fixed-width feature rows persist
-        val keys = Multimodal.nearDupIndex(batch, decoder)
-          .withColumn("bucket",
-            pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-              col("k4")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's feature buckets (≤ nBuckets values — a bounded
-          // collect) become partition filters on the index read
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not
-          // see its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-          Multimodal.nearDupIncrement(keys.drop("bucket"), corpus,
-              threshold)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys, batchId)
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamMediaDedup",
+        stores(outDir), compactEvery)(
+        foldBatch(outDir, _, _, threshold, decoder, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
@@ -124,8 +122,7 @@ object StreamMediaDedup {
     * (consistent only between batches). Empty (with the right schema)
     * before the first batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/pairs", pairSchema)
-      .select(col("media_a"), col("media_b"), col("cosine"))
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 
   /** The accumulated feature index — the [[Multimodal.nearDupIndex]]
     * relation over every committed batch, directly consumable by the

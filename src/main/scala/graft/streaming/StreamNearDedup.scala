@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,11 +15,14 @@ import graft.operators.Dedup
   *     (minhash signature + sorted hashed-shingle set per doc);
   *  2. the batch probes the accumulated index — band-equality join,
   *     candidates ∝ batch size and match rate, never index×index;
-  *  3. verified pairs append to `outDir/pairs`, the batch's signatures
-  *     append to `outDir/sigs`, both batch_id-partitioned with dynamic
-  *     partition overwrite so a replayed batch overwrites exactly its
-  *     own contribution (same idempotence discipline as
-  *     [[RegisterStream.dualSink]]).
+  *  3. verified pairs append to the `outDir/pairs` store, the batch's
+  *     signatures to the `outDir/sigs` store — both one-bucket
+  *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
+  *     its own contribution, the probe reads only strictly-older
+  *     batches, and the sink folds committed batches every 16
+  *     triggers (O(log n) epochs, never one directory per batch
+  *     forever; a fresh-checkpoint re-run over the same outDir is
+  *     supported only before the first fold).
   *
   * After any prefix of batches, [[pairsView]] equals batch
   * [[graft.operators.Dedup.minhashLsh]] on the union of those batches
@@ -40,19 +43,32 @@ import graft.operators.Dedup
   * here rules out. */
 object StreamNearDedup {
 
-  private val sigSchema =
-    "id bigint, sig array<bigint>, ng array<bigint>, batch_id bigint"
-  private val pairSchema =
-    "doc_a bigint, doc_b bigint, jaccard double, batch_id bigint"
+  private def sigStore(outDir: String) = new TieredIndex(
+    s"$outDir/sigs", "id bigint, sig array<bigint>, ng array<bigint>")
+  private def pairStore(outDir: String) = new TieredIndex(
+    s"$outDir/pairs", "doc_a bigint, doc_b bigint, jaccard double")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(sigStore(outDir), pairStore(outDir))
+
+  /** One micro-batch: emit verified near-dup pairs touching the batch
+    * and append its signatures ([[sink]] runs it per trigger, then the
+    * stores' maintenance). */
+  private[graft] def foldBatch(outDir: String, batch: DataFrame,
+      batchId: Long, threshold: Double = 0.5, shingleLen: Int = 5,
+      idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    val spark = batch.sparkSession
+    val (sigs, pairs) = (sigStore(outDir), pairStore(outDir))
+    Seq(sigs, pairs).foreach(_.ensureNBuckets(spark, 1))
+    val d = Dedup.signatureTable(batch, shingleLen, idCol, textCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      pairs.append(Dedup.minhashLshDeltaSigs(d,
+          sigs.corpusKeys(spark, batchId, None), threshold)
+        .withColumn("bucket", lit(0)), batchId)
+      sigs.append(d.withColumn("bucket", lit(0)), batchId)
+    } finally { d.unpersist(); () }
   }
 
   /** Start the sink: for each micro-batch of documents, emit verified
@@ -63,27 +79,9 @@ object StreamNearDedup {
       idCol: String = "doc_id", textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val d = Dedup.signatureTable(batch, shingleLen, idCol, textCol)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // strictly-older batches only: a replayed batch must not see
-          // its own crashed partial write as "corpus"
-          val corpus = readOrEmpty(spark, s"$outDir/sigs", sigSchema)
-            .filter(col("batch_id") < batchId)
-            .select(col("id"), col("sig"), col("ng"))
-          Dedup.minhashLshDeltaSigs(d, corpus, threshold)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          d.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/sigs")
-        } finally { d.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[Row]("StreamNearDedup",
+        stores(outDir), compactEvery = 16)(
+        foldBatch(outDir, _, _, threshold, shingleLen, idCol, textCol)))
       .option("checkpointLocation", checkpoint)
       .start()
 
@@ -91,14 +89,14 @@ object StreamNearDedup {
     * `minhashLsh` over the union of committed batches. Empty (with the
     * right schema) before the first batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/pairs", pairSchema)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 
   /** Greedy keep-the-smallest-id dedup view over the indexed corpus:
     * every indexed doc id except those verified near-equal to a
     * smaller id (the canonical-by-min-id rule of [[Dedup.exact]]). */
   def keptIdsView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/sigs", sigSchema).select(col("id"))
+    sigStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+      .select(col("id"))
       .join(pairsView(spark, outDir).select(col("doc_b").as("id")),
         Seq("id"), "left_anti")
 }

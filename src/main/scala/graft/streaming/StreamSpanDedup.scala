@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpanDedup
@@ -14,18 +14,22 @@ import graft.operators.SpanDedup
   *     FIRST-ARRIVAL semantics (a window seen in any earlier batch is
   *     canonical there; duplicated runs new to the batch keep their
   *     first (doc_id, pos) occurrence);
-  *  2. the FULL rewritten batch appends to `outDir/clean` (unmodified
-  *     docs pass through verbatim — the view IS the deduped corpus);
+  *  2. the FULL rewritten batch appends to the `outDir/clean` store
+  *     (unmodified docs pass through verbatim — the view IS the
+  *     deduped corpus);
   *  3. the batch's new fingerprints (anti-joined against strictly-older
-  *     batches, so the index stays fp-unique) append to `outDir/fps`.
+  *     batches, so the index stays fp-unique) append to the
+  *     `outDir/fps` store.
   *
-  * Both sinks are batch_id-partitioned with dynamic partition overwrite,
-  * so a replayed batch overwrites exactly its own contribution (the
-  * [[RegisterStream.dualSink]] idempotence discipline); the probe reads
-  * only strictly-older batches, so a crashed partial write is never its
-  * own corpus. After any prefix of batches, [[cleanView]] equals batch
-  * `excise` over those batches in arrival order. Doc ids must be
-  * globally unique across batches, as for every delta operator.
+  * Both stores are one-bucket [[TieredIndex]] stores, so a replayed
+  * batch overwrites exactly its own contribution, the probe reads only
+  * strictly-older batches (a crashed partial write is never its own
+  * corpus), and the sink folds committed batches every 16 triggers (a
+  * fresh-checkpoint re-run over the same outDir is supported only
+  * before the first fold). After any prefix of batches, [[cleanView]]
+  * equals batch `excise` over those batches in arrival order. Doc ids
+  * must be globally unique across batches, as for every delta
+  * operator.
   *
   * Fingerprints index the AS-INGESTED text (the batch contract computes
   * windows over raw documents); the cleaned text is what ships, the raw
@@ -33,19 +37,49 @@ import graft.operators.SpanDedup
   */
 object StreamSpanDedup {
 
-  private val fpSchema = "fp bigint, doc_id bigint, pos int, batch_id bigint"
-  private val cleanSchema =
-    "doc_id bigint, n_tokens bigint, n_removed bigint, clean_text string, " +
-      "batch_id bigint"
+  private def fpStore(outDir: String) =
+    new TieredIndex(s"$outDir/fps", "fp bigint, doc_id bigint, pos int")
+  private def cleanStore(outDir: String) = new TieredIndex(
+    s"$outDir/clean",
+    "doc_id bigint, n_tokens bigint, n_removed bigint, clean_text string")
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The sink's [[TieredIndex]] stores. */
+  private[graft] def stores(outDir: String): Seq[TieredIndex] =
+    Seq(fpStore(outDir), cleanStore(outDir))
+
+  /** One micro-batch: rewrite it against everything seen before it and
+    * grow the fingerprint index ([[sink]] runs it per trigger, then the
+    * stores' maintenance). */
+  private[graft] def foldBatch(outDir: String, batch: DataFrame,
+      batchId: Long, windowTokens: Int = 50, idCol: String = "doc_id",
+      textCol: String = "text"): Unit = {
+    val spark = batch.sparkSession
+    val (fps, cleanOut) = (fpStore(outDir), cleanStore(outDir))
+    Seq(fps, cleanOut).foreach(_.ensureNBuckets(spark, 1))
+    val b = batch.persist()
+    try {
+      val older = fps.corpusKeys(spark, batchId, None)
+      val modified = SpanDedup.exciseDelta(b, older, windowTokens,
+        idCol, textCol)
+      // full rewritten batch: untouched docs pass through verbatim
+      // (null-text docs are dropped, mirroring the batch operator)
+      val clean = b
+        .filter(col(textCol).isNotNull)
+        .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+        .join(modified.withColumnRenamed(idCol, "doc_id"),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_tokens"),
+            size(split(col("text"), " ")).cast("long")).as("n_tokens"),
+          coalesce(col("n_removed"), lit(0L)).as("n_removed"),
+          coalesce(col("clean_text"), col("text")).as("clean_text"))
+      cleanOut.append(clean.withColumn("bucket", lit(0)), batchId)
+      // append only fps NEW to this batch — the index stays
+      // fp-unique, so delta probes never fan out span rows
+      fps.append(SpanDedup.fpIndex(b, windowTokens, idCol, textCol)
+        .join(older.select(col("fp")), Seq("fp"), "left_anti")
+        .withColumn("bucket", lit(0)), batchId)
+    } finally { b.unpersist(); () }
   }
 
   /** Start the sink: rewrite each micro-batch against everything seen
@@ -56,40 +90,9 @@ object StreamSpanDedup {
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          val older = readOrEmpty(spark, s"$outDir/fps", fpSchema)
-            .filter(col("batch_id") < batchId)
-          val modified = SpanDedup.exciseDelta(b, older, windowTokens,
-            idCol, textCol)
-          // full rewritten batch: untouched docs pass through verbatim
-          // (null-text docs are dropped, mirroring the batch operator)
-          val clean = b
-            .filter(col(textCol).isNotNull)
-            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-            .join(modified.withColumnRenamed(idCol, "doc_id"),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              coalesce(col("n_tokens"),
-                size(split(col("text"), " ")).cast("long")).as("n_tokens"),
-              coalesce(col("n_removed"), lit(0L)).as("n_removed"),
-              coalesce(col("clean_text"), col("text")).as("clean_text"))
-          clean.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/clean")
-          // append only fps NEW to this batch — the index stays
-          // fp-unique, so delta probes never fan out span rows
-          SpanDedup.fpIndex(b, windowTokens, idCol, textCol)
-            .join(older.select(col("fp")), Seq("fp"), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/fps")
-        } finally { b.unpersist(); () }
-      }
+      .foreachBatch(TieredIndex.trigger[Row]("StreamSpanDedup",
+        stores(outDir), compactEvery = 16)(
+        foldBatch(outDir, _, _, windowTokens, idCol, textCol)))
       .option("checkpointLocation", checkpoint)
       .start()
 
@@ -97,7 +100,5 @@ object StreamSpanDedup {
     * text — equal to batch `excise` over the committed batches in
     * arrival order, with untouched docs passed through. */
   def cleanView(spark: SparkSession, outDir: String): DataFrame =
-    readOrEmpty(spark, s"$outDir/clean", cleanSchema)
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        col("clean_text"))
+    cleanStore(outDir).corpusKeys(spark, Long.MaxValue, None)
 }

@@ -1,23 +1,40 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** A bucket-partitioned, LSM-tiered parquet key index — the persisted
-  * state behind streaming dedup sinks ([[StreamCdc]], the CDC chunk
-  * index; [[StreamMediaDedup]], the perceptual feature index). One
-  * instance manages one `outDir`; rows are fixed-width key tuples
-  * (`keySchema`) plus a precomputed `bucket` partition column whose
-  * modulus is immutable per outDir.
+/** A bucket-partitioned, LSM-tiered parquet store — the one persisted
+  * store every streaming delta route reads, appends to and compacts:
+  * the key indexes of [[StreamCdc]], [[StreamMediaDedup]],
+  * [[StreamFrameOverlap]] and [[StreamCrossModal]], the `pairs` output
+  * of each, and the stores of [[StreamCorpusLoop]],
+  * [[StreamContainment]], [[StreamNearDedup]] and [[StreamSpanDedup]].
+  * One instance manages one `outDir`; rows follow `keySchema` plus a
+  * precomputed `bucket` partition column whose modulus is immutable
+  * per outDir.
+  *
+  * '''One bucket.''' A store that is only ever read whole (an output
+  * view, or a relation a full join probes) uses `nBuckets = 1` and
+  * appends every row with `bucket = 0`; it shares the layout, the meta
+  * and the legacy checks of the bucketed stores, and reads with
+  * `corpusKeys(…, buckets = None)`.
+  *
+  * '''Fold/merge function.''' `combine` rewrites the rows a fold or a
+  * merge writes (key columns + `bucket`, both of which it must keep).
+  * It is identity for every store but an aggregated one:
+  * [[StreamContainment]]'s gram-df store sums its per-batch counts by
+  * gram, so every epoch holds one row per gram (readers still sum
+  * across tiers).
   *
   * '''Layout''' (two tiers, the [[graft.operators.IvfIndex]]
   * discipline):
   *
   *  - '''recent tier''' `outDir/chunks/batch_id=N/bucket=B/` — one dir
   *    per micro-batch, written with dynamic partition overwrite so a
-  *    replayed batch overwrites exactly its own contribution.
+  *    replayed batch overwrites exactly its own contribution. Only
+  *    numeric `batch_id=` dirs are read; a foreign one is skipped.
   *  - '''base tier''' `outDir/chunks_base/e<E>_from<M>_upto<N>/bucket=B/`
   *    — folded epochs, each covering the contiguous batch-id range
   *    [M, N]. Epoch numbers E are globally monotone (one per fold or
@@ -35,13 +52,13 @@ import org.apache.spark.sql.types.StructType
   * amplification O(log n) per key, and the per-trigger maintenance
   * stall bounded by one similar-sized merge — a full-base rewrite
   * happens only at corpus-doubling points, amortized O(1) rows per
-  * batch, instead of every `compactEvery` batches (the round-15
-  * full-base fold this replaces). Merges that lag a burst of folds
-  * only lengthen the live-epoch list temporarily — probes read a LIST
-  * of epochs, so correctness never depends on the merge schedule.
+  * batch. Merges that lag a burst of folds only lengthen the
+  * live-epoch list temporarily — probes read a LIST of epochs, so
+  * correctness never depends on the merge schedule.
   *
   * '''Crash safety''' (single maintaining writer per outDir — the
-  * streaming sink; readers are free):
+  * streaming sink, which calls [[maintain]] once per trigger inside
+  * its serialized `foreachBatch`; readers are free):
   *
   *  - an epoch becomes visible only when its parquet `_SUCCESS`
   *    lands; a torn fold/merge is invisible to [[liveEpochs]];
@@ -57,33 +74,61 @@ import org.apache.spark.sql.types.StructType
   *    dirs at batch_id ≤ the live set's high-water mark;
   *  - only checkpoint-committed batches (strictly older than the
   *    in-flight one) are ever folded, so a replayed batch never meets
-  *    its own keys in the base tier.
+  *    its own rows in the base tier. A folded batch loses its
+  *    per-batch identity, so re-running a stream over the same outDir
+  *    with a FRESH checkpoint is supported only before the first fold
+  *    — wipe outDir and checkpoint together.
   *
   * '''Legacy layouts.''' Round-15 indexes (`e<E>_upto<N>` epoch names,
   * `cdc_meta`) read and maintain transparently (`from` defaults to 0 —
-  * the old single-epoch base covered [0, N]). The pre-bucket FLAT
-  * layout (batch dirs without `bucket=` children, no meta) is
-  * detected at [[ensureNBuckets]] and fails loudly: its postings
-  * carry no bucket value, so a pruned probe would silently drop every
-  * legacy row.
+  * the old single-epoch base covered [0, N]). Two layouts fail loudly
+  * at [[ensureNBuckets]]: the pre-bucket FLAT index (batch dirs
+  * without `bucket=` children, no meta — its postings carry no bucket
+  * value, so a pruned probe would silently drop every legacy row), and
+  * a store root holding an older store's own layout (`delta=`/`base=`
+  * children, or `batch_id=` children directly under it — reading past
+  * them would silently drop their rows from every view).
   */
-private[graft] final class TieredIndex(outDir: String, keySchema: String) {
+private[graft] final class TieredIndex(outDir: String, keySchema: String,
+    combine: DataFrame => DataFrame = identity) {
 
   private val keyCols: Seq[String] =
     StructType.fromDDL(keySchema).fields.map(_.name).toSeq
   private val epochSchema = s"$keySchema, bucket int"
   private val recentSchema = s"$keySchema, batch_id bigint, bucket int"
+  private val recentRoot = s"$outDir/chunks"
 
   private def fs(spark: SparkSession) =
     new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (fs(spark).exists(new Path(path)))
-      spark.read.schema(schema).parquet(path)
+  /** `paths` under the partition root `basePath`, or an empty relation
+    * with `schema` when there are none. */
+  private def readOrEmpty(spark: SparkSession, schema: String,
+      basePath: String, paths: Seq[String]): DataFrame =
+    if (paths.nonEmpty)
+      spark.read.schema(schema).option("basePath", basePath)
+        .parquet(paths: _*)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType.fromDDL(schema))
+
+  /** Batch ids of the recent tier's `batch_id=N` dirs; a foreign
+    * `batch_id=<non-number>` dir is skipped, never fatal. */
+  private[graft] def recentIds(spark: SparkSession): Seq[Long] = {
+    val root = new Path(recentRoot)
+    val f = fs(spark)
+    if (!f.exists(root)) Nil
+    else f.listStatus(root).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("batch_id="))
+      .flatMap(_.getPath.getName.stripPrefix("batch_id=").toLongOption)
+  }
+
+  /** Recent-tier rows of the batches whose ids satisfy `keep`. */
+  private def readRecent(spark: SparkSession,
+      keep: Long => Boolean): DataFrame =
+    readOrEmpty(spark, recentSchema, recentRoot,
+      recentIds(spark).filter(keep).map(b => s"$recentRoot/batch_id=$b"))
 
   /** One committed base-tier epoch: covers batch ids [from, upto]. */
   private[graft] case class Epoch(epoch: Long, from: Long, upto: Long,
@@ -97,7 +142,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
 
   /** All epoch-named dirs, committed or torn:
     * `(epoch, from, upto, path, committed)`. */
-  private def epochDirs(spark: SparkSession)
+  private[graft] def epochDirs(spark: SparkSession)
       : Seq[(Long, Long, Long, String, Boolean)] = {
     val root = new Path(s"$outDir/chunks_base")
     val f = fs(spark)
@@ -135,12 +180,11 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
   private def nextEpoch(spark: SparkSession): Long =
     epochDirs(spark).map(_._1).maxOption.getOrElse(0L) + 1
 
-  /** The key relation visible to batch `batchId`, bucket-pruned to
-    * `buckets` (None = all buckets — the full-view read): every live
-    * base epoch ∪ recent batch dirs in (maxUpto, batchId). The bucket
-    * predicates and the batch_id predicate are PARTITION filters on
-    * every scan — only directories that can hold a matching key are
-    * read. */
+  /** The rows visible to batch `batchId` (`Long.MaxValue` = every
+    * batch — the view read), bucket-pruned to `buckets` (None = all
+    * buckets): every live base epoch ∪ recent batch dirs in (maxUpto,
+    * batchId). The bucket predicates are PARTITION filters on every
+    * scan — only directories that can hold a matching key are read. */
   private[graft] def corpusKeys(spark: SparkSession, batchId: Long,
       buckets: Option[Seq[Int]]): DataFrame = {
     val upto = maxUpto(spark)
@@ -153,56 +197,41 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
       .map(e => pruned(spark.read.schema(epochSchema).parquet(e.path))
         .select(keys: _*))
       .reduceOption(_ unionByName _)
-      .getOrElse(readOrEmpty(spark, s"$outDir/__none__", epochSchema)
+      .getOrElse(readOrEmpty(spark, epochSchema, outDir, Nil)
         .select(keys: _*))
-    val recent = pruned(
-      readOrEmpty(spark, s"$outDir/chunks", recentSchema)
-        .filter(col("batch_id") > upto && col("batch_id") < batchId))
+    val recent = pruned(readRecent(spark, b => b > upto && b < batchId))
       .select(keys: _*)
     base.unionByName(recent)
   }
 
-  /** Append one micro-batch's keys (key columns + `bucket`) — dynamic
+  /** Append one micro-batch's rows (key columns + `bucket`) — dynamic
     * partition overwrite, so a replayed batch overwrites exactly its
     * own contribution. */
   private[graft] def append(keys: DataFrame, batchId: Long): Unit =
     keys.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").partitionBy("batch_id", "bucket")
       .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outDir/chunks")
-
-  private def committedRecentIds(spark: SparkSession, upto: Long,
-      below: Long): Seq[Long] = {
-    val root = new Path(s"$outDir/chunks")
-    val f = fs(spark)
-    if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_id="))
-      .flatMap(_.getPath.getName.stripPrefix("batch_id=").toLongOption)
-      .filter(b => b > upto && b < below)
-  }
+      .parquet(recentRoot)
 
   /** Fold committed recent batches (ids in (maxUpto, upTo]) into ONE
-    * new epoch — reads only those recent dirs, never the base.
-    * Idempotent: a crashed attempt that already committed (maxUpto ≥
-    * upTo) is a no-op on retry. */
-  private def fold(spark: SparkSession, upTo: Long): Unit = {
+    * new epoch through `combine` — reads only those recent dirs, never
+    * the base. Idempotent: a crashed attempt that already committed
+    * (maxUpto ≥ upTo) is a no-op on retry. */
+  private[graft] def fold(spark: SparkSession, upTo: Long): Unit = {
     val upto = maxUpto(spark)
     if (upto >= upTo) return
     val target =
       s"$outDir/chunks_base/e${nextEpoch(spark)}_from${upto + 1}_upto$upTo"
-    readOrEmpty(spark, s"$outDir/chunks", recentSchema)
-      .filter(col("batch_id") > upto && col("batch_id") <= upTo)
-      .select((keyCols :+ "bucket").map(col): _*)
+    combine(readRecent(spark, b => b > upto && b <= upTo)
+        .select((keyCols :+ "bucket").map(col): _*))
       .write.mode("overwrite").partitionBy("bucket").parquet(target)
   }
 
   /** At most one size-tiered merge: the newest adjacent live pair with
-    * `size(newer) >= size(older)` folds into one epoch, reading ONLY
-    * those two dirs (law-tested — the older, larger epochs are never
-    * touched until their own doubling point). */
-  private def mergeOnce(spark: SparkSession): Unit = {
+    * `size(newer) >= size(older)` folds into one epoch through
+    * `combine`, reading ONLY those two dirs (law-tested — the older,
+    * larger epochs are never touched until their own doubling point). */
+  private[graft] def mergeOnce(spark: SparkSession): Unit = {
     val live = liveEpochs(spark).sortBy(_.from)
     val candidate = live.zip(live.drop(1)).reverseIterator
       .find { case (older, newer) => newer.size >= older.size }
@@ -211,9 +240,9 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
         s"e${nextEpoch(spark)}_from${older.from}_upto${newer.upto}"
       // separate reads per root: multi-path partition discovery
       // rejects sibling roots as conflicting directory structures
-      spark.read.schema(epochSchema).parquet(older.path)
-        .unionByName(spark.read.schema(epochSchema).parquet(newer.path))
-        .select((keyCols :+ "bucket").map(col): _*)
+      combine(spark.read.schema(epochSchema).parquet(older.path)
+          .unionByName(spark.read.schema(epochSchema).parquet(newer.path))
+          .select((keyCols :+ "bucket").map(col): _*))
         .write.mode("overwrite").partitionBy("bucket").parquet(target)
     }
   }
@@ -234,14 +263,9 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
       if (superseded || tornStale) { f.delete(new Path(p), true); () }
     }
     val upto = maxUpto(spark)
-    val chunksRoot = new Path(s"$outDir/chunks")
-    if (f.exists(chunksRoot))
-      f.listStatus(chunksRoot).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id=") &&
-          st.getPath.getName.stripPrefix("batch_id=").toLongOption
-            .exists(_ <= upto))
-        .foreach(st => { f.delete(st.getPath, true); () })
+    recentIds(spark).filter(_ <= upto).foreach { b =>
+      f.delete(new Path(s"$recentRoot/batch_id=$b"), true); ()
+    }
   }
 
   /** Per-trigger maintenance: fold once `compactEvery` committed
@@ -252,7 +276,8 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
     * at its own doubling point. */
   private[graft] def maintain(spark: SparkSession, batchId: Long,
       compactEvery: Int): Unit = {
-    if (committedRecentIds(spark, maxUpto(spark), batchId).size >=
+    val upto = maxUpto(spark)
+    if (recentIds(spark).count(b => b > upto && b < batchId) >=
         compactEvery)
       fold(spark, upTo = batchId - 1)
     mergeOnce(spark)
@@ -285,13 +310,28 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
     }
   }
 
-  /** Detect the pre-bucket FLAT layout: recent batch dirs whose
-    * children are data files rather than `bucket=` subdirs, or an
-    * index with chunk data but no meta. Such postings carry no bucket
-    * partition value — a pruned probe would silently drop them. */
-  private def rejectLegacyFlatLayout(spark: SparkSession): Unit = {
+  /** Detect the layouts this store cannot read correctly:
+    *  - an older store's own layout at the root — `delta=`/`base=`
+    *    children, or `batch_id=` children directly under outDir;
+    *  - the pre-bucket FLAT layout: recent batch dirs whose children
+    *    are data files rather than `bucket=` subdirs, or an index with
+    *    chunk data but no meta. Such postings carry no bucket
+    *    partition value — a pruned probe would silently drop them. */
+  private def rejectLegacyLayout(spark: SparkSession): Unit = {
     val f = fs(spark)
-    val chunksRoot = new Path(s"$outDir/chunks")
+    val root = new Path(outDir)
+    val rootDirs =
+      if (f.exists(root)) f.listStatus(root).toSeq.filter(_.isDirectory)
+        .map(_.getPath.getName)
+      else Nil
+    rootDirs.find(n => Seq("delta=", "base=", "batch_id=")
+        .exists(n.startsWith))
+      .foreach(n => throw new IllegalStateException(
+        s"TieredIndex: the store at $outDir holds an older store " +
+          s"layout ($n) that this store does not read — ignoring it " +
+          "would silently drop its rows from every view. Rebuild the " +
+          "store: wipe outDir + checkpoint and replay the stream."))
+    val chunksRoot = new Path(recentRoot)
     val hasChunks = f.exists(chunksRoot) &&
       f.listStatus(chunksRoot).exists(st => st.isDirectory &&
         st.getPath.getName.startsWith("batch_id="))
@@ -327,10 +367,10 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
     * dir, rename into place; if another sink won the race, validate
     * against the winner); later sinks must match, since the modulus
     * is baked into every on-disk partition value. Also rejects the
-    * legacy flat layout — see [[rejectLegacyFlatLayout]]. */
+    * legacy layouts — see [[rejectLegacyLayout]]. */
   private[graft] def ensureNBuckets(spark: SparkSession,
       nBuckets: Int): Unit = {
-    rejectLegacyFlatLayout(spark)
+    rejectLegacyLayout(spark)
     val f = fs(spark)
     def validate(): Unit = {
       val stored = readNBuckets(spark)
@@ -350,6 +390,23 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
       // authoritative
       f.delete(tmp, true)
       validate()
+    }
+  }
+}
+
+private[graft] object TieredIndex {
+
+  /** A route's `foreachBatch` body: `fold` the batch into the route's
+    * stores, then run each store's [[TieredIndex.maintain]] — inside the
+    * serialized callback, which is the stores' single-writer contract. */
+  def trigger[T](route: String, stores: Seq[TieredIndex],
+      compactEvery: Int)(
+      fold: (Dataset[T], Long) => Unit): (Dataset[T], Long) => Unit = {
+    require(compactEvery >= 2,
+      s"$route: compactEvery must be >= 2, got $compactEvery")
+    (batch, batchId) => {
+      fold(batch, batchId)
+      stores.foreach(_.maintain(batch.sparkSession, batchId, compactEvery))
     }
   }
 }

@@ -61,7 +61,7 @@ class StreamCdcSpec extends SparkTestBase {
     assert(streamed.exists(p => p._1 == 1L && p._2 == 3L))
     assert(streamed.exists(p => p._1 == 4L && p._2 == 5L))
     // and no pair was emitted twice across batch partitions
-    val raw = spark.read.parquet(s"$out/pairs")
+    val raw = StreamCdc.pairsView(spark, out)
       .groupBy("doc_a", "doc_b").count()
       .filter(col("count") > 1).count()
     assert(raw === 0L)
@@ -126,7 +126,7 @@ class StreamCdcSpec extends SparkTestBase {
     assert(streamed.exists(p => p._1 == 1L && p._2 == 2L)) // pre-stop
     assert(streamed.exists(p => p._1 == 1L && p._2 == 3L)) // post-resume
     // no pair emitted twice across batch partitions
-    assert(spark.read.parquet(s"$out/pairs")
+    assert(StreamCdc.pairsView(spark, out)
       .groupBy("doc_a", "doc_b").count()
       .filter(col("count") > 1).count() === 0L)
     // the chunk index carries each doc's keys exactly once

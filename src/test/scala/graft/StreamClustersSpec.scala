@@ -64,6 +64,30 @@ class StreamClustersSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("old generations prune themselves: after 10 batches at most two " +
+    "generations remain, and replaying the last batch is a no-op") {
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("stream-clusters-prune-").toString
+    // a chain 0-1-2-…-20 grown two edges per batch
+    val batches = (0 until 10).map(i =>
+      Seq((2L * i, 2L * i + 1), (2L * i + 1, 2L * i + 2)))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamClusters.foldBatch(dir, b.toDF("doc_a", "doc_b"), i.toLong)
+    }
+    def genDirs: Seq[String] = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("gen="))
+      .map(_.getName).toSeq.sorted
+    assert(genDirs === Seq("gen=8", "gen=9"), genDirs)
+    val before = StreamClusters.labels(spark, dir)
+      .as[(Long, Long)].collect().toSet
+    assert(before === (0L to 20L).map(_ -> 0L).toSet)
+    StreamClusters.foldBatch(dir,
+      batches.last.reverse.toDF("doc_a", "doc_b"), batchId = 9L)
+    assert(StreamClusters.labels(spark, dir)
+      .as[(Long, Long)].collect().toSet === before)
+    assert(genDirs.size <= 2, genDirs)
+  }
+
   test("empty store reads as an empty labels relation with the right " +
     "schema") {
     val dir = Files.createTempDirectory("stream-clusters-empty-").toString

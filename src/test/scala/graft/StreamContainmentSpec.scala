@@ -12,8 +12,7 @@ import graft.streaming.StreamContainment
 /** Streaming containment: micro-batches through the delta-store sink
   * accumulate EXACTLY the batch containment join's pairs — each pair
   * surfaces once, in the batch of its later-arriving endpoint — and
-  * the protocol inherits replay/compaction safety from the corpus
-  * loop. */
+  * the stores inherit replay/compaction safety from TieredIndex. */
 class StreamContainmentSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -76,22 +75,36 @@ class StreamContainmentSpec extends SparkTestBase {
       assert(snapshot() === before, "replay must be a no-op")
 
       // a foreign directory in a store is skipped, not fatal — even a
-      // _SUCCESS-marked one with a non-numeric suffix (delta=3.bak)
-      new java.io.File(s"$dir/cindex/delta=tmp").mkdirs()
-      new java.io.File(s"$dir/pairs/delta=3.bak").mkdirs()
-      assert(new java.io.File(s"$dir/pairs/delta=3.bak/_SUCCESS")
+      // _SUCCESS-marked one with a non-numeric suffix (batch_id=3.bak)
+      new java.io.File(s"$dir/cindex/chunks/batch_id=tmp").mkdirs()
+      new java.io.File(s"$dir/pairs/chunks/batch_id=3.bak").mkdirs()
+      assert(new java.io.File(s"$dir/pairs/chunks/batch_id=3.bak/_SUCCESS")
         .createNewFile())
       assert(snapshot() === before, "foreign dirs must be ignored")
 
-      // compaction behind the committed watermark
-      StreamContainment.compact(spark, dir, below = 2L)
+      // sink-driven fold behind the committed watermark: the frontier
+      // batch replays through a compactEvery = 2 sink, whose
+      // maintenance folds batches 0 and 1
+      val dfBefore = StreamContainment.gramDf(spark, dir)
+        .as[(Long, Long)].collect().toSet
+      val compactingSink =
+        StreamContainment.sink(dir, threshold, n, compactEvery = 2)
+      compactingSink(batches.last.reverse.toDF("doc_id", "text"), 2L)
       assert(snapshot() === before, "compaction must not change reads")
-      // the aggregated df store survives compaction exactly
+      // the aggregated df store survives compaction exactly, and its
+      // folded epoch holds one row per gram
       val dfAfter = StreamContainment.gramDf(spark, dir)
         .as[(Long, Long)].collect().toSet
-      StreamContainment.compact(spark, dir, below = 2L) // idempotent
+      assert(dfAfter === dfBefore)
+      val dfEpochs = new java.io.File(s"$dir/cgramdf/chunks_base")
+        .listFiles().filter(_.isDirectory).toSeq
+      assert(dfEpochs.size === 1, dfEpochs)
+      assert(spark.read.parquet(dfEpochs.head.toString)
+        .groupBy("gram").count().filter(col("count") > 1).count() === 0L,
+        "a folded df epoch is aggregated")
+      compactingSink(batches.last.reverse.toDF("doc_id", "text"), 2L)
       assert(StreamContainment.gramDf(spark, dir)
-        .as[(Long, Long)].collect().toSet === dfAfter)
+        .as[(Long, Long)].collect().toSet === dfAfter) // idempotent
 
       // post-compaction replay of the frontier batch is still a no-op
       StreamContainment.foldBatch(dir,

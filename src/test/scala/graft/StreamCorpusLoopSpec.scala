@@ -92,30 +92,35 @@ class StreamCorpusLoopSpec extends SparkTestBase {
         batches.last.reverse.toDF("doc_id", "text"), batchId = 2L)
       assert(snapshot() === before, "replay must be a no-op")
 
-      // a half-written delta (no _SUCCESS) is invisible to readers
-      new java.io.File(s"$dir/hash/delta=99").mkdirs()
-      new java.io.File(s"$dir/accepted/delta=99").mkdirs()
-      assert(snapshot() === before, "incomplete deltas must be invisible")
+      // a half-written fold (epoch dir, no _SUCCESS) is invisible to
+      // readers
+      new java.io.File(s"$dir/hash/chunks_base/e99_from0_upto99").mkdirs()
+      new java.io.File(s"$dir/accepted/chunks_base/e99_from0_upto99")
+        .mkdirs()
+      assert(snapshot() === before, "incomplete folds must be invisible")
 
-      // compaction behind the committed watermark (last committed = 2):
-      // readers see byte-identical content, subsumed deltas are gone
-      StreamCorpusLoop.compact(spark, dir, below = 2L)
+      // sink-driven fold behind the committed watermark (last committed
+      // = 2): the frontier batch replays through a compactEvery = 2
+      // sink, whose maintenance folds batches 0 and 1 — readers see
+      // identical content, the folded batch dirs are gone
+      val compactingSink = StreamCorpusLoop.sink(dir, compactEvery = 2)
+      compactingSink(batches.last.reverse.toDF("doc_id", "text"), 2L)
       assert(snapshot() === before, "compaction must not change reads")
       def deltaIds(sub: String): Set[Long] = {
-        val d = new java.io.File(s"$dir/$sub")
+        val d = new java.io.File(s"$dir/$sub/chunks")
         Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("delta="))
-          .map(_.getName.stripPrefix("delta=").toLong).toSet
+          .filter(_.getName.startsWith("batch_id="))
+          .map(_.getName.stripPrefix("batch_id=").toLong).toSet
       }
       assert(deltaIds("hash").filter(_ < 2L).isEmpty, "deltas pruned")
       assert(deltaIds("fps").filter(_ < 2L).isEmpty)
-      // a replay of the frontier batch reads base=2 + nothing and
-      // rebuilds identically
+      // a replay of the frontier batch reads the folded epoch + nothing
+      // and rebuilds identically
       StreamCorpusLoop.foldBatch(dir,
         batches.last.reverse.toDF("doc_id", "text"), batchId = 2L)
       assert(snapshot() === before, "post-compaction replay is a no-op")
       // compaction is idempotent
-      StreamCorpusLoop.compact(spark, dir, below = 2L)
+      compactingSink(batches.last.reverse.toDF("doc_id", "text"), 2L)
       assert(snapshot() === before)
 
       // the loop continues on the compacted store: one more batch,
@@ -165,15 +170,12 @@ class StreamCorpusLoopSpec extends SparkTestBase {
       .start()
     try {
       for (s <- slices) { in.addData(s); q.processAllAvailable() }
-      def dirCount(sub: String): Int = {
-        val d = new java.io.File(s"$dir/$sub")
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .count(f => f.isDirectory &&
-            (f.getName.startsWith("delta=") || f.getName.startsWith("base=")))
-      }
+      def dirCount(sub: String): Int = Seq("chunks", "chunks_base")
+        .map(t => Option(new java.io.File(s"$dir/$sub/$t").listFiles())
+          .getOrElse(Array.empty).count(_.isDirectory)).sum
       // compaction fired mid-stream: per-store directory count stays
-      // bounded by one base + the deltas since the last watermark,
-      // never ~30 (one per batch)
+      // bounded by the recent batch dirs since the last fold plus the
+      // live epochs, never ~30 (one per batch)
       for (sub <- Seq("hash", "fps", "accepted")) {
         assert(dirCount(sub) <= 7,
           s"$sub: ${dirCount(sub)} dirs — compaction cadence not firing")
@@ -195,86 +197,5 @@ class StreamCorpusLoopSpec extends SparkTestBase {
           .as[(Long, Long)].collect().toSet)
       closed.unpersist()
     } finally q.stop()
-  }
-
-  test("compact vs a concurrent reader: a pre-compaction file listing " +
-    "fails with a missing-file error, withStoreRetry heals it exactly, " +
-    "and an EXTERNAL compact racing an in-flight foldBatch never fails " +
-    "the batch or corrupts the artifacts") {
-    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-    val dir = Files.createTempDirectory("stream-corpus-race-").toString
-    val all = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val slices = all.grouped(math.max(1, all.size / 7 + 1)).toSeq
-    require(slices.size >= 7, s"fixture too small: ${slices.size} slices")
-
-    // seed batches 0..3
-    for (i <- 0 to 3)
-      StreamCorpusLoop.foldBatch(dir, slices(i).toDF("doc_id", "text"),
-        batchId = i.toLong)
-
-    // 1. the hazard is REAL: a df whose file listing predates the
-    // compaction fails once its tasks read the pruned delta files
-    val hashSchema = StructType(Seq(StructField("h", BinaryType)))
-    val staleDeltas = (0 to 3).map(i => s"$dir/hash/delta=$i")
-    val stale = spark.read.schema(hashSchema).parquet(staleDeltas: _*)
-    val expectedHashes = stale.count() // listing + a successful read
-    StreamCorpusLoop.compact(spark, dir, below = 4L)
-    val e = intercept[Throwable] { stale.count() }
-    assert(StreamCorpusLoop.isMissingFileFailure(e),
-      s"expected a missing-file failure, got: $e")
-
-    // 2. withStoreRetry heals it EXACTLY: first attempt reads the stale
-    // plan and fails, the retry rebuilds from a fresh listing and
-    // returns the content the first attempt would have
-    var attempts = 0
-    val healed = StreamCorpusLoop.withStoreRetry("spec") {
-      attempts += 1
-      if (attempts == 1) stale.count()
-      else StreamCorpusLoop.hashIndex(spark, dir).count()
-    }
-    assert(attempts === 2, "retry must fire exactly once")
-    assert(healed === expectedHashes,
-      "post-compaction content must equal the pre-compaction union")
-    // a non-missing-file failure propagates without a retry
-    var attempts2 = 0
-    val e2 = intercept[IllegalStateException] {
-      StreamCorpusLoop.withStoreRetry("spec2") {
-        attempts2 += 1
-        throw new IllegalStateException("real fault")
-      }
-    }
-    assert(attempts2 === 1 && e2.getMessage === "real fault")
-
-    // 3. end-to-end: an external compact racing an in-flight foldBatch,
-    // at several interleavings — the batch must never fail, and the
-    // final artifacts must equal the closed-corpus batch recompute
-    for ((delayMs, i) <- Seq(0L, 15L, 40L).zipWithIndex) {
-      val batchId = 4L + i
-      val compactor = new Thread(() => {
-        if (delayMs > 0) Thread.sleep(delayMs)
-        StreamCorpusLoop.compact(spark, dir, below = batchId)
-      })
-      compactor.start()
-      StreamCorpusLoop.foldBatch(dir,
-        slices(4 + i).toDF("doc_id", "text"), batchId = batchId)
-      compactor.join()
-    }
-    val closed = slices.take(7).flatten.toDF("doc_id", "text").persist()
-    assert(StreamCorpusLoop.acceptedIds(spark, dir)
-      .as[Long].collect().toSet ===
-      Dedup.exact(closed).select($"keep_id").as[Long].collect().toSet,
-      "accepted after race")
-    assert(StreamCorpusLoop.fps(spark, dir)
-      .as[(Long, Long)].collect().toSet ===
-      Dedup.simhash(closed, poly = true).as[(Long, Long)].collect().toSet,
-      "fps after race")
-    assert(StreamCorpusLoop.labels(spark, dir)
-      .as[(Long, Long)].collect().toSet ===
-      Graph.connectedComponents(
-        Dedup.simhashPairs(closed, maxHamming = 3, poly = true))
-        .as[(Long, Long)].collect().toSet,
-      "labels after race")
-    closed.unpersist()
   }
 }

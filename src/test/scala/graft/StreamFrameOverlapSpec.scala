@@ -70,7 +70,7 @@ class StreamFrameOverlapSpec extends SparkTestBase {
     // media 9 repeats block 50 — counts once toward (5, 9)
     assert(streamed.contains((5L, 9L, 2L)))
     // no pair emitted twice across batch partitions
-    assert(spark.read.parquet(s"$out/pairs")
+    assert(StreamFrameOverlap.pairsView(spark, out)
       .groupBy("media_a", "media_b").count()
       .filter(col("count") > 1).count() === 0L)
     // the base tier folded (bounded small-files curve)

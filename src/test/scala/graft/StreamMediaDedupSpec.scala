@@ -63,7 +63,7 @@ class StreamMediaDedupSpec extends SparkTestBase {
     assert(streamed.exists(p => p._2 == 8L))  // cross over a fold
     assert(streamed.exists(p => p._2 == 10L)) // cross over a merge
     // no pair emitted twice across batch partitions
-    assert(spark.read.parquet(s"$out/pairs")
+    assert(StreamMediaDedup.pairsView(spark, out)
       .groupBy("media_a", "media_b").count()
       .filter(col("count") > 1).count() === 0L)
     // the base tier folded (bounded small-files curve)

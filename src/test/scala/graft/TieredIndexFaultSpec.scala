@@ -1,0 +1,310 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.operators.Multimodal.MediaRecord
+import graft.streaming._
+
+/** Fault injection over every streaming route that persists through
+  * [[TieredIndex]]: each route's trigger (its `foldBatch`, then every
+  * store's `maintain`) is crashed at the three points of the store's
+  * commit protocol, the crashed trigger is replayed the way
+  * Structured Streaming replays an uncommitted batch, and the route's
+  * views must equal a run with no crash:
+  *
+  *  1. after the batch's store writes, before the checkpoint commit —
+  *     the whole trigger runs again;
+  *  2. during a fold — the epoch directory is written but its
+  *     `_SUCCESS` never lands;
+  *  3. after a fold and a merge commit, before cleanup — superseded
+  *     epochs and folded recent directories are still on disk.
+  *
+  * The replayed trigger must sweep every leftover. A second table-
+  * driven case runs each real sink for 3 × compactEvery triggers and
+  * checks every store stays bounded: at most compactEvery recent batch
+  * directories and O(log n) live epochs. The last cases pin the
+  * rejection of the layouts older stores left behind. */
+class TieredIndexFaultSpec extends SparkTestBase {
+  import spark.implicits._
+  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
+    spark.sqlContext
+
+  // ---- fixtures ---------------------------------------------------
+
+  private def noise(tag: String, n: Int): String =
+    (0 until n).map(i => s"$tag$i").mkString(" ")
+  // aperiodic passages long enough to carry whole CDC chunks, shared
+  // within a batch and with the batch three later; " the " splits a
+  // document into paragraphs for the cross-modal route
+  private val passages =
+    (0 until 3).map(p => (0 until 40).map(k => s"p${p}w$k").mkString(" "))
+  private def textBatch(b: Int): Seq[(Long, String)] = {
+    val p = passages(b % 3)
+    Seq((10L * b + 1, s"${noise(s"a${b}x", 8)} the $p"),
+      (10L * b + 2, s"$p the ${noise(s"c${b}x", 8)}"),
+      (10L * b + 3, p))
+  }
+  private def bytes(seed: Int, n: Int): Array[Byte] = {
+    val r = new scala.util.Random(seed)
+    Array.fill(n)(r.nextInt(256).toByte)
+  }
+  // whole-file twins within a batch and with the batch three later
+  private def mediaBatch(b: Int): Seq[MediaRecord] = Seq(
+    MediaRecord(10L * b + 1, "image/fake", bytes(1000 + b, 400), 32, 32, 0L),
+    MediaRecord(10L * b + 2, "image/fake", bytes(1000 + b, 400), 32, 32, 0L),
+    MediaRecord(10L * b + 3, "image/fake", bytes(b % 3, 400), 32, 32, 0L))
+  // footage sharing two frame blocks within a batch and across batches
+  private def frames(seeds: Int*): Array[Byte] =
+    seeds.toArray.flatMap(s => bytes(s, graft.operators.Multimodal.FrameBytes))
+  private def frameBatch(b: Int): Seq[MediaRecord] = Seq(
+    MediaRecord(10L * b + 1, "video/fake", frames(500 + b, 600 + b, 700 + b),
+      32, 32, 0L),
+    MediaRecord(10L * b + 2, "video/fake", frames(500 + b, 600 + b),
+      32, 32, 0L),
+    MediaRecord(10L * b + 3, "video/fake", frames(b % 3, 10 + b % 3),
+      32, 32, 0L))
+
+  private def textDf(b: Int): DataFrame = textBatch(b).toDF("doc_id", "text")
+
+  private def runText(n: Int)(start: DataFrame => StreamingQuery): Unit = {
+    val in = MemoryStream[(Long, String)]
+    val q = start(in.toDF().toDF("doc_id", "text"))
+    try (0 until n).foreach { b =>
+      in.addData(textBatch(b)); q.processAllAvailable()
+    } finally q.stop()
+  }
+  private def runMedia(n: Int, batch: Int => Seq[MediaRecord])(
+      start: Dataset[MediaRecord] => StreamingQuery): Unit = {
+    val in = MemoryStream[MediaRecord]
+    val q = start(in.toDS())
+    try (0 until n).foreach { b =>
+      in.addData(batch(b)); q.processAllAvailable()
+    } finally q.stop()
+  }
+  private def foreachBatch(docs: DataFrame, ckpt: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    docs.writeStream.foreachBatch(f)
+      .option("checkpointLocation", ckpt).start()
+
+  /** One route: its trigger body without maintenance, its stores, its
+    * views, and its real sink run for `n` triggers (`compactEvery` is
+    * passed to sinks that take it). */
+  private case class Route(name: String,
+      fold: (String, Long) => Unit,
+      stores: String => Seq[TieredIndex],
+      views: String => Seq[DataFrame],
+      runSink: (String, String, Int, Int) => Unit,
+      sinkCompactEvery: Option[Int])
+
+  private val routes = Seq(
+    Route("StreamCorpusLoop",
+      (out, b) => StreamCorpusLoop.foldBatch(out, textDf(b.toInt), b),
+      StreamCorpusLoop.stores(_),
+      out => Seq(StreamCorpusLoop.acceptedIds(spark, out),
+        StreamCorpusLoop.hashIndex(spark, out),
+        StreamCorpusLoop.fps(spark, out),
+        StreamCorpusLoop.labels(spark, out)),
+      (out, ckpt, n, ce) => runText(n)(foreachBatch(_, ckpt)(
+        StreamCorpusLoop.sink(out, compactEvery = ce))),
+      None),
+    Route("StreamContainment",
+      (out, b) => StreamContainment.foldBatch(out, textDf(b.toInt), b),
+      StreamContainment.stores(_),
+      out => Seq(StreamContainment.pairs(spark, out),
+        StreamContainment.index(spark, out),
+        StreamContainment.gramDf(spark, out)),
+      (out, ckpt, n, ce) => runText(n)(foreachBatch(_, ckpt)(
+        StreamContainment.sink(out, compactEvery = ce))),
+      None),
+    Route("StreamNearDedup",
+      (out, b) => StreamNearDedup.foldBatch(out, textDf(b.toInt), b),
+      StreamNearDedup.stores(_),
+      out => Seq(StreamNearDedup.pairsView(spark, out),
+        StreamNearDedup.keptIdsView(spark, out)),
+      (out, ckpt, n, _) => runText(n)(StreamNearDedup.sink(_, out, ckpt)),
+      Some(16)),
+    Route("StreamSpanDedup",
+      (out, b) => StreamSpanDedup.foldBatch(out, textDf(b.toInt), b,
+        windowTokens = 8),
+      StreamSpanDedup.stores(_),
+      out => Seq(StreamSpanDedup.cleanView(spark, out)),
+      (out, ckpt, n, _) => runText(n)(StreamSpanDedup.sink(_, out, ckpt,
+        windowTokens = 8)),
+      Some(16)),
+    Route("StreamCdc",
+      (out, b) => StreamCdc.foldBatch(out, textDf(b.toInt), b, nBuckets = 4),
+      StreamCdc.stores(_),
+      out => Seq(StreamCdc.pairsView(spark, out),
+        StreamCdc.chunkIndexView(spark, out)),
+      (out, ckpt, n, ce) => runText(n)(StreamCdc.sink(_, out, ckpt,
+        nBuckets = 4, compactEvery = ce)),
+      None),
+    Route("StreamMediaDedup",
+      (out, b) => StreamMediaDedup.foldBatch(out,
+        mediaBatch(b.toInt).toDS(), b, threshold = 0.999, nBuckets = 4),
+      StreamMediaDedup.stores(_),
+      out => Seq(StreamMediaDedup.pairsView(spark, out),
+        StreamMediaDedup.featureIndexView(spark, out)),
+      (out, ckpt, n, ce) => runMedia(n, mediaBatch)(StreamMediaDedup.sink(_,
+        out, ckpt, threshold = 0.999, nBuckets = 4, compactEvery = ce)),
+      None),
+    Route("StreamFrameOverlap",
+      (out, b) => StreamFrameOverlap.foldBatch(out,
+        frameBatch(b.toInt).toDS(), b, nBuckets = 4),
+      StreamFrameOverlap.stores(_),
+      out => Seq(StreamFrameOverlap.pairsView(spark, out),
+        StreamFrameOverlap.frameIndexView(spark, out)),
+      (out, ckpt, n, ce) => runMedia(n, frameBatch)(StreamFrameOverlap.sink(
+        _, out, ckpt, nBuckets = 4, compactEvery = ce)),
+      None),
+    Route("StreamCrossModal",
+      (out, b) => StreamCrossModal.foldBatch(out, textDf(b.toInt), b,
+        nBuckets = 4),
+      StreamCrossModal.stores(_),
+      out => Seq(StreamCrossModal.pairsView(spark, out),
+        StreamCrossModal.labelsView(spark, out)),
+      (out, ckpt, n, ce) => runText(n)(StreamCrossModal.sink(_, out, ckpt,
+        nBuckets = 4, compactEvery = ce)),
+      None))
+
+  // ---- helpers ----------------------------------------------------
+
+  /** A view as a sorted multiset of JSON rows (duplicates count). */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.map(col).toSeq: _*)))
+      .as[String].collect().toSeq.sorted
+
+  private val CompactEvery = 2
+
+  private def foldDue(s: TieredIndex, batchId: Long): Boolean = {
+    val upto = s.maxUpto(spark)
+    s.recentIds(spark).count(b => b > upto && b < batchId) >= CompactEvery
+  }
+
+  private def trigger(r: Route, out: String, b: Long): Unit = {
+    r.fold(out, b)
+    r.stores(out).foreach(_.maintain(spark, b, CompactEvery))
+  }
+
+  /** Nothing unreadable is left: every epoch dir is committed and live,
+    * and every recent dir lies above the folded range. */
+  private def assertSwept(r: Route, out: String, when: String): Unit =
+    r.stores(out).foreach { s =>
+      val live = s.liveEpochs(spark).map(_.path).toSet
+      val leftover = s.epochDirs(spark)
+        .filterNot { case (_, _, _, p, committed) => committed && live(p) }
+      assert(leftover.isEmpty, s"${r.name} $when: epoch leftovers $leftover")
+      val upto = s.maxUpto(spark)
+      assert(s.recentIds(spark).forall(_ > upto),
+        s"${r.name} $when: recent dirs ${s.recentIds(spark)} ≤ $upto")
+    }
+
+  // ---- the cases --------------------------------------------------
+
+  test("every TieredIndex route: a crash after the store writes, during " +
+    "a fold, or after a fold/merge commits but before cleanup replays " +
+    "to the views of a run with no crash, and the replayed trigger " +
+    "sweeps every leftover") {
+    val nBatches = 5
+    for (r <- routes) {
+      val ref = Files.createTempDirectory(s"fault-ref-${r.name}-").toString
+      (0 until nBatches).foreach(b => trigger(r, ref, b.toLong))
+      val want = r.views(ref).map(rowsOf)
+      assert(want.exists(_.nonEmpty), s"${r.name}: fixture yields no rows")
+
+      val out = Files.createTempDirectory(s"fault-${r.name}-").toString
+      trigger(r, out, 0L)
+      trigger(r, out, 1L)
+
+      // crash 2, during a fold: the epoch is written, its _SUCCESS is
+      // not; Structured Streaming then replays the uncommitted trigger
+      r.fold(out, 2L)
+      val due2 = r.stores(out).filter(foldDue(_, 2L))
+      assert(due2.nonEmpty, s"${r.name}: no fold due at trigger 2")
+      due2.foreach { s =>
+        s.fold(spark, upTo = 1L)
+        val torn = s.epochDirs(spark).maxBy(_._1)._4
+        assert(new java.io.File(new java.net.URI(torn).getPath, "_SUCCESS")
+          .delete(), s"${r.name}: no _SUCCESS in $torn")
+      }
+      trigger(r, out, 2L)
+      assertSwept(r, out, "after the torn-fold replay")
+
+      // crash 1, after the store writes and maintenance, before the
+      // checkpoint commit: the whole trigger replays
+      trigger(r, out, 3L)
+      trigger(r, out, 3L)
+      assertSwept(r, out, "after the trigger replay")
+
+      // crash 3, after a fold and a merge commit, before cleanup:
+      // superseded epochs and folded recent dirs are still on disk
+      r.fold(out, 4L)
+      val due4 = r.stores(out).filter(foldDue(_, 4L))
+      assert(due4.nonEmpty, s"${r.name}: no fold due at trigger 4")
+      due4.foreach { s =>
+        s.fold(spark, upTo = 3L)
+        s.mergeOnce(spark)
+      }
+      assert(due4.exists(s => s.epochDirs(spark).size >
+        s.liveEpochs(spark).size), s"${r.name}: no merge committed")
+      trigger(r, out, 4L)
+      assertSwept(r, out, "after the pre-cleanup replay")
+      assert(r.views(out).map(rowsOf) === want, r.name)
+    }
+  }
+
+  test("every TieredIndex route stays bounded: after 3 × compactEvery " +
+    "triggers each store keeps at most compactEvery recent batch dirs " +
+    "and O(log n) live epochs, with nothing outside the store layout") {
+    for (r <- routes) {
+      val ce = r.sinkCompactEvery.getOrElse(CompactEvery)
+      val n = 3 * ce
+      val out = Files.createTempDirectory(s"bounded-${r.name}-").toString
+      val ckpt = Files.createTempDirectory(s"bounded-ckpt-${r.name}-")
+        .toString
+      r.runSink(out, ckpt, n, ce)
+      r.stores(out).foreach { s =>
+        val recent = s.recentIds(spark)
+        val live = s.liveEpochs(spark)
+        assert(recent.size <= ce, s"${r.name}: ${recent.size} recent dirs")
+        // three folds' worth of batches: a binary counter of ≤ 2 epochs
+        assert(live.nonEmpty && live.size <= 2,
+          s"${r.name}: ${live.size} live epochs")
+        assert(s.epochDirs(spark).size === live.size,
+          s"${r.name}: epoch leftovers")
+      }
+    }
+  }
+
+  private def startFails(f: => Unit): Throwable = {
+    val e = intercept[Throwable](f)
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(e).exists(_.contains("Rebuild the store")), e)
+    e
+  }
+
+  test("a store root holding delta=/base= children (the old corpus-loop " +
+    "layout) fails loudly at sink start and asks for a rebuild") {
+    val dir = Files.createTempDirectory("legacy-delta-").toString
+    Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/accepted/delta=0")
+    Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/accepted/base=1")
+    val ckpt = Files.createTempDirectory("legacy-delta-ckpt-").toString
+    startFails(runText(1)(foreachBatch(_, ckpt)(StreamCorpusLoop.sink(dir))))
+  }
+
+  test("a store root holding batch_id= children directly (the old " +
+    "near-dedup and pairs layout) fails loudly at sink start and asks " +
+    "for a rebuild") {
+    val out = Files.createTempDirectory("legacy-batchid-").toString
+    Seq((1L, 2L, 0.9, 0L)).toDF("doc_a", "doc_b", "jaccard", "batch_id")
+      .write.partitionBy("batch_id").parquet(s"$out/pairs")
+    val ckpt = Files.createTempDirectory("legacy-batchid-ckpt-").toString
+    startFails(runText(1)(StreamNearDedup.sink(_, out, ckpt)))
+  }
+}
