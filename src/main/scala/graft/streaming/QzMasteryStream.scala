@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.analytics.QzMastery
@@ -91,21 +91,29 @@ object QzMasteryStream {
     val timeout =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
+    // the state is stored kryo-encoded: the product encoder's
+    // deserializer for the question-id set gets fresh lambda-variable
+    // names each batch, so its code would be compiled again every batch
     events
       .groupByKey(e => QzKey(e.uid, e.courseid, e.pointid))
-      .flatMapGroupsWithState(OutputMode.Update(), timeout)(update(stateTtl))
+      .flatMapGroupsWithState(OutputMode.Update(), timeout)(update(stateTtl))(
+        Encoders.kryo[MasteryState], implicitly[Encoder[MasteryRow]])
   }
 
   /** End-to-end J2: mastery state → keyed-upsert detail table (the
     * reference's qz_point_detail, minus the MySQL round-trips). Each
-    * micro-batch upserts the full-state rows it refreshed. */
+    * micro-batch appends the full-state rows it refreshed in the same
+    * job that runs the state update: one job, one [[TieredIndex]]
+    * append ([[KeyedUpsertSink]]). */
   def startDetailSink(events: Dataset[QzEvent], tableDir: String,
       checkpoint: String, stateTtl: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    mastery(events, stateTtl).toDF().writeStream
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val rows = mastery(events, stateTtl).toDF()
+    rows.writeStream
       .outputMode(OutputMode.Update())
-      .foreachBatch(KeyedUpsertSink.foreachBatchUpsert(tableDir,
-        Seq("uid", "courseid", "pointid")))
+      .foreachBatch(KeyedUpsertSink.foreachBatchUpsert(rows.sparkSession,
+        tableDir, rows.schema, Seq("uid", "courseid", "pointid")))
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 }

@@ -45,8 +45,7 @@ object StreamContainment {
   private def indexStore(dir: String) = new TieredIndex(s"$dir/cindex",
     "id bigint, ng array<bigint>, sz int, prefix array<bigint>")
   private def gramStore(dir: String) = new TieredIndex(s"$dir/cgramdf",
-    "gram bigint, df bigint",
-    _.groupBy(col("gram"), col("bucket")).agg(sum(col("df")).as("df")))
+    "gram bigint, df bigint", TieredIndex.summed("df"))
   private def pairStore(dir: String) = new TieredIndex(s"$dir/pairs",
     "doc_a bigint, doc_b bigint, containment double")
 

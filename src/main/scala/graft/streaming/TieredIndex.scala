@@ -2,18 +2,20 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** A bucket-partitioned, LSM-tiered parquet store — the one persisted
-  * store every streaming delta route reads, appends to and compacts:
-  * the key indexes of [[StreamCdc]], [[StreamMediaDedup]],
-  * [[StreamFrameOverlap]] and [[StreamCrossModal]], the `pairs` output
-  * of each, and the stores of [[StreamCorpusLoop]],
-  * [[StreamContainment]], [[StreamNearDedup]] and [[StreamSpanDedup]].
-  * One instance manages one `outDir`; rows follow `keySchema` plus a
-  * precomputed `bucket` partition column whose modulus is immutable
-  * per outDir.
+  * store every streaming sink that keeps state on disk reads, appends
+  * to and compacts: the key indexes of [[StreamCdc]],
+  * [[StreamMediaDedup]], [[StreamFrameOverlap]] and [[StreamCrossModal]],
+  * the `pairs` output of each, the stores of [[StreamCorpusLoop]],
+  * [[StreamContainment]], [[StreamNearDedup]] and [[StreamSpanDedup]],
+  * J1's counts ([[RegisterStream.dualSink]]) and J2's detail table
+  * ([[KeyedUpsertSink]]). One instance manages one `outDir`; rows
+  * follow `keySchema` plus a precomputed `bucket` partition column
+  * whose modulus is immutable per outDir.
   *
   * '''One bucket.''' A store that is only ever read whole (an output
   * view, or a relation a full join probes) uses `nBuckets = 1` and
@@ -22,19 +24,27 @@ import org.apache.spark.sql.types.StructType
   * `corpusKeys(…, buckets = None)`.
   *
   * '''Fold/merge function.''' `combine` rewrites the rows a fold or a
-  * merge writes (key columns + `bucket`, both of which it must keep).
-  * It is identity for every store but an aggregated one:
-  * [[StreamContainment]]'s gram-df store sums its per-batch counts by
-  * gram, so every epoch holds one row per gram (readers still sum
-  * across tiers).
+  * merge writes: the key columns, `batch_id` and `bucket`, all of
+  * which it must keep. `batch_id` is the batch a row was appended in
+  * (an epoch row keeps the one it was folded from). `combine` is
+  * identity for most stores; the companion object has the two others:
+  * [[TieredIndex.summed]] for additive stores ([[StreamContainment]]'s
+  * gram df, J1's counts: every epoch holds one row per group, and
+  * readers still sum across tiers) and [[TieredIndex.latestPerKey]]
+  * for keyed snapshots (J2: every epoch holds each key's newest row,
+  * and readers keep the newest across tiers).
   *
   * '''Layout''' (two tiers, the [[graft.operators.IvfIndex]]
   * discipline):
   *
   *  - '''recent tier''' `outDir/chunks/batch_id=N/bucket=B/` — one dir
   *    per micro-batch, written with dynamic partition overwrite so a
-  *    replayed batch overwrites exactly its own contribution. Only
-  *    numeric `batch_id=` dirs are read; a foreign one is skipped.
+  *    replayed batch overwrites exactly its own contribution. The
+  *    batch id lives only in the directory name (readers get it back
+  *    by partition discovery), never as a literal in the write's
+  *    plan, so every batch runs the same generated code. A batch with
+  *    no rows leaves no dir. Only numeric `batch_id=` dirs are read; a
+  *    foreign one is skipped.
   *  - '''base tier''' `outDir/chunks_base/e<E>_from<M>_upto<N>/bucket=B/`
   *    — folded epochs, each covering the contiguous batch-id range
   *    [M, N]. Epoch numbers E are globally monotone (one per fold or
@@ -79,23 +89,25 @@ import org.apache.spark.sql.types.StructType
   *    with a FRESH checkpoint is supported only before the first fold
   *    — wipe outDir and checkpoint together.
   *
-  * '''Legacy layouts.''' Round-15 indexes (`e<E>_upto<N>` epoch names,
-  * `cdc_meta`) read and maintain transparently (`from` defaults to 0 —
-  * the old single-epoch base covered [0, N]). Two layouts fail loudly
-  * at [[ensureNBuckets]]: the pre-bucket FLAT index (batch dirs
-  * without `bucket=` children, no meta — its postings carry no bucket
-  * value, so a pruned probe would silently drop every legacy row), and
-  * a store root holding an older store's own layout (`delta=`/`base=`
-  * children, or `batch_id=` children directly under it — reading past
-  * them would silently drop their rows from every view).
+  * '''Older layouts''' fail loudly at [[ensureNBuckets]]: the pre-bucket
+  * FLAT index (batch dirs without `bucket=` children, no meta — its
+  * postings carry no bucket value, so a pruned probe would silently
+  * drop every legacy row), and a store root holding an older store's
+  * own layout — reading past it would silently drop its rows from
+  * every view: `delta=`/`base=` children, `batch_id=` children
+  * directly under it, `bucket=` children (the swap-protocol keyed
+  * table J2 used to write), or J1's `windowed`/`totals` contribution
+  * stores.
   */
 private[graft] final class TieredIndex(outDir: String, keySchema: String,
     combine: DataFrame => DataFrame = identity) {
 
   private val keyCols: Seq[String] =
     StructType.fromDDL(keySchema).fields.map(_.name).toSeq
-  private val epochSchema = s"$keySchema, bucket int"
-  private val recentSchema = s"$keySchema, batch_id bigint, bucket int"
+  // both tiers: the recent tier's batch_id comes from the directory,
+  // an epoch's is a data column
+  private val rowSchema = s"$keySchema, batch_id bigint, bucket int"
+  private val storedCols = (keyCols :+ "batch_id" :+ "bucket").map(col)
   private val recentRoot = s"$outDir/chunks"
 
   private def fs(spark: SparkSession) =
@@ -127,7 +139,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   /** Recent-tier rows of the batches whose ids satisfy `keep`. */
   private def readRecent(spark: SparkSession,
       keep: Long => Boolean): DataFrame =
-    readOrEmpty(spark, recentSchema, recentRoot,
+    readOrEmpty(spark, rowSchema, recentRoot,
       recentIds(spark).filter(keep).map(b => s"$recentRoot/batch_id=$b"))
 
   /** One committed base-tier epoch: covers batch ids [from, upto]. */
@@ -138,7 +150,6 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   }
 
   private val EpochDir = """e(\d+)_from(\d+)_upto(\d+)""".r
-  private val LegacyDir = """e(\d+)_upto(\d+)""".r
 
   /** All epoch-named dirs, committed or torn:
     * `(epoch, from, upto, path, committed)`. */
@@ -153,8 +164,6 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
         case EpochDir(e, m, n) =>
           Some((e.toLong, m.toLong, n.toLong, st.getPath.toString,
             committed))
-        case LegacyDir(e, n) => // round-15 naming: one epoch from 0
-          Some((e.toLong, 0L, n.toLong, st.getPath.toString, committed))
         case _ => None
       }
     }
@@ -182,36 +191,43 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
 
   /** The rows visible to batch `batchId` (`Long.MaxValue` = every
     * batch — the view read), bucket-pruned to `buckets` (None = all
-    * buckets): every live base epoch ∪ recent batch dirs in (maxUpto,
-    * batchId). The bucket predicates are PARTITION filters on every
-    * scan — only directories that can hold a matching key are read. */
-  private[graft] def corpusKeys(spark: SparkSession, batchId: Long,
+    * buckets), as the key columns plus `batch_id`: every live base
+    * epoch ∪ recent batch dirs in (maxUpto, batchId). The bucket
+    * predicates are PARTITION filters on every scan — only
+    * directories that can hold a matching key are read. */
+  private[graft] def rows(spark: SparkSession, batchId: Long,
       buckets: Option[Seq[Int]]): DataFrame = {
     val upto = maxUpto(spark)
-    def pruned(df: DataFrame): DataFrame = buckets match {
+    def pruned(df: DataFrame): DataFrame = (buckets match {
       case Some(bs) => df.filter(col("bucket").isin(bs.map(Int.box): _*))
       case None => df
-    }
-    val keys = keyCols.map(col)
+    }).select((keyCols :+ "batch_id").map(col): _*)
     val base = liveEpochs(spark)
-      .map(e => pruned(spark.read.schema(epochSchema).parquet(e.path))
-        .select(keys: _*))
+      .map(e => pruned(spark.read.schema(rowSchema).parquet(e.path)))
       .reduceOption(_ unionByName _)
-      .getOrElse(readOrEmpty(spark, epochSchema, outDir, Nil)
-        .select(keys: _*))
-    val recent = pruned(readRecent(spark, b => b > upto && b < batchId))
-      .select(keys: _*)
-    base.unionByName(recent)
+      .getOrElse(pruned(readOrEmpty(spark, rowSchema, outDir, Nil)))
+    base.unionByName(pruned(readRecent(spark, b => b > upto && b < batchId)))
   }
 
-  /** Append one micro-batch's rows (key columns + `bucket`) — dynamic
-    * partition overwrite, so a replayed batch overwrites exactly its
-    * own contribution. */
-  private[graft] def append(keys: DataFrame, batchId: Long): Unit =
-    keys.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id", "bucket")
+  /** [[rows]] without `batch_id`: the key columns only. */
+  private[graft] def corpusKeys(spark: SparkSession, batchId: Long,
+      buckets: Option[Seq[Int]]): DataFrame =
+    rows(spark, batchId, buckets).drop("batch_id")
+
+  /** Append one micro-batch's rows (key columns + `bucket`) into its
+    * own `batch_id=N` dir — dynamic partition overwrite, so a replayed
+    * batch overwrites exactly its own contribution. A batch that wrote
+    * no bucket leaves no dir. */
+  private[graft] def append(keys: DataFrame, batchId: Long): Unit = {
+    val dir = new Path(s"$recentRoot/batch_id=$batchId")
+    keys.write.mode("overwrite").partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
-      .parquet(recentRoot)
+      .parquet(dir.toString)
+    val f = fs(keys.sparkSession)
+    if (f.exists(dir) && !f.listStatus(dir)
+        .exists(_.getPath.getName.startsWith("bucket=")))
+      f.delete(dir, true)
+  }
 
   /** Fold committed recent batches (ids in (maxUpto, upTo]) into ONE
     * new epoch through `combine` — reads only those recent dirs, never
@@ -223,7 +239,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
     val target =
       s"$outDir/chunks_base/e${nextEpoch(spark)}_from${upto + 1}_upto$upTo"
     combine(readRecent(spark, b => b > upto && b <= upTo)
-        .select((keyCols :+ "bucket").map(col): _*))
+        .select(storedCols: _*))
       .write.mode("overwrite").partitionBy("bucket").parquet(target)
   }
 
@@ -240,9 +256,9 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
         s"e${nextEpoch(spark)}_from${older.from}_upto${newer.upto}"
       // separate reads per root: multi-path partition discovery
       // rejects sibling roots as conflicting directory structures
-      combine(spark.read.schema(epochSchema).parquet(older.path)
-          .unionByName(spark.read.schema(epochSchema).parquet(newer.path))
-          .select((keyCols :+ "bucket").map(col): _*))
+      combine(spark.read.schema(rowSchema).parquet(older.path)
+          .unionByName(spark.read.schema(rowSchema).parquet(newer.path))
+          .select(storedCols: _*))
         .write.mode("overwrite").partitionBy("bucket").parquet(target)
     }
   }
@@ -287,23 +303,18 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   // ---- bucket-count metadata ------------------------------------
 
   private def metaPath = s"$outDir/index_meta"
-  private def legacyMetaPath = s"$outDir/cdc_meta"
 
-  private def existingMetaPath(spark: SparkSession): Option[String] = {
-    val f = fs(spark)
-    if (f.exists(new Path(metaPath))) Some(metaPath)
-    else if (f.exists(new Path(legacyMetaPath))) Some(legacyMetaPath)
-    else None
-  }
+  private def hasMeta(spark: SparkSession): Boolean =
+    fs(spark).exists(new Path(metaPath))
 
   private[graft] def readNBuckets(spark: SparkSession): Int = {
-    val p = existingMetaPath(spark).getOrElse(metaPath)
-    try spark.read.parquet(p)
-      .select(col("n_buckets").cast("int")).collect()(0).getInt(0)
+    // read with its known schema: no schema-inference job per call
+    try spark.read.schema("n_buckets int").parquet(metaPath)
+      .collect()(0).getInt(0)
     catch {
       case e: Exception => throw new IllegalStateException(
-        s"TieredIndex: cannot read bucket-count metadata at $p — the " +
-          "meta is torn or corrupt (a crash between meta-dir creation " +
+        s"TieredIndex: cannot read bucket-count metadata at $metaPath — " +
+          "the meta is torn or corrupt (a crash between meta-dir creation " +
           "and parquet commit leaves an unreadable dir); delete the " +
           "meta dir and restart the sink with the original nBuckets, " +
           "or rebuild the index", e)
@@ -311,8 +322,9 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   }
 
   /** Detect the layouts this store cannot read correctly:
-    *  - an older store's own layout at the root — `delta=`/`base=`
-    *    children, or `batch_id=` children directly under outDir;
+    *  - an older store's own layout at the root — `delta=`/`base=`,
+    *    `batch_id=` or `bucket=` children directly under outDir, or
+    *    J1's `windowed`/`totals` contribution stores;
     *  - the pre-bucket FLAT layout: recent batch dirs whose children
     *    are data files rather than `bucket=` subdirs, or an index with
     *    chunk data but no meta. Such postings carry no bucket
@@ -324,8 +336,8 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
       if (f.exists(root)) f.listStatus(root).toSeq.filter(_.isDirectory)
         .map(_.getPath.getName)
       else Nil
-    rootDirs.find(n => Seq("delta=", "base=", "batch_id=")
-        .exists(n.startsWith))
+    rootDirs.find(n => Seq("delta=", "base=", "batch_id=", "bucket=")
+        .exists(n.startsWith) || n == "windowed" || n == "totals")
       .foreach(n => throw new IllegalStateException(
         s"TieredIndex: the store at $outDir holds an older store " +
           s"layout ($n) that this store does not read — ignoring it " +
@@ -343,7 +355,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
         "Rebuild the index (wipe outDir + checkpoint and replay), or " +
         "migrate: rewrite each batch_id dir partitioned by " +
         "bucket = pmod(<fingerprint>, nBuckets) and write the meta.")
-    if ((hasChunks || hasBase) && existingMetaPath(spark).isEmpty)
+    if ((hasChunks || hasBase) && !hasMeta(spark))
       fail("no bucket-count meta")
     if (hasChunks) {
       val firstBatch = f.listStatus(chunksRoot)
@@ -379,7 +391,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
           s"nBuckets=$stored, got $nBuckets — the bucket modulus " +
           "cannot change")
     }
-    if (existingMetaPath(spark).isDefined) { validate(); return }
+    if (hasMeta(spark)) { validate(); return }
     import spark.implicits._
     val tmp = new Path(s"$outDir/index_meta__tmp")
     f.delete(tmp, true) // a crashed previous attempt
@@ -395,6 +407,20 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
 }
 
 private[graft] object TieredIndex {
+
+  /** The `combine` of an additive store: one row per group of the
+    * other columns (`bucket` included), `n` summed, stamped with the
+    * newest batch it covers. */
+  def summed(n: String): DataFrame => DataFrame = df =>
+    df.groupBy(df.columns.filterNot(Set(n, "batch_id")).map(col).toSeq: _*)
+      .agg(sum(col(n)).as(n), max(col("batch_id")).as("batch_id"))
+
+  /** The `combine` of a keyed-snapshot store, and its read: per key,
+    * the row of the newest batch. */
+  def latestPerKey(keys: Seq[String]): DataFrame => DataFrame = df =>
+    df.withColumn("_newest", max(col("batch_id"))
+        .over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("batch_id") === col("_newest")).drop("_newest")
 
   /** A route's `foreachBatch` body: `fold` the batch into the route's
     * stores, then run each store's [[TieredIndex.maintain]] — inside the

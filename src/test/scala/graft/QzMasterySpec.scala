@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{hash, lit, pmod}
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.analytics.QzMastery
@@ -112,7 +112,7 @@ class QzMasterySpec extends SparkTestBase {
       q.processAllAvailable()
       input.addData(QzEvent(1, 1, 1, "2", "0", "2019-09-12 10:00:02"))
       q.processAllAvailable()
-      val detail = spark.read.parquet(table)
+      val detail = graft.streaming.KeyedUpsertSink.read(spark, table)
       assert(detail.count() === 2) // one row per key, updated in place
       val k1 = detail.filter($"uid" === 1).head()
       assert(k1.getAs[Long]("qz_sum") === 2L) // merged across batches
@@ -122,145 +122,38 @@ class QzMasterySpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  private def bucketOf(uid: Int, n: Int): Int =
-    Seq(uid).toDF("uid")
-      .select(pmod(hash($"uid"), lit(n))).head.getInt(0)
-
-  test("keyed-upsert sink: bucket-level crash windows lose no keys") {
-    import org.apache.hadoop.fs.Path
+  test("keyed-upsert sink: an upsert writes only its own batch dir") {
     import graft.streaming.KeyedUpsertSink
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_crash_").toString
-    val table = base + "/detail"
-    val fs = new Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val N = 4
+    val table = java.nio.file.Files
+      .createTempDirectory("graft_upsert_").toString + "/detail"
+    val batch0 = (1 to 32).map(i => (i, i * 10L)).toDF("uid", "v")
+    val store = KeyedUpsertSink.open(spark, table, batch0.schema, Seq("uid"))
+    KeyedUpsertSink.upsert(store, batch0, 0L)
+    val before = tableBytes(table)
 
-    val batch1 = Seq((1, 10L), (2, 20L)).toDF("uid", "v")
-    KeyedUpsertSink.upsert(batch1, table, Seq("uid"), nBuckets = N)
+    // 8 replaced keys and 4 new ones
+    val batch1 = ((1 to 8).map(i => (i, -i.toLong)) ++
+      (33 to 36).map(i => (i, i * 10L))).toDF("uid", "v")
+    KeyedUpsertSink.upsert(store, batch1, 1L)
+    val after = tableBytes(table)
+    // every earlier file is untouched, bit for bit; the batch only
+    // added files under its own dir
+    for ((path, bytes) <- before) assert(after.get(path).contains(bytes), path)
+    assert((after.keySet -- before.keySet).nonEmpty)
+    assert((after.keySet -- before.keySet)
+      .forall(_.startsWith("chunks/batch_id=1/")), after.keySet)
 
-    // crash window 1: key 2's bucket retired, swap never ran, and the
-    // crashed attempt's .tmp is incomplete (no _SUCCESS) — recovery
-    // must roll BACK (restore the retired generation) before merging
-    val b2 = s"bucket=${bucketOf(2, N)}"
-    fs.mkdirs(new Path(table + ".retired"))
-    assert(fs.rename(new Path(table, b2),
-      new Path(table + ".retired/" + b2)))
-    fs.mkdirs(new Path(table + ".tmp"))
-    val batch2 = Seq((2, 21L)).toDF("uid", "v") // replayed partial batch
-    KeyedUpsertSink.upsert(batch2, table, Seq("uid"))
-    val after = KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap
-    assert(after === Map(1 -> 10L, 2 -> 21L)) // both keys survived
-
-    // crash window 2: .tmp committed (_SUCCESS present), key 3's new
-    // generation still in .tmp, live bucket already retired away —
-    // recovery must roll FORWARD (the committed generation wins)
-    val batch3 = Seq((3, 30L)).toDF("uid", "v")
-    KeyedUpsertSink.upsert(batch3, table, Seq("uid"))
-    val b3 = s"bucket=${bucketOf(3, N)}"
-    fs.mkdirs(new Path(table + ".tmp"))
-    assert(fs.rename(new Path(table, b3), new Path(table + ".tmp/" + b3)))
-    fs.create(new Path(table + ".tmp/_SUCCESS"), true).close()
-    KeyedUpsertSink.upsert(batch3, table, Seq("uid")) // replay
-    val fin = KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap
-    assert(fin === Map(1 -> 10L, 2 -> 21L, 3 -> 30L))
+    val want = ((1 to 36).map(i => i -> i * 10L) ++
+      (1 to 8).map(i => i -> -i.toLong)).toMap
+    def contents = KeyedUpsertSink.read(spark, table)
+      .as[(Int, Long)].collect()
+    assert(contents.length === want.size) // one row per key
+    assert(contents.toMap === want)
+    // a replayed batch overwrites its own dir: same table
+    KeyedUpsertSink.upsert(store, batch1, 1L)
+    assert(contents.toMap === want)
+    assert(contents.length === want.size)
   }
-
-  test("bucketed upsert migrates a pre-bucketing flat-layout table in " +
-    "place (no keys dropped, legacy files removed)") {
-    import graft.streaming.KeyedUpsertSink
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_migrate_").toString
-    val table = base + "/detail"
-    // a table written by the old (flat, whole-table-swap) protocol:
-    // parquet part files at the root, no bucket dirs, no meta
-    Seq((1, 10L), (2, 20L), (3, 30L)).toDF("uid", "v")
-      .write.mode("overwrite").parquet(table)
-
-    KeyedUpsertSink.upsert(Seq((2, 21L), (4, 40L)).toDF("uid", "v"),
-      table, Seq("uid"), nBuckets = 4)
-    val got = KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap
-    assert(got === Map(1 -> 10L, 2 -> 21L, 3 -> 30L, 4 -> 40L))
-    // flat files gone, bucketed layout in place
-    val rootFiles = new java.io.File(table).listFiles().map(_.getName)
-    assert(!rootFiles.exists(f => f.endsWith(".parquet")), rootFiles.toSeq)
-    assert(rootFiles.exists(_.startsWith("bucket=")), rootFiles.toSeq)
-    // subsequent upserts take the steady-state bucketed path
-    KeyedUpsertSink.upsert(Seq((1, 11L)).toDF("uid", "v"),
-      table, Seq("uid"))
-    assert(KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap ===
-      Map(1 -> 11L, 2 -> 21L, 3 -> 30L, 4 -> 40L))
-
-    // crashed-migration replay: a leftover legacy file holding a STALE
-    // value for a key that already lives in the buckets must NOT
-    // resurrect it (bucketed rows take precedence over legacy rows)
-    Seq((1, 999L)).toDF("uid", "v")
-      .write.mode("append").parquet(table) // stale flat file reappears
-    KeyedUpsertSink.upsert(Seq((5, 50L)).toDF("uid", "v"),
-      table, Seq("uid"))
-    assert(KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap ===
-      Map(1 -> 11L, 2 -> 21L, 3 -> 30L, 4 -> 40L, 5 -> 50L))
-  }
-
-  test("bucketed upsert leaves untouched-bucket files byte-identical " +
-    "(upsert I/O is O(batch), not O(table))") {
-    import graft.streaming.KeyedUpsertSink
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bucketio_").toString
-    val table = base + "/detail"
-    val N = 8
-    val batch1 = (1 to 32).map(i => (i, i * 10L)).toDF("uid", "v")
-    KeyedUpsertSink.upsert(batch1, table, Seq("uid"), nBuckets = N)
-
-    def snapshot(): Map[String, Seq[Byte]] = {
-      val root = java.nio.file.Paths.get(table)
-      val s = java.nio.file.Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p))
-          .filterNot(_.getFileName.toString.endsWith(".crc"))
-          .map(p => root.relativize(p).toString ->
-            java.nio.file.Files.readAllBytes(p).toSeq)
-          .toMap
-      } finally s.close()
-    }
-
-    val before = snapshot()
-    KeyedUpsertSink.upsert(Seq((7, 777L)).toDF("uid", "v"),
-      table, Seq("uid"))
-    val after = snapshot()
-
-    val touched = s"bucket=${bucketOf(7, N)}/"
-    // every file outside key 7's bucket is untouched, bit for bit —
-    // same paths, same bytes
-    assert(before.keys.filterNot(_.startsWith(touched)).toSet ===
-      after.keys.filterNot(_.startsWith(touched)).toSet)
-    for ((path, bytes) <- before if !path.startsWith(touched))
-      assert(after(path) === bytes, path)
-    // and the touched bucket did change (new file set or new bytes)
-    val sameFiles = before.keys.filter(_.startsWith(touched)).toSet ==
-      after.keys.filter(_.startsWith(touched)).toSet
-    val sameBytes = before.forall { case (p, b) =>
-      !p.startsWith(touched) || after.get(p).contains(b) }
-    assert(!(sameFiles && sameBytes))
-
-    // table contents: key 7 replaced, all others intact
-    val contents = KeyedUpsertSink.read(spark, table)
-      .as[(Int, Long)].collect().toMap
-    assert(contents === (1 to 32).map(i =>
-      i -> (if (i == 7) 777L else i * 10L)).toMap)
-  }
-
-  private def dataFiles(dir: java.io.File): Seq[String] =
-    Option(dir.listFiles()).toSeq.flatten.map(_.getName)
-      .filterNot(f => f.startsWith("_") || f.startsWith(".") ||
-        f.endsWith(".crc"))
 
   private def tableBytes(table: String): Map[String, Seq[Byte]] = {
     val root = java.nio.file.Paths.get(table)
@@ -275,44 +168,38 @@ class QzMasterySpec extends SparkTestBase {
     } finally s.close()
   }
 
-  test("keyed-upsert sink: a batch into an existing table runs at most " +
-    "3 jobs, none wider than its inputs' splits, and leaves one file " +
-    "per touched bucket") {
+  test("keyed-upsert sink: a micro-batch runs one job and compiles no new code") {
+    implicit val sql = spark.sqlContext
     import graft.streaming.KeyedUpsertSink
     val table = java.nio.file.Files
       .createTempDirectory("graft_jobs_").toString + "/detail"
-    val N = 16
-    KeyedUpsertSink.upsert((1 to 200).map(i => (i, i * 10L))
-      .toDF("uid", "v"), table, Seq("uid"), nBuckets = N)
-
-    // 40 replaced keys and 20 new ones
-    val batch = ((1 to 80 by 2).map(i => (i, -i.toLong)) ++
-      (201 to 220).map(i => (i, i * 10L))).toDF("uid", "v")
-    val (_, jobs) = jobsOf("upsert-jobcount") {
-      KeyedUpsertSink.upsert(batch, table, Seq("uid"))
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_jobs_ckpt_").toString
+    val input = MemoryStream[QzEvent]
+    val q = QzMasteryStream.startDetailSink(input.toDS(), table, ckpt)
+    def batch(b: Int): Unit = {
+      input.addData((0 until 60).map(i => QzEvent(i % 20, 1, i % 3,
+        s"${(i + b) % 30}", s"${i % 2}", f"2019-09-12 10:$b%02d:00")))
+      q.processAllAvailable()
     }
-    // touched-bucket collect, bucket exchange, write — no isEmpty
-    // probe, no second evaluation of the batch, no listing or
-    // schema-inference job
-    assert(jobs.size <= 3, s"jobs (id, tasks): $jobs")
-    // no job grows with the bucket or file count (a parallel listing
-    // runs one task per directory): the widest job is the exchange's
-    // map stage, one task per batch partition plus the touched files
-    // packed into at most one split per core
-    val widest = batch.rdd.getNumPartitions +
-      spark.sparkContext.defaultParallelism
-    assert(jobs.forall(_._2 <= widest), s"jobs (id, tasks): $jobs")
-
-    val touched = batch.select(pmod(hash($"uid"), lit(N))).as[Int]
-      .collect().toSet
-    for (b <- touched) {
-      val files = dataFiles(new java.io.File(table, s"bucket=$b"))
-      assert(files.size === 1, s"bucket=$b holds $files")
-    }
-    assert(KeyedUpsertSink.read(spark, table).as[(Int, Long)].collect()
-      .toMap === ((1 to 200).map(i => i -> i * 10L) ++
-        (1 to 80 by 2).map(i => i -> -i.toLong) ++
-        (201 to 220).map(i => i -> i * 10L)).toMap)
+    try {
+      // the first two batches compile the per-batch plan's code (the
+      // second one reads the state the first wrote)
+      batch(0)
+      batch(1)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val jobs = queryJobsOf(q)(batch(2))
+      // the stateful update and the append are one job: no persist, no
+      // touched-bucket collect, no read-merge-rewrite
+      assert(jobs.size === 1, s"jobs (id, tasks): $jobs")
+      // the batch id is in the write's directory, not a literal in its
+      // plan, so the third batch runs the second one's code
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+    } finally q.stop()
+    // 20 users × 3 points, one row each, merged over the three batches
+    val detail = KeyedUpsertSink.read(spark, table)
+    assert(detail.count() === 60)
+    assert(detail.filter($"qz_sum" =!= 3).count() === 0)
   }
 
   test("keyed-upsert sink: an empty micro-batch runs one job and writes " +
@@ -321,19 +208,22 @@ class QzMasterySpec extends SparkTestBase {
     val base = java.nio.file.Files
       .createTempDirectory("graft_empty_").toString
     val table = base + "/detail"
-    val hook = KeyedUpsertSink.foreachBatchUpsert(table, Seq("uid"))
     val empty = Seq.empty[(Int, Long)].toDF("uid", "v")
+    val hook = KeyedUpsertSink.foreachBatchUpsert(spark, table,
+      empty.schema, Seq("uid"))
 
-    // fresh path: no table directory, no bucket-count file
+    // fresh table (sink start wrote only its meta): no batch dir
+    val started = tableBytes(table)
     assert(jobsOf("upsert-empty-fresh")(hook(empty, 0L))._2.size === 1)
-    assert(!new java.io.File(table).exists())
-    assert(!new java.io.File(table, "_graft_nbuckets").exists())
+    assert(tableBytes(table) === started)
+    assert(!new java.io.File(table, "chunks/batch_id=0").exists())
 
     // existing table: every file stays byte-identical
     hook(Seq((1, 10L), (2, 20L)).toDF("uid", "v"), 1L)
     val before = tableBytes(table)
     assert(jobsOf("upsert-empty-existing")(hook(empty, 2L))._2.size === 1)
     assert(tableBytes(table) === before)
+    assert(!new java.io.File(table, "chunks/batch_id=2").exists())
     assert(new java.io.File(base).list().toSet === Set("detail"))
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{KMeans, Similarity}
@@ -14,6 +15,22 @@ trait SparkTestBase extends AnyFunSuite {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group, interruptOnCancel = false)
     val result = try body finally sc.clearJobGroup()
+    (result, settledJobs(group))
+  }
+
+  /** The jobs a running streaming query ran during `body`, as in
+    * [[jobsOf]]: its micro-batches run in the query's own job group,
+    * its run id. */
+  def queryJobsOf(q: StreamingQuery)(body: => Unit): Seq[(Int, Int)] = {
+    val group = q.runId.toString
+    val before = settledJobs(group).map(_._1).toSet
+    body
+    settledJobs(group).filterNot(j => before(j._1))
+  }
+
+  /** The jobs of `group` as (job id, tasks run), once stable. */
+  private def settledJobs(group: String): Seq[(Int, Int)] = {
+    val sc = spark.sparkContext
     // the status store is fed asynchronously — poll until stable
     def snapshot(): Seq[(Int, Int)] =
       sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted.map { j =>
@@ -28,7 +45,7 @@ trait SparkTestBase extends AnyFunSuite {
     while (cur != prev && waited < 5000) {
       prev = cur; Thread.sleep(250); waited += 250; cur = snapshot()
     }
-    (result, cur)
+    cur
   }
 
   def deleteDir(f: java.io.File): Unit = {

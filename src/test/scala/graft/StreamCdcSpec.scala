@@ -443,8 +443,8 @@ class StreamCdcSpec extends SparkTestBase {
     spark.range(1).select(lit(99L).as("fp"), lit(1).as("len"),
         lit(999L).as("doc_id"), lit(0).as("bucket"))
       .write.partitionBy("bucket")
-      .parquet(s"$out/chunks_base/e7_upto0")
-    assert(new java.io.File(s"$out/chunks_base/e7_upto0/_SUCCESS")
+      .parquet(s"$out/chunks_base/e7_from0_upto0")
+    assert(new java.io.File(s"$out/chunks_base/e7_from0_upto0/_SUCCESS")
       .delete())
 
     assert(StreamCdc.chunkIndexView(spark, out)

@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.streaming.{PageStream, RawArchive, RegisterStream}
 
@@ -163,10 +166,17 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[String]
     val q = RegisterStream.dualSink(
       RegisterStream.parse(input.toDF()), out, ckpt)
+    // a batch of unparseable lines adds no counts, but its trigger
+    // still runs the sink's maintenance
+    def countless(): Unit = {
+      input.addData(Seq("not a register line")); q.processAllAvailable()
+    }
     try {
-      for (b <- 0 until 4) {
-        input.addData(registerLines(2 + b, ((b % 3) + 1).toString,
-          f"2019-07-16 16:0$b%d:10"))
+      // batches 0..15: the sink folds every 16 committed batches, so
+      // none is folded yet
+      for (b <- 0 until 16) {
+        input.addData(registerLines(2 + b % 4, ((b % 3) + 1).toString,
+          f"2019-07-16 16:$b%02d:10"))
         q.processAllAvailable()
       }
       def totals = RegisterStream.totalsView(spark, out)
@@ -175,36 +185,81 @@ class StreamingSpec extends SparkTestBase {
         .as[(java.sql.Timestamp, java.sql.Timestamp, String, Long)]
         .collect().toSet
       val (t0, w0) = (totals, windowed)
+      val store = RegisterStream.store(out)
+      assert(store.liveEpochs(spark).isEmpty)
+      assert(store.recentIds(spark).size === 16)
 
-      // retire batches 0..2 into generation 1
-      RegisterStream.compact(spark, out, upToBatchId = 2)
+      // batch 16's trigger folds batches 0..15 into one epoch
+      countless()
       assert(totals === t0)
       assert(windowed === w0)
-      // live partitions 0..2 are gone; generation -1 exists
-      val dirs = new java.io.File(s"$out/totals").listFiles()
-        .map(_.getName).filter(_.startsWith("batch_id=")).toSet
-      assert(dirs.contains("batch_id=-1"))
-      assert(!dirs.exists(d =>
-        d.stripPrefix("batch_id=").toLong >= 0 &&
-          d.stripPrefix("batch_id=").toLong <= 2), dirs.toString)
+      // the folded batch dirs are gone; the countless batch wrote none
+      assert(store.liveEpochs(spark).map(e => (e.from, e.upto)) ===
+        Seq((0L, 15L)))
+      assert(store.recentIds(spark).isEmpty, store.recentIds(spark))
 
-      // idempotent: same horizon again is a no-op
-      RegisterStream.compact(spark, out, upToBatchId = 2)
-      assert(totals === t0)
-
-      // second compaction folds generation 1 + batch 3 into generation 2
-      RegisterStream.compact(spark, out, upToBatchId = 3)
+      // idempotent: a later trigger folds nothing and changes nothing
+      countless()
       assert(totals === t0)
       assert(windowed === w0)
-      val dirs2 = new java.io.File(s"$out/totals").listFiles()
-        .map(_.getName).filter(_.startsWith("batch_id=")).toSet
-      assert(dirs2 === Set("batch_id=-2"))
+      assert(store.epochDirs(spark).size === 1)
 
       // the stream keeps appending after compaction
-      input.addData(registerLines(5, "1", "2019-07-16 16:05:10"))
+      input.addData(registerLines(5, "1", "2019-07-16 16:30:10"))
       q.processAllAvailable()
       assert(totals("PC") === t0("PC") + 5)
     } finally q.stop()
+  }
+
+  test("dual-sink: a micro-batch runs at most 2 jobs and compiles no new code") {
+    implicit val sql = spark.sqlContext
+    val out = Files.createTempDirectory("graft_dual_jobs_").toString
+    val ckpt = Files.createTempDirectory("graft_dual_jobs_ckpt_").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan.toString + qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the query runs its batches in a clone of the session, which takes
+    // the listeners registered before it starts
+    spark.listenerManager.register(listener)
+    val input = MemoryStream[String]
+    val q = RegisterStream.dualSink(
+      RegisterStream.parse(input.toDF()), out, ckpt)
+    def batch(b: Int): Unit = {
+      input.addData(registerLines(20, "1", f"2019-07-16 16:0$b%d:10") ++
+        registerLines(10, "2", f"2019-07-16 16:0$b%d:40"))
+      q.processAllAvailable()
+    }
+    // listener events arrive asynchronously
+    def awaitPlans(): Unit = {
+      var waited = 0
+      while (plans.isEmpty && waited < 5000) { Thread.sleep(50); waited += 50 }
+    }
+    try {
+      // the first two batches compile the per-batch plan's code
+      batch(0)
+      batch(1)
+      awaitPlans()
+      plans.clear()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val jobs = queryJobsOf(q)(batch(2))
+      // the exchange's map stage and the write: no cache
+      // materialization, no second aggregate, no second write
+      assert(jobs.nonEmpty && jobs.size <= 2, s"jobs (id, tasks): $jobs")
+      // the batch id is in the write's directory, not a literal in its
+      // plan, so the third batch runs the second one's code
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+      awaitPlans()
+      assert(!plans.isEmpty)
+      plans.forEach(p => assert(!p.contains("InMemory"), p))
+      assert(RegisterStream.totalsView(spark, out).as[(String, Long)]
+        .collect().toMap === Map("PC" -> 60L, "APP" -> 30L))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      q.stop()
+    }
   }
 
   test("non-text stream source: the generic transport branch drives a " +

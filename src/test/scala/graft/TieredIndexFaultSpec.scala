@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal.MediaRecord
+import graft.sources.Models.QzEvent
 import graft.streaming._
 
 /** Fault injection over every streaming route that persists through
@@ -24,11 +26,13 @@ import graft.streaming._
   *  3. after a fold and a merge commit, before cleanup — superseded
   *     epochs and folded recent directories are still on disk.
   *
-  * The replayed trigger must sweep every leftover. A second table-
-  * driven case runs each real sink for 3 × compactEvery triggers and
-  * checks every store stays bounded: at most compactEvery recent batch
-  * directories and O(log n) live epochs. The last cases pin the
-  * rejection of the layouts older stores left behind. */
+  * The replayed trigger must sweep every leftover. The routes are the
+  * eight delta routes, J1's dual sink and J2's keyed upsert. A second
+  * table-driven case runs each real sink for 3 × compactEvery
+  * triggers and checks every store stays bounded: at most
+  * compactEvery recent batch directories and O(log n) live epochs.
+  * The last cases pin the rejection of the layouts older stores left
+  * behind. */
 class TieredIndexFaultSpec extends SparkTestBase {
   import spark.implicits._
   private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
@@ -71,6 +75,22 @@ class TieredIndexFaultSpec extends SparkTestBase {
 
   private def textDf(b: Int): DataFrame = textBatch(b).toDF("doc_id", "text")
 
+  // J1: register lines whose windows overlap the next batch's, over
+  // all three platforms
+  private def registerBatch(b: Int): Seq[String] = (0 until 6).map(i =>
+    s"${100 * b + i}\t${1 + (b + i) % 3}\t" +
+      f"2019-07-16 16:${b / 2}%02d:${(b % 2) * 30 + i * 4}%02d")
+  private def registerDf(b: Int): DataFrame =
+    RegisterStream.parse(registerBatch(b).toDF("value"))
+  // J2: full-state rows; keys 0..2 recur every third batch, and every
+  // batch adds one key of its own
+  private def keyedDf(b: Int): DataFrame =
+    Seq((b % 3, 10L * b), (b % 3 + 3, 10L * b + 1), (10 + b, 1L))
+      .toDF("uid", "v")
+  private def qzBatch(b: Int): Seq[QzEvent] = (0 until 6).map(i =>
+    QzEvent((b + i) % 4, 1, i % 2, s"${(b * 7 + i) % 30}", s"${i % 2}",
+      f"2019-09-12 10:$b%02d:$i%02d"))
+
   private def runText(n: Int)(start: DataFrame => StreamingQuery): Unit = {
     val in = MemoryStream[(Long, String)]
     val q = start(in.toDF().toDF("doc_id", "text"))
@@ -78,9 +98,9 @@ class TieredIndexFaultSpec extends SparkTestBase {
       in.addData(textBatch(b)); q.processAllAvailable()
     } finally q.stop()
   }
-  private def runMedia(n: Int, batch: Int => Seq[MediaRecord])(
-      start: Dataset[MediaRecord] => StreamingQuery): Unit = {
-    val in = MemoryStream[MediaRecord]
+  private def runStream[A: org.apache.spark.sql.Encoder](n: Int,
+      batch: Int => Seq[A])(start: Dataset[A] => StreamingQuery): Unit = {
+    val in = MemoryStream[A]
     val q = start(in.toDS())
     try (0 until n).foreach { b =>
       in.addData(batch(b)); q.processAllAvailable()
@@ -150,7 +170,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
       StreamMediaDedup.stores(_),
       out => Seq(StreamMediaDedup.pairsView(spark, out),
         StreamMediaDedup.featureIndexView(spark, out)),
-      (out, ckpt, n, ce) => runMedia(n, mediaBatch)(StreamMediaDedup.sink(_,
+      (out, ckpt, n, ce) => runStream(n, mediaBatch)(StreamMediaDedup.sink(_,
         out, ckpt, threshold = 0.999, nBuckets = 4, compactEvery = ce)),
       None),
     Route("StreamFrameOverlap",
@@ -159,7 +179,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
       StreamFrameOverlap.stores(_),
       out => Seq(StreamFrameOverlap.pairsView(spark, out),
         StreamFrameOverlap.frameIndexView(spark, out)),
-      (out, ckpt, n, ce) => runMedia(n, frameBatch)(StreamFrameOverlap.sink(
+      (out, ckpt, n, ce) => runStream(n, frameBatch)(StreamFrameOverlap.sink(
         _, out, ckpt, nBuckets = 4, compactEvery = ce)),
       None),
     Route("StreamCrossModal",
@@ -170,7 +190,27 @@ class TieredIndexFaultSpec extends SparkTestBase {
         StreamCrossModal.labelsView(spark, out)),
       (out, ckpt, n, ce) => runText(n)(StreamCrossModal.sink(_, out, ckpt,
         nBuckets = 4, compactEvery = ce)),
-      None))
+      None),
+    Route("RegisterStream",
+      (out, b) => RegisterStream.foldBatch(out, registerDf(b.toInt), b),
+      out => Seq(RegisterStream.store(out)),
+      out => Seq(RegisterStream.windowedView(spark, out),
+        RegisterStream.totalsView(spark, out)),
+      (out, ckpt, n, _) => runStream(n, registerBatch)(lines =>
+        RegisterStream.dualSink(RegisterStream.parse(lines.toDF()), out,
+          ckpt)),
+      Some(16)),
+    Route("KeyedUpsertSink",
+      (out, b) => {
+        val rows = keyedDf(b.toInt)
+        KeyedUpsertSink.upsert(
+          KeyedUpsertSink.open(spark, out, rows.schema, Seq("uid")), rows, b)
+      },
+      KeyedUpsertSink.stores(spark, _),
+      out => Seq(KeyedUpsertSink.read(spark, out)),
+      (out, ckpt, n, _) => runStream(n, qzBatch)(
+        QzMasteryStream.startDetailSink(_, out, ckpt)),
+      Some(16)))
 
   // ---- helpers ----------------------------------------------------
 
@@ -212,14 +252,16 @@ class TieredIndexFaultSpec extends SparkTestBase {
     "sweeps every leftover") {
     val nBatches = 5
     for (r <- routes) {
+      // the no-crash reference; the crash run starts from a copy of its
+      // first two triggers
       val ref = Files.createTempDirectory(s"fault-ref-${r.name}-").toString
-      (0 until nBatches).foreach(b => trigger(r, ref, b.toLong))
+      trigger(r, ref, 0L)
+      trigger(r, ref, 1L)
+      val out = Files.createTempDirectory(s"fault-${r.name}-").toString
+      FileUtils.copyDirectory(new java.io.File(ref), new java.io.File(out))
+      (2 until nBatches).foreach(b => trigger(r, ref, b.toLong))
       val want = r.views(ref).map(rowsOf)
       assert(want.exists(_.nonEmpty), s"${r.name}: fixture yields no rows")
-
-      val out = Files.createTempDirectory(s"fault-${r.name}-").toString
-      trigger(r, out, 0L)
-      trigger(r, out, 1L)
 
       // crash 2, during a fold: the epoch is written, its _SUCCESS is
       // not; Structured Streaming then replays the uncommitted trigger
@@ -306,5 +348,26 @@ class TieredIndexFaultSpec extends SparkTestBase {
       .write.partitionBy("batch_id").parquet(s"$out/pairs")
     val ckpt = Files.createTempDirectory("legacy-batchid-ckpt-").toString
     startFails(runText(1)(StreamNearDedup.sink(_, out, ckpt)))
+  }
+
+  test("a J1 output dir holding windowed/totals contribution stores (the " +
+    "old dual-sink layout) fails loudly at sink start and asks for a " +
+    "rebuild") {
+    val out = Files.createTempDirectory("legacy-dual-").toString
+    Seq(("PC", 1L, 0L)).toDF("platform", "n", "batch_id")
+      .write.partitionBy("batch_id").parquet(s"$out/totals")
+    val ckpt = Files.createTempDirectory("legacy-dual-ckpt-").toString
+    startFails(runStream(1, registerBatch)(lines => RegisterStream
+      .dualSink(RegisterStream.parse(lines.toDF()), out, ckpt)))
+  }
+
+  test("a J2 table holding bucket= children (the old swap-protocol " +
+    "layout) fails loudly at sink start and asks for a rebuild") {
+    val table = Files.createTempDirectory("legacy-swap-").toString + "/t"
+    Seq((1, 10L, 0)).toDF("uid", "v", "bucket")
+      .write.partitionBy("bucket").parquet(table)
+    val ckpt = Files.createTempDirectory("legacy-swap-ckpt-").toString
+    startFails(runStream(1, qzBatch)(
+      QzMasteryStream.startDetailSink(_, table, ckpt)))
   }
 }
