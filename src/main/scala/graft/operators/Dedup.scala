@@ -40,6 +40,86 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
       .select(col("keep_id"), col("n_dups"))
 
+  /** The posting-pair kernel of every key-banded pair family —
+    * SimHash chunks, MinHash bands, CDC chunk keys, media chunk keys and
+    * frame keys: the id pairs that share a key, over posting relations
+    * `(id, keys…, carried…)`. A batch route is `postingPairs(docs,
+    * None)`; a streaming increment is `postingPairs(batch,
+    * Some(corpus))` — the batch operator run on the new input against
+    * what came before, so the increments over any split of a corpus
+    * union to the batch route over the whole.
+    *
+    * Contract: each (pair, shared key) exactly ONCE, `doc_a < doc_b`,
+    * over the pairs touching the probe — probe×probe and probe×corpus,
+    * never corpus×corpus. The probe joins probe ∪ corpus, the corpus
+    * side tagged, keeping `b.corpus || a.id < b.id`: corpus-internal
+    * pairs cannot form and probe-internal pairs arrive in one order
+    * only, so no `distinct` is needed. Preconditions: each side is a
+    * set of postings, and ids are disjoint across the sides (every
+    * delta route's). `crossOnly` keeps the probe×corpus pairs only,
+    * probe id in `doc_a`. Output: `doc_a`, `doc_b`, the keys and each
+    * carried column as `<c>_a`/`<c>_b` (carried columns follow their id
+    * through the orientation).
+    *
+    * `maxPerKey` caps a key at that many postings over probe ∪ corpus —
+    * boilerplate is not duplication evidence, and a k-posting key would
+    * emit k² pairs. Corpus postings are first restricted to the probe's
+    * keys, so each count equals the union count for every key that can
+    * pair and the per-call shuffle is ∝ probe keys + matching postings,
+    * never the corpus; that restricted union is materialized once for
+    * its two readers (the count and the pair side). The cap is a
+    * map-side-combinable count +
+    * join-back, never a keyed window (a hot key would buffer all its
+    * postings in one task).
+    *
+    * `corpus = None` puts nothing of a corpus in the plan — no union,
+    * no tag, the predicate is `a.id < b.id`: the batch self-join. */
+  private[graft] def postingPairs(probe: DataFrame,
+      corpus: Option[DataFrame], id: String, keys: Seq[String],
+      carried: Seq[String] = Nil, maxPerKey: Option[Int] = None,
+      crossOnly: Boolean = false): DataFrame = {
+    require(corpus.isDefined || !crossOnly,
+      "postingPairs: crossOnly needs a corpus")
+    val cols = ((id +: keys) ++ carried).map(col)
+    val postings = corpus.fold(probe.select(cols: _*)) { c =>
+      val own = c.select(cols: _*)
+      val hits = if (maxPerKey.isEmpty) own
+        else own.join(probe.select(keys.map(col): _*).distinct(), keys)
+      val all = probe.select(cols :+ lit(false).as("_corpus"): _*)
+        .unionByName(hits.withColumn("_corpus", lit(true)))
+      if (maxPerKey.isDefined) Materialize.eager(all) else all
+    }
+    val capped = maxPerKey.fold(postings) { max =>
+      // _n >= 2 is pure pruning: a single-posting key pairs nothing
+      postings.join(postings.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("_n"))
+        .filter(col("_n") <= max && col("_n") >= 2)
+        .select(keys.map(col): _*), keys)
+    }
+    val (aId, bId) = (col(s"a.$id"), col(s"b.$id"))
+    val keep = corpus match {
+      case None => aId < bId
+      case Some(_) if crossOnly => col("b._corpus")
+      case Some(_) => col("b._corpus") || aId < bId
+    }
+    // only a corpus posting can hold the smaller id of a pair
+    val swap = if (corpus.isEmpty || crossOnly) None else Some(bId < aId)
+    def side(c: String, first: Boolean): Column = {
+      val (own, other) = if (first) ("a", "b") else ("b", "a")
+      swap.fold(col(s"$own.$c"))(
+        when(_, col(s"$other.$c")).otherwise(col(s"$own.$c")))
+    }
+    // with a corpus the probe side is the raw probe: a pair's key is
+    // both sides' key, so capping the b side caps the pair
+    corpus.fold(capped)(_ => probe.select(cols: _*)).as("a")
+      .join(capped.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && keep)
+      .select((Seq(side(id, true).as("doc_a"), side(id, false).as("doc_b")) ++
+        keys.map(k => col(s"a.$k").as(k)) ++
+        carried.flatMap(c => Seq(side(c, true).as(s"${c}_a"),
+          side(c, false).as(s"${c}_b")))): _*)
+  }
+
   /** Shared rebuild tail of the paragraph-dropping family: left-join
     * per-doc dropped-index sets onto the documents and re-split only
     * affected docs (untouched docs pass through byte-identical).
@@ -67,7 +147,8 @@ object Dedup {
     * repeats inside the same document, is removed and the document text
     * rebuilt from what remains. Paragraphs whose trimmed length is below
     * `minChars` (default 1 = whitespace-only) are structural, not
-    * content: always kept, never canonical.
+    * content: always kept, never canonical. This is
+    * [[dedupParagraphsDelta]] against an empty paragraph-hash index.
     *
     * Scale shape: paragraph TEXT never shuffles. Occurrences reduce to
     * (16-byte content hash, doc id, index) rows; the canonical pick is a
@@ -75,28 +156,53 @@ object Dedup {
     * hash (skew-safe for a boilerplate paragraph repeated 10⁹ times,
     * unlike a row_number window, which would sort the hot hash's whole
     * partition in one task); the drop decision joins occurrences back on
-    * the hash (AQE skew-join splits hot hashes). Only doc ids and
-    * DROPPED index lists — ∝ duplicates, not corpus — flow to the final
-    * left join, and documents with nothing dropped pass through with
-    * their original text untouched (no re-split, no re-concat). The
+    * the hash (AQE skew-join splits hot hashes) — only hashes occurring
+    * more than once, the only ones with anything to drop. Only doc ids
+    * and DROPPED index lists — ∝ duplicates, not corpus — flow to the
+    * final left join, and documents with nothing dropped pass through
+    * with their original text untouched (no re-split, no re-concat). The
     * rebuild for affected docs is one doc-local index-filtered re-split.
     *
     * Output: idCol, rebuilt `text`, `n_dropped`. */
   def dedupParagraphs(docs: DataFrame, delimiter: String = "\n",
       rejoin: String = "\n", minChars: Int = 1,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(minChars >= 0,
-      s"dedupParagraphs: minChars must be >= 0, got $minChars")
-    val parts = docs.select(col(idCol).as("_id"),
-      posexplode(split(col(textCol), delimiter)).as(Seq("_idx", "_para")))
-    val occ = parts
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    paragraphDedup(docs, None, delimiter, rejoin, minChars, idCol, textCol,
+      "dedupParagraphs")
+
+  /** `(_id, _idx, _h)`: each paragraph occurrence of at least
+    * `minChars` trimmed chars, with its index and content hash. */
+  private def paragraphOccurrences(docs: DataFrame, delimiter: String,
+      minChars: Int, idCol: String, textCol: String,
+      route: String): DataFrame = {
+    require(minChars >= 0, s"$route: minChars must be >= 0, got $minChars")
+    docs.select(col(idCol).as("_id"),
+        posexplode(split(col(textCol), delimiter)).as(Seq("_idx", "_para")))
       .filter(length(trim(col("_para"))) >= minChars)
       .select(col("_id"), col("_idx"), contentHash(col("_para")).as("_h"))
+  }
+
+  /** The one body of [[dedupParagraphs]] and [[dedupParagraphsDelta]]:
+    * per-hash canonical first occurrence and frequency over `docs` (a
+    * skew-safe min-struct hash aggregate), then, with an `index`, one
+    * left join to it. Indexed hashes drop ALL occurrences; the others
+    * drop every non-canonical one (df > 1). */
+  private def paragraphDedup(docs: DataFrame, index: Option[DataFrame],
+      delimiter: String, rejoin: String, minChars: Int, idCol: String,
+      textCol: String, route: String): DataFrame = {
+    val occ = paragraphOccurrences(docs, delimiter, minChars, idCol, textCol,
+      route)
     val canon = occ.groupBy(col("_h"))
       .agg(min(struct(col("_id").as("_cid"), col("_idx").as("_cidx")))
-        .as("_c"))
-    val dropped = occ.join(canon, Seq("_h"))
-      .filter(col("_id") =!= col("_c._cid") || col("_idx") =!= col("_c._cidx"))
+        .as("_c"), count(lit(1)).as("_df"))
+    val (meta, indexed) = index match {
+      case None => (canon, lit(false))
+      case Some(i) => (canon.join(i.select(col("h").as("_h"),
+        lit(true).as("_in")), Seq("_h"), "left"), col("_in").isNotNull)
+    }
+    val dropped = occ.join(meta.filter(indexed || col("_df") > 1), Seq("_h"))
+      .filter(indexed ||
+        col("_id") =!= col("_c._cid") || col("_idx") =!= col("_c._cidx"))
       .groupBy(col("_id")).agg(collect_set(col("_idx")).as("_drop"))
     rebuildDropped(docs, dropped, delimiter, rejoin, idCol, textCol)
   }
@@ -135,50 +241,10 @@ object Dedup {
   def dedupParagraphsDelta(delta: DataFrame, index: DataFrame,
       delimiter: String = "\n", rejoin: String = "\n",
       minChars: Int = 1, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(minChars >= 0,
-      s"dedupParagraphsDelta: minChars must be >= 0, got $minChars")
-    val parts = delta.select(col(idCol).as("_id"),
-      posexplode(split(col(textCol), delimiter)).as(Seq("_idx", "_para")))
-    val occ = parts
-      .filter(length(trim(col("_para"))) >= minChars)
-      .select(col("_id"), col("_idx"), contentHash(col("_para")).as("_h"))
-    // per-hash delta metadata (skew-safe min-struct hash agg), then one
-    // left join to the index: indexed hashes drop ALL delta
-    // occurrences; delta-only hashes drop non-canonical ones (df > 1)
-    val dCanon = occ.groupBy(col("_h"))
-      .agg(min(struct(col("_id").as("_cid"), col("_idx").as("_cidx")))
-        .as("_c"), count(lit(1)).as("_df"))
-    val idxH = index.select(col("h").as("_h"), lit(true).as("_in"))
-    val meta = dCanon.join(idxH, Seq("_h"), "left")
-      .filter(col("_in").isNotNull || col("_df") > 1)
-      .select(col("_h"), col("_c"), col("_in"))
-    val dropped = occ.join(meta, Seq("_h"))
-      .filter(col("_in").isNotNull ||
-        col("_id") =!= col("_c._cid") || col("_idx") =!= col("_c._cidx"))
-      .groupBy(col("_id")).agg(collect_set(col("_idx")).as("_drop"))
-    rebuildDropped(delta, dropped, delimiter, rejoin, idCol, textCol)
-  }
+      textCol: String = "text"): DataFrame =
+    paragraphDedup(delta, Some(index), delimiter, rejoin, minChars, idCol,
+      textCol, "dedupParagraphsDelta")
 
-  /** CROSS-document boilerplate removal (C4/RefinedWeb-style): drop
-    * every segment whose normalized (lower + trim) content occurs in at
-    * least `minDocs` DISTINCT documents — headers, footers, nav chrome,
-    * cookie banners, license blurbs. Complements [[dedupParagraphs]]:
-    * there a repeated paragraph keeps one canonical copy; here frequency
-    * across documents marks the content as template noise, so ALL
-    * occurrences are dropped. Segments whose trimmed length is below
-    * `minChars` are structural (blank separators) and always kept.
-    *
-    * Scale shape: the corpus shuffles only 16-byte content hashes — the
-    * frequency aggregate is a two-stage distinct-count on (hash, doc)
-    * then hash (both map-side combinable), and the boilerplate set it
-    * yields is tiny by construction (segments repeated across ≥ minDocs
-    * docs), so AQE broadcasts it into the occurrence join. Only doc ids
-    * and dropped index lists — ∝ affected docs, not corpus — reach the
-    * final left join; untouched documents pass through byte-identical
-    * (no re-split, no re-concat), as in [[dedupParagraphs]].
-    *
-    * Output: idCol, rebuilt `text`, `n_dropped`. */
   /** Content-defined chunking relation: one row per CDC chunk —
     * `(idCol, chunk_idx, start, len, fp)`, byte offsets, expected
     * chunk length ≈ 2^maskBits. The chunk pass is a pure codegen
@@ -247,14 +313,11 @@ object Dedup {
     * shifted/partial duplicates ([[cdcDupChunks]] names the content;
     * this names the document pairs).
     *
-    * Scale shape: per-doc chunk sets dedupe map-side, the pair join is
-    * a key-equality shuffle on (fp, len) — candidates ∝ duplicate
-    * mass, never all-pairs — and chunks present in more than
-    * `maxDocsPerChunk` documents are dropped BEFORE pairing (the
-    * [[removeBoilerplate]] rule: a boilerplate chunk in k docs would
-    * emit k² pairs; ubiquitous content is not duplication evidence).
-    * The cap is part of the declared semantics, mirrored by the
-    * oracle. */
+    * Scale shape: per-doc chunk sets dedupe map-side; the pairs are
+    * [[postingPairs]] over the [[cdcChunkIndex]] postings, with chunks
+    * in more than `maxDocsPerChunk` documents dropped BEFORE pairing
+    * (the [[removeBoilerplate]] rule) — a cap that is part of the
+    * declared semantics, mirrored by the oracle. */
   def cdcOverlapPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", w: Int = 16, maskBits: Int = 6,
       minLen: Int = 24, minSharedBytes: Int = 48,
@@ -266,30 +329,21 @@ object Dedup {
     // self-join sides): exchange reuse does not dedupe the branches,
     // so without it the chunk kernel would re-scan the corpus 3–4×
     // (the [[SpanDedup]] tokenBase discipline)
-    val perDoc = Materialize.eager(
-      cdcChunksBounded(docs, idCol, textCol, w, maskBits, minChunk, maxChunk)
-      .filter(col("len") >= minLen)
-      .select(col("fp"), col("len"), col(idCol).as("_doc"))
-      .distinct())
-    // cap via a map-side-combinable count + join-back — NEVER a
-    // (fp, len)-keyed window: a window buffers every occurrence of a
-    // hot boilerplate chunk in one unsplittable task (the failure
-    // [[SpanDedup]] was designed around); the aggregate collapses hot
-    // keys map-side and the surviving-key relation is tiny (∝ shared
-    // chunk keys in [2, cap] docs)
-    val survivors = perDoc.groupBy(col("fp"), col("len"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxDocsPerChunk && col("_n") >= 2)
-      .select(col("fp"), col("len"))
-    val keyed = perDoc.join(survivors, Seq("fp", "len"))
-    keyed.as("a").join(keyed.as("b"),
-        col("a.fp") === col("b.fp") && col("a.len") === col("b.len") &&
-          col("a._doc") < col("b._doc"))
-      .groupBy(col("a._doc").as("doc_a"), col("b._doc").as("doc_b"))
-      .agg(count(lit(1)).as("shared_chunks"),
-        sum(col("a.len").cast("long")).as("shared_bytes"))
-      .filter(col("shared_bytes") >= minSharedBytes)
+    val perDoc = Materialize.eager(cdcChunkIndex(docs, idCol, textCol, w,
+      maskBits, minLen, minChunk, maxChunk))
+    sharedChunks(postingPairs(perDoc, None, idCol, Seq("fp", "len"),
+      maxPerKey = Some(maxDocsPerChunk)), minSharedBytes)
   }
+
+  /** Per-pair CDC overlap from once-per-(pair, key) chunk pairs:
+    * `(doc_a, doc_b, shared_chunks, shared_bytes)` at ≥
+    * `minSharedBytes`. */
+  private def sharedChunks(pairs: DataFrame,
+      minSharedBytes: Int): DataFrame =
+    pairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("shared_chunks"),
+        sum(col("len").cast("long")).as("shared_bytes"))
+      .filter(col("shared_bytes") >= minSharedBytes)
 
   /** The persistable CDC chunk index of a corpus: DISTINCT
     * `(fp, len, idCol)` chunk keys at ≥ `minLen` bytes — what an
@@ -401,14 +455,10 @@ object Dedup {
 
   /** One micro-batch step of streaming CDC overlap
     * ([[graft.streaming.StreamCdc]]): all overlap pairs TOUCHING the
-    * batch — batch↔corpus and batch-internal — over already-computed
-    * distinct chunk-key relations (`(fp, len, idCol)`; the
-    * [[cdcChunkIndex]] shape for both sides). The probe side is the
-    * batch only, so corpus-internal pairs can never form (they were
-    * emitted when THEIR later member arrived — each pair exactly once);
-    * batch-internal pairs arrive in both join orders and are
-    * canonicalized by least/greatest + distinct (the
-    * [[minhashLshDeltaSigs]] discipline).
+    * batch — [[postingPairs]]`(batch, corpus)` over distinct chunk-key
+    * relations (`(fp, len, idCol)`, the [[cdcChunkIndex]] shape on both
+    * sides), so each pair is emitted exactly once, when its later
+    * member arrives.
     *
     * The boilerplate cap is measured over corpus ∪ batch — the
     * frequency as of THIS batch. Chunk frequencies only grow, so the
@@ -416,10 +466,6 @@ object Dedup {
     * final union: the stream never MISSES a pair the batch run keeps
     * (over-cap now ⇒ over-cap at the end), but may additionally emit
     * pairs whose chunk crossed the cap only after they were emitted.
-    *
-    * Scale shape: corpus postings are key-restricted to the batch's
-    * (fp, len) keys before any counting, so per-batch SHUFFLE is
-    * ∝ batch keys + matching corpus postings — never O(corpus index).
     * (The corpus-side SCAN is the caller's concern:
     * [[graft.streaming.StreamCdc]] partition-prunes it by fingerprint
     * bucket.) */
@@ -429,55 +475,36 @@ object Dedup {
     require(maxDocsPerChunk >= 2,
       s"cdcOverlapIncrement: maxDocsPerChunk must be >= 2, got " +
         s"$maxDocsPerChunk")
-    val cols = Seq(col("fp"), col("len"), col(idCol))
-    // delta-driven: corpus postings are restricted to the batch's
-    // (fp, len) keys BEFORE anything is counted — keys the batch does
-    // not touch can form no pair and need no frequency, so per-batch
-    // shuffle is ∝ batch keys + matching corpus postings, never
-    // O(corpus). Frequency over (batch ∪ matching postings) equals the
-    // documented corpus-∪-batch frequency for every key that can pair.
-    // Cap via agg + join-back, never a keyed window (hot boilerplate
-    // chunks would buffer in one task — the [[SpanDedup]] discipline).
-    val bKeys = batchKeys.select(cols: _*)
-    val corpusHits = corpusKeys.select(cols: _*)
-      .join(bKeys.select(col("fp"), col("len")).distinct(),
-        Seq("fp", "len"))
-    // materialized once for its three consumers (freq count + probe
-    // side + b side) — without it the corpus index read repeats
-    val all = Materialize.eager(bKeys.unionByName(corpusHits))
-    val survivors = all.groupBy(col("fp"), col("len"))
-      .agg(count(lit(1)).as("_n"))
-      // _n >= 2 is pure pruning: a single-posting key joins no pair
-      .filter(col("_n") <= maxDocsPerChunk && col("_n") >= 2)
-      .select(col("fp"), col("len"))
-    val capped = all.join(survivors, Seq("fp", "len"))
-    val probe = capped.join(
-      batchKeys.select(col(idCol)).distinct(), Seq(idCol))
-    probe.as("a").join(capped.as("b"),
-        col("a.fp") === col("b.fp") && col("a.len") === col("b.len") &&
-          col(s"a.$idCol") =!= col(s"b.$idCol"))
-      .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("doc_a"),
-        greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("doc_b"),
-        col("a.fp"), col("a.len"))
-      .distinct()
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared_chunks"),
-        sum(col("len").cast("long")).as("shared_bytes"))
-      .filter(col("shared_bytes") >= minSharedBytes)
+    sharedChunks(postingPairs(batchKeys, Some(corpusKeys), idCol,
+      Seq("fp", "len"), maxPerKey = Some(maxDocsPerChunk)), minSharedBytes)
   }
 
+  /** CROSS-document boilerplate removal (C4/RefinedWeb-style): drop
+    * every segment whose normalized (lower + trim) content occurs in at
+    * least `minDocs` DISTINCT documents — headers, footers, nav chrome,
+    * cookie banners, license blurbs. Complements [[dedupParagraphs]]:
+    * there a repeated paragraph keeps one canonical copy; here frequency
+    * across documents marks the content as template noise, so ALL
+    * occurrences are dropped. Segments whose trimmed length is below
+    * `minChars` are structural (blank separators) and always kept.
+    *
+    * Scale shape: the corpus shuffles only 16-byte content hashes — the
+    * frequency aggregate is a two-stage distinct-count on (hash, doc)
+    * then hash (both map-side combinable), and the boilerplate set it
+    * yields is tiny by construction (segments repeated across ≥ minDocs
+    * docs), so AQE broadcasts it into the occurrence join. Only doc ids
+    * and dropped index lists — ∝ affected docs, not corpus — reach the
+    * final left join; untouched documents pass through byte-identical
+    * (no re-split, no re-concat), as in [[dedupParagraphs]].
+    *
+    * Output: idCol, rebuilt `text`, `n_dropped`. */
   def removeBoilerplate(docs: DataFrame, minDocs: Int = 3,
       delimiter: String = "\n", rejoin: String = "\n", minChars: Int = 1,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(minDocs >= 2,
       s"removeBoilerplate: minDocs must be >= 2, got $minDocs")
-    require(minChars >= 0,
-      s"removeBoilerplate: minChars must be >= 0, got $minChars")
-    val parts = docs.select(col(idCol).as("_id"),
-      posexplode(split(col(textCol), delimiter)).as(Seq("_idx", "_para")))
-    val occ = parts
-      .filter(length(trim(col("_para"))) >= minChars)
-      .select(col("_id"), col("_idx"), contentHash(col("_para")).as("_h"))
+    val occ = paragraphOccurrences(docs, delimiter, minChars, idCol, textCol,
+      "removeBoilerplate")
     val boiler = occ.groupBy(col("_h"))
       .agg(countDistinct(col("_id")).as("_nd"))
       .filter(col("_nd") >= minDocs)
@@ -574,14 +601,12 @@ object Dedup {
     * `minShared` fingerprints are reported with their shared count.
     *
     * Scale shape: fingerprinting is one projection (≈ 2/(w+1) density —
-    * fingerprints ∝ text/w, not text); candidates come from a
-    * fingerprint-equality self-join, never all-pairs. Fingerprints
-    * present in more than `maxDf` documents are boilerplate and are
-    * dropped BEFORE the join (the inverted-index df-cap discipline) —
+    * fingerprints ∝ text/w, not text); candidates come from the
+    * fingerprint-equality [[postingPairs]] self-join, never all-pairs.
+    * Fingerprints present in more than `maxDf` documents are
+    * boilerplate and are dropped BEFORE the join (the kernel's cap) —
     * simultaneously a precision guard and the skew bound: one hot
-    * fingerprint contributes at most maxDf²/2 join rows. The df cap is
-    * computed with a map-side-combinable aggregate and joined back on
-    * the fingerprint key (AQE-skew-splittable), not a window.
+    * fingerprint contributes at most maxDf²/2 join rows.
     *
     * Output: `doc_a` < `doc_b`, `n_shared`. */
   def winnowOverlap(docs: DataFrame, k: Int = 8, w: Int = 8,
@@ -597,14 +622,7 @@ object Dedup {
         .select(col(idCol).as("_id"), col(textCol).as("_t")))
       .select(col("_id"),
         explode(ShingleExprs.winnowSet(col("_t"), k, w)).as("_fp"))
-    val dfCounts = fps.groupBy(col("_fp"))
-      .agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxDf)
-      .select(col("_fp"))
-    val capped = fps.join(dfCounts, Seq("_fp"))
-    capped.toDF("_fp", "doc_a")
-      .join(capped.toDF("_fp", "doc_b"), Seq("_fp"))
-      .filter(col("doc_a") < col("doc_b"))
+    postingPairs(fps, None, "_id", Seq("_fp"), maxPerKey = Some(maxDf))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -647,18 +665,12 @@ object Dedup {
         col("_hs"))
       .select(col("_id"), col("_fp"),
         array_position(col("_hs"), col("_fp")).cast("long").as("_pos"))
-    val dfCounts = fps.groupBy(col("_fp"))
-      .agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxDf)
-      .select(col("_fp"))
-    val capped = fps.join(dfCounts, Seq("_fp"))
-    capped.toDF("_fp", "doc_a", "_pa")
-      .join(capped.toDF("_fp", "doc_b", "_pb"), Seq("_fp"))
-      .filter(col("doc_a") < col("doc_b"))
+    postingPairs(fps, None, "_id", Seq("_fp"), carried = Seq("_pos"),
+        maxPerKey = Some(maxDf))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"),
-        min(col("_pa")).as("a_from"), max(col("_pa")).as("a_to"),
-        min(col("_pb")).as("b_from"), max(col("_pb")).as("b_to"))
+        min(col("_pos_a")).as("a_from"), max(col("_pos_a")).as("a_to"),
+        min(col("_pos_b")).as("b_from"), max(col("_pos_b")).as("b_to"))
       .filter(col("n_shared") >= minShared)
   }
 
@@ -669,14 +681,6 @@ object Dedup {
   val MinhashPerms = 64
   val Bands = 16
   private val RowsPerBand = MinhashPerms / Bands
-
-  /** (band, bandHash) pairs for a signature — the LSH bucketing key.
-    * xxhash64 (not 32-bit murmur3) keeps band-collision false positives
-    * at ~2⁻⁶⁴ per comparison, negligible at corpus scale. */
-  private def bandKeys(sig: Column): Column =
-    transform(sequence(lit(0), lit(Bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(slice(sig, b * RowsPerBand + 1, lit(RowsPerBand))).as("bh")))
 
   /** The full per-document dedup index relation — (id, sig, ng): minhash
     * signature for LSH banding plus the sorted distinct hashed-shingle set
@@ -694,11 +698,9 @@ object Dedup {
   /** Near-duplicate pairs via MinHash LSH, verified with shingle-set
     * Jaccard over hashed shingles. Flow: ONE shuffle-free projection
     * computes the signature (64 permutation mins) and the sorted distinct
-    * hashed-shingle set per doc → explode 16 band keys → self-join on
-    * (band, bandHash) → distinct candidate pairs → merge-intersect
-    * Jaccard verify from the same persisted relation. The self-join is a
-    * key-equality shuffle on the band hash; the corpus is never paired
-    * quadratically.
+    * hashed-shingle set per doc → 16 band keys → [[postingPairs]]
+    * self-join on (band, bandHash) → distinct candidate pairs →
+    * merge-intersect Jaccard verify from the same persisted relation.
     *
     * The per-doc relation is persisted: four join branches reference it
     * (two band sides, two verify sides) and Spark recomputes non-cached
@@ -720,42 +722,51 @@ object Dedup {
     val base = Materialize.eager(signatureTable(
       Parallelism.fanOutScan(docs.select(col(idCol), col(textCol))),
       shingleLen, idCol, textCol))
+    lshPairs(base, None, threshold)
+  }
 
-    val bands = base.select(col("id"), explode(bandKeys(col("sig"))).as("k"))
+  /** (id, sig, …) → (id, band, bh): the LSH band postings of
+    * [[signatureTable]] rows, one per band — the bucketing key is the
+    * band's xxhash64 (not 32-bit murmur3), which keeps band-collision
+    * false positives at ~2⁻⁶⁴ per comparison. */
+  private[graft] def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("id"), explode(transform(sequence(lit(0), lit(Bands - 1)),
+        b => struct(b.as("band"), xxhash64(slice(col("sig"),
+          b * RowsPerBand + 1, lit(RowsPerBand))).as("bh")))).as("k"))
       .select(col("id"), col("k.band").as("band"), col("k.bh").as("bh"))
 
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
+  /** The MinHash LSH pairs of [[signatureTable]] rows `sigs`, against
+    * `corpus` signature rows when given ([[postingPairs]] on the band
+    * keys): distinct candidate pairs, each verified once by the Jaccard
+    * merge over shingle sets joined back from `sigs` ∪ `corpus`. */
+  private def lshPairs(sigs: DataFrame, corpus: Option[DataFrame],
+      threshold: Double): DataFrame = {
+    def sets(s: DataFrame): DataFrame = s.select(col("id"), col("ng"))
+    val ng = corpus.fold(sets(sigs))(c => sets(sigs).unionByName(sets(c)))
+    val candidates = postingPairs(bandRows(sigs), corpus.map(bandRows), "id",
+        Seq("band", "bh"))
+      .select(col("doc_a"), col("doc_b"))
       .distinct()
-
-    val withSets = candidates
-      .join(base.select(col("id"), col("ng").as("ng_a")),
+    jaccardVerify(candidates
+      .join(ng.select(col("id"), col("ng").as("ng_a")),
         col("doc_a") === col("id")).drop("id")
-      .join(base.select(col("id"), col("ng").as("ng_b")),
-        col("doc_b") === col("id")).drop("id")
-
-    jaccardVerify(withSets, threshold)
+      .join(ng.select(col("id"), col("ng").as("ng_b")),
+        col("doc_b") === col("id")).drop("id"), threshold)
   }
 
   /** Incremental (delta) near-dedup: near-duplicate pairs TOUCHING a new
-    * batch — delta×corpus and delta×delta, never corpus×corpus — against a
-    * pre-built corpus index ([[signatureTable]], typically persisted as
-    * parquet and read back). Output contract is [[minhashLsh]] on
-    * (corpus ∪ delta) restricted to pairs with at least one delta doc;
-    * doc ids must be disjoint between the two inputs.
+    * batch against a pre-built corpus index ([[signatureTable]],
+    * typically persisted as parquet and read back) — [[minhashLsh]] on
+    * (corpus ∪ delta) restricted to pairs with at least one delta doc,
+    * the [[postingPairs]] increment on the band keys. Doc ids must be
+    * disjoint between the two inputs.
     *
-    * Scale shape — this is the "growing 100 TB corpus" path: the
+    * Scale shape — the "growing 100 TB corpus" path: the
     * shingle/minhash kernel runs over the DELTA only; the corpus side is
     * a column-pruned scan of its (id, sig) for banding plus (id, ng) for
-    * the candidates' verify join — its text is never re-read and nothing
-    * per-corpus-row is recomputed except 16 xxhash64 band keys from the
-    * already-materialized signature (a fixed-width projection). The band
-    * join is delta-driven: only corpus rows whose band key collides with
-    * a delta band key survive the join, so candidate volume scales with
-    * the delta and its match rate, not the corpus. */
+    * the candidates' verify join — its text is never re-read, and only
+    * 16 xxhash64 band keys per corpus row are recomputed from the
+    * persisted signature. */
   def minhashLshDelta(delta: DataFrame, corpusSigs: DataFrame,
       threshold: Double = 0.5, shingleLen: Int = 5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -771,33 +782,8 @@ object Dedup {
     * then persists the same per-batch relation. Persist `deltaSigs`
     * before calling: three join branches reference it. */
   def minhashLshDeltaSigs(deltaSigs: DataFrame, corpusSigs: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
-    val d = deltaSigs.select(col("id"), col("sig"), col("ng"))
-    val all = d.unionByName(
-      corpusSigs.select(col("id"), col("sig"), col("ng")))
-
-    def toBands(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"), explode(bandKeys(col("sig"))).as("k"))
-        .select(col("id"), col("k.band").as("band"), col("k.bh").as("bh"))
-
-    // delta on the probe side only: corpus-internal pairs can never form.
-    // Delta-delta pairs arrive in both orders; least/greatest + distinct
-    // canonicalizes them.
-    val candidates = toBands(d).as("x")
-      .join(toBands(all).as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.id") =!= col("y.id"))
-      .select(least(col("x.id"), col("y.id")).as("doc_a"),
-        greatest(col("x.id"), col("y.id")).as("doc_b"))
-      .distinct()
-
-    val withSets = candidates
-      .join(all.select(col("id"), col("ng").as("ng_a")),
-        col("doc_a") === col("id")).drop("id")
-      .join(all.select(col("id"), col("ng").as("ng_b")),
-        col("doc_b") === col("id")).drop("id")
-    jaccardVerify(withSets, threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    lshPairs(deltaSigs, Some(corpusSigs), threshold)
 
   /** Blocked n-gram Jaccard as a prefix-filtering set-similarity join
     * (SSJoin): within each block, candidate pairs must share a gram in
@@ -1679,8 +1665,9 @@ object Dedup {
     * chunk banding, then verified with bit_count(xor). Exact: the 64
     * fingerprint bits split into `nChunks` contiguous chunks, and by
     * pigeonhole `maxHamming < nChunks` differing bits cannot touch every
-    * chunk — at least one chunk is equal, so the chunk-equality self-join
-    * generates every qualifying pair (enforced by `require`).
+    * chunk — at least one chunk is equal, so the chunk-equality
+    * [[postingPairs]] self-join generates every qualifying pair
+    * (enforced by `require`).
     *
     * `nChunks` tunes bucket size vs candidate fan-out: expected bucket
     * population is I/2^(64/n) per chunk value, so larger corpora want
@@ -1690,33 +1677,24 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
       poly: Boolean = false, nChunks: Int = 4): DataFrame = {
-    require(nChunks >= 2 && nChunks <= 64,
-      s"simhashPairs: nChunks must be in [2,64], got $nChunks")
-    require(maxHamming >= 0 && maxHamming < nChunks,
-      s"simhashPairs: the pigeonhole guarantee needs maxHamming < nChunks" +
-        s" (got maxHamming=$maxHamming, nChunks=$nChunks) — raise nChunks")
-    // widths differ by at most 1 when 64 % nChunks != 0; offsets are the
-    // running sum, so the chunks exactly partition bits 0..63
-    val widths = Array.tabulate(nChunks)(c =>
-      64 / nChunks + (if (c < 64 % nChunks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val sh = simhash(docs, idCol, textCol, poly)
-    val chunks = toChunks(sh, nChunks)
+    val chunks = toChunks(simhash(docs, idCol, textCol, poly), nChunks,
+        maxHamming, "simhashPairs")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    chunks.as("x")
-      .join(chunks.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
-        expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    hammingPairs(chunks, None, maxHamming)
   }
 
   /** (id, simhash) → (id, simhash, chunk, ck): the pigeonhole band rows
     * of [[simhashPairs]], a fixed-width projection off the persisted
-    * fingerprint — the SimHash analog of [[bandKeys]]. */
-  private def toChunks(fps: DataFrame, nChunks: Int): DataFrame = {
+    * fingerprint — the SimHash analog of [[bandRows]]. Chunk widths
+    * differ by at most 1 when 64 % nChunks != 0; the offsets are their
+    * running sum, so the chunks exactly partition bits 0..63. */
+  private[graft] def toChunks(fps: DataFrame, nChunks: Int, maxHamming: Int,
+      route: String): DataFrame = {
+    require(nChunks >= 2 && nChunks <= 64,
+      s"$route: nChunks must be in [2,64], got $nChunks")
+    require(maxHamming >= 0 && maxHamming < nChunks,
+      s"$route: the pigeonhole guarantee needs maxHamming < nChunks" +
+        s" (got maxHamming=$maxHamming, nChunks=$nChunks) — raise nChunks")
     val widths = Array.tabulate(nChunks)(c =>
       64 / nChunks + (if (c < 64 % nChunks) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
@@ -1731,23 +1709,33 @@ object Dedup {
         col("k.ck").as("ck"))
   }
 
+  /** The Hamming-≤-`maxHamming` pairs of `chunks` (against `corpus`
+    * chunk rows when given): chunk-equality pairs from [[postingPairs]],
+    * the fingerprints carried through the join for the xor verify,
+    * one row per pair. */
+  private def hammingPairs(chunks: DataFrame, corpus: Option[DataFrame],
+      maxHamming: Int): DataFrame =
+    postingPairs(chunks, corpus, "id", Seq("chunk", "ck"),
+        carried = Seq("simhash"))
+      .select(col("doc_a"), col("doc_b"),
+        expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
+
   /** Incremental (delta) SimHash near-dedup: Hamming-≤-`maxHamming`
-    * pairs TOUCHING a new batch — delta×corpus and delta×delta, never
-    * corpus×corpus — against a pre-built corpus fingerprint index (the
-    * [[simhash]] relation `(id, simhash)`, typically persisted as
-    * parquet and read back). Output contract is [[simhashPairs]] on
-    * (corpus ∪ delta) restricted to pairs with at least one delta doc;
-    * doc ids must be disjoint between the two inputs.
+    * pairs TOUCHING a new batch against a pre-built corpus fingerprint
+    * index (the [[simhash]] relation `(id, simhash)`, typically
+    * persisted as parquet and read back) — [[simhashPairs]] on
+    * (corpus ∪ delta) restricted to pairs with at least one delta doc,
+    * the [[postingPairs]] increment on the chunk keys. Doc ids must be
+    * disjoint between the two inputs.
     *
     * Scale shape (mirrors [[minhashLshDelta]]): the text-hashing kernel
     * runs over the DELTA only; the corpus side is a column-pruned scan
     * of its persisted 16-byte (id, simhash) rows, from which the chunk
-    * band keys are a fixed-width projection — corpus text is never
-    * re-read. The chunk join is delta-driven, so candidate volume
-    * scales with the delta and its collision rate, not the corpus.
-    * Exactness is unchanged: the pigeonhole guarantee (`maxHamming <
-    * nChunks`) holds for any pair, so every qualifying delta-touching
-    * pair shares a chunk with the probing delta row. */
+    * keys are a fixed-width projection. Exactness is unchanged: the
+    * pigeonhole guarantee (`maxHamming < nChunks`) holds for any
+    * pair. */
   def simhashPairsDelta(delta: DataFrame, corpusFps: DataFrame,
       maxHamming: Int = 3, idCol: String = "doc_id",
       textCol: String = "text", poly: Boolean = false,
@@ -1763,24 +1751,8 @@ object Dedup {
     * branches reference it). */
   def simhashPairsDeltaFps(deltaFps: DataFrame, corpusFps: DataFrame,
       maxHamming: Int = 3, nChunks: Int = 4): DataFrame = {
-    require(nChunks >= 2 && nChunks <= 64,
-      s"simhashPairsDeltaFps: nChunks must be in [2,64], got $nChunks")
-    require(maxHamming >= 0 && maxHamming < nChunks,
-      s"simhashPairsDeltaFps: the pigeonhole guarantee needs maxHamming" +
-        s" < nChunks (got maxHamming=$maxHamming, nChunks=$nChunks)")
-    val d = deltaFps.select(col("id"), col("simhash"))
-    val all = d.unionByName(corpusFps.select(col("id"), col("simhash")))
-    // delta on the probe side only: corpus-internal pairs can never
-    // form; delta-delta pairs arrive in both orders — least/greatest +
-    // distinct canonicalizes (hamming is symmetric)
-    toChunks(d, nChunks).as("x")
-      .join(toChunks(all, nChunks).as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck") &&
-          col("x.id") =!= col("y.id"))
-      .select(least(col("x.id"), col("y.id")).as("doc_a"),
-        greatest(col("x.id"), col("y.id")).as("doc_b"),
-        expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    def chunks(fps: DataFrame): DataFrame =
+      toChunks(fps, nChunks, maxHamming, "simhashPairsDeltaFps")
+    hammingPairs(chunks(deltaFps), Some(chunks(corpusFps)), maxHamming)
   }
 }

@@ -174,37 +174,26 @@ object Multimodal {
     * the null cosine.
     *
     * Scale shape: decode is map-side on the scan partition and runs
-    * ONCE (the feature relation is [[Materialize]]d; payloads never
-    * shuffle — the key join moves only (id, chunk key) rows, the
-    * vectors ride no wider than the two final join-backs); candidate
-    * generation is a key-equality join on chunk keys — candidates ∝
+    * ONCE (the feature relation is [[Materialize]]d); candidates are
+    * [[Dedup.postingPairs]] on the vector-FREE chunk keys — ∝
     * duplicate mass, never corpus² (a single mean-luma band was
     * measured collapsing this corpus into a few hot bands → a 6M-pair
-    * quadratic verify, 9 s at sf0.1; 4-coordinate content keys collide
-    * only on near-identical features). Id pairs DEDUPE BEFORE the
-    * cosine: a pair sharing k ≤ 4 chunk keys verifies once, not k
-    * times — at 16 stub floats that is a micro-saving, but with a real
-    * perceptual embedding (512+ dims) one-verify-per-pair and a
-    * vector-free key shuffle are the difference between the join
-    * moving kilobytes or megabytes per candidate.
+    * quadratic verify, 9 s at sf0.1). Id pairs DEDUPE BEFORE the
+    * cosine ([[cosineVerify]]): with a real perceptual embedding (512+
+    * dims) one-verify-per-pair and a vector-free key shuffle are the
+    * difference between moving kilobytes or megabytes per candidate.
     * Output: (media_a, media_b, cosine). */
   def nearDupPairs(media: Dataset[MediaRecord], threshold: Double = 0.9,
       decoder: MediaDecoder = FakeDecoder): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"nearDupPairs: threshold must be in (0, 1], got $threshold")
     val feats = Materialize.eager(featureRelation(media, decoder))
-    val keys = explodeChunkKeys(feats)
-    keys.as("a").join(keys.as("b"),
-        keyEquality && col("a.id") < col("b.id"))
-      .select(col("a.id").as("media_a"), col("b.id").as("media_b"))
-      .distinct() // a pair may share up to 4 chunk keys — verify once
-      .join(feats.select(col("id").as("media_a"), col("v").as("_va")),
-        Seq("media_a"))
-      .join(feats.select(col("id").as("media_b"), col("v").as("_vb")),
-        Seq("media_b"))
-      .select(col("media_a"), col("media_b"),
-        round(Similarity.cosine(col("_va"), col("_vb")), 6).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    // a pair may share up to 4 chunk keys — verify once
+    val pairs = Dedup.postingPairs(explodeChunkKeys(feats), None, "id",
+        ChunkKeyCols)
+      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"))
+      .distinct()
+    cosineVerify(pairs, "media_a", "media_b", feats, feats, threshold)
   }
 
   /** The deduped feature relation behind the pair routes: one row per
@@ -215,37 +204,35 @@ object Multimodal {
         media.filter((m: MediaRecord) => m.payload.nonEmpty), decoder)
       .select(col("mediaId").as("id"), col("featureVec").as("v"))
 
-  /** The vector-FREE chunk-key relation the candidate join shuffles:
-    * one row per (id, chunk j) — `(id, j, k1..k4)`. */
-  private def explodeChunkKeys(feats: DataFrame): DataFrame =
-    feats.select(col("id"),
-        posexplode(array((0 until 4).map(j => struct(
-          (1 to 4).map(c =>
-            element_at(col("v"), 4 * j + c).as(s"k$c")): _*)): _*)))
-      .select(col("id"), col("pos").as("j"),
-        col("col.k1").as("k1"), col("col.k2").as("k2"),
-        col("col.k3").as("k3"), col("col.k4").as("k4"))
+  private val ChunkKeyCols = Seq("j", "k1", "k2", "k3", "k4")
 
-  /** The SELF-CONTAINED feature/chunk-key relation persisted as the
-    * index: one row per (media id, chunk j) — `(id, v, j, k1..k4)`.
-    * The vector rides along so the index alone can verify candidates
-    * (the delta probe joins on the key columns only and reads `v`
-    * back per surviving pair). */
-  private def chunkKeys(media: Dataset[MediaRecord],
-      decoder: MediaDecoder): DataFrame =
-    featureRelation(media, decoder)
-      .select(col("id"), col("v"),
-        posexplode(array((0 until 4).map(j => struct(
+  /** One row per (id, chunk j) — `(id, [v,] j, k1..k4)`. The candidate
+    * join shuffles the vector-FREE form; the persisted index carries
+    * `v` (`withVector`) so the index alone can verify candidates (the
+    * delta probe joins on the key columns only and reads `v` back per
+    * surviving pair). */
+  private def explodeChunkKeys(feats: DataFrame,
+      withVector: Boolean = false): DataFrame = {
+    val carry = col("id") +: (if (withVector) Seq(col("v")) else Nil)
+    feats.select(carry :+ posexplode(array((0 until 4).map(j => struct(
           (1 to 4).map(c =>
-            element_at(col("v"), 4 * j + c).as(s"k$c")): _*)): _*)))
-      .select(col("id"), col("v"), col("pos").as("j"),
+            element_at(col("v"), 4 * j + c).as(s"k$c")): _*)): _*)): _*)
+      .select(carry ++ Seq(col("pos").as("j"),
         col("col.k1").as("k1"), col("col.k2").as("k2"),
-        col("col.k3").as("k3"), col("col.k4").as("k4"))
+        col("col.k3").as("k3"), col("col.k4").as("k4")): _*)
+  }
 
-  private def keyEquality =
-    col("a.j") === col("b.j") && col("a.k1") === col("b.k1") &&
-      col("a.k2") === col("b.k2") && col("a.k3") === col("b.k3") &&
-      col("a.k4") === col("b.k4")
+  /** Exact cosine verify of distinct candidate pairs `(a, b)`: the
+    * vectors (`(id, v)` rows) join back per pair — one cosine per pair
+    * — and pairs at ≥ `threshold` are kept, as `(a, b, cosine)`. */
+  private def cosineVerify(pairs: DataFrame, a: String, b: String,
+      vecsA: DataFrame, vecsB: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .join(vecsA.select(col("id").as(a), col("v").as("_va")), Seq(a))
+      .join(vecsB.select(col("id").as(b), col("v").as("_vb")), Seq(b))
+      .select(col(a), col(b),
+        round(Similarity.cosine(col("_va"), col("_vb")), 6).as("cosine"))
+      .filter(col("cosine") >= threshold)
 
   /** The persistable media near-dup index: [[nearDupPairs]]'s
     * feature/chunk-key relation of the CORPUS — what an incremental
@@ -255,7 +242,8 @@ object Multimodal {
     * binary modality). Columns: `(media_id, v, j, k1..k4)`. */
   def nearDupIndex(media: Dataset[MediaRecord],
       decoder: MediaDecoder = FakeDecoder): DataFrame =
-    chunkKeys(media, decoder).withColumnRenamed("id", "media_id")
+    explodeChunkKeys(featureRelation(media, decoder), withVector = true)
+      .withColumnRenamed("id", "media_id")
 
   /** Incremental perceptual near-dedup: decode ONLY the delta batch
     * and probe a persisted [[nearDupIndex]] — cost ∝ |delta|, the
@@ -272,82 +260,46 @@ object Multimodal {
     require(threshold > 0 && threshold <= 1,
       s"nearDupDelta: threshold must be in (0, 1], got $threshold")
     val dfeats = Materialize.eager(featureRelation(delta, decoder))
-    // the candidate join moves only (id, chunk key) rows — vectors
-    // join back per DEDUPED surviving pair (one cosine per pair, the
-    // nearDupPairs discipline; the index's v column is read only on
-    // the pair side, key-restricted)
-    val dk = explodeChunkKeys(dfeats)
-    val ik = index.select(col("media_id").as("id"), col("j"),
-      col("k1"), col("k2"), col("k3"), col("k4"))
-    val pairs = dk.as("a").join(ik.as("b"), keyEquality)
-      .select(col("a.id").as("media_delta"),
-        col("b.id").as("media_corpus"))
+    val ik = index.select((col("media_id").as("id") +:
+      ChunkKeyCols.map(col)): _*)
+    val pairs = Dedup.postingPairs(explodeChunkKeys(dfeats), Some(ik), "id",
+        ChunkKeyCols, crossOnly = true)
+      .select(col("doc_a").as("media_delta"), col("doc_b").as("media_corpus"))
       .distinct()
-    val corpusV = index.select(col("media_id").as("media_corpus"),
-        col("v").as("_vb"))
-      .dropDuplicates("media_corpus")
-    pairs
-      .join(dfeats.select(col("id").as("media_delta"),
-        col("v").as("_va")), Seq("media_delta"))
-      .join(corpusV, Seq("media_corpus"))
-      .select(col("media_delta"), col("media_corpus"),
-        round(Similarity.cosine(col("_va"), col("_vb")), 6).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    // the index's v column is read only on the pair side
+    cosineVerify(pairs, "media_delta", "media_corpus", dfeats,
+      index.select(col("media_id").as("id"), col("v")).dropDuplicates("id"),
+      threshold)
   }
 
   /** One micro-batch step of streaming perceptual media dedup
     * ([[graft.streaming.StreamMediaDedup]]): all near-dup pairs
-    * TOUCHING the batch — batch↔corpus and batch-internal — over
-    * already-computed feature/chunk-key relations (the
-    * [[nearDupIndex]] schema `(media_id, v, j, k1..k4)` on both
-    * sides; the [[graft.operators.Dedup.cdcOverlapIncrement]] shape
-    * on the binary modality). The probe side is the batch only, so
-    * corpus-internal pairs can never form (they were emitted when
-    * THEIR later member arrived — each pair exactly once);
-    * batch-internal pairs arrive in both join orders and are
-    * canonicalized by least/greatest + distinct.
-    *
-    * Scale shape: corpus postings are key-restricted to the batch's
-    * chunk keys before anything else — per-batch shuffle ∝ batch keys
-    * + matching postings, never O(corpus index) (the corpus-side SCAN
-    * is the caller's concern: [[graft.streaming.StreamMediaDedup]]
-    * partition-prunes it by feature bucket). The candidate join moves
-    * vector-free (id, chunk key) rows; vectors join back per DEDUPED
-    * surviving pair — one cosine per pair (the [[nearDupPairs]]
-    * discipline). Output: `(media_a, media_b, cosine)`, media_a <
-    * media_b. Ids must be globally unique across batches. */
+    * TOUCHING the batch — [[Dedup.postingPairs]]`(batch, corpus)` over
+    * feature/chunk-key relations (the [[nearDupIndex]] schema
+    * `(media_id, v, j, k1..k4)` on both sides), so each pair is
+    * emitted exactly once, when its later member arrives. Corpus
+    * postings are key-restricted to the batch's chunk keys and
+    * materialized once — the kernel's probe and the vector join-back
+    * both read them — so per-batch shuffle is ∝ batch keys + matching
+    * postings (the corpus-side SCAN is the caller's concern:
+    * [[graft.streaming.StreamMediaDedup]] partition-prunes it by feature
+    * bucket). Output: `(media_a, media_b, cosine)`, media_a < media_b.
+    * Ids must be globally unique across batches. */
   def nearDupIncrement(batchKeys: DataFrame, corpusKeys: DataFrame,
       threshold: Double = 0.9): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"nearDupIncrement: threshold must be in (0, 1], got $threshold")
-    val cols = Seq("media_id", "v", "j", "k1", "k2", "k3", "k4").map(col)
-    val kcols = Seq("j", "k1", "k2", "k3", "k4")
+    val cols = col("media_id").as("id") +: col("v") +: ChunkKeyCols.map(col)
     val bk = batchKeys.select(cols: _*)
-    val corpusHits = corpusKeys.select(cols: _*)
-      .join(bk.select(kcols.map(col): _*).distinct(), kcols)
-      .select(cols: _*)
-    // materialized once for its three consumers (probe side, b side,
-    // vector join-back) — without it the corpus index read repeats
-    val all = Materialize.eager(bk.unionByName(corpusHits))
-    val keysOnly = all.select((col("media_id").as("id") +:
-      kcols.map(col)): _*)
-    val probe = keysOnly.join(
-      batchKeys.select(col("media_id").as("id")).distinct(), Seq("id"))
-    val pairs = probe.as("a").join(keysOnly.as("b"),
-        keyEquality && col("a.id") =!= col("b.id"))
-      .select(least(col("a.id"), col("b.id")).as("media_a"),
-        greatest(col("a.id"), col("b.id")).as("media_b"))
+    val hits = Materialize.eager(corpusKeys.select(cols: _*)
+      .join(bk.select(ChunkKeyCols.map(col): _*).distinct(), ChunkKeyCols))
+    val pairs = Dedup.postingPairs(bk, Some(hits), "id", ChunkKeyCols)
+      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"))
       .distinct()
-    val vrel = all.select(col("media_id"), col("v"))
-      .dropDuplicates("media_id")
-    pairs
-      .join(vrel.select(col("media_id").as("media_a"),
-        col("v").as("_va")), Seq("media_a"))
-      .join(vrel.select(col("media_id").as("media_b"),
-        col("v").as("_vb")), Seq("media_b"))
-      .select(col("media_a"), col("media_b"),
-        round(Similarity.cosine(col("_va"), col("_vb")), 6).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    val vecs = bk.select(col("id"), col("v"))
+      .unionByName(hits.select(col("id"), col("v")))
+      .dropDuplicates("id")
+    cosineVerify(pairs, "media_a", "media_b", vecs, vecs, threshold)
   }
 
   /** Sub-file (frame-level) media overlap: pairs of media sharing ≥
@@ -370,32 +322,30 @@ object Multimodal {
     *
     * Scale shape: frame decode is map-side fan-out (one iterator pass,
     * payloads never shuffle — only (id, feature-key) rows move);
-    * per-media frame keys dedupe map-side; the cap is the
-    * agg + join-back discipline (never a keyed window); the pair join
-    * is key-equality on the frame key — candidates ∝ shared-frame
-    * mass, never corpus². Output: (media_a, media_b, shared_frames). */
+    * per-media frame keys dedupe map-side; the pairs are
+    * [[Dedup.postingPairs]] on the frame key, capped — candidates ∝
+    * shared-frame mass, never corpus². Output: (media_a, media_b,
+    * shared_frames). */
   def frameOverlapPairs(media: Dataset[MediaRecord], stride: Int = 1,
       minSharedFrames: Int = 2, maxMediaPerFrame: Int = 64,
-      decoder: MediaDecoder = FakeDecoder): DataFrame = {
+      decoder: MediaDecoder = FakeDecoder): DataFrame =
+    sharedFrames("frameOverlapPairs", minSharedFrames, maxMediaPerFrame,
+        "media_a", "media_b") {
+      Dedup.postingPairs(Materialize.eager(frameIndex(media, stride,
+        decoder)), None, "media_id", Seq("fk"), maxPerKey = Some(maxMediaPerFrame))
+    }
+
+  /** Per-pair frame overlap `(a, b, shared_frames)` at ≥
+    * `minSharedFrames` from once-per-(pair, key) frame `pairs`, which
+    * are built only after the arguments are checked. */
+  private def sharedFrames(route: String, minSharedFrames: Int,
+      maxMediaPerFrame: Int, a: String, b: String)(
+      pairs: => DataFrame): DataFrame = {
     require(minSharedFrames >= 1,
-      s"frameOverlapPairs: minSharedFrames must be >= 1, got " +
-        s"$minSharedFrames")
+      s"$route: minSharedFrames must be >= 1, got $minSharedFrames")
     require(maxMediaPerFrame >= 2,
-      s"frameOverlapPairs: maxMediaPerFrame must be >= 2, got " +
-        s"$maxMediaPerFrame")
-    val fr = Materialize.eager(sampleFrames(
-        media.filter((m: MediaRecord) => m.payload.nonEmpty), stride,
-        decoder)
-      .select(col("mediaId").as("_id"), col("features").as("fk"))
-      .distinct())
-    val survivors = fr.groupBy(col("fk"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxMediaPerFrame && col("_n") >= 2)
-      .select(col("fk"))
-    val keyed = fr.join(survivors, Seq("fk"))
-    keyed.as("a").join(keyed.as("b"),
-        col("a.fk") === col("b.fk") && col("a._id") < col("b._id"))
-      .groupBy(col("a._id").as("media_a"), col("b._id").as("media_b"))
+      s"$route: maxMediaPerFrame must be >= 2, got $maxMediaPerFrame")
+    pairs.groupBy(col("doc_a").as(a), col("doc_b").as(b))
       .agg(count(lit(1)).as("shared_frames"))
       .filter(col("shared_frames") >= minSharedFrames)
   }
@@ -415,111 +365,48 @@ object Multimodal {
 
   /** Incremental frame-level overlap: decode ONLY the delta batch and
     * probe a persisted [[frameIndex]] — re-cut detection over a
-    * growing video corpus never re-decodes the corpus (the
-    * [[graft.operators.Dedup.cdcOverlapDelta]] discipline at frame
-    * granularity, closing the one dedup family member that had no
-    * incremental shape). Output `(media_delta, media_corpus,
-    * shared_frames)` — EQUAL to [[frameOverlapPairs]] over
-    * (corpus ∪ delta) restricted to cross pairs, with the delta id
-    * first (law-tested, the [[nearDupDelta]] recipe): the boilerplate
-    * cap counts each frame key's media over delta ∪ matching corpus
-    * postings, which equals the union frequency for every key that
-    * can form a cross pair. Media ids must be disjoint across the two
-    * sides, the same precondition as every delta route.
-    *
-    * Scale shape: corpus postings are key-restricted to the batch's
-    * frame keys BEFORE any counting (per-call shuffle ∝ delta frames
-    * + matching postings, never the index); the cap is the
-    * agg + join-back discipline — never a keyed window. */
+    * growing video corpus never re-decodes the corpus. Output
+    * `(media_delta, media_corpus, shared_frames)` — EQUAL to
+    * [[frameOverlapPairs]] over (corpus ∪ delta) restricted to cross
+    * pairs, with the delta id first (law-tested): the cross-only
+    * [[Dedup.postingPairs]] of the delta against the index, whose cap
+    * counts equal the union counts for every key that can pair. Media
+    * ids must be disjoint across the two sides. */
   def frameOverlapDelta(delta: Dataset[MediaRecord], index: DataFrame,
       stride: Int = 1, minSharedFrames: Int = 2,
       maxMediaPerFrame: Int = 64,
-      decoder: MediaDecoder = FakeDecoder): DataFrame = {
-    require(minSharedFrames >= 1,
-      s"frameOverlapDelta: minSharedFrames must be >= 1, got " +
-        s"$minSharedFrames")
-    require(maxMediaPerFrame >= 2,
-      s"frameOverlapDelta: maxMediaPerFrame must be >= 2, got " +
-        s"$maxMediaPerFrame")
-    // delta frames materialize once for their three consumers (index
-    // restriction + frequency + pair join); hits likewise (frequency
-    // + join-back)
-    val dk = Materialize.eager(frameIndex(delta, stride, decoder)
-      .withColumnRenamed("media_id", "media_delta"))
-    val hits = Materialize.eager(index
-      .select(col("fk"), col("media_id").as("media_corpus"))
-      .join(dk.select(col("fk")).distinct(), Seq("fk")))
-    val survivors = dk.select(col("fk"))
-      .unionByName(hits.select(col("fk")))
-      .groupBy(col("fk")).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxMediaPerFrame && col("_n") >= 2)
-      .select(col("fk"))
-    val capped = hits.join(survivors, Seq("fk"))
-    dk.join(capped, Seq("fk"))
-      .groupBy(col("media_delta"), col("media_corpus"))
-      .agg(count(lit(1)).as("shared_frames"))
-      .filter(col("shared_frames") >= minSharedFrames)
-  }
+      decoder: MediaDecoder = FakeDecoder): DataFrame =
+    sharedFrames("frameOverlapDelta", minSharedFrames, maxMediaPerFrame,
+        "media_delta", "media_corpus") {
+      Dedup.postingPairs(Materialize.eager(frameIndex(delta, stride,
+          decoder)), Some(index), "media_id", Seq("fk"),
+        maxPerKey = Some(maxMediaPerFrame), crossOnly = true)
+    }
 
   /** One micro-batch step of streaming frame-level overlap
     * ([[graft.streaming.StreamFrameOverlap]]): all overlap pairs
-    * TOUCHING the batch — batch↔corpus and batch-internal — over
-    * already-computed frame-posting relations (the [[frameIndex]]
-    * schema `(media_id, fk)` on both sides; the [[nearDupIncrement]]
-    * recipe at frame granularity). The probe side is the batch only,
-    * so corpus-internal pairs can never form; batch-internal pairs
-    * arrive in both join orders and are canonicalized by
-    * least/greatest + a per-(pair, key) distinct, so each shared key
-    * counts once — `shared_frames` matches [[frameOverlapPairs]]'s
-    * distinct-key count. Output `(media_a, media_b, shared_frames)`,
-    * media_a < media_b. Ids must be globally unique across batches.
+    * TOUCHING the batch — [[Dedup.postingPairs]]`(batch, corpus)` over
+    * [[frameIndex]]-schema `(media_id, fk)` relations, so each shared
+    * key counts once and `shared_frames` matches
+    * [[frameOverlapPairs]]'s distinct-key count. Output `(media_a,
+    * media_b, shared_frames)`, media_a < media_b.
     *
-    * The boilerplate cap counts each key over batch ∪ matching corpus
-    * postings — the union frequency AS OF this batch. A key can cross
+    * The cap counts each key as of THIS batch. A key can cross
     * `maxMediaPerFrame` in a LATER batch, after pairs sharing it were
     * already emitted; the deviation from the batch law is one-sided
     * (the stream may keep pairs / count keys a full recompute would
     * drop, never the reverse) — [[graft.streaming.StreamCdc]]'s
-    * cap-crossing contract, law-tested in StreamFrameOverlapSpec.
-    *
-    * Scale shape: corpus postings are key-restricted to the batch's
-    * frame keys before any counting (per-batch shuffle ∝ batch frames
-    * + matching postings, never the index — the corpus-side SCAN is
-    * the caller's concern: [[graft.streaming.StreamFrameOverlap]]
-    * partition-prunes it by key bucket); the cap is agg + join-back —
-    * never a keyed window. */
+    * cap-crossing contract, law-tested in StreamFrameOverlapSpec. (The
+    * corpus-side SCAN is the caller's concern:
+    * [[graft.streaming.StreamFrameOverlap]] partition-prunes it by key
+    * bucket.) */
   def frameOverlapIncrement(batchKeys: DataFrame, corpusKeys: DataFrame,
-      minSharedFrames: Int = 2, maxMediaPerFrame: Int = 64): DataFrame = {
-    require(minSharedFrames >= 1,
-      s"frameOverlapIncrement: minSharedFrames must be >= 1, got " +
-        s"$minSharedFrames")
-    require(maxMediaPerFrame >= 2,
-      s"frameOverlapIncrement: maxMediaPerFrame must be >= 2, got " +
-        s"$maxMediaPerFrame")
-    val bk = batchKeys.select(col("media_id"), col("fk"))
-    val hits = corpusKeys.select(col("media_id"), col("fk"))
-      .join(bk.select(col("fk")).distinct(), Seq("fk"))
-    // materialized once for its three consumers (frequency, probe
-    // side, pair side) — without it the corpus index read repeats
-    val all = Materialize.eager(bk.unionByName(hits))
-    val survivors = all.groupBy(col("fk"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxMediaPerFrame && col("_n") >= 2)
-      .select(col("fk"))
-    val capped = all.join(survivors, Seq("fk"))
-    val probe = capped.join(
-      bk.select(col("media_id")).distinct(), Seq("media_id"))
-    probe.as("a").join(capped.as("b"),
-        col("a.fk") === col("b.fk") &&
-          col("a.media_id") =!= col("b.media_id"))
-      .select(least(col("a.media_id"), col("b.media_id")).as("media_a"),
-        greatest(col("a.media_id"), col("b.media_id")).as("media_b"),
-        col("a.fk").as("fk"))
-      .distinct() // batch-internal pairs arrive in both orders
-      .groupBy(col("media_a"), col("media_b"))
-      .agg(count(lit(1)).as("shared_frames"))
-      .filter(col("shared_frames") >= minSharedFrames)
-  }
+      minSharedFrames: Int = 2, maxMediaPerFrame: Int = 64): DataFrame =
+    sharedFrames("frameOverlapIncrement", minSharedFrames,
+        maxMediaPerFrame, "media_a", "media_b") {
+      Dedup.postingPairs(batchKeys, Some(corpusKeys), "media_id", Seq("fk"),
+        maxPerKey = Some(maxMediaPerFrame))
+    }
 
   /** Cross-modal duplicate clusters: connected components over the
     * UNION of two edge modalities —
@@ -541,11 +428,8 @@ object Multimodal {
     * component = min doc_id reachable; singleton docs (no edge in
     * either modality) are omitted, the x55 convention.
     *
-    * Scale shape: text edges are one hash aggregate on the paragraph
-    * hash (map-side combinable, df-capped — boilerplate paragraphs
-    * drop before the join-back) plus one key-equality join-back —
-    * star edges (canonical → member), never the within-group
-    * quadratic; media edges are [[nearDupPairs]]'s chunk-key
+    * Scale shape: text edges are [[starEdges]] (df-capped —
+    * boilerplate paragraphs drop before the join-back); media edges are [[nearDupPairs]]'s chunk-key
     * candidates (∝ duplicate mass); components run on the edge union
     * (∝ edges, the x24 discipline — driver union-find under the
     * bounded-edges gate, label propagation beyond it). */
@@ -555,15 +439,8 @@ object Multimodal {
       decoder: MediaDecoder = FakeDecoder): DataFrame = {
     require(maxParaDf >= 2,
       s"crossModalComponents: maxParaDf must be >= 2, got $maxParaDf")
-    val paras = paragraphKeys(docs, delimiter, minParaLen)
-    val canon = paras.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("_c"), count(lit(1)).as("_df"))
-      .filter(col("_df") > 1 && col("_df") <= maxParaDf)
-      .select(col("h"), col("_c"))
-    val textEdges = paras.join(canon, Seq("h"))
-      .filter(col("doc_id") =!= col("_c"))
-      .select(col("_c").as("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
+    val textEdges = starEdges(paragraphKeys(docs, delimiter, minParaLen),
+      maxParaDf)
     val mediaEdges = nearDupPairs(docsAsMedia(docs), threshold, decoder)
       .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
     Graph.connectedComponents(textEdges.unionByName(mediaEdges))
@@ -620,8 +497,7 @@ object Multimodal {
     * paragraph hashes before any counting (per-batch shuffle ∝ batch
     * paragraphs + matching postings, never the index; the corpus-side
     * SCAN is the caller's concern — the sink partition-prunes it by
-    * hash bucket); the cap is agg + join-back, never a keyed
-    * window. */
+    * hash bucket), then [[starEdges]]. */
   def paragraphEdgeIncrement(batchKeys: DataFrame,
       corpusKeys: DataFrame, maxParaDf: Int = 16): DataFrame = {
     require(maxParaDf >= 2,
@@ -631,12 +507,19 @@ object Multimodal {
       .join(bk.select(col("h")).distinct(), Seq("h"))
     // materialized once for its two consumers (canonical/df aggregate
     // + edge join-back)
-    val all = Materialize.eager(bk.unionByName(hits))
-    val canon = all.groupBy(col("h"))
+    starEdges(Materialize.eager(bk.unionByName(hits)), maxParaDf)
+  }
+
+  /** The star edges (canonical = min doc_id → member) of every
+    * paragraph key held by 2..`maxParaDf` of the `(doc_id, h)`
+    * postings: one map-side-combinable hash aggregate plus one
+    * key-equality join-back, never the within-group quadratic. */
+  private def starEdges(postings: DataFrame, maxParaDf: Int): DataFrame = {
+    val canon = postings.groupBy(col("h"))
       .agg(min(col("doc_id")).as("_c"), count(lit(1)).as("_df"))
       .filter(col("_df") > 1 && col("_df") <= maxParaDf)
       .select(col("h"), col("_c"))
-    all.join(canon, Seq("h"))
+    postings.join(canon, Seq("h"))
       .filter(col("doc_id") =!= col("_c"))
       .select(col("_c").as("doc_a"), col("doc_id").as("doc_b"))
       .distinct()

@@ -17,10 +17,11 @@ import graft.operators.Dedup
   *     (the [[graft.operators.Dedup.cdcChunkIndex]] relation, computed
   *     on the batch);
   *  2. the batch probes the accumulated index UNION its own keys —
-  *     key-equality join on `(fp, len)`, candidates ∝ batch duplicate
-  *     mass, never index×index; batch-internal pairs canonicalize via
-  *     least/greatest, corpus-internal pairs cannot form
-  *     ([[graft.operators.Dedup.cdcOverlapIncrement]]);
+  *     the batch route's pair kernel
+  *     ([[graft.operators.Dedup.postingPairs]] via
+  *     [[graft.operators.Dedup.cdcOverlapIncrement]]) with the index as
+  *     its corpus: candidates ∝ batch duplicate mass, never
+  *     index×index;
   *  3. emitted pairs append to the one-bucket `outDir/pairs` store, the
   *     batch's chunk keys append to the chunk index — both
   *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
@@ -111,8 +112,6 @@ object StreamCdc {
       nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val (idx, pairs) = (index(outDir), pairStore(outDir))
-    idx.ensureNBuckets(spark, nBuckets)
-    pairs.ensureNBuckets(spark, 1)
     val keys = Dedup.cdcChunkIndex(batch, idCol, textCol, w,
         maskBits, minLen, minChunk, maxChunk)
       .withColumn("bucket",
@@ -154,6 +153,8 @@ object StreamCdc {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamCdc: nBuckets must be >= 1, got $nBuckets")
+    index(outDir).ensureNBuckets(docs.sparkSession, nBuckets)
+    pairStore(outDir).ensureNBuckets(docs.sparkSession, 1)
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamCdc", stores(outDir),
         compactEvery)(foldBatch(outDir, _, _, w, maskBits, minLen,

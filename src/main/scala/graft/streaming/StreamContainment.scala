@@ -69,7 +69,6 @@ object StreamContainment {
     val spark = batch.sparkSession
     val (cindex, gramDf, pairs) =
       (indexStore(dir), gramStore(dir), pairStore(dir))
-    Seq(cindex, gramDf, pairs).foreach(_.ensureNBuckets(spark, 1))
     val corpusDf = gramDfBelow(spark, dir, batchId)
     val index = Dedup.JaccardIndex(
       cindex.corpusKeys(spark, batchId, None), corpusDf, threshold, n)
@@ -90,12 +89,15 @@ object StreamContainment {
   /** `foreachBatch` adapter; after folding batch N it runs each
     * store's [[TieredIndex.maintain]] (folds every `compactEvery`
     * committed batches) — safe inside the serialized callback, the
-    * [[StreamCorpusLoop.sink]] contract. */
+    * [[StreamCorpusLoop.sink]] contract, which also checks the stores'
+    * layout once, here. */
   def sink(dir: String, threshold: Double = 0.9, n: Int = 12,
       idCol: String = "doc_id", textCol: String = "text",
-      compactEvery: Int = 16): (DataFrame, Long) => Unit =
+      compactEvery: Int = 16): (DataFrame, Long) => Unit = {
+    stores(dir).foreach(_.ensureNBuckets(SparkSession.active, 1))
     TieredIndex.trigger[Row]("StreamContainment", stores(dir),
       compactEvery)(foldBatch(dir, _, _, threshold, n, idCol, textCol))
+  }
 
   /** Every containment pair emitted so far (the union of committed
     * per-batch outputs) — over a closed corpus, equal to batch

@@ -61,7 +61,6 @@ object StreamCorpusLoop {
     val spark = batch.sparkSession
     val (hash, fps, accepted) =
       (hashStore(dir), fpStore(dir), acceptedStore(dir, idCol))
-    Seq(hash, fps, accepted).foreach(_.ensureNBuckets(spark, 1))
     val b = batch.select(col(idCol), col(textCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -97,12 +96,16 @@ object StreamCorpusLoop {
     * runs each store's [[TieredIndex.maintain]]: once `compactEvery`
     * committed batch dirs accumulate they fold into a base epoch, so
     * a forever-running loop keeps O(compactEvery) recent dirs and
-    * O(log n) epochs per store without any external maintenance job. */
+    * O(log n) epochs per store without any external maintenance job.
+    * The stores' layout is checked once, here, in the active session
+    * ([[TieredIndex.ensureNBuckets]]). */
   def sink(dir: String, idCol: String = "doc_id",
       textCol: String = "text",
-      maxHamming: Int = 3, compactEvery: Int = 16): (DataFrame, Long) => Unit =
+      maxHamming: Int = 3, compactEvery: Int = 16): (DataFrame, Long) => Unit = {
+    stores(dir, idCol).foreach(_.ensureNBuckets(SparkSession.active, 1))
     TieredIndex.trigger[Row]("StreamCorpusLoop", stores(dir, idCol),
       compactEvery)(foldBatch(dir, _, _, idCol, textCol, maxHamming))
+  }
 
   /** Accepted (first-arrival unique-content) doc ids across every
     * complete batch. */

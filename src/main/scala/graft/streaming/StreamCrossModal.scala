@@ -64,9 +64,6 @@ object StreamCrossModal {
     val spark = batch.sparkSession
     val (tIdx, mIdx, pairs) =
       (textIndex(outDir), mediaIndex(outDir), pairStore(outDir))
-    tIdx.ensureNBuckets(spark, nBuckets)
-    mIdx.ensureNBuckets(spark, nBuckets)
-    pairs.ensureNBuckets(spark, 1)
     val paras = Multimodal
       .paragraphKeys(batch, delimiter, minParaLen)
       .withColumn("bucket",
@@ -113,6 +110,9 @@ object StreamCrossModal {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamCrossModal: nBuckets must be >= 1, got $nBuckets")
+    Seq(textIndex(outDir), mediaIndex(outDir))
+      .foreach(_.ensureNBuckets(docs.sparkSession, nBuckets))
+    pairStore(outDir).ensureNBuckets(docs.sparkSession, 1)
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamCrossModal",
         stores(outDir), compactEvery)(foldBatch(outDir, _, _, delimiter,

@@ -18,10 +18,10 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     ([[Multimodal.frameIndex]]'s schema `(media_id, fk)`) —
   *     payloads never shuffle, never persist;
   *  2. probe the accumulated posting index UNION the batch's own
-  *     postings ([[Multimodal.frameOverlapIncrement]]): key-equality
-  *     candidates, boilerplate cap over the union frequency as of
-  *     this batch, each pair emitted exactly once when its later
-  *     member arrives (corpus-internal pairs cannot form);
+  *     postings ([[Multimodal.frameOverlapIncrement]], the batch
+  *     route's pair kernel with the index as its corpus): boilerplate
+  *     cap over the union frequency as of this batch, each pair
+  *     emitted exactly once when its later member arrives;
   *  3. pairs append to the one-bucket `outDir/pairs` store, the
   *     batch's postings append to the index — both [[TieredIndex]]
   *     stores, so a replayed batch overwrites exactly its own
@@ -74,8 +74,6 @@ object StreamFrameOverlap {
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val (idx, pairs) = (index(outDir), pairStore(outDir))
-    idx.ensureNBuckets(spark, nBuckets)
-    pairs.ensureNBuckets(spark, 1)
     // decode once; only fixed-width (media_id, fk) postings persist
     val keys = Multimodal.frameIndex(batch, stride, decoder)
       .withColumn("bucket",
@@ -106,6 +104,8 @@ object StreamFrameOverlap {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(nBuckets >= 1,
       s"StreamFrameOverlap: nBuckets must be >= 1, got $nBuckets")
+    index(outDir).ensureNBuckets(media.sparkSession, nBuckets)
+    pairStore(outDir).ensureNBuckets(media.sparkSession, 1)
     media.writeStream
       .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamFrameOverlap",
         stores(outDir), compactEvery)(foldBatch(outDir, _, _, stride,

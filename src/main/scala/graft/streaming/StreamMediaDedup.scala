@@ -19,10 +19,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     j, k1..k4)`) — payloads never shuffle, never persist;
   *  2. probe the accumulated feature index UNION the batch's own keys
   *     ([[Multimodal.nearDupIncrement]]): key-equality candidates,
-  *     vector-free shuffle, one cosine per deduped pair;
-  *     batch-internal pairs canonicalize, corpus-internal pairs
-  *     cannot form — each pair emitted exactly once, when its later
-  *     member arrives;
+  *     vector-free shuffle, one cosine per deduped pair — the batch
+  *     route's pair kernel with the index as its corpus, so each pair
+  *     is emitted exactly once, when its later member arrives;
   *  3. pairs append to the one-bucket `outDir/pairs` store, the
   *     batch's keys append to the feature index — both
   *     [[TieredIndex]] stores, so a replayed batch overwrites exactly
@@ -74,8 +73,6 @@ object StreamMediaDedup {
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val (idx, pairs) = (index(outDir), pairStore(outDir))
-    idx.ensureNBuckets(spark, nBuckets)
-    pairs.ensureNBuckets(spark, 1)
     // decode once; only fixed-width feature rows persist
     val keys = Multimodal.nearDupIndex(batch, decoder)
       .withColumn("bucket",
@@ -109,6 +106,8 @@ object StreamMediaDedup {
       s"StreamMediaDedup: nBuckets must be >= 1, got $nBuckets")
     require(threshold > 0 && threshold <= 1,
       s"StreamMediaDedup: threshold must be in (0, 1], got $threshold")
+    index(outDir).ensureNBuckets(media.sparkSession, nBuckets)
+    pairStore(outDir).ensureNBuckets(media.sparkSession, 1)
     media.writeStream
       .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamMediaDedup",
         stores(outDir), compactEvery)(

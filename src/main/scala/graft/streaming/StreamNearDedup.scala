@@ -60,7 +60,6 @@ object StreamNearDedup {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
     val (sigs, pairs) = (sigStore(outDir), pairStore(outDir))
-    Seq(sigs, pairs).foreach(_.ensureNBuckets(spark, 1))
     val d = Dedup.signatureTable(batch, shingleLen, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -77,13 +76,15 @@ object StreamNearDedup {
   def sink(docs: DataFrame, outDir: String, checkpoint: String,
       threshold: Double = 0.5, shingleLen: Int = 5,
       idCol: String = "doc_id", textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    stores(outDir).foreach(_.ensureNBuckets(docs.sparkSession, 1))
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamNearDedup",
         stores(outDir), compactEvery = 16)(
         foldBatch(outDir, _, _, threshold, shingleLen, idCol, textCol)))
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** All verified near-dup pairs seen so far — equal to batch
     * `minhashLsh` over the union of committed batches. Empty (with the

@@ -55,7 +55,6 @@ object StreamSpanDedup {
       textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
     val (fps, cleanOut) = (fpStore(outDir), cleanStore(outDir))
-    Seq(fps, cleanOut).foreach(_.ensureNBuckets(spark, 1))
     val b = batch.persist()
     try {
       val older = fps.corpusKeys(spark, batchId, None)
@@ -88,13 +87,15 @@ object StreamSpanDedup {
   def sink(docs: DataFrame, outDir: String, checkpoint: String,
       windowTokens: Int = 50, idCol: String = "doc_id",
       textCol: String = "text")
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    stores(outDir).foreach(_.ensureNBuckets(docs.sparkSession, 1))
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamSpanDedup",
         stores(outDir), compactEvery = 16)(
         foldBatch(outDir, _, _, windowTokens, idCol, textCol)))
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** The deduped corpus so far: every ingested doc with its rewritten
     * text — equal to batch `excise` over the committed batches in

@@ -316,6 +316,20 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("key-banded pair families: each batch route is the posting-pair " +
+    "kernel against no corpus, which plans as the plain self-join — no " +
+    "Union, and the exchange count of the hand-written join it replaced") {
+    // the exchange counts these queries planned before the kernel
+    for ((name, exchanges) <- Seq("x2_dedup_minhash" -> 4,
+        "x3_dedup_simhash" -> 2, "x155_cdc_overlap" -> 6,
+        "x162_media_near_dedup" -> 4, "x164_media_frame_overlap" -> 7)) {
+      val p = plan(name)
+      assert(!p.contains("Union"), s"$name:\n$p")
+      assert(p.linesIterator.count(_.contains("Exchange")) === exchanges,
+        s"$name:\n$p")
+    }
+  }
+
   test("x151 rp distortion: the audit sample broadcasts (no shuffled " +
     "self-join), and the id filter reaches the parquet scan") {
     val p = plan("x151_rp_distortion")
