@@ -21,9 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * token-table shuffles to zero.
   *
   * The dictionary is bounded by the gram universe (≤ charset^n for
-  * character n-grams), which is what makes broadcasting it sound; for
-  * unbounded universes (word n-grams over many blocks) callers fall back
-  * to the window plan (see `Dedup.ngramJaccardBlocked(localPrefixRank)`).
+  * character n-grams), which is what makes broadcasting it sound; every
+  * caller ranks character n-grams, so none keeps a window plan.
   */
 object PrefixOps {
 

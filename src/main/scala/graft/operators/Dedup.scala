@@ -815,17 +815,13 @@ object Dedup {
     * bounded by `allPairsMaxDocs²/2` merges; at corpus scale every real
     * block exceeds the bound and routes to the prefix join.
     *
-    * Prefix ranking is doc-local by default (`localPrefixRank = true`):
-    * the per-block gram→df dictionary — bounded by the gram universe,
-    * ≤ charset^n for character n-grams — is aggregated once, broadcast,
-    * and each document ranks its own grams against it in a kernel
+    * Prefix ranking is doc-local: the per-block gram→df dictionary —
+    * bounded by the gram universe, ≤ charset^n for character n-grams —
+    * is aggregated once, broadcast, and each document ranks its own
+    * grams against it in a kernel
     * ([[graft.functions.RankedPrefixGrams]]). The only token-table-wide
-    * stage left is the map-side-combined df count; the df join and the
-    * per-doc `row_number` window (a shuffle + sort of the full token
-    * stream each) are gone. For an unbounded gram universe (word
-    * n-grams over many blocks, where the dictionary cannot broadcast)
-    * set `localPrefixRank = false` to keep the window plan — same
-    * output, unbounded-safe.
+    * stage is the map-side-combined df count; there is no df join and
+    * no per-doc `row_number` window over the token stream.
     *
     * ACCEPTED-BY-DESIGN scaling step (the standing x4 sf1 α-flag):
     * when the per-block df dictionary outgrows
@@ -839,9 +835,8 @@ object Dedup {
     * what AQE measures exactly at runtime — rejected. */
   def ngramJaccardBlocked(docs: DataFrame, blockCol: String,
       threshold: Double = 0.5, n: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text", localPrefixRank: Boolean = true,
+      textCol: String = "text",
       allPairsMaxDocs: Int = 2048): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = Parallelism.fanOutScan(docs
         .select(col(idCol).as("id"), col(blockCol).as("blk"),
           col(textCol).as("_t")))
@@ -897,36 +892,23 @@ object Dedup {
     // grams before the shuffle.
     val gramDf = gs.select(col("blk"), explode(col("ng")).as("gram"))
       .groupBy(col("blk"), col("gram")).agg(count(lit(1)).as("df"))
-    val ranked = if (localPrefixRank) {
-      // dictionary per block: grams ascending, dfs aligned. Broadcast is
-      // the contract of this path (dictionary ≤ gram universe); the
-      // join attaches each block's dictionary row to its documents with
-      // zero shuffle, and the kernel emits prefix grams already in rank
-      // order — posexplode's position IS the rank.
-      val dict = gramDf.groupBy(col("blk"))
-        .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
-          .as("gd"))
-        .select(col("blk"),
-          transform(col("gd"), x => x.getField("gram")).as("dict_grams"),
-          transform(col("gd"), x => x.getField("df")).as("dict_dfs"))
-      gs.join(broadcast(dict), Seq("blk"))
-        .select(col("id"), col("blk"), col("sz"),
-          posexplode(PrefixExprs.rankedPrefixGrams(
-            col("ng"), col("dict_grams"), col("dict_dfs"), tLow)))
-        .select(col("id"), col("blk"), col("col").as("gram"), col("sz"),
-          (col("pos") + 1).as("rn"))
-    } else {
-      // unbounded-universe fallback: df joined onto the exploded token
-      // stream, ranked by a per-doc window (shuffle + sort of the token
-      // table — the price of not broadcasting the dictionary)
-      val toks = gs.select(col("id"), col("blk"), col("sz"),
-        explode(col("ng")).as("gram"))
-      val wRank = Window.partitionBy(col("id")).orderBy(col("df"), col("gram"))
-      toks.join(gramDf, Seq("blk", "gram"))
-        .withColumn("rn", row_number().over(wRank))
-        .filter(col("rn") <= prefLen(tLow))
-        .select(col("id"), col("blk"), col("gram"), col("sz"), col("rn"))
-    }
+    // dictionary per block: grams ascending, dfs aligned. Broadcast is
+    // the contract of this path (dictionary ≤ gram universe); the join
+    // attaches each block's dictionary row to its documents with zero
+    // shuffle, and the kernel emits prefix grams already in rank order
+    // — posexplode's position IS the rank.
+    val dict = gramDf.groupBy(col("blk"))
+      .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
+        .as("gd"))
+      .select(col("blk"),
+        transform(col("gd"), x => x.getField("gram")).as("dict_grams"),
+        transform(col("gd"), x => x.getField("df")).as("dict_dfs"))
+    val ranked = gs.join(broadcast(dict), Seq("blk"))
+      .select(col("id"), col("blk"), col("sz"),
+        posexplode(PrefixExprs.rankedPrefixGrams(
+          col("ng"), col("dict_grams"), col("dict_dfs"), tLow)))
+      .select(col("id"), col("blk"), col("col").as("gram"), col("sz"),
+        (col("pos") + 1).as("rn"))
     // per-row join-condition ingredients, precomputed ONCE per prefix row
     // instead of per probed pair: the join condition below runs on every
     // per-gram pair the hash join probes (an order of magnitude more
@@ -1048,19 +1030,11 @@ object Dedup {
     * few prefixes); hot-gram index partitions are AQE-skew-splittable.
     * Self-containment (a = b) is excluded; docs shorter than `n` chars
     * have no gram set and never pair.
-    *
-    * `localPrefixRank = true` (default) broadcasts the (gram, df)
-    * dictionary as one row — the contract is a bounded gram universe
-    * (char n-grams: ≤ charset^n). For an UNBOUNDED universe (word
-    * n-grams, corpora whose distinct-gram count tracks corpus size)
-    * set it false: the probe prefix ranks via a df join + per-doc
-    * window over the exploded gram stream instead — the same
-    * [[ngramJaccardBlocked]] fallback, no broadcast cliff, identical
-    * output (containment's prefix filter is one-sided, so ANY
-    * |A| − ⌈t·|A|⌉ + 1 grams of A are a lossless probe set). */
+    * The one-row (gram, df) dictionary broadcast is the contract of a
+    * bounded gram universe (char n-grams: ≤ charset^n). */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
       n: Int = 8, idCol: String = "doc_id",
-      textCol: String = "text", localPrefixRank: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containmentPairs: threshold must be in (0,1], got $threshold")
     val spark = docs.sparkSession
@@ -1090,33 +1064,13 @@ object Dedup {
       else g0.localCheckpoint(eager = true)
     val gramDf = g.select(explode(col("ng")).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val probe = if (localPrefixRank) {
-      // bounded-gram-universe route: the global (gram, df) dictionary
-      // aggregates into ONE broadcast row and each doc ranks its own
-      // grams in the kernel — zero shuffle beyond the df count
-      g.crossJoin(broadcast(jaccardDictRow(gramDf)))
-        .select(col("id").as("_a"), col("sz").as("_sa"),
-          explode(PrefixExprs.rankedPrefixGrams(col("ng"),
-            col("dict_grams"), col("dict_dfs"), tLow)).as("gram"))
-    } else {
-      // unbounded-universe fallback (the ngramJaccardBlocked
-      // localPrefixRank=false discipline): df joined onto the exploded
-      // gram stream, rare-first rank via a per-doc window — a shuffle
-      // + sort of the gram table instead of a dictionary broadcast
-      // that would not fit. Containment's prefix theorem is one-sided
-      // (any |A| − ⌈t·|A|⌉ + 1 grams of A are a lossless probe set),
-      // so the two routes are interchangeable in output.
-      import org.apache.spark.sql.expressions.Window
-      val wRank = Window.partitionBy(col("_a"))
-        .orderBy(col("df"), col("gram"))
-      g.select(col("id").as("_a"), col("sz").as("_sa"),
-          explode(col("ng")).as("gram"))
-        .join(gramDf, Seq("gram"))
-        .withColumn("_rn", row_number().over(wRank))
-        .filter(col("_rn") <=
-          col("_sa") - ceil(lit(tLow) * col("_sa")) + 1)
-        .select(col("_a"), col("_sa"), col("gram"))
-    }
+    // the global (gram, df) dictionary aggregates into ONE broadcast
+    // row and each doc ranks its own grams in the kernel — zero
+    // shuffle beyond the df count
+    val probe = g.crossJoin(broadcast(jaccardDictRow(gramDf)))
+      .select(col("id").as("_a"), col("sz").as("_sa"),
+        explode(PrefixExprs.rankedPrefixGrams(col("ng"),
+          col("dict_grams"), col("dict_dfs"), tLow)).as("gram"))
     val index = g.select(col("id").as("_b"), col("sz").as("_sb"),
       explode(col("ng")).as("gram"))
     // lossless size filter fused into the candidate join: containment
@@ -1242,7 +1196,11 @@ object Dedup {
   final case class JaccardIndex(docs: DataFrame, gramDf: DataFrame,
       threshold: Double, n: Int)
 
-  private def jaccardDictRow(gramDf: DataFrame): DataFrame =
+  /** The one-row dictionary of a (gram, df) relation: grams ascending
+    * with their dfs aligned, as the prefix-rank kernels' binary search
+    * needs ([[graft.functions.RankedPrefixGrams]],
+    * [[graft.functions.RankedPrefixGramsK]]). */
+  private[operators] def jaccardDictRow(gramDf: DataFrame): DataFrame =
     gramDf
       .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
         .as("gd"))
@@ -1254,7 +1212,7 @@ object Dedup {
     * one gram-df aggregate, one broadcast-ranked prefix projection —
     * the [[EditSimilarity.editIndex]] discipline for the Jaccard
     * family. The df dictionary rides a one-row broadcast bounded by
-    * the corpus's gram vocabulary (the `localPrefixRank` contract of
+    * the corpus's gram vocabulary (the dictionary contract of
     * [[ngramJaccardBlocked]]).
     *
     * `blockCol` (recommended at corpus scale, matching

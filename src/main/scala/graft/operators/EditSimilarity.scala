@@ -56,9 +56,7 @@ import graft.functions.{PrefixExprs, ShingleExprs}
   * 100 TB: every join is key-equality (gram hash / length bucket);
   * candidates ∝ near-duplicate pairs under the rare-first order. The
   * dictionary broadcast is bounded by the q-gram vocabulary (not the
-  * corpus); `dictRoute = false` is the open-universe fallback (per-doc
-  * window rank over the df-joined gram stream — no broadcast, one
-  * extra gram-table shuffle). The short pool degenerates toward banded
+  * corpus). The short pool degenerates toward banded
   * all-pairs only when maxDist is large relative to the string
   * length — a regime where "within maxDist edits" is itself
   * near-vacuous.
@@ -67,15 +65,8 @@ object EditSimilarity {
 
   /** All unordered pairs with Levenshtein distance ≤ `maxDist`.
     * Output: (a_id, b_id, dist) with a_id < b_id, dist ≤ maxDist.
-    *
-    * `dictRoute = true` (default) ranks prefixes through the one-row
-    * broadcast df dictionary — right whenever the q-gram vocabulary is
-    * broadcastable (natural text). `false` is the open-universe
-    * fallback: df joined onto the exploded gram stream and ranked by a
-    * per-doc window — one extra shuffle + sort of the gram table, no
-    * broadcast requirement (the same dichotomy as x4's
-    * `localPrefixRank`). Both routes use the identical (df, gram)
-    * total order, so candidates — and therefore results — coincide.
+    * Prefixes rank through the one-row broadcast df dictionary, whose
+    * size is bounded by the q-gram vocabulary.
     *
     * Cache lifecycle: the returned (lazy) plan references a persisted
     * per-doc gram relation from several branches — the CALLER owns
@@ -83,8 +74,8 @@ object EditSimilarity {
     * result is consumed, the same contract as `Dedup.minhashLsh` /
     * `connectedComponents`' driver route. */
   def editDistancePairs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxDist: Int = 20, q: Int = 4,
-      dictRoute: Boolean = true): DataFrame = {
+      textCol: String = "text", maxDist: Int = 20,
+      q: Int = 4): DataFrame = {
     require(maxDist >= 0, s"editDistancePairs: maxDist must be >= 0, got $maxDist")
     require(q >= 2, s"editDistancePairs: q must be >= 2, got $q")
     val prefixLen = q * maxDist + 1
@@ -101,32 +92,11 @@ object EditSimilarity {
     val gramDf = g.filter(col("ng").isNotNull)
       .select(explode(col("ng")).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val pre =
-      if (dictRoute) {
-        val dict = gramDf
-          .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
-            .as("gd"))
-          .select(
-            transform(col("gd"), x => x.getField("gram")).as("dict_grams"),
-            transform(col("gd"), x => x.getField("df")).as("dict_dfs"))
-        g.filter(col("ng").isNotNull)
-          .crossJoin(broadcast(dict))
-          .select(col("id"), col("len"),
-            explode(PrefixExprs.rankedPrefixGramsK(col("ng"),
-              col("dict_grams"), col("dict_dfs"), prefixLen)).as("gram"))
-      } else {
-        // open-universe fallback: rank by a per-doc window over the
-        // df-joined gram stream (same (df, gram) order, no broadcast)
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("id"))
-          .orderBy(col("df"), col("gram"))
-        g.filter(col("ng").isNotNull)
-          .select(col("id"), col("len"), explode(col("ng")).as("gram"))
-          .join(gramDf, Seq("gram"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= prefixLen)
-          .select(col("id"), col("len"), col("gram"))
-      }
+    val pre = g.filter(col("ng").isNotNull)
+      .crossJoin(broadcast(Dedup.jaccardDictRow(gramDf)))
+      .select(col("id"), col("len"),
+        explode(PrefixExprs.rankedPrefixGramsK(col("ng"),
+          col("dict_grams"), col("dict_dfs"), prefixLen)).as("gram"))
     val prefixCands = pre.as("a").join(pre.as("b"),
       col("a.gram") === col("b.gram") &&
         col("a.id") < col("b.id") &&
@@ -180,16 +150,6 @@ object EditSimilarity {
       .withColumn("n_grams", coalesce(size(col("ng")), lit(0)))
   }
 
-  /** One-row gram-ascending aligned-array dictionary for
-    * [[graft.functions.RankedPrefixGramsK]]'s binary search. */
-  private def dictRow(gramDf: DataFrame): DataFrame =
-    gramDf
-      .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
-        .as("gd"))
-      .select(
-        transform(col("gd"), x => x.getField("gram")).as("dict_grams"),
-        transform(col("gd"), x => x.getField("df")).as("dict_dfs"))
-
   /** The persisted corpus-side state for [[editDistancePairsDelta]]:
     *
     *  - `docs` — (id, t, len, ng, n_grams, prefix): the gram relation
@@ -213,9 +173,8 @@ object EditSimilarity {
 
   /** Build the [[EditIndex]] for a corpus — one gram-kernel pass plus
     * one df aggregation plus one broadcast-ranked prefix projection.
-    * Same `dictRoute = true` contract as [[editDistancePairs]]: the df
-    * dictionary rides a one-row broadcast bounded by the corpus's
-    * q-gram vocabulary. */
+    * As in [[editDistancePairs]], the df dictionary rides a one-row
+    * broadcast bounded by the corpus's q-gram vocabulary. */
   def editIndex(corpus: DataFrame, maxDist: Int = 20, q: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): EditIndex = {
     require(maxDist >= 0, s"editIndex: maxDist must be >= 0, got $maxDist")
@@ -228,7 +187,7 @@ object EditSimilarity {
     val gramDf = g.filter(col("ng").isNotNull)
       .select(explode(col("ng")).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val docs = g.crossJoin(broadcast(dictRow(gramDf)))
+    val docs = g.crossJoin(broadcast(Dedup.jaccardDictRow(gramDf)))
       .select(col("id"), col("t"), col("len"), col("ng"), col("n_grams"),
         when(col("ng").isNotNull,
           PrefixExprs.rankedPrefixGramsK(col("ng"),
@@ -272,7 +231,7 @@ object EditSimilarity {
       .join(index.gramDf, Seq("gram"), "left")
       .select(col("gram"), coalesce(col("df"), lit(0L)).as("df"))
     val dPrefix = d.filter(col("ng").isNotNull)
-      .crossJoin(broadcast(dictRow(deltaDf)))
+      .crossJoin(broadcast(Dedup.jaccardDictRow(deltaDf)))
       .select(col("id"), col("len"),
         PrefixExprs.rankedPrefixGramsK(col("ng"),
           col("dict_grams"), col("dict_dfs"), prefixLen).as("prefix"))

@@ -246,8 +246,8 @@ object Multimodal {
       .withColumnRenamed("id", "media_id")
 
   /** Incremental perceptual near-dedup: decode ONLY the delta batch
-    * and probe a persisted [[nearDupIndex]] — cost ∝ |delta|, the
-    * corpus is never re-decoded (the
+    * and probe a persisted [[nearDupIndex]] — cost ∝ |delta| plus
+    * the matching postings, the corpus is never re-decoded (the
     * [[graft.operators.Dedup.cdcOverlapDelta]] discipline on the
     * binary modality). Output `(media_delta, media_corpus, cosine)` —
     * equal to [[nearDupPairs]] over (corpus ∪ delta) restricted to
@@ -256,50 +256,52 @@ object Multimodal {
     * every delta route. */
   def nearDupDelta(delta: Dataset[MediaRecord], index: DataFrame,
       threshold: Double = 0.9,
-      decoder: MediaDecoder = FakeDecoder): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"nearDupDelta: threshold must be in (0, 1], got $threshold")
-    val dfeats = Materialize.eager(featureRelation(delta, decoder))
-    val ik = index.select((col("media_id").as("id") +:
-      ChunkKeyCols.map(col)): _*)
-    val pairs = Dedup.postingPairs(explodeChunkKeys(dfeats), Some(ik), "id",
-        ChunkKeyCols, crossOnly = true)
-      .select(col("doc_a").as("media_delta"), col("doc_b").as("media_corpus"))
-      .distinct()
-    // the index's v column is read only on the pair side
-    cosineVerify(pairs, "media_delta", "media_corpus", dfeats,
-      index.select(col("media_id").as("id"), col("v")).dropDuplicates("id"),
-      threshold)
-  }
+      decoder: MediaDecoder = FakeDecoder): DataFrame =
+    nearDupProbe("nearDupDelta", threshold, crossOnly = true,
+        "media_delta", "media_corpus")(
+      explodeChunkKeys(Materialize.eager(featureRelation(delta, decoder)),
+        withVector = true).withColumnRenamed("id", "media_id"), index)
 
   /** One micro-batch step of streaming perceptual media dedup
     * ([[graft.streaming.StreamMediaDedup]]): all near-dup pairs
     * TOUCHING the batch — [[Dedup.postingPairs]]`(batch, corpus)` over
     * feature/chunk-key relations (the [[nearDupIndex]] schema
     * `(media_id, v, j, k1..k4)` on both sides), so each pair is
-    * emitted exactly once, when its later member arrives. Corpus
-    * postings are key-restricted to the batch's chunk keys and
-    * materialized once — the kernel's probe and the vector join-back
-    * both read them — so per-batch shuffle is ∝ batch keys + matching
-    * postings (the corpus-side SCAN is the caller's concern:
+    * emitted exactly once, when its later member arrives. The
+    * corpus-side SCAN is the caller's concern:
     * [[graft.streaming.StreamMediaDedup]] partition-prunes it by feature
-    * bucket). Output: `(media_a, media_b, cosine)`, media_a < media_b.
+    * bucket. Output: `(media_a, media_b, cosine)`, media_a < media_b.
     * Ids must be globally unique across batches. */
   def nearDupIncrement(batchKeys: DataFrame, corpusKeys: DataFrame,
-      threshold: Double = 0.9): DataFrame = {
+      threshold: Double = 0.9): DataFrame =
+    nearDupProbe("nearDupIncrement", threshold, crossOnly = false,
+      "media_a", "media_b")(batchKeys, corpusKeys)
+
+  /** The body of [[nearDupDelta]] (`crossOnly`: batch × corpus pairs
+    * only) and [[nearDupIncrement]] (every pair touching the batch),
+    * over [[nearDupIndex]]-schema relations. Corpus postings are
+    * key-restricted to the batch's chunk keys and materialized once —
+    * the kernel's probe and the vector join-back both read them — so
+    * per-batch shuffle is ∝ batch keys + matching postings, never the
+    * corpus. `batchKeys` is built only after `threshold` is checked. */
+  private def nearDupProbe(route: String, threshold: Double,
+      crossOnly: Boolean, a: String, b: String)(
+      batchKeys: => DataFrame, corpusKeys: DataFrame): DataFrame = {
     require(threshold > 0 && threshold <= 1,
-      s"nearDupIncrement: threshold must be in (0, 1], got $threshold")
+      s"$route: threshold must be in (0, 1], got $threshold")
     val cols = col("media_id").as("id") +: col("v") +: ChunkKeyCols.map(col)
     val bk = batchKeys.select(cols: _*)
-    val hits = Materialize.eager(corpusKeys.select(cols: _*)
-      .join(bk.select(ChunkKeyCols.map(col): _*).distinct(), ChunkKeyCols))
-    val pairs = Dedup.postingPairs(bk, Some(hits), "id", ChunkKeyCols)
-      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"))
+    val hits = Materialize.eager(corpusKeys.select(cols: _*).join(
+      broadcast(bk.select(ChunkKeyCols.map(col): _*)), ChunkKeyCols,
+      "left_semi"))
+    val pairs = Dedup.postingPairs(bk, Some(hits), "id", ChunkKeyCols,
+        crossOnly = crossOnly)
+      .select(col("doc_a").as(a), col("doc_b").as(b))
       .distinct()
     val vecs = bk.select(col("id"), col("v"))
       .unionByName(hits.select(col("id"), col("v")))
       .dropDuplicates("id")
-    cosineVerify(pairs, "media_a", "media_b", vecs, vecs, threshold)
+    cosineVerify(pairs, a, b, vecs, vecs, threshold)
   }
 
   /** Sub-file (frame-level) media overlap: pairs of media sharing ≥

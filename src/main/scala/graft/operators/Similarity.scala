@@ -102,9 +102,7 @@ object Similarity {
       // zero-norm rows (null cosine) are not neighbors — excluding them
       // here keeps ranks dense over real candidates
       .filter(col("cosine").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topPerQuery(scored, "cosine", k)
   }
 
   /** Per-group embedding centroids (mean pooling) — cluster/source
@@ -241,9 +239,7 @@ object Similarity {
         round(idot(col("qcv"), col("cv")).cast("double") /
           (sqrt(col("_nq").cast("double")) * sqrt(col("_nc").cast("double"))),
           6).as("qcosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topPerQuery(scored, "qcosine", k)
   }
 
   /** Embedding near-duplicate pairs within a blocking key (exact within
@@ -718,6 +714,8 @@ object Similarity {
     }
   }
 
+  /** The rank window of every top-k route: per query, the `n` best
+    * `score`s, ties broken by `vec_id`, with their rank `rnk`. */
   private def topPerQuery(scored: DataFrame, score: String,
       n: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -881,9 +879,7 @@ object Similarity {
       .select(col("q.query_id").as("query_id"), col("c.vec_id").as("vec_id"),
         round(cosine(col("q.qv"), col("c.v")), 6).as("cosine"))
       .distinct() // a pair can collide in several tables
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    topPerQuery(scored, "cosine", k)
   }
 
   // ---- semantic dedup (SemDeDup) ---------------------------------------

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed upsert into a parquet table — the engine's replacement for the
@@ -56,16 +55,11 @@ object KeyedUpsertSink {
     }
   }
 
-  /** Open the table at sink start: reject older layouts, then record
-    * the row schema and key columns, or check them against the
-    * recorded ones. */
+  /** Open the table: record the row schema and key columns, or check
+    * them against the recorded ones. */
   private[graft] def open(spark: SparkSession, tableDir: String,
       schema: StructType, keys: Seq[String]): TieredIndex = {
-    require(!schema.fieldNames.exists(Set("bucket", "batch_id")),
-      "KeyedUpsertSink: rows may not carry a 'bucket' or 'batch_id' " +
-        "column — they are the store's")
     val s = store(tableDir, schema, keys)
-    s.ensureNBuckets(spark, 1)
     def check(stored: (StructType, Seq[String])): Unit =
       require(stored == ((schema, keys)), s"KeyedUpsertSink: the table " +
         s"at $tableDir holds rows $stored, got ${(schema, keys)} — " +
@@ -92,7 +86,7 @@ object KeyedUpsertSink {
   /** Append one micro-batch of full-state rows to the opened table. */
   private[graft] def upsert(table: TieredIndex, rows: DataFrame,
       batchId: Long): Unit =
-    table.append(rows.withColumn("bucket", lit(0)), batchId)
+    table.append(rows, batchId)
 
   /** The table: per key, the row of the newest batch. */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
@@ -111,13 +105,16 @@ object KeyedUpsertSink {
       store(tableDir, schema, keys)
     }
 
-  /** The sink's `foreachBatch` body: opens the table once (at sink
-    * start), then upserts every micro-batch of full-state `schema`
-    * rows and maintains the store. */
+  /** The sink's `foreachBatch` body, built at sink start: the store's
+    * trigger checks the table's layout, and only then is the table
+    * opened; every micro-batch of full-state `schema` rows is then
+    * upserted and the store maintained. */
   def foreachBatchUpsert(spark: SparkSession, tableDir: String,
       schema: StructType, keys: Seq[String]): (DataFrame, Long) => Unit = {
-    val table = open(spark, tableDir, schema, keys)
-    TieredIndex.trigger[Row]("KeyedUpsertSink", Seq(table), CompactEvery)(
-      upsert(table, _, _))
+    val table = store(tableDir, schema, keys)
+    val run = TieredIndex.trigger[Row]("KeyedUpsertSink", Seq(table),
+      CompactEvery)(upsert(table, _, _))
+    open(spark, tableDir, schema, keys)
+    run
   }
 }

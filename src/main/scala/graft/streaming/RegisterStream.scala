@@ -57,11 +57,9 @@ object RegisterStream {
   def dualSink(parsed: DataFrame, outDir: String, checkpoint: String,
       windowDur: String = "60 seconds", slideDur: String = "6 seconds")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val counts = store(outDir)
-    counts.ensureNBuckets(parsed.sparkSession, 1)
     parsed.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("RegisterStream.dualSink",
-        Seq(counts), compactEvery = 16)(
+        Seq(store(outDir)), compactEvery = 16)(
         foldBatch(outDir, _, _, windowDur, slideDur)))
       .option("checkpointLocation", checkpoint)
       .start()
@@ -97,13 +95,12 @@ object RegisterStream {
       .select(kind.as("kind"), col("w"), col("platform"))
       .groupBy(col("kind"), ifWindow("start").as("window_start"),
         ifWindow("end").as("window_end"), col("platform"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("bucket", lit(0)), batchId)
+      .agg(count(lit(1)).as("n")), batchId)
   }
 
   private def rowsOfKind(spark: SparkSession, outDir: String,
       kind: String): DataFrame =
-    store(outDir).corpusKeys(spark, Long.MaxValue, None)
+    store(outDir).corpusKeys(spark, Long.MaxValue)
       .filter(col("kind") === kind)
 
   /** Read view over [[dualSink]]'s windowed counts. Empty (with the

@@ -29,9 +29,9 @@ import graft.operators.Dedup
   *     batches.
   *
   * '''Index layout and maintenance''' live in [[TieredIndex]]: a
-  * recent tier of per-batch dirs sub-partitioned by fingerprint
-  * bucket `pmod(fp, nBuckets)`, folded every `compactEvery` batches
-  * into LSM size-tiered base epochs (O(log n) live epochs; a fold
+  * recent tier of per-batch dirs sub-partitioned by the store's
+  * fingerprint bucket (its key is `fp`), folded every `compactEvery`
+  * batches into LSM size-tiered base epochs (O(log n) live epochs; a fold
   * reads only the recent dirs it folds, a merge only the two epochs
   * it merges — the base is never rewritten wholesale except at its
   * own doubling point, so per-trigger maintenance cost is bounded by
@@ -53,8 +53,7 @@ import graft.operators.Dedup
   * `nBuckets` is baked into the on-disk partition values, so it is
   * recorded once at `outDir/index_meta` and later sinks on the same
   * outDir must match (enforced at start, atomically; the pre-bucket
-  * flat layout is rejected loudly — see
-  * [[TieredIndex.ensureNBuckets]]).
+  * flat layout is rejected loudly — see [[TieredIndex.checkLayout]]).
   *
   * '''Consistency of the views''': the pairs and chunks writes of one
   * batch are two separate commits (plus maintenance deletes), atomic
@@ -85,21 +84,18 @@ object StreamCdc {
 
   private val keySchema = "fp bigint, len int, doc_id bigint"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  /** The chunk index, bucketed by fingerprint. */
+  private[graft] def index(outDir: String, nBuckets: Int = 64) =
+    new TieredIndex(outDir, keySchema, bucketKey = Some(col("fp")),
+      nBuckets = nBuckets)
   private def pairStore(outDir: String) = new TieredIndex(
     s"$outDir/pairs",
     "doc_a bigint, doc_b bigint, shared_chunks bigint, shared_bytes bigint")
 
   /** The sink's [[TieredIndex]] stores. */
-  private[graft] def stores(outDir: String): Seq[TieredIndex] =
-    Seq(index(outDir), pairStore(outDir))
-
-  /** The corpus chunk-key relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` (None = all buckets) — see
-    * [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  private[graft] def stores(outDir: String,
+      nBuckets: Int = 64): Seq[TieredIndex] =
+    Seq(index(outDir, nBuckets), pairStore(outDir))
 
   /** One micro-batch: emit overlap pairs touching the batch and grow
     * the chunk index ([[sink]] runs it per trigger, then the stores'
@@ -111,29 +107,20 @@ object StreamCdc {
       minChunk: Int = 1, maxChunk: Int = Int.MaxValue,
       nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    val (idx, pairs) = (index(outDir, nBuckets), pairStore(outDir))
     val keys = Dedup.cdcChunkIndex(batch, idCol, textCol, w,
         maskBits, minLen, minChunk, maxChunk)
-      .withColumn("bucket",
-        pmod(col("fp"), lit(nBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // the batch's fingerprint buckets (≤ nBuckets values — a
-      // bounded collect) become partition filters on the index
-      // read: only directories that can hold a matching key are
-      // scanned
-      val buckets = keys.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
       // strictly-older batches only: a replayed batch must not see
       // its own crashed partial write as "corpus"
-      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
+      val corpus = idx.probe(spark, keys, batchId)
         .withColumnRenamed("doc_id", idCol)
       pairs.append(Dedup.cdcOverlapIncrement(
           keys.select(col("fp"), col("len"), col(idCol)), corpus,
-          idCol, minSharedBytes, maxDocsPerChunk)
-        .withColumn("bucket", lit(0)), batchId)
+          idCol, minSharedBytes, maxDocsPerChunk), batchId)
       idx.append(keys.select(col("fp"), col("len"),
-        col(idCol).as("doc_id"), col("bucket")), batchId)
+        col(idCol).as("doc_id")), batchId)
     } finally { keys.unpersist(); () }
   }
 
@@ -151,15 +138,11 @@ object StreamCdc {
       minChunk: Int = 1, maxChunk: Int = Int.MaxValue,
       nBuckets: Int = 64, compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamCdc: nBuckets must be >= 1, got $nBuckets")
-    index(outDir).ensureNBuckets(docs.sparkSession, nBuckets)
-    pairStore(outDir).ensureNBuckets(docs.sparkSession, 1)
     docs.writeStream
-      .foreachBatch(TieredIndex.trigger[Row]("StreamCdc", stores(outDir),
-        compactEvery)(foldBatch(outDir, _, _, w, maskBits, minLen,
-          minSharedBytes, maxDocsPerChunk, idCol, textCol, minChunk,
-          maxChunk, nBuckets)))
+      .foreachBatch(TieredIndex.trigger[Row]("StreamCdc",
+        stores(outDir, nBuckets), compactEvery)(foldBatch(outDir, _, _, w,
+          maskBits, minLen, minSharedBytes, maxDocsPerChunk, idCol,
+          textCol, minChunk, maxChunk, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
@@ -170,7 +153,7 @@ object StreamCdc {
     * object doc). Empty (with the right schema) before the first
     * batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue)
 
   /** The accumulated chunk index — the [[Dedup.cdcChunkIndex]]
     * relation over every committed batch (base ∪ recent tiers),
@@ -178,6 +161,5 @@ object StreamCdc {
     * ([[Dedup.cdcOverlapDelta]]). Consistent only between batches —
     * see the object doc. */
   def chunkIndexView(spark: SparkSession, outDir: String): DataFrame =
-    index(outDir).corpusKeys(spark, batchId = Long.MaxValue,
-      buckets = None)
+    index(outDir).corpusKeys(spark, Long.MaxValue)
 }

@@ -57,7 +57,7 @@ object StreamContainment {
     * per-batch counts (and per-epoch sums) summed. */
   private def gramDfBelow(spark: SparkSession, dir: String,
       below: Long): DataFrame =
-    gramStore(dir).corpusKeys(spark, below, None)
+    gramStore(dir).corpusKeys(spark, below)
       .groupBy(col("gram")).agg(sum(col("df")).as("df"))
 
   /** Fold one micro-batch: emit its touching pairs, then append its
@@ -71,30 +71,27 @@ object StreamContainment {
       (indexStore(dir), gramStore(dir), pairStore(dir))
     val corpusDf = gramDfBelow(spark, dir, batchId)
     val index = Dedup.JaccardIndex(
-      cindex.corpusKeys(spark, batchId, None), corpusDf, threshold, n)
-    pairs.append(Dedup.containmentPairsDelta(batch, index, idCol, textCol)
-      .withColumn("bucket", lit(0)), batchId)
+      cindex.corpusKeys(spark, batchId), corpusDf, threshold, n)
+    pairs.append(Dedup.containmentPairsDelta(batch, index, idCol, textCol),
+      batchId)
     cindex.append(Dedup.jaccardIndexDelta(batch, corpusDf, threshold, n,
-        idCol, textCol)
-      .withColumn("bucket", lit(0)), batchId)
+      idCol, textCol), batchId)
     gramDf.append(batch
       .select(graft.functions.ShingleExprs
         .shingleSetChars(col(textCol), n).as("ng"))
       .filter(col("ng").isNotNull && size(col("ng")) >= 1)
       .select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", lit(0)), batchId)
+      .groupBy(col("gram")).agg(count(lit(1)).as("df")), batchId)
   }
 
   /** `foreachBatch` adapter; after folding batch N it runs each
     * store's [[TieredIndex.maintain]] (folds every `compactEvery`
     * committed batches) — safe inside the serialized callback, the
-    * [[StreamCorpusLoop.sink]] contract, which also checks the stores'
-    * layout once, here. */
+    * [[StreamCorpusLoop.sink]] contract; the stores' layout is checked
+    * once, when the function is built. */
   def sink(dir: String, threshold: Double = 0.9, n: Int = 12,
       idCol: String = "doc_id", textCol: String = "text",
       compactEvery: Int = 16): (DataFrame, Long) => Unit = {
-    stores(dir).foreach(_.ensureNBuckets(SparkSession.active, 1))
     TieredIndex.trigger[Row]("StreamContainment", stores(dir),
       compactEvery)(foldBatch(dir, _, _, threshold, n, idCol, textCol))
   }
@@ -103,11 +100,11 @@ object StreamContainment {
     * per-batch outputs) — over a closed corpus, equal to batch
     * [[Dedup.containmentPairs]]. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    pairStore(dir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(dir).corpusKeys(spark, Long.MaxValue)
 
   /** The growing prefix-index relation (id, ng, sz, prefix). */
   def index(spark: SparkSession, dir: String): DataFrame =
-    indexStore(dir).corpusKeys(spark, Long.MaxValue, None)
+    indexStore(dir).corpusKeys(spark, Long.MaxValue)
 
   /** The corpus (gram, df) relation (aggregated). */
   def gramDf(spark: SparkSession, dir: String): DataFrame =

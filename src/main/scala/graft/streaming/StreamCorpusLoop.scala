@@ -66,11 +66,10 @@ object StreamCorpusLoop {
 
     // 1. exact dedup against the growing hash index, then append the
     // batch's NEW hashes (left_anti keeps the index a set across deltas)
-    val idx = hash.corpusKeys(spark, batchId, None)
-    accepted.append(Dedup.exactDelta(b, idx, idCol, textCol)
-      .withColumn("bucket", lit(0)), batchId)
-    hash.append(Dedup.hashIndex(b, textCol).join(idx, Seq("h"), "left_anti")
-      .withColumn("bucket", lit(0)), batchId)
+    val idx = hash.corpusKeys(spark, batchId)
+    accepted.append(Dedup.exactDelta(b, idx, idCol, textCol), batchId)
+    hash.append(Dedup.hashIndex(b, textCol).join(idx, Seq("h"), "left_anti"),
+      batchId)
 
     // 2. near-dup pairs against corpus + batch fingerprints (delta
     // probes; corpus×corpus pairs structurally cannot form), then
@@ -80,12 +79,12 @@ object StreamCorpusLoop {
     val dFps = Dedup.simhash(b, idCol, textCol, poly = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pairs = Dedup
-      .simhashPairsDeltaFps(dFps, fps.corpusKeys(spark, batchId, None),
+      .simhashPairsDeltaFps(dFps, fps.corpusKeys(spark, batchId),
         maxHamming)
       .persist(StorageLevel.MEMORY_AND_DISK)
     StreamClusters.foldBatch(labelsDir(dir),
       pairs.select(col("doc_a"), col("doc_b")), batchId)
-    fps.append(dFps.withColumn("bucket", lit(0)), batchId)
+    fps.append(dFps, batchId)
     pairs.unpersist(false)
     dFps.unpersist(false)
     b.unpersist(false)
@@ -97,12 +96,11 @@ object StreamCorpusLoop {
     * committed batch dirs accumulate they fold into a base epoch, so
     * a forever-running loop keeps O(compactEvery) recent dirs and
     * O(log n) epochs per store without any external maintenance job.
-    * The stores' layout is checked once, here, in the active session
-    * ([[TieredIndex.ensureNBuckets]]). */
+    * The stores' layout is checked once, when the function is built
+    * ([[TieredIndex.trigger]]). */
   def sink(dir: String, idCol: String = "doc_id",
       textCol: String = "text",
       maxHamming: Int = 3, compactEvery: Int = 16): (DataFrame, Long) => Unit = {
-    stores(dir, idCol).foreach(_.ensureNBuckets(SparkSession.active, 1))
     TieredIndex.trigger[Row]("StreamCorpusLoop", stores(dir, idCol),
       compactEvery)(foldBatch(dir, _, _, idCol, textCol, maxHamming))
   }
@@ -111,16 +109,16 @@ object StreamCorpusLoop {
     * complete batch. */
   def acceptedIds(spark: SparkSession, dir: String,
       idCol: String = "doc_id"): DataFrame =
-    acceptedStore(dir, idCol).corpusKeys(spark, Long.MaxValue, None)
+    acceptedStore(dir, idCol).corpusKeys(spark, Long.MaxValue)
 
   /** The growing content-hash index (one 16-byte row per distinct
     * accepted content). */
   def hashIndex(spark: SparkSession, dir: String): DataFrame =
-    hashStore(dir).corpusKeys(spark, Long.MaxValue, None)
+    hashStore(dir).corpusKeys(spark, Long.MaxValue)
 
   /** The growing fingerprint relation (id, simhash). */
   def fps(spark: SparkSession, dir: String): DataFrame =
-    fpStore(dir).corpusKeys(spark, Long.MaxValue, None)
+    fpStore(dir).corpusKeys(spark, Long.MaxValue)
 
   /** Current cluster labels (delegates to [[StreamClusters]]). */
   def labels(spark: SparkSession, dir: String): DataFrame =

@@ -27,8 +27,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   *     its own contribution.
   *
   * Both indexes are [[TieredIndex]]es (LSM fold/merge, bucket-pruned
-  * probes, crash-safe epochs — the [[StreamCdc]] contract);
-  * `nBuckets` is immutable per outDir.
+  * probes, crash-safe epochs — the [[StreamCdc]] contract), bucketed
+  * by their own keys: the paragraph hash `h` and the media chunk key
+  * `(j, k1..k4)`; `nBuckets` is immutable per outDir.
   *
   * '''Law''': after any prefix of batches, [[labelsView]] EQUALS
   * batch [[Multimodal.crossModalComponents]] over the union of those
@@ -42,17 +43,21 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   * batches. */
 object StreamCrossModal {
 
-  private def textIndex(outDir: String) =
-    new TieredIndex(s"$outDir/text", "doc_id bigint, h bigint")
-  private def mediaIndex(outDir: String) =
-    new TieredIndex(s"$outDir/media", "media_id bigint, v array<float>, " +
-      "j int, k1 float, k2 float, k3 float, k4 float")
+  /** The paragraph-posting index, bucketed by paragraph hash. */
+  private[graft] def textIndex(outDir: String, nBuckets: Int = 64) =
+    new TieredIndex(s"$outDir/text", "doc_id bigint, h bigint",
+      bucketKey = Some(col("h")), nBuckets = nBuckets)
+  /** The media feature index: [[StreamMediaDedup]]'s, under `media`. */
+  private[graft] def mediaIndex(outDir: String, nBuckets: Int = 64) =
+    StreamMediaDedup.index(s"$outDir/media", nBuckets)
   private def pairStore(outDir: String) = new TieredIndex(
     s"$outDir/pairs", "doc_a bigint, doc_b bigint, modality string")
 
   /** The sink's [[TieredIndex]] stores. */
-  private[graft] def stores(outDir: String): Seq[TieredIndex] =
-    Seq(textIndex(outDir), mediaIndex(outDir), pairStore(outDir))
+  private[graft] def stores(outDir: String,
+      nBuckets: Int = 64): Seq[TieredIndex] =
+    Seq(textIndex(outDir, nBuckets), mediaIndex(outDir, nBuckets),
+      pairStore(outDir))
 
   /** One micro-batch: probe both indexes, append the tagged edges and
     * the batch's postings ([[sink]] runs it per trigger, then the
@@ -62,40 +67,24 @@ object StreamCrossModal {
       maxParaDf: Int = 16, threshold: Double = 0.999,
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val (tIdx, mIdx, pairs) =
-      (textIndex(outDir), mediaIndex(outDir), pairStore(outDir))
+    val (tIdx, mIdx, pairs) = (textIndex(outDir, nBuckets),
+      mediaIndex(outDir, nBuckets), pairStore(outDir))
     val paras = Multimodal
       .paragraphKeys(batch, delimiter, minParaLen)
-      .withColumn("bucket",
-        pmod(col("h"), lit(nBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val mkeys = Multimodal
       .nearDupIndex(Multimodal.docsAsMedia(batch), decoder)
-      .withColumn("bucket",
-        pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-          col("k4")), lit(nBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // the batch's buckets (≤ nBuckets values each — bounded
-      // collects) become partition filters on the index reads
-      val tBuckets = paras.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val mBuckets = mkeys.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val textEdges = Multimodal.paragraphEdgeIncrement(
-        paras.drop("bucket"),
-        tIdx.corpusKeys(spark, batchId, Some(tBuckets)),
-        maxParaDf)
-      val mediaEdges = Multimodal.nearDupIncrement(
-        mkeys.drop("bucket"),
-        mIdx.corpusKeys(spark, batchId, Some(mBuckets)),
-        threshold)
+      val textEdges = Multimodal.paragraphEdgeIncrement(paras,
+        tIdx.probe(spark, paras, batchId), maxParaDf)
+      val mediaEdges = Multimodal.nearDupIncrement(mkeys,
+          mIdx.probe(spark, mkeys, batchId), threshold)
         .select(col("media_a").as("doc_a"),
           col("media_b").as("doc_b"))
       pairs.append(textEdges.withColumn("modality", lit("text"))
         .unionByName(
-          mediaEdges.withColumn("modality", lit("media")))
-        .withColumn("bucket", lit(0)), batchId)
+          mediaEdges.withColumn("modality", lit("media"))), batchId)
       tIdx.append(paras, batchId)
       mIdx.append(mkeys, batchId)
     } finally { paras.unpersist(); mkeys.unpersist(); () }
@@ -108,37 +97,20 @@ object StreamCrossModal {
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64,
       compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamCrossModal: nBuckets must be >= 1, got $nBuckets")
-    Seq(textIndex(outDir), mediaIndex(outDir))
-      .foreach(_.ensureNBuckets(docs.sparkSession, nBuckets))
-    pairStore(outDir).ensureNBuckets(docs.sparkSession, 1)
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamCrossModal",
-        stores(outDir), compactEvery)(foldBatch(outDir, _, _, delimiter,
-          minParaLen, maxParaDf, threshold, decoder, nBuckets)))
+        stores(outDir, nBuckets), compactEvery)(foldBatch(outDir, _, _,
+          delimiter, minParaLen, maxParaDf, threshold, decoder,
+          nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
-
-  /** The corpus paragraph-posting relation visible to batch `batchId`,
-    * bucket-pruned — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def textCorpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    textIndex(outDir).corpusKeys(spark, batchId, buckets)
-
-  /** The corpus media feature relation visible to batch `batchId`,
-    * bucket-pruned — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def mediaCorpusKeys(spark: SparkSession,
-      outDir: String, batchId: Long,
-      buckets: Option[Seq[Int]]): DataFrame =
-    mediaIndex(outDir).corpusKeys(spark, batchId, buckets)
 
   /** The accumulated cross-modal edge relation — `(doc_a, doc_b,
     * modality)`; text edges may repeat across batches (see object
     * doc). Empty (with the right schema) before the first batch. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue)
 
   /** The cross-modal duplicate clusters over everything ingested so
     * far: components of [[pairsView]] — equal to batch

@@ -29,8 +29,9 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *
   * The index is a [[TieredIndex]] (the [[StreamCdc]] /
   * [[StreamMediaDedup]] discipline): a recent tier of per-batch dirs
-  * sub-partitioned by key bucket `pmod(hash(fk), nBuckets)`, folded
-  * every `compactEvery` batches into LSM size-tiered base epochs.
+  * sub-partitioned by the store's key bucket (its key is the frame key
+  * `fk`), folded every `compactEvery` batches into LSM size-tiered base
+  * epochs.
   * Probes read only the bucket partitions the batch's own keys hash
   * to — partition filters on every index scan — so per-batch cost is
   * ∝ batch frames + matching postings, and maintenance is bounded by
@@ -51,19 +52,17 @@ object StreamFrameOverlap {
 
   private val keySchema = "media_id bigint, fk array<float>"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  /** The posting index, bucketed by frame key. */
+  private[graft] def index(outDir: String, nBuckets: Int = 64) =
+    new TieredIndex(outDir, keySchema, bucketKey = Some(hash(col("fk"))),
+      nBuckets = nBuckets)
   private def pairStore(outDir: String) = new TieredIndex(
     s"$outDir/pairs", "media_a bigint, media_b bigint, shared_frames bigint")
 
   /** The sink's [[TieredIndex]] stores. */
-  private[graft] def stores(outDir: String): Seq[TieredIndex] =
-    Seq(index(outDir), pairStore(outDir))
-
-  /** The corpus frame-posting relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  private[graft] def stores(outDir: String,
+      nBuckets: Int = 64): Seq[TieredIndex] =
+    Seq(index(outDir, nBuckets), pairStore(outDir))
 
   /** One micro-batch: emit frame-level overlap pairs touching the
     * batch and grow the posting index ([[sink]] runs it per trigger,
@@ -73,23 +72,16 @@ object StreamFrameOverlap {
       minSharedFrames: Int = 2, maxMediaPerFrame: Int = 64,
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    val (idx, pairs) = (index(outDir, nBuckets), pairStore(outDir))
     // decode once; only fixed-width (media_id, fk) postings persist
     val keys = Multimodal.frameIndex(batch, stride, decoder)
-      .withColumn("bucket",
-        pmod(hash(col("fk")), lit(nBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // the batch's key buckets (≤ nBuckets values — a bounded
-      // collect) become partition filters on the index read
-      val buckets = keys.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
       // strictly-older batches only: a replayed batch must not
       // see its own crashed partial write as "corpus"
-      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-      pairs.append(Multimodal.frameOverlapIncrement(keys.drop("bucket"),
-          corpus, minSharedFrames, maxMediaPerFrame)
-        .withColumn("bucket", lit(0)), batchId)
+      pairs.append(Multimodal.frameOverlapIncrement(keys,
+        idx.probe(spark, keys, batchId), minSharedFrames,
+        maxMediaPerFrame), batchId)
       idx.append(keys, batchId)
     } finally { keys.unpersist(); () }
   }
@@ -102,13 +94,9 @@ object StreamFrameOverlap {
       maxMediaPerFrame: Int = 64, decoder: MediaDecoder = FakeDecoder,
       nBuckets: Int = 64, compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamFrameOverlap: nBuckets must be >= 1, got $nBuckets")
-    index(outDir).ensureNBuckets(media.sparkSession, nBuckets)
-    pairStore(outDir).ensureNBuckets(media.sparkSession, 1)
     media.writeStream
       .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamFrameOverlap",
-        stores(outDir), compactEvery)(foldBatch(outDir, _, _, stride,
+        stores(outDir, nBuckets), compactEvery)(foldBatch(outDir, _, _, stride,
           minSharedFrames, maxMediaPerFrame, decoder, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
@@ -120,13 +108,12 @@ object StreamFrameOverlap {
     * between batches). Empty (with the right schema) before the first
     * batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue)
 
   /** The accumulated posting index — the [[Multimodal.frameIndex]]
     * relation over every committed batch, directly consumable by the
     * batch delta route ([[Multimodal.frameOverlapDelta]]). Consistent
     * only between batches. */
   def frameIndexView(spark: SparkSession, outDir: String): DataFrame =
-    index(outDir).corpusKeys(spark, batchId = Long.MaxValue,
-      buckets = None)
+    index(outDir).corpusKeys(spark, Long.MaxValue)
 }

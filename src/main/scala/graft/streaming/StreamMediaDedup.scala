@@ -29,8 +29,8 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *
   * The index is a [[TieredIndex]] — the [[StreamCdc]] layout verbatim
   * (feature rows are fixed-width like chunk keys): a recent tier of
-  * per-batch dirs sub-partitioned by feature bucket
-  * `pmod(hash(j, k1..k4), nBuckets)`, folded every `compactEvery`
+  * per-batch dirs sub-partitioned by the store's feature bucket (its
+  * key is the chunk key `(j, k1..k4)`), folded every `compactEvery`
   * batches into LSM size-tiered base epochs. Probes read only the
   * bucket partitions the batch's own keys hash to — partition
   * filters on every index scan — so per-batch cost is ∝ batch keys +
@@ -51,19 +51,17 @@ object StreamMediaDedup {
   private val keySchema = "media_id bigint, v array<float>, j int, " +
     "k1 float, k2 float, k3 float, k4 float"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
+  /** The feature index, bucketed by chunk key. */
+  private[graft] def index(outDir: String, nBuckets: Int = 64) =
+    new TieredIndex(outDir, keySchema, bucketKey = Some(hash(col("j"),
+      col("k1"), col("k2"), col("k3"), col("k4"))), nBuckets = nBuckets)
   private def pairStore(outDir: String) = new TieredIndex(
     s"$outDir/pairs", "media_a bigint, media_b bigint, cosine double")
 
   /** The sink's [[TieredIndex]] stores. */
-  private[graft] def stores(outDir: String): Seq[TieredIndex] =
-    Seq(index(outDir), pairStore(outDir))
-
-  /** The corpus feature-key relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  private[graft] def stores(outDir: String,
+      nBuckets: Int = 64): Seq[TieredIndex] =
+    Seq(index(outDir, nBuckets), pairStore(outDir))
 
   /** One micro-batch: emit perceptual near-dup pairs touching the
     * batch and grow the feature index ([[sink]] runs it per trigger,
@@ -72,24 +70,15 @@ object StreamMediaDedup {
       batch: Dataset[MediaRecord], batchId: Long, threshold: Double = 0.9,
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val (idx, pairs) = (index(outDir), pairStore(outDir))
+    val (idx, pairs) = (index(outDir, nBuckets), pairStore(outDir))
     // decode once; only fixed-width feature rows persist
     val keys = Multimodal.nearDupIndex(batch, decoder)
-      .withColumn("bucket",
-        pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-          col("k4")), lit(nBuckets)).cast("int"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // the batch's feature buckets (≤ nBuckets values — a bounded
-      // collect) become partition filters on the index read
-      val buckets = keys.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq
       // strictly-older batches only: a replayed batch must not
       // see its own crashed partial write as "corpus"
-      val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-      pairs.append(Multimodal.nearDupIncrement(keys.drop("bucket"),
-          corpus, threshold)
-        .withColumn("bucket", lit(0)), batchId)
+      pairs.append(Multimodal.nearDupIncrement(keys,
+        idx.probe(spark, keys, batchId), threshold), batchId)
       idx.append(keys, batchId)
     } finally { keys.unpersist(); () }
   }
@@ -102,15 +91,11 @@ object StreamMediaDedup {
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64,
       compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamMediaDedup: nBuckets must be >= 1, got $nBuckets")
     require(threshold > 0 && threshold <= 1,
       s"StreamMediaDedup: threshold must be in (0, 1], got $threshold")
-    index(outDir).ensureNBuckets(media.sparkSession, nBuckets)
-    pairStore(outDir).ensureNBuckets(media.sparkSession, 1)
     media.writeStream
       .foreachBatch(TieredIndex.trigger[MediaRecord]("StreamMediaDedup",
-        stores(outDir), compactEvery)(
+        stores(outDir, nBuckets), compactEvery)(
         foldBatch(outDir, _, _, threshold, decoder, nBuckets)))
       .option("checkpointLocation", checkpoint)
       .start()
@@ -121,13 +106,12 @@ object StreamMediaDedup {
     * (consistent only between batches). Empty (with the right schema)
     * before the first batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue)
 
   /** The accumulated feature index — the [[Multimodal.nearDupIndex]]
     * relation over every committed batch, directly consumable by the
     * batch delta route ([[Multimodal.nearDupDelta]]). Consistent only
     * between batches. */
   def featureIndexView(spark: SparkSession, outDir: String): DataFrame =
-    index(outDir).corpusKeys(spark, batchId = Long.MaxValue,
-      buckets = None)
+    index(outDir).corpusKeys(spark, Long.MaxValue)
 }

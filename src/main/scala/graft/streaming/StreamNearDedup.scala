@@ -64,9 +64,8 @@ object StreamNearDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       pairs.append(Dedup.minhashLshDeltaSigs(d,
-          sigs.corpusKeys(spark, batchId, None), threshold)
-        .withColumn("bucket", lit(0)), batchId)
-      sigs.append(d.withColumn("bucket", lit(0)), batchId)
+        sigs.corpusKeys(spark, batchId), threshold), batchId)
+      sigs.append(d, batchId)
     } finally { d.unpersist(); () }
   }
 
@@ -77,7 +76,6 @@ object StreamNearDedup {
       threshold: Double = 0.5, shingleLen: Int = 5,
       idCol: String = "doc_id", textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    stores(outDir).foreach(_.ensureNBuckets(docs.sparkSession, 1))
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamNearDedup",
         stores(outDir), compactEvery = 16)(
@@ -90,13 +88,13 @@ object StreamNearDedup {
     * `minhashLsh` over the union of committed batches. Empty (with the
     * right schema) before the first batch commits. */
   def pairsView(spark: SparkSession, outDir: String): DataFrame =
-    pairStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    pairStore(outDir).corpusKeys(spark, Long.MaxValue)
 
   /** Greedy keep-the-smallest-id dedup view over the indexed corpus:
     * every indexed doc id except those verified near-equal to a
     * smaller id (the canonical-by-min-id rule of [[Dedup.exact]]). */
   def keptIdsView(spark: SparkSession, outDir: String): DataFrame =
-    sigStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    sigStore(outDir).corpusKeys(spark, Long.MaxValue)
       .select(col("id"))
       .join(pairsView(spark, outDir).select(col("doc_b").as("id")),
         Seq("id"), "left_anti")

@@ -57,7 +57,7 @@ object StreamSpanDedup {
     val (fps, cleanOut) = (fpStore(outDir), cleanStore(outDir))
     val b = batch.persist()
     try {
-      val older = fps.corpusKeys(spark, batchId, None)
+      val older = fps.corpusKeys(spark, batchId)
       val modified = SpanDedup.exciseDelta(b, older, windowTokens,
         idCol, textCol)
       // full rewritten batch: untouched docs pass through verbatim
@@ -72,12 +72,11 @@ object StreamSpanDedup {
             size(split(col("text"), " ")).cast("long")).as("n_tokens"),
           coalesce(col("n_removed"), lit(0L)).as("n_removed"),
           coalesce(col("clean_text"), col("text")).as("clean_text"))
-      cleanOut.append(clean.withColumn("bucket", lit(0)), batchId)
+      cleanOut.append(clean, batchId)
       // append only fps NEW to this batch — the index stays
       // fp-unique, so delta probes never fan out span rows
       fps.append(SpanDedup.fpIndex(b, windowTokens, idCol, textCol)
-        .join(older.select(col("fp")), Seq("fp"), "left_anti")
-        .withColumn("bucket", lit(0)), batchId)
+        .join(older.select(col("fp")), Seq("fp"), "left_anti"), batchId)
     } finally { b.unpersist(); () }
   }
 
@@ -88,7 +87,6 @@ object StreamSpanDedup {
       windowTokens: Int = 50, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    stores(outDir).foreach(_.ensureNBuckets(docs.sparkSession, 1))
     docs.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("StreamSpanDedup",
         stores(outDir), compactEvery = 16)(
@@ -101,5 +99,5 @@ object StreamSpanDedup {
     * text — equal to batch `excise` over the committed batches in
     * arrival order, with untouched docs passed through. */
   def cleanView(spark: SparkSession, outDir: String): DataFrame =
-    cleanStore(outDir).corpusKeys(spark, Long.MaxValue, None)
+    cleanStore(outDir).corpusKeys(spark, Long.MaxValue)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,14 +14,20 @@ import org.apache.spark.sql.types.StructType
   * [[StreamContainment]], [[StreamNearDedup]] and [[StreamSpanDedup]],
   * J1's counts ([[RegisterStream.dualSink]]) and J2's detail table
   * ([[KeyedUpsertSink]]). One instance manages one `outDir`; rows
-  * follow `keySchema` plus a precomputed `bucket` partition column
-  * whose modulus is immutable per outDir.
+  * follow `keySchema` plus a `bucket` partition column.
   *
-  * '''One bucket.''' A store that is only ever read whole (an output
-  * view, or a relation a full join probes) uses `nBuckets = 1` and
-  * appends every row with `bucket = 0`; it shares the layout, the meta
-  * and the legacy checks of the bucketed stores, and reads with
-  * `corpusKeys(…, buckets = None)`.
+  * '''Buckets belong to the store.''' A store is built with its bucket
+  * key and modulus — `bucket = pmod(bucketKey, nBuckets)` — and is the
+  * only code that computes, prunes or validates buckets: [[append]]
+  * takes plain key rows and writes `bucket` itself, [[probe]] reads
+  * only the buckets a batch's own keys fall in, and
+  * [[TieredIndex.trigger]] checks the on-disk layout and the recorded
+  * modulus once, at sink start. The modulus is baked into every
+  * partition value, so it is immutable per outDir. A store with no
+  * key has one bucket (`bucket = 0`): it is only ever read whole (an
+  * output view, or a relation a full join probes), shares the layout,
+  * the meta and the legacy checks of the bucketed stores, and its
+  * [[probe]] runs no job.
   *
   * '''Fold/merge function.''' `combine` rewrites the rows a fold or a
   * merge writes: the key columns, `batch_id` and `bucket`, all of
@@ -89,7 +95,7 @@ import org.apache.spark.sql.types.StructType
   *    with a FRESH checkpoint is supported only before the first fold
   *    — wipe outDir and checkpoint together.
   *
-  * '''Older layouts''' fail loudly at [[ensureNBuckets]]: the pre-bucket
+  * '''Older layouts''' fail loudly at [[checkLayout]]: the pre-bucket
   * FLAT index (batch dirs without `bucket=` children, no meta — its
   * postings carry no bucket value, so a pruned probe would silently
   * drop every legacy row), and a store root holding an older store's
@@ -100,10 +106,19 @@ import org.apache.spark.sql.types.StructType
   * stores.
   */
 private[graft] final class TieredIndex(outDir: String, keySchema: String,
-    combine: DataFrame => DataFrame = identity) {
+    combine: DataFrame => DataFrame = identity,
+    bucketKey: Option[Column] = None, nBuckets: Int = 1) {
 
   private val keyCols: Seq[String] =
     StructType.fromDDL(keySchema).fields.map(_.name).toSeq
+  require(!keyCols.exists(Set("bucket", "batch_id")),
+    s"TieredIndex: rows at $outDir may not carry a 'bucket' or " +
+      "'batch_id' column — they are the store's")
+  require(nBuckets >= 1 && (bucketKey.isDefined || nBuckets == 1),
+    s"TieredIndex: nBuckets must be >= 1, and > 1 needs a bucket key; " +
+      s"got $nBuckets at $outDir")
+  private val bucket: Column =
+    bucketKey.fold(lit(0))(k => pmod(k, lit(nBuckets)).cast("int"))
   // both tiers: the recent tier's batch_id comes from the directory,
   // an epoch's is a data column
   private val rowSchema = s"$keySchema, batch_id bigint, bucket int"
@@ -211,16 +226,30 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
 
   /** [[rows]] without `batch_id`: the key columns only. */
   private[graft] def corpusKeys(spark: SparkSession, batchId: Long,
-      buckets: Option[Seq[Int]]): DataFrame =
+      buckets: Option[Seq[Int]] = None): DataFrame =
     rows(spark, batchId, buckets).drop("batch_id")
 
-  /** Append one micro-batch's rows (key columns + `bucket`) into its
-    * own `batch_id=N` dir — dynamic partition overwrite, so a replayed
-    * batch overwrites exactly its own contribution. A batch that wrote
-    * no bucket leaves no dir. */
+  /** The corpus rows batch `batchId` probes with `batchKeys` (rows
+    * carrying the bucket key's columns): [[corpusKeys]] pruned to the
+    * buckets those keys fall in. Collecting them is one job with no
+    * shuffle — each task returns its own ≤ nBuckets distinct values; a
+    * one-bucket store is read whole, with no job. */
+  private[graft] def probe(spark: SparkSession, batchKeys: DataFrame,
+      batchId: Long): DataFrame = {
+    import spark.implicits._
+    corpusKeys(spark, batchId, if (nBuckets == 1) None else Some(
+      batchKeys.select(bucket).as[Int].mapPartitions(_.toSet.iterator)
+        .collect().distinct.toSeq))
+  }
+
+  /** Append one micro-batch's key rows into its own `batch_id=N` dir,
+    * partitioned by their bucket — dynamic partition overwrite, so a
+    * replayed batch overwrites exactly its own contribution. A batch
+    * with no rows leaves no dir. */
   private[graft] def append(keys: DataFrame, batchId: Long): Unit = {
     val dir = new Path(s"$recentRoot/batch_id=$batchId")
-    keys.write.mode("overwrite").partitionBy("bucket")
+    keys.select(keyCols.map(col) :+ bucket.as("bucket"): _*)
+      .write.mode("overwrite").partitionBy("bucket")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(dir.toString)
     val f = fs(keys.sparkSession)
@@ -307,7 +336,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   private def hasMeta(spark: SparkSession): Boolean =
     fs(spark).exists(new Path(metaPath))
 
-  private[graft] def readNBuckets(spark: SparkSession): Int = {
+  private def readNBuckets(spark: SparkSession): Int = {
     // read with its known schema: no schema-inference job per call
     try spark.read.schema("n_buckets int").parquet(metaPath)
       .collect()(0).getInt(0)
@@ -344,8 +373,9 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
           "would silently drop its rows from every view. Rebuild the " +
           "store: wipe outDir + checkpoint and replay the stream."))
     val chunksRoot = new Path(recentRoot)
-    val hasChunks = f.exists(chunksRoot) &&
-      f.listStatus(chunksRoot).exists(st => st.isDirectory &&
+    val batchDirs =
+      if (!f.exists(chunksRoot)) Nil
+      else f.listStatus(chunksRoot).toSeq.filter(st => st.isDirectory &&
         st.getPath.getName.startsWith("batch_id="))
     val hasBase = f.exists(new Path(s"$outDir/chunks_base"))
     def fail(what: String) = throw new IllegalStateException(
@@ -355,33 +385,27 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
         "Rebuild the index (wipe outDir + checkpoint and replay), or " +
         "migrate: rewrite each batch_id dir partitioned by " +
         "bucket = pmod(<fingerprint>, nBuckets) and write the meta.")
-    if ((hasChunks || hasBase) && !hasMeta(spark))
+    if ((batchDirs.nonEmpty || hasBase) && !hasMeta(spark))
       fail("no bucket-count meta")
-    if (hasChunks) {
-      val firstBatch = f.listStatus(chunksRoot)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id=")).headOption
-      firstBatch.foreach { st =>
-        val children = f.listStatus(st.getPath)
-        val hasBucketDirs = children.exists(c => c.isDirectory &&
-          c.getPath.getName.startsWith("bucket="))
-        val hasLooseData = children.exists(c => !c.isDirectory &&
-          !c.getPath.getName.startsWith("_") &&
-          !c.getPath.getName.startsWith("."))
-        if (!hasBucketDirs && hasLooseData)
-          fail(s"${st.getPath.getName} has data files but no bucket= " +
-            "partitions")
-      }
+    batchDirs.headOption.foreach { st =>
+      val children = f.listStatus(st.getPath)
+      val hasBucketDirs = children.exists(c => c.isDirectory &&
+        c.getPath.getName.startsWith("bucket="))
+      val hasLooseData = children.exists(c => !c.isDirectory &&
+        !c.getPath.getName.startsWith("_") &&
+        !c.getPath.getName.startsWith("."))
+      if (!hasBucketDirs && hasLooseData)
+        fail(s"${st.getPath.getName} has data files but no bucket= " +
+          "partitions")
     }
   }
 
-  /** Record `nBuckets` once per outDir (atomically — write to a temp
-    * dir, rename into place; if another sink won the race, validate
-    * against the winner); later sinks must match, since the modulus
-    * is baked into every on-disk partition value. Also rejects the
-    * legacy layouts — see [[rejectLegacyLayout]]. */
-  private[graft] def ensureNBuckets(spark: SparkSession,
-      nBuckets: Int): Unit = {
+  /** Reject the legacy layouts ([[rejectLegacyLayout]]), then record
+    * the store's `nBuckets` once per outDir (atomically — write to a
+    * temp dir, rename into place; if another sink won the race,
+    * validate against the winner); later sinks must match, since the
+    * modulus is baked into every on-disk partition value. */
+  private[graft] def checkLayout(spark: SparkSession): Unit = {
     rejectLegacyLayout(spark)
     val f = fs(spark)
     def validate(): Unit = {
@@ -424,12 +448,15 @@ private[graft] object TieredIndex {
 
   /** A route's `foreachBatch` body: `fold` the batch into the route's
     * stores, then run each store's [[TieredIndex.maintain]] — inside the
-    * serialized callback, which is the stores' single-writer contract. */
+    * serialized callback, which is the stores' single-writer contract.
+    * Built once, at sink start, where it checks each store's layout
+    * and modulus ([[TieredIndex.checkLayout]]) in the active session. */
   def trigger[T](route: String, stores: Seq[TieredIndex],
       compactEvery: Int)(
       fold: (Dataset[T], Long) => Unit): (Dataset[T], Long) => Unit = {
     require(compactEvery >= 2,
       s"$route: compactEvery must be >= 2, got $compactEvery")
+    stores.foreach(_.checkLayout(SparkSession.active))
     (batch, batchId) => {
       fold(batch, batchId)
       stores.foreach(_.maintain(batch.sparkSession, batchId, compactEvery))

@@ -52,6 +52,9 @@ class ContainmentSpec extends SparkTestBase {
         .toDouble)).toSet
     assert(got === want)
     assert(got.nonEmpty, "fixture must plant containment pairs")
+    // a stricter threshold over longer grams still finds planted pairs
+    assert(Dedup.containmentPairs(docs, threshold = 0.9, n = 12)
+      .count() > 0)
   }
 
   test("delta route equals the full join restricted to delta-touching " +
@@ -80,19 +83,6 @@ class ContainmentSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Dedup.containmentPairs(df, threshold = 1.5)
     }
-  }
-
-  test("localPrefixRank=false (unbounded gram universe) equals the " +
-    "broadcast-dictionary route") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text")
-    val dict = Dedup.containmentPairs(docs, threshold = 0.9, n = 12)
-      .as[(Long, Long, Double)].collect().toSet
-    val win = Dedup.containmentPairs(docs, threshold = 0.9, n = 12,
-      localPrefixRank = false)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(win === dict)
-    assert(win.nonEmpty)
   }
 
   test("cache lifecycle: containmentPairs/Delta leave no CacheManager " +

@@ -22,6 +22,9 @@ class EditSimilaritySpec extends SparkTestBase {
       .as[(Long, Long, Int)].collect().toSet
     assert(got === brute(docs, 20))
     assert(got.nonEmpty) // the corpus plants near-duplicates
+    // a tighter bound: a longer prefix relative to the distance budget
+    assert(EditSimilarity.editDistancePairs(docs, maxDist = 8, q = 4)
+      .as[(Long, Long, Int)].collect().toSet === brute(docs, 8))
   }
 
   test("short strings (below the gram length and below the prefix " +
@@ -35,19 +38,6 @@ class EditSimilaritySpec extends SparkTestBase {
       .as[(Long, Long, Int)].collect().toSet
     assert(got === brute(docs, 2))
     assert(got.contains((1L, 2L, 1)) && got.contains((3L, 4L, 1)))
-  }
-
-  test("open-universe window-rank fallback equals the dictionary " +
-    "route (same (df, gram) order) and brute force") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text")
-    val dict = EditSimilarity.editDistancePairs(docs, maxDist = 8, q = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    val win = EditSimilarity.editDistancePairs(docs, maxDist = 8, q = 4,
-      dictRoute = false)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(win === dict)
-    assert(win === brute(docs, 8))
   }
 
   test("maxDist = 0 degenerates to exact-equality pairs") {

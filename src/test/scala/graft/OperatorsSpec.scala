@@ -757,17 +757,14 @@ class OperatorsSpec extends SparkTestBase {
         if uni > 0 && inter.toDouble / uni >= t
       } yield (a._1, b._1)).toSet
       // every route must equal brute force: the dense within-block
-      // verify (default at this corpus size), the prefix join with the
-      // doc-local rank kernel, and the prefix join with the window
-      // fallback (allPairsMaxDocs = 0 forces the prefix path)
+      // verify (default at this corpus size) and the prefix join with
+      // the doc-local rank kernel (allPairsMaxDocs = 0 forces the
+      // prefix path)
       val routes = Seq(
         "dense" -> (() => Dedup.ngramJaccardBlocked(
           docs, "source", threshold = t, n = 3)),
         "prefix-kernel" -> (() => Dedup.ngramJaccardBlocked(
-          docs, "source", threshold = t, n = 3, allPairsMaxDocs = 0)),
-        "prefix-window" -> (() => Dedup.ngramJaccardBlocked(
-          docs, "source", threshold = t, n = 3, localPrefixRank = false,
-          allPairsMaxDocs = 0)))
+          docs, "source", threshold = t, n = 3, allPairsMaxDocs = 0)))
       for ((label, run) <- routes) {
         val got = run().select("doc_a", "doc_b")
           .as[(Long, Long)].collect().toSet

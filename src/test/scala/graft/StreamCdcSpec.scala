@@ -249,12 +249,12 @@ class StreamCdcSpec extends SparkTestBase {
     "is NEVER rewritten until its own doubling point") {
     import graft.streaming.TieredIndex
     val out = Files.createTempDirectory("cdc_lsm_out").toString
-    val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint")
-    idx.ensureNBuckets(spark, 4)
+    val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint",
+      bucketKey = Some(col("fp")), nBuckets = 4)
+    idx.checkLayout(spark)
     def append(b: Long): Unit =
       idx.append(Seq((b * 10 + 1, 30, b), (b * 10 + 2, 40, b))
-        .toDF("fp", "len", "doc_id")
-        .withColumn("bucket", pmod(col("fp"), lit(4)).cast("int")), b)
+        .toDF("fp", "len", "doc_id"), b)
     def baseNames = new java.io.File(s"$out/chunks_base").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     def keysVisible = idx.corpusKeys(spark, Long.MaxValue, None)
@@ -323,9 +323,10 @@ class StreamCdcSpec extends SparkTestBase {
     // a crash between meta-dir creation and parquet commit leaves an
     // empty dir
     assert(new java.io.File(s"$out/index_meta").mkdirs())
-    val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint")
+    val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint",
+      bucketKey = Some(col("fp")), nBuckets = 8)
     val err = intercept[IllegalStateException] {
-      idx.ensureNBuckets(spark, 8)
+      idx.checkLayout(spark)
     }
     assert(err.getMessage.contains("torn or corrupt"), err.getMessage)
   }
@@ -381,7 +382,8 @@ class StreamCdcSpec extends SparkTestBase {
     } finally q.stop()
 
     // the probe relation a later batch would read, pruned to one bucket
-    val probe = StreamCdc.corpusKeys(spark, out, batchId = 100L,
+    val index = StreamCdc.index(out, nBuckets = 8)
+    val probe = index.corpusKeys(spark, batchId = 100L,
       buckets = Some(Seq(3)))
     val p = probe.queryExecution.executedPlan.toString
     val scans = p.linesIterator
@@ -392,7 +394,7 @@ class StreamCdcSpec extends SparkTestBase {
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
         .contains("bucket")), p)
     // and the pruned probe agrees with the unpruned view on that bucket
-    val full = StreamCdc.corpusKeys(spark, out, batchId = 100L,
+    val full = index.corpusKeys(spark, batchId = 100L,
         buckets = None)
       .filter(pmod(col("fp"), lit(8)).cast("int") === 3)
     assert(probe.as[(Long, Int, Long)].collect().toSet ===

@@ -160,11 +160,16 @@ class StreamCrossModalSpec extends SparkTestBase {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
 
+    // each index with its own key: the paragraph hash, the chunk key
     Seq(
-      StreamCrossModal.textCorpusKeys(spark, out, batchId = 100L,
-        buckets = Some(Seq(3))),
-      StreamCrossModal.mediaCorpusKeys(spark, out, batchId = 100L,
-        buckets = Some(Seq(3)))).foreach { probe =>
+      (StreamCrossModal.textIndex(out, nBuckets = 8),
+        pmod(col("h"), lit(8)).cast("int"), Seq("doc_id", "h")),
+      (StreamCrossModal.mediaIndex(out, nBuckets = 8),
+        pmod(hash(col("j"), col("k1"), col("k2"), col("k3"), col("k4")),
+          lit(8)).cast("int"), Seq("media_id", "j"))).foreach {
+      case (index, bucket, ids) =>
+      val probe = index.corpusKeys(spark, batchId = 100L,
+        buckets = Some(Seq(3)))
       val p = probe.queryExecution.executedPlan.toString
       val scans = p.linesIterator
         .filter(_.contains("FileScan parquet")).toSeq
@@ -172,6 +177,14 @@ class StreamCrossModalSpec extends SparkTestBase {
       assert(scans.forall(l =>
         l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
           .contains("bucket")), p)
+      // and the pruned probe agrees with the unpruned view on that
+      // bucket, recomputed here from the key
+      val full = index.corpusKeys(spark, batchId = 100L, buckets = None)
+        .filter(bucket === 3)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(ids.map(col): _*).collect().map(_.toSeq).toSet
+      assert(rows(full).nonEmpty, ids)
+      assert(rows(probe) === rows(full), ids)
     }
   }
 }

@@ -161,7 +161,8 @@ class StreamFrameOverlapSpec extends SparkTestBase {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
 
-    val probe = StreamFrameOverlap.corpusKeys(spark, out,
+    val index = StreamFrameOverlap.index(out, nBuckets = 8)
+    val probe = index.corpusKeys(spark,
       batchId = 100L, buckets = Some(Seq(3)))
     val p = probe.queryExecution.executedPlan.toString
     val scans = p.linesIterator
@@ -171,7 +172,7 @@ class StreamFrameOverlapSpec extends SparkTestBase {
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
         .contains("bucket")), p)
     // and the pruned probe agrees with the unpruned view on that bucket
-    val full = StreamFrameOverlap.corpusKeys(spark, out,
+    val full = index.corpusKeys(spark,
         batchId = 100L, buckets = None)
       .filter(pmod(hash(col("fk")), lit(8)).cast("int") === 3)
     assert(probe.select(col("media_id"), hash(col("fk")))

@@ -159,7 +159,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
 
-    val probe = StreamMediaDedup.corpusKeys(spark, out, batchId = 100L,
+    val index = StreamMediaDedup.index(out, nBuckets = 8)
+    val probe = index.corpusKeys(spark, batchId = 100L,
       buckets = Some(Seq(3)))
     val p = probe.queryExecution.executedPlan.toString
     val scans = p.linesIterator
@@ -169,7 +170,7 @@ class StreamMediaDedupSpec extends SparkTestBase {
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
         .contains("bucket")), p)
     // and the pruned probe agrees with the unpruned view on that bucket
-    val full = StreamMediaDedup.corpusKeys(spark, out, batchId = 100L,
+    val full = index.corpusKeys(spark, batchId = 100L,
         buckets = None)
       .filter(pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
         col("k4")), lit(8)).cast("int") === 3)

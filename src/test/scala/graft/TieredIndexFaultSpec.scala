@@ -158,7 +158,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
       Some(16)),
     Route("StreamCdc",
       (out, b) => StreamCdc.foldBatch(out, textDf(b.toInt), b, nBuckets = 4),
-      StreamCdc.stores(_),
+      StreamCdc.stores(_, nBuckets = 4),
       out => Seq(StreamCdc.pairsView(spark, out),
         StreamCdc.chunkIndexView(spark, out)),
       (out, ckpt, n, ce) => runText(n)(StreamCdc.sink(_, out, ckpt,
@@ -167,7 +167,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
     Route("StreamMediaDedup",
       (out, b) => StreamMediaDedup.foldBatch(out,
         mediaBatch(b.toInt).toDS(), b, threshold = 0.999, nBuckets = 4),
-      StreamMediaDedup.stores(_),
+      StreamMediaDedup.stores(_, nBuckets = 4),
       out => Seq(StreamMediaDedup.pairsView(spark, out),
         StreamMediaDedup.featureIndexView(spark, out)),
       (out, ckpt, n, ce) => runStream(n, mediaBatch)(StreamMediaDedup.sink(_,
@@ -176,7 +176,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
     Route("StreamFrameOverlap",
       (out, b) => StreamFrameOverlap.foldBatch(out,
         frameBatch(b.toInt).toDS(), b, nBuckets = 4),
-      StreamFrameOverlap.stores(_),
+      StreamFrameOverlap.stores(_, nBuckets = 4),
       out => Seq(StreamFrameOverlap.pairsView(spark, out),
         StreamFrameOverlap.frameIndexView(spark, out)),
       (out, ckpt, n, ce) => runStream(n, frameBatch)(StreamFrameOverlap.sink(
@@ -185,7 +185,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
     Route("StreamCrossModal",
       (out, b) => StreamCrossModal.foldBatch(out, textDf(b.toInt), b,
         nBuckets = 4),
-      StreamCrossModal.stores(_),
+      StreamCrossModal.stores(_, nBuckets = 4),
       out => Seq(StreamCrossModal.pairsView(spark, out),
         StreamCrossModal.labelsView(spark, out)),
       (out, ckpt, n, ce) => runText(n)(StreamCrossModal.sink(_, out, ckpt,
