@@ -1012,87 +1012,25 @@ object Dedup {
     * benchmark questions embedded in longer crawl pages — the cases the
     * symmetric [[ngramJaccardBlocked]] threshold structurally misses.
     *
-    * Route (prefix-filter on the probe side only — the asymmetry means
-    * the container side cannot be pruned, the standard containment-join
-    * shape): per-doc sorted hashed gram sets in one doc-local kernel
-    * pass; global (gram, df) dictionary as a one-row broadcast (the
-    * x70/x101 bounded-vocabulary pattern); doc_a probes with its first
-    * |A| − ⌈t·|A|⌉ + 1 grams in rare-first order (if none of those hit
-    * B, overlap < ⌈t·|A|⌉ — lossless); doc_b side is the full inverted
-    * gram index. Candidates dedup to (a, b), fetch both gram sets by
-    * two id-keyed joins, and verify with ONE [[SetExprs]] merge; the
-    * int/int division is exactly rounded, so the score is
-    * engine-portable bit-for-bit.
+    * Route: [[containmentJoin]] against no corpus — the docs' gram sets
+    * ([[gramSetRows]], materialized once for the join's four readers),
+    * each doc's probing prefix ranked under the docs' OWN (gram, df)
+    * order ([[rankPrefixes]]), and the plain prefix-vs-full-set
+    * self-join: no union, no second route.
     *
     * Scale: probe rows ∝ (1−t)·|grams|; index rows = corpus gram
     * occurrences (the x36 inverted-index contract); rare-first ordering
     * keeps candidates ∝ output on templated corpora (hot grams land in
     * few prefixes); hot-gram index partitions are AQE-skew-splittable.
     * Self-containment (a = b) is excluded; docs shorter than `n` chars
-    * have no gram set and never pair.
-    * The one-row (gram, df) dictionary broadcast is the contract of a
-    * bounded gram universe (char n-grams: ≤ charset^n). */
+    * have no gram set and never pair. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
       n: Int = 8, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"containmentPairs: threshold must be in (0,1], got $threshold")
-    val spark = docs.sparkSession
-    val tLow = BigDecimal.valueOf(threshold) - BigDecimal("1e-12")
-    // cache-lifecycle discipline: the shingle relation feeds four
-    // consumers (df count, probe, index, verify fetch) but must NOT
-    // ride the CacheManager (a Dataset.persist here is unreleasable by
-    // the caller — the round-8 advisory finding); a checkpoint-style
-    // materialization serves the same reuse and is released by the
-    // context cleaner once the returned plan is garbage-collected.
-    // TRADE (the no-checkpoint-dir path): localCheckpoint blocks are
-    // unreplicated AND non-recomputable, so losing an executor mid-job
-    // fails the query instead of recomputing, and eager=true runs a
-    // job at operator-construction time even if the result is never
-    // consumed. On a real cluster set a checkpoint dir (the reliable
-    // branch above — recomputable from durable storage); local mode
-    // has one JVM, where executor loss IS driver loss and the trade
-    // is free.
-    val g0 = docs
-      .select(col(idCol).as("id"),
-        ShingleExprs.shingleSetChars(col(textCol), n).as("ng"))
-      .filter(col("ng").isNotNull && size(col("ng")) >= 1)
-      .withColumn("sz", size(col("ng")))
-    val g =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        g0.checkpoint(eager = true)
-      else g0.localCheckpoint(eager = true)
-    val gramDf = g.select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    // the global (gram, df) dictionary aggregates into ONE broadcast
-    // row and each doc ranks its own grams in the kernel — zero
-    // shuffle beyond the df count
-    val probe = g.crossJoin(broadcast(jaccardDictRow(gramDf)))
-      .select(col("id").as("_a"), col("sz").as("_sa"),
-        explode(PrefixExprs.rankedPrefixGrams(col("ng"),
-          col("dict_grams"), col("dict_dfs"), tLow)).as("gram"))
-    val index = g.select(col("id").as("_b"), col("sz").as("_sb"),
-      explode(col("ng")).as("gram"))
-    // lossless size filter fused into the candidate join: containment
-    // ≥ t needs overlap ≥ ⌈t·|A|⌉ ≤ |B| (tLow keeps the exact-multiple
-    // boundary on the safe side of double ceil) — on corpora where
-    // candidate density is the cost, this prunes before the dedup
-    // shuffle ever forms
-    val cands = probe.join(index,
-        probe("gram") === index("gram") &&
-          col("_sb") >= ceil(lit(tLow.toDouble) * col("_sa")))
-      .filter(col("_a") =!= col("_b"))
-      .select(col("_a"), col("_b")).distinct()
-    cands
-      .join(g.select(col("id").as("_a"), col("ng").as("_nga"),
-        col("sz").as("_sza")), Seq("_a"))
-      .join(g.select(col("id").as("_b"), col("ng").as("_ngb")), Seq("_b"))
-      .select(col("_a").as("doc_a"), col("_b").as("doc_b"),
-        (SetExprs.sortedIntersectSize(col("_nga"), col("_ngb"))
-          .cast("double") / col("_sza").cast("double")).as("_c"))
-      .filter(col("_c") >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("_c"), 6).as("containment"))
+    requireContainmentThreshold("containmentPairs", threshold)
+    val g = Materialize.eager(gramSetRows(docs, n, idCol, textCol))
+    containmentJoin(g, rankPrefixes(g, None, probingPrefix(threshold)),
+      None, threshold)
   }
 
   /** Incremental (delta) containment join: all ordered containment
@@ -1104,90 +1042,100 @@ object Dedup {
     * [[containmentPairs]] over (corpus ∪ delta) restricted to pairs
     * with a delta endpoint (spec-proven).
     *
-    * Exactness without a shared order: containment's prefix filter is
-    * ONE-sided (the container side is always the full gram set), and
-    * for a full other side ANY |A| − ⌈t·|A|⌉ + 1 grams of A are a
-    * lossless probe subset — so the corpus prefixes (ranked under the
-    * corpus df order) and the delta prefixes (ranked under the frozen
-    * corpus order with unseen grams at df 0, the x87 discipline)
-    * need not agree; rare-first is purely the candidate-cost choice.
+    * Route: [[containmentJoin]] with the index docs as its corpus. The
+    * delta ranks under the index's FROZEN (gram, df) order, unseen
+    * grams at df 0 (the x87 discipline); the index prefixes keep the
+    * corpus order they were built with.
     *
     * Scale shape: per-batch cost ∝ delta size + its match rate — the
     * delta probes the full inverted gram relation (corpus side is a
     * column-pruned scan of the index), and the corpus side probes ONLY
-    * delta grams (delta-sized inverted index); the lossless
-    * |B| ≥ ⌈t·|A|⌉ size bound prunes both candidate joins. */
+    * delta grams (delta-sized inverted index). */
   def containmentPairsDelta(delta: DataFrame, index: JaccardIndex,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = index.threshold
-    val tLow = BigDecimal.valueOf(t) - BigDecimal("1e-12")
-    val spark = delta.sparkSession
-    // checkpoint-style reuse, NOT Dataset.persist: this operator runs
-    // once per micro-batch in streaming compositions, and a
-    // CacheManager entry per trigger would accumulate forever (the
-    // containmentPairs lifecycle discipline; see there for the
-    // localCheckpoint executor-loss trade — on a cluster, set a
-    // checkpoint dir for the recomputable branch)
-    val d0 = delta
-      .select(col(idCol).as("id"),
-        ShingleExprs.shingleSetChars(col(textCol), index.n).as("ng"))
-      .filter(col("ng").isNotNull && size(col("ng")) >= 1)
-      .withColumn("sz", size(col("ng")))
-    val d =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        d0.checkpoint(eager = true)
-      else d0.localCheckpoint(eager = true)
-    val c = index.docs.select(col("id"), col("ng"), col("sz"),
-      col("prefix"))
-    val deltaDf = d.select(explode(col("ng")).as("gram")).distinct()
-      .join(index.gramDf, Seq("gram"), "left")
-      .select(col("gram"), coalesce(col("df"), lit(0L)).as("df"))
-    val dPrefix = d.crossJoin(broadcast(jaccardDictRow(deltaDf)))
-      .select(col("id"), col("sz"),
-        PrefixExprs.rankedPrefixGrams(col("ng"),
-          col("dict_grams"), col("dict_dfs"), tLow).as("prefix"))
-    def szOk = col("_sb") >= ceil(lit(tLow.toDouble) * col("_sa"))
-    // route 1: delta docs as the CONTAINED side vs every full gram set
-    val containers = c
-      .select(col("id").as("_b"), col("sz").as("_sb"),
-        explode(col("ng")).as("gram"))
-      .unionByName(d.select(col("id").as("_b"), col("sz").as("_sb"),
-        explode(col("ng")).as("gram")))
-    val cand1 = dPrefix
-      .select(col("id").as("_a"), col("sz").as("_sa"),
-        explode(col("prefix")).as("gram"))
-      .join(containers, Seq("gram"))
-      .filter(szOk && col("_a") =!= col("_b"))
-      .select(col("_a"), col("_b"))
-    // route 2: corpus docs as the CONTAINED side vs DELTA containers
-    // only (corpus×corpus cannot form)
-    val cand2 = c
-      .select(col("id").as("_a"), col("sz").as("_sa"),
-        explode(col("prefix")).as("gram"))
-      .join(d.select(col("id").as("_b"), col("sz").as("_sb"),
-        explode(col("ng")).as("gram")), Seq("gram"))
-      .filter(szOk && col("_a") =!= col("_b"))
-      .select(col("_a"), col("_b"))
-    val cands = cand1.unionByName(cand2).distinct()
-    val all = c.select(col("id"), col("ng"), col("sz"))
-      .unionByName(d.select(col("id"), col("ng"), col("sz")))
-    cands
+    requireContainmentThreshold("containmentPairsDelta", index.threshold)
+    val d = Materialize.eager(gramSetRows(delta, index.n, idCol, textCol))
+    containmentJoin(d,
+      rankPrefixes(d, Some(index.gramDf), probingPrefix(index.threshold)),
+      Some(index.docs), index.threshold)
+  }
+
+  private[graft] def requireContainmentThreshold(route: String,
+      threshold: Double): Unit =
+    require(threshold > 0 && threshold <= 1,
+      s"$route: threshold must be in (0,1], got $threshold")
+
+  /** The containment kernel behind every route: all ordered pairs
+    * (a, b), a ≠ b, with |g(a) ∩ g(b)| / |g(a)| ≥ `threshold` among the
+    * `probe` docs and, given a `corpus`, between probe and corpus docs
+    * — never corpus×corpus. `probe` carries the probe docs' gram sets
+    * `(id, ng, sz)`, `probePrefix` the same docs' `(id, sz, prefix)`
+    * ([[rankPrefixes]]; one relation may serve both), `corpus` index
+    * rows `(id, ng, sz, prefix)`. Routes pass their unranked gram sets
+    * as `probe`, so the set-side reads never carry the dictionary join.
+    *
+    *  - Route 1: the probe prefixes join the full gram sets of
+    *    probe ∪ corpus (probe docs as the CONTAINED side).
+    *  - Route 2, only with a corpus: the corpus prefixes join the
+    *    probe's full sets (corpus docs contained in probe docs).
+    *
+    * Exact with no order shared between the two sides: the prefix
+    * filter is ONE-sided — the container side is always the full gram
+    * set — and against a full set ANY |A| − ⌈t·|A|⌉ + 1 grams of A are
+    * a lossless probe subset (if none hits B, overlap < ⌈t·|A|⌉), so
+    * probe and corpus prefixes may rank under different orders;
+    * rare-first is purely the candidate-cost choice. The lossless size
+    * bound |B| ≥ ⌈t·|A|⌉ is fused into each candidate join (the 1e-12
+    * slack keeps the exact-multiple boundary on the safe side of
+    * double ceil). Candidates dedup to (a, b), fetch both gram sets by
+    * two id-keyed joins, and verify with ONE [[SetExprs]] merge; the
+    * int/int division is exactly rounded, so the score is
+    * engine-portable bit-for-bit. Output: (doc_a, doc_b, containment). */
+  private[graft] def containmentJoin(probe: DataFrame,
+      probePrefix: DataFrame, corpus: Option[DataFrame],
+      threshold: Double): DataFrame = {
+    val tLow = (BigDecimal.valueOf(threshold) - BigDecimal("1e-12")).toDouble
+    def cands(contained: DataFrame, containers: DataFrame): DataFrame =
+      contained.select(col("id").as("_a"), col("sz").as("_sa"),
+          prefixGrams.as("gram"))
+        .join(containers.select(col("id").as("_b"), col("sz").as("_sb"),
+          explode(col("ng")).as("gram")), Seq("gram"))
+        .filter(col("_sb") >= ceil(lit(tLow) * col("_sa")) &&
+          col("_a") =!= col("_b"))
+        .select(col("_a"), col("_b"))
+    val sets = probe.select(col("id"), col("ng"), col("sz"))
+    val all = corpus.fold(sets)(
+      _.select(col("id"), col("ng"), col("sz")).unionByName(sets))
+    val pairs = corpus.fold(cands(probePrefix, sets))(c =>
+      cands(probePrefix, all).unionByName(cands(c, sets)))
+    pairs.distinct()
       .join(all.select(col("id").as("_a"), col("ng").as("_nga"),
         col("sz").as("_sza")), Seq("_a"))
-      .join(all.select(col("id").as("_b"), col("ng").as("_ngb")),
-        Seq("_b"))
+      .join(all.select(col("id").as("_b"), col("ng").as("_ngb")), Seq("_b"))
       .select(col("_a").as("doc_a"), col("_b").as("doc_b"),
         (SetExprs.sortedIntersectSize(col("_nga"), col("_ngb"))
           .cast("double") / col("_sza").cast("double")).as("_c"))
-      .filter(col("_c") >= t)
+      .filter(col("_c") >= threshold)
       .select(col("doc_a"), col("doc_b"),
         round(col("_c"), 6).as("containment"))
   }
 
+  /** `(id, extra…, ng, sz)` rows: each doc's sorted hashed char n-gram
+    * set from one doc-local kernel pass, and its size. Docs shorter
+    * than `n` chars have no gram set and drop. */
+  private[graft] def gramSetRows(docs: DataFrame, n: Int, idCol: String,
+      textCol: String, extra: Column*): DataFrame =
+    docs
+      .select((col(idCol).as("id") +: extra) :+
+        ShingleExprs.shingleSetChars(col(textCol), n).as("ng"): _*)
+      .filter(col("ng").isNotNull)
+      .withColumn("sz", size(col("ng")))
+
   /** The persisted prefix index for incremental n-gram Jaccard joins
-    * ([[ngramJaccardDelta]]): `docs` carries one row per corpus doc —
-    * (id, ng sorted hashed gram set, sz, prefix probing-prefix array
-    * under the corpus rare-first order); `gramDf` the corpus gram
+    * ([[ngramJaccardDelta]]) and containment joins
+    * ([[containmentPairsDelta]]): `docs` carries one row per corpus doc
+    * — (id, blk, ng sorted hashed gram set, sz, prefix probing-prefix
+    * array under the corpus rare-first order); `gramDf` the corpus gram
     * document frequencies that FREEZE that order for later delta
     * probes. `threshold`/`n` are baked into the prefix arrays, so the
     * delta probe takes them from the index, not from arguments. Both
@@ -1200,7 +1148,7 @@ object Dedup {
     * with their dfs aligned, as the prefix-rank kernels' binary search
     * needs ([[graft.functions.RankedPrefixGrams]],
     * [[graft.functions.RankedPrefixGramsK]]). */
-  private[operators] def jaccardDictRow(gramDf: DataFrame): DataFrame =
+  private def jaccardDictRow(gramDf: DataFrame): DataFrame =
     gramDf
       .agg(array_sort(collect_list(struct(col("gram"), col("df"))))
         .as("gd"))
@@ -1208,12 +1156,62 @@ object Dedup {
         transform(col("gd"), x => x.getField("gram")).as("dict_grams"),
         transform(col("gd"), x => x.getField("df")).as("dict_dfs"))
 
+  /** (gram, df) of gram-set rows: `ng` is a SET, so the count per gram
+    * is its document frequency. */
+  private[graft] def docFrequencies(rows: DataFrame): DataFrame =
+    rows.select(explode(col("ng")).as("gram"))
+      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
+
+  /** The prefix-rank step every rare-first prefix filter shares
+    * (x70/x87 edit distance, x101 Jaccard, x114/x117 containment and
+    * their indexes): `rows` plus a `prefix` column — each doc's gram
+    * set `ng` ranked (df asc, gram asc) and cut by the `prefix` kernel
+    * ([[probingPrefix]] or [[graft.functions.RankedPrefixGramsK]]
+    * applied to (ng, dict_grams, dict_dfs)). A null `ng` gets a null
+    * prefix.
+    *
+    * The order: `None` ranks under the rows' OWN gram df (a batch route
+    * or a corpus index); `Some(gramDf)` under a FROZEN corpus (gram, df)
+    * relation — the rows' gram universe left-joined onto it, unseen
+    * grams at df 0 (rarest; an unseen gram matches no indexed doc, so
+    * freezing perturbs no stored prefix, and a delta ranked this way
+    * shares the corpus total order the prefix-filter theorem needs).
+    * The dictionary rides a one-row broadcast bounded by the gram
+    * vocabulary (char n-grams: ≤ charset^n) and each doc ranks its own
+    * grams in the kernel — no shuffle beyond the df count. */
+  private[graft] def rankPrefixes(rows: DataFrame,
+      order: Option[DataFrame],
+      prefix: (Column, Column, Column) => Column): DataFrame = {
+    val dict = order.fold(docFrequencies(rows))(frozen =>
+      rows.select(explode(col("ng")).as("gram")).distinct()
+        .join(frozen, Seq("gram"), "left")
+        .select(col("gram"), coalesce(col("df"), lit(0L)).as("df")))
+    rows.crossJoin(broadcast(jaccardDictRow(dict)))
+      .select(rows.columns.map(col) :+ prefix(col("ng"),
+        col("dict_grams"), col("dict_dfs")).as("prefix"): _*)
+  }
+
+  /** One row per gram of ranked rows' `prefix`. Outer on purpose: a
+    * plain explode of the projected column lets the optimizer infer
+    * `size(prefix) > 0` and push it, kernel inlined, into the
+    * dictionary join — ranking every doc twice. The null gram an empty
+    * prefix yields matches no equi-join key. */
+  private[graft] def prefixGrams: Column = explode_outer(col("prefix"))
+
+  /** The probing-prefix kernel at Jaccard/containment threshold `t`:
+    * the first |A| − ⌈t·|A|⌉ + 1 ranked grams, on t nudged down by
+    * 1e-12 in exact decimal (the [[ngramJaccardBlocked]] slack — it
+    * only ever lengthens a prefix). */
+  private[graft] def probingPrefix(
+      t: Double): (Column, Column, Column) => Column =
+    PrefixExprs.rankedPrefixGrams(_, _, _,
+      BigDecimal.valueOf(t) - BigDecimal("1e-12"))
+
   /** Build the [[JaccardIndex]] for a corpus: one shingle projection,
-    * one gram-df aggregate, one broadcast-ranked prefix projection —
-    * the [[EditSimilarity.editIndex]] discipline for the Jaccard
-    * family. The df dictionary rides a one-row broadcast bounded by
-    * the corpus's gram vocabulary (the dictionary contract of
-    * [[ngramJaccardBlocked]]).
+    * one gram-df aggregate, one broadcast-ranked prefix projection
+    * ([[rankPrefixes]] under the corpus's own order) — the
+    * [[EditSimilarity.editIndex]] discipline for the Jaccard family.
+    * Thresholds in (0, 1]: t = 1 is exact-set search.
     *
     * `blockCol` (recommended at corpus scale, matching
     * [[ngramJaccardBlocked]]'s contract): pairs are generated within a
@@ -1224,70 +1222,18 @@ object Dedup {
   def jaccardIndex(corpus: DataFrame, threshold: Double = 0.5,
       n: Int = 3, blockCol: Option[String] = None,
       idCol: String = "doc_id", textCol: String = "text"): JaccardIndex = {
-    require(threshold > 0 && threshold < 1,
-      s"jaccardIndex: threshold must be in (0,1), got $threshold")
-    val tLow = BigDecimal.valueOf(threshold) - BigDecimal("1e-12")
-    val blk = blockCol.map(c => col(c)).getOrElse(lit(""))
-    val spark = corpus.sparkSession
-    // checkpoint-style reuse across the df count and the prefix
-    // projection — never a CacheManager pin the caller cannot release
-    // (the containmentPairs lifecycle discipline)
-    val g0 = corpus
-      .select(col(idCol).as("id"), blk.as("blk"),
-        ShingleExprs.shingleSetChars(col(textCol), n).as("ng"))
-      .filter(col("ng").isNotNull)
-      .withColumn("sz", size(col("ng")))
-    val g =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        g0.checkpoint(eager = true)
-      else g0.localCheckpoint(eager = true)
-    val gramDf = g.select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
+    require(threshold > 0 && threshold <= 1,
+      s"jaccardIndex: threshold must be in (0,1], got $threshold")
+    val g = Materialize.eager(gramSetRows(corpus, n, idCol, textCol,
+      blockCol.map(c => col(c)).getOrElse(lit("")).as("blk")))
     // docs stays LAZY here (round-17 A/B): an eager materialization was
     // tried and lost on containmentPairsDelta (checkpoint blocks are
     // row-format, so the three consumers that prune `prefix` away
     // would pay full-row deserialization of the prefix arrays), while
     // consumers that DO reuse the prefix kernel (ngramJaccardDelta)
     // materialize at their own call site where the trade is positive.
-    val docs = g.crossJoin(broadcast(jaccardDictRow(gramDf)))
-      .select(col("id"), col("blk"), col("ng"), col("sz"),
-        PrefixExprs.rankedPrefixGrams(col("ng"),
-          col("dict_grams"), col("dict_dfs"), tLow).as("prefix"))
-    JaccardIndex(docs, gramDf, threshold, n)
-  }
-
-  /** Index rows for a DELTA batch under a FROZEN corpus df order —
-    * the incremental extension of [[jaccardIndex]]: (id, ng, sz,
-    * prefix) for the batch's docs, prefixes ranked against the
-    * supplied corpus `gramDf` with unseen grams at df 0 (the x87
-    * discipline — rarest-first, and an unseen gram cannot match any
-    * already-indexed doc, so freezing perturbs nothing). Appending
-    * these rows (plus the batch's own (gram, count) contributions to
-    * the df relation) keeps a growing [[JaccardIndex]] without ever
-    * rebuilding corpus prefixes — each doc's stored prefix is a
-    * lossless probe set under SOME total order, which is all the
-    * one-sided containment argument ([[containmentPairsDelta]]) and
-    * the common-order prefix theorem ([[ngramJaccardDelta]], whose
-    * probes rank under the same frozen order) require. Streaming
-    * composition: [[graft.streaming.StreamContainment]]. */
-  def jaccardIndexDelta(delta: DataFrame, gramDf: DataFrame,
-      threshold: Double, n: Int, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(threshold > 0 && threshold < 1,
-      s"jaccardIndexDelta: threshold must be in (0,1), got $threshold")
-    val tLow = BigDecimal.valueOf(threshold) - BigDecimal("1e-12")
-    val d = delta
-      .select(col(idCol).as("id"),
-        ShingleExprs.shingleSetChars(col(textCol), n).as("ng"))
-      .filter(col("ng").isNotNull && size(col("ng")) >= 1)
-      .withColumn("sz", size(col("ng")))
-    val deltaDf = d.select(explode(col("ng")).as("gram")).distinct()
-      .join(gramDf, Seq("gram"), "left")
-      .select(col("gram"), coalesce(col("df"), lit(0L)).as("df"))
-    d.crossJoin(broadcast(jaccardDictRow(deltaDf)))
-      .select(col("id"), col("ng"), col("sz"),
-        PrefixExprs.rankedPrefixGrams(col("ng"),
-          col("dict_grams"), col("dict_dfs"), tLow).as("prefix"))
+    JaccardIndex(rankPrefixes(g, None, probingPrefix(threshold)),
+      docFrequencies(g), threshold, n)
   }
 
   /** Incremental (delta) n-gram Jaccard similarity join: all pairs
@@ -1320,7 +1266,6 @@ object Dedup {
       blockCol: Option[String] = None, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val tLow = BigDecimal.valueOf(index.threshold) - BigDecimal("1e-12")
-    val blk = blockCol.map(c => col(c)).getOrElse(lit(""))
     // the corpus index rows feed TWO consumers below (prefix explode +
     // verify gram fetch); when they arrive as a LIVE derived plan (the
     // x101 in-query build: dict broadcast + prefix kernel over the
@@ -1333,20 +1278,10 @@ object Dedup {
       if (Parallelism.scanOnly(index.docs.queryExecution.analyzed))
         index.docs
       else Materialize.eager(index.docs)
-    val d = delta
-      .select(col(idCol).as("id"), blk.as("blk"),
-        ShingleExprs.shingleSetChars(col(textCol), index.n).as("ng"))
-      .filter(col("ng").isNotNull)
-      .withColumn("sz", size(col("ng")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // frozen-order dictionary restricted to the delta's gram universe
-    val deltaDf = d.select(explode(col("ng")).as("gram")).distinct()
-      .join(index.gramDf, Seq("gram"), "left")
-      .select(col("gram"), coalesce(col("df"), lit(0L)).as("df"))
-    val dPrefix = d.crossJoin(broadcast(jaccardDictRow(deltaDf)))
-      .select(col("id"), col("blk"), col("sz"),
-        PrefixExprs.rankedPrefixGrams(col("ng"),
-          col("dict_grams"), col("dict_dfs"), tLow).as("prefix"))
+    val d = Materialize.eager(gramSetRows(delta, index.n, idCol, textCol,
+      blockCol.map(c => col(c)).getOrElse(lit("")).as("blk")))
+    val dPrefix =
+      rankPrefixes(d, Some(index.gramDf), probingPrefix(index.threshold))
     // posexplode recovers each gram's rank in the doc's rare-first
     // prefix, from which the PPJoin pruning ingredients (indexing-
     // prefix membership `ixp`, size bound `minSz`, positional-filter

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{PrefixExprs, ShingleExprs}
@@ -65,38 +65,26 @@ object EditSimilarity {
 
   /** All unordered pairs with Levenshtein distance ≤ `maxDist`.
     * Output: (a_id, b_id, dist) with a_id < b_id, dist ≤ maxDist.
-    * Prefixes rank through the one-row broadcast df dictionary, whose
-    * size is bounded by the q-gram vocabulary.
-    *
-    * Cache lifecycle: the returned (lazy) plan references a persisted
-    * per-doc gram relation from several branches — the CALLER owns
-    * releasing it (`spark.catalog.clearCache()` or session end) once the
-    * result is consumed, the same contract as `Dedup.minhashLsh` /
-    * `connectedComponents`' driver route. */
+    * Prefixes rank under the docs' own df order ([[Dedup.rankPrefixes]]),
+    * whose one-row dictionary is bounded by the q-gram vocabulary. The
+    * per-doc gram relation is [[Materialize]]d, so no CacheManager
+    * entry outlives the returned plan. */
   def editDistancePairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxDist: Int = 20,
       q: Int = 4): DataFrame = {
     require(maxDist >= 0, s"editDistancePairs: maxDist must be >= 0, got $maxDist")
     require(q >= 2, s"editDistancePairs: q must be >= 2, got $q")
-    val prefixLen = q * maxDist + 1
 
     // checkpoint-style materialization, not persist: g rides into the
     // returned plan, so a cache entry would be caller-unreleasable
     val g = Materialize.eager(gramRelation(docs, idCol, textCol, q))
 
     // route 1: prefix-gram equality join (sound for every pair where at
-    // least one side has > q·maxDist grams). The df dictionary is one
-    // broadcast row (gram-ascending aligned arrays, as the kernel's
-    // binary search requires); ng is a SET, so count(*) per gram is
-    // document frequency.
-    val gramDf = g.filter(col("ng").isNotNull)
-      .select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val pre = g.filter(col("ng").isNotNull)
-      .crossJoin(broadcast(Dedup.jaccardDictRow(gramDf)))
-      .select(col("id"), col("len"),
-        explode(PrefixExprs.rankedPrefixGramsK(col("ng"),
-          col("dict_grams"), col("dict_dfs"), prefixLen)).as("gram"))
+    // least one side has > q·maxDist grams), prefixes ranked under the
+    // docs' own df order
+    val pre = Dedup.rankPrefixes(g.filter(col("ng").isNotNull), None,
+        edJoinPrefix(q, maxDist))
+      .select(col("id"), col("len"), Dedup.prefixGrams.as("gram"))
     val prefixCands = pre.as("a").join(pre.as("b"),
       col("a.gram") === col("b.gram") &&
         col("a.id") < col("b.id") &&
@@ -135,6 +123,12 @@ object EditSimilarity {
       .filter(col("dist") >= 0)
       .select(col("a_id"), col("b_id"), col("dist"))
   }
+
+  /** The Ed-Join prefix kernel for [[Dedup.rankPrefixes]]: the first
+    * q·maxDist + 1 ranked grams. */
+  private def edJoinPrefix(q: Int,
+      maxDist: Int): (Column, Column, Column) => Column =
+    PrefixExprs.rankedPrefixGramsK(_, _, _, q * maxDist + 1)
 
   /** Per-doc gram relation (id, t, len, ng, n_grams) — the doc-local
     * codegen pass every route starts from. */
@@ -179,20 +173,12 @@ object EditSimilarity {
       idCol: String = "doc_id", textCol: String = "text"): EditIndex = {
     require(maxDist >= 0, s"editIndex: maxDist must be >= 0, got $maxDist")
     require(q >= 2, s"editIndex: q must be >= 2, got $q")
-    val prefixLen = q * maxDist + 1
     // materialized checkpoint-style: g rides inside the returned
     // EditIndex plans (caller-unreleasable if persisted)
     val g = Materialize.eager(
       gramRelation(corpus, idCol, textCol, q, fanOut = false))
-    val gramDf = g.filter(col("ng").isNotNull)
-      .select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val docs = g.crossJoin(broadcast(Dedup.jaccardDictRow(gramDf)))
-      .select(col("id"), col("t"), col("len"), col("ng"), col("n_grams"),
-        when(col("ng").isNotNull,
-          PrefixExprs.rankedPrefixGramsK(col("ng"),
-            col("dict_grams"), col("dict_dfs"), prefixLen)).as("prefix"))
-    EditIndex(docs, gramDf, q, maxDist)
+    EditIndex(Dedup.rankPrefixes(g, None, edJoinPrefix(q, maxDist)),
+      Dedup.docFrequencies(g), q, maxDist)
   }
 
   /** Incremental (delta) bounded-edit-distance join: all pairs with
@@ -220,29 +206,18 @@ object EditSimilarity {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val q = index.q
     val maxDist = index.maxDist
-    val prefixLen = q * maxDist + 1
     val d = Materialize.eager(
       gramRelation(delta, idCol, textCol, q, fanOut = false))
 
-    // frozen-order dictionary restricted to the delta's gram universe:
-    // corpus df, 0 for grams the corpus has never seen
-    val deltaDf = d.filter(col("ng").isNotNull)
-      .select(explode(col("ng")).as("gram")).distinct()
-      .join(index.gramDf, Seq("gram"), "left")
-      .select(col("gram"), coalesce(col("df"), lit(0L)).as("df"))
-    val dPrefix = d.filter(col("ng").isNotNull)
-      .crossJoin(broadcast(Dedup.jaccardDictRow(deltaDf)))
-      .select(col("id"), col("len"),
-        PrefixExprs.rankedPrefixGramsK(col("ng"),
-          col("dict_grams"), col("dict_dfs"), prefixLen).as("prefix"))
+    // the delta ranks under the index's frozen df order
+    val dPrefix = Dedup.rankPrefixes(d.filter(col("ng").isNotNull),
+      Some(index.gramDf), edJoinPrefix(q, maxDist))
 
     // route 1: delta prefixes probe (delta ∪ corpus) prefixes
     def explodePrefix(rel: DataFrame): DataFrame =
-      rel.select(col("id"), col("len"), explode(col("prefix")).as("gram"))
+      rel.select(col("id"), col("len"), Dedup.prefixGrams.as("gram"))
     val preDelta = explodePrefix(dPrefix)
-    val preAll = preDelta.unionByName(explodePrefix(
-      index.docs.filter(col("prefix").isNotNull)
-        .select(col("id"), col("len"), col("prefix"))))
+    val preAll = preDelta.unionByName(explodePrefix(index.docs))
     val prefixCands = preDelta.as("a").join(preAll.as("b"),
       col("a.gram") === col("b.gram") &&
         col("a.id") =!= col("b.id") &&

@@ -298,9 +298,11 @@ object Multimodal {
         crossOnly = crossOnly)
       .select(col("doc_a").as(a), col("doc_b").as(b))
       .distinct()
-    val vecs = bk.select(col("id"), col("v"))
+    // one (id, v) row per media, computed once: cosineVerify reads it
+    // on both sides of the pair
+    val vecs = Materialize.eager(bk.select(col("id"), col("v"))
       .unionByName(hits.select(col("id"), col("v")))
-      .dropDuplicates("id")
+      .dropDuplicates("id"))
     cosineVerify(pairs, a, b, vecs, vecs, threshold)
   }
 

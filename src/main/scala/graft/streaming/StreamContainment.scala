@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** Streaming containment join — the x117 delta containment composed
   * online with the [[StreamCorpusLoop]] store protocol: one
@@ -12,13 +12,15 @@ import graft.operators.Dedup
   *   1. reads the growing prefix index (per-doc (id, ng, sz, prefix)
   *      rows plus the corpus (gram, df) relation) from one-bucket
   *      [[TieredIndex]] stores, STRICTLY BELOW the batch;
-  *   2. emits every ordered containment pair TOUCHING the batch via
-  *      [[Dedup.containmentPairsDelta]] — delta-contained-in-(corpus ∪
-  *      delta) and corpus-contained-in-delta, never corpus×corpus —
-  *      appended to the `pairs` store as the batch's rows;
-  *   3. appends the batch's own index rows
-  *      ([[Dedup.jaccardIndexDelta]], prefixes ranked under the FROZEN
-  *      corpus df order — x87) and its (gram, count) df contributions.
+  *   2. ranks the batch's gram sets ONCE under the FROZEN corpus df
+  *      order (x87; [[Dedup.rankPrefixes]]) and materializes them;
+  *   3. emits every ordered containment pair TOUCHING the batch — the
+  *      x117 kernel ([[Dedup.containmentJoin]]) against the index:
+  *      delta-contained-in-(corpus ∪ delta) and corpus-contained-in-
+  *      delta, never corpus×corpus — appended to the `pairs` store as
+  *      the batch's rows;
+  *   4. appends those same ranked rows to the index and their
+  *      (gram, count) df contributions to the df store.
   *
   * Exactly-once pair semantics: a qualifying ordered pair (a, b)
   * surfaces in precisely the batch where its LATER-arriving endpoint
@@ -61,37 +63,35 @@ object StreamContainment {
       .groupBy(col("gram")).agg(sum(col("df")).as("df"))
 
   /** Fold one micro-batch: emit its touching pairs, then append its
-    * index rows and df contributions (the testable core; [[sink]]
-    * adapts it to `foreachBatch` and runs the stores' maintenance). */
+    * index rows and df contributions — all three from one ranked
+    * relation (the testable core; [[sink]] adapts it to `foreachBatch`
+    * and runs the stores' maintenance). Thresholds in (0, 1]. */
   def foldBatch(dir: String, batch: DataFrame, batchId: Long,
       threshold: Double = 0.9, n: Int = 12, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
+    Dedup.requireContainmentThreshold("StreamContainment", threshold)
     val spark = batch.sparkSession
     val (cindex, gramDf, pairs) =
       (indexStore(dir), gramStore(dir), pairStore(dir))
-    val corpusDf = gramDfBelow(spark, dir, batchId)
-    val index = Dedup.JaccardIndex(
-      cindex.corpusKeys(spark, batchId), corpusDf, threshold, n)
-    pairs.append(Dedup.containmentPairsDelta(batch, index, idCol, textCol),
-      batchId)
-    cindex.append(Dedup.jaccardIndexDelta(batch, corpusDf, threshold, n,
-      idCol, textCol), batchId)
-    gramDf.append(batch
-      .select(graft.functions.ShingleExprs
-        .shingleSetChars(col(textCol), n).as("ng"))
-      .filter(col("ng").isNotNull && size(col("ng")) >= 1)
-      .select(explode(col("ng")).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("df")), batchId)
+    val rows = Materialize.eager(Dedup.rankPrefixes(
+      Dedup.gramSetRows(batch, n, idCol, textCol),
+      Some(gramDfBelow(spark, dir, batchId)), Dedup.probingPrefix(threshold)))
+    pairs.append(Dedup.containmentJoin(rows, rows,
+      Some(cindex.corpusKeys(spark, batchId)), threshold), batchId)
+    cindex.append(rows, batchId)
+    gramDf.append(Dedup.docFrequencies(rows), batchId)
   }
 
   /** `foreachBatch` adapter; after folding batch N it runs each
     * store's [[TieredIndex.maintain]] (folds every `compactEvery`
     * committed batches) — safe inside the serialized callback, the
-    * [[StreamCorpusLoop.sink]] contract; the stores' layout is checked
-    * once, when the function is built. */
+    * [[StreamCorpusLoop.sink]] contract; the threshold and the stores'
+    * layout are checked once, when the function is built — before the
+    * query starts. */
   def sink(dir: String, threshold: Double = 0.9, n: Int = 12,
       idCol: String = "doc_id", textCol: String = "text",
       compactEvery: Int = 16): (DataFrame, Long) => Unit = {
+    Dedup.requireContainmentThreshold("StreamContainment", threshold)
     TieredIndex.trigger[Row]("StreamContainment", stores(dir),
       compactEvery)(foldBatch(dir, _, _, threshold, n, idCol, textCol))
   }

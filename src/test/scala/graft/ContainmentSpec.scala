@@ -101,6 +101,10 @@ class ContainmentSpec extends SparkTestBase {
       val d = Dedup.containmentPairsDelta(delta,
         Dedup.jaccardIndex(corpus, threshold = 0.8, n = 8))
       assert(d.count() >= 0)
+      // x101: the Jaccard delta route over an in-query index
+      val j = Dedup.ngramJaccardDelta(delta,
+        Dedup.jaccardIndex(corpus, threshold = 0.5, n = 3))
+      assert(j.count() >= 0)
     }
     run()
     // a CacheManager entry (Dataset.persist) holds a strong reference

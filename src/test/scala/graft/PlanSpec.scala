@@ -330,6 +330,24 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("containment: the batch route is the containment kernel against " +
+    "no corpus, which plans as the plain self-join — no Union — and both " +
+    "routes keep the exchange counts of their hand-written joins") {
+    // the exchange counts these queries planned before the kernel
+    val p114 = plan("x114_containment")
+    assert(!p114.contains("Union"), p114)
+    assert(p114.linesIterator.count(_.contains("Exchange")) === 7, p114)
+    val p117 = plan("x117_containment_delta")
+    assert(p117.linesIterator.count(_.contains("Exchange")) === 19, p117)
+  }
+
+  test("x163 media delta: the deduped vector relation is computed once " +
+    "per call, so the plan holds no per-side vector aggregate") {
+    val p = plan("x163_media_dedup_delta")
+    assert(!p.contains("first(v"), p)
+    assert(p.linesIterator.count(_.contains("Exchange")) === 4, p)
+  }
+
   test("x151 rp distortion: the audit sample broadcasts (no shuffled " +
     "self-join), and the id filter reaches the parquet scan") {
     val p = plan("x151_rp_distortion")

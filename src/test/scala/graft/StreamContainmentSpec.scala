@@ -19,8 +19,9 @@ class StreamContainmentSpec extends SparkTestBase {
   private val threshold = 0.9
   private val n = 12
 
-  private def batchWant(docs: DataFrame): Set[(Long, Long, Double)] =
-    Dedup.containmentPairs(docs, threshold = threshold, n = n)
+  private def batchWant(docs: DataFrame,
+      t: Double = threshold): Set[(Long, Long, Double)] =
+    Dedup.containmentPairs(docs, threshold = t, n = n)
       .as[(Long, Long, Double)].collect().toSet
 
   test("N micro-batches equal batch containmentPairs after every " +
@@ -124,5 +125,41 @@ class StreamContainmentSpec extends SparkTestBase {
       assert(snapshot() === batchWant(closedAll),
         "post-compaction fold equals the closed-corpus batch join")
     } finally q.stop()
+  }
+
+  test("at threshold 1.0 the stream equals containmentPairs at 1.0 " +
+    "(exact containment: one-gram probing prefixes)") {
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("stream-containment-t1-").toString
+    val all = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val (first, second) = all.splitAt(all.size / 2)
+    // re-keyed copies of first-batch docs contain their originals
+    // exactly, so the fixture always holds containment-1.0 pairs
+    val batches = Seq(first,
+      second ++ first.take(20).map { case (id, t) => (id + 1000000L, t) })
+    val in = MemoryStream[(Long, String)]
+    val q = in.toDF().toDF("doc_id", "text")
+      .writeStream
+      .foreachBatch(StreamContainment.sink(dir, 1.0, n))
+      .option("checkpointLocation",
+        Files.createTempDirectory("stream-containment-t1-ckpt-").toString)
+      .start()
+    try {
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      val got = StreamContainment.pairs(spark, dir)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got.nonEmpty, "fixture must produce containment-1.0 pairs")
+      assert(got === batchWant(batches.flatten.toDF("doc_id", "text"), 1.0))
+    } finally q.stop()
+  }
+
+  test("a threshold outside (0, 1] is rejected when the sink is built, " +
+    "before any query starts") {
+    val dir = Files.createTempDirectory("stream-containment-bad-").toString
+    for (t <- Seq(0.0, 1.5))
+      intercept[IllegalArgumentException] {
+        StreamContainment.sink(dir, threshold = t, n = n)
+      }
   }
 }
