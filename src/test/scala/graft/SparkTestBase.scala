@@ -84,6 +84,8 @@ object SparkTestBase {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
+      // and against the production local filesystem
+      .config(Engine.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
