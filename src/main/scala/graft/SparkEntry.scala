@@ -360,7 +360,7 @@ object SparkEntry {
     "x12_cosine_dedup" -> ((s, dir) =>
       Similarity.cosineDedupBlocked(Tables.embeddings(s, dir), "label", 0.3)),
     // incremental ANN: a NEW batch of vectors probes the corpus through
-    // the PERSISTED FULL index — quantizer AND cell-partitioned
+    // the PERSISTED FULL index — quantizer AND cell-bucketed
     // inverted lists (IvfIndex). The index is built ONCE per corpus
     // (training is deterministic, so the artifact is a pure function
     // of the corpus; a stable warehouse-rooted path keyed by the data
@@ -387,10 +387,10 @@ object SparkEntry {
     }),
     // incremental index MAINTENANCE (the other half of the delta
     // story next to x97's pruned probe): the index is built on the
-    // base corpus, the delta batch is APPENDED under the frozen
-    // quantizer (assigned + written into a new epoch of its cell
-    // partitions — cost ∝ |delta|, no training, no corpus pass; meta
-    // commits the epoch count last, so a torn append is invisible),
+    // base corpus (batch 0 of its lists and masses stores), the delta
+    // is APPENDED under the frozen quantizer as batch 1 (assigned and
+    // written into its own cell buckets — cost ∝ |delta|, no training,
+    // no corpus pass; a replayed batch id overwrites its own dirs),
     // and queries then search the appended index — gate = recall vs
     // the exact scan over the UNION, so the appended vectors must be
     // first-class neighbors
@@ -403,7 +403,7 @@ object SparkEntry {
       val approx = Artifacts.cached(s, "x148_ivf_appended",
           Artifacts.tableFingerprint(dir, "embeddings")) { p =>
         graft.operators.IvfIndex.build(base, p, nLists = 16)
-        graft.operators.IvfIndex.append(s, p, delta)
+        graft.operators.IvfIndex.append(s, p, delta, batchId = 1)
       } { p =>
         graft.operators.IvfIndex.search(s, p, queries, k = 10, nProbe = 12)
       }
@@ -1595,12 +1595,12 @@ object SparkEntry {
         Similarity.cosineTopK(emb, qs, k = 10),
         floor = AnnIvfPqRecallFloor)
     }),
-    // x84 through the PERSISTED index (IvfIndex): cell-partitioned
+    // x84 through the PERSISTED index (IvfIndex): cell-bucketed
     // lists carry the PQ codes, cell masses come from the index's own
-    // cellstats (never a per-batch corpus aggregate), the adaptive
-    // mass probe prunes the read to the probed cell partitions, and
+    // masses store (never a per-batch corpus aggregate), the adaptive
+    // mass probe prunes the read to the probed cell buckets, and
     // the IVFADC re-rank fetches raw vectors from those same pruned
-    // partitions — the full billion-scale query shape with ZERO
+    // buckets — the full billion-scale query shape with ZERO
     // corpus-table passes at query time. Row-for-row equal to the
     // x84 recompute route (IvfIndexSpec law), so the recall gate and
     // floor are x84's

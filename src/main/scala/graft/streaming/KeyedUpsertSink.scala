@@ -83,11 +83,6 @@ object KeyedUpsertSink {
     s
   }
 
-  /** Append one micro-batch of full-state rows to the opened table. */
-  private[graft] def upsert(table: TieredIndex, rows: DataFrame,
-      batchId: Long): Unit =
-    table.append(rows, batchId)
-
   /** The table: per key, the row of the newest batch. */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val (schema, keys) = readMeta(spark, tableDir).getOrElse(
@@ -113,7 +108,7 @@ object KeyedUpsertSink {
       schema: StructType, keys: Seq[String]): (DataFrame, Long) => Unit = {
     val table = store(tableDir, schema, keys)
     val run = TieredIndex.trigger[Row]("KeyedUpsertSink", Seq(table),
-      CompactEvery)(upsert(table, _, _))
+      CompactEvery)(table.append)
     open(spark, tableDir, schema, keys)
     run
   }

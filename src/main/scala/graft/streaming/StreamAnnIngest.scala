@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.IvfIndex
 
@@ -18,26 +18,25 @@ import graft.operators.IvfIndex
   * discipline), and every streamed batch is assigned (and, on a PQ
   * index, encoded) with the artifact's own centroids/codebooks, so
   * assignments stay consistent with every previous batch by
-  * construction. The sink is deliberately THIN — per batch, one
-  * [[IvfIndex.append]] call: the assignment projection, the
-  * epoch-partitioned cell write, and the crash-safe commit order all
-  * live in the operator; what the sink adds is exactly-once.
+  * construction. The sink opens the index once, at start — an absent,
+  * torn or older-version index fails there, before the query runs —
+  * and is one [[TieredIndex.trigger]] over the index's lists and
+  * masses stores: streaming batch `b` is store batch `b + 1` (batch 0
+  * is the seed), appended by [[IvfIndex.append]] and then folded on
+  * the stores' schedule (every 16 committed batches).
   *
-  * '''Exactly-once''': each batch appends under tag `batch_<id>`,
-  * which commits atomically with the epoch bump in the index meta
-  * (see [[IvfIndex.append]]). Structured Streaming replays only the
-  * last in-flight batch after a crash, and that batch's tag is
-  * already the index's last committed one iff the append fully
-  * committed — so a replay never appends twice, and a crash BEFORE
-  * the meta commit left the torn epoch invisible (swept by the
-  * retry). Re-running with a FRESH checkpoint over an already-fed
-  * index is not a replay and is unsupported — the batch-id tags
-  * restart at 0 (the [[StreamCdc]] wipe-together rule).
+  * '''Exactly-once''' is the [[TieredIndex]] argument: Structured
+  * Streaming replays only the last uncommitted batch, and a replayed
+  * batch overwrites exactly its own directories in both stores. Re-
+  * running with a FRESH checkpoint over an already-fed index is not a
+  * replay and is unsupported — the batch ids restart (the
+  * [[StreamCdc]] wipe-together rule).
   *
   * Scale shape: per-batch cost ∝ batch vectors (one assignment
-  * projection + a cell-keyed write); probes partition-prune by cell
-  * and never scan the corpus. Vec ids must be globally unique across
-  * batches, the same precondition as every delta route. */
+  * projection, a cell-bucketed write and a ≤ nLists-row mass write);
+  * probes prune by cell bucket and never scan the corpus. Vec ids must
+  * be globally unique across batches, the same precondition as every
+  * delta route. */
 object StreamAnnIngest {
 
   /** Start the sink: append each micro-batch of `(idCol, embCol)`
@@ -45,16 +44,11 @@ object StreamAnnIngest {
   def sink(embeddings: DataFrame, indexPath: String, checkpoint: String,
       idCol: String = "vec_id", embCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(new java.io.File(s"$indexPath/meta").isDirectory,
-      s"StreamAnnIngest: no IVF index at $indexPath — build one from " +
-        "a seed corpus first (IvfIndex.build); the stream appends " +
-        "under its frozen quantizer")
+    val index = IvfIndex.open(embeddings.sparkSession, indexPath)
+    val run = TieredIndex.trigger[Row]("StreamAnnIngest", index.stores,
+      16)(index.append(_, _, idCol, embCol))
     embeddings.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          IvfIndex.append(batch.sparkSession, indexPath, batch,
-            idCol, embCol, tag = Some(s"batch_$batchId"))
-      }
+      .foreachBatch((batch: DataFrame, b: Long) => run(batch, b + 1))
       .option("checkpointLocation", checkpoint)
       .start()
   }

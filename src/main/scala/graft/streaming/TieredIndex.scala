@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.StructType
   * [[StreamMediaDedup]], [[StreamFrameOverlap]] and [[StreamCrossModal]],
   * the `pairs` output of each, the stores of [[StreamCorpusLoop]],
   * [[StreamContainment]], [[StreamNearDedup]] and [[StreamSpanDedup]],
-  * J1's counts ([[RegisterStream.dualSink]]) and J2's detail table
-  * ([[KeyedUpsertSink]]). One instance manages one `outDir`; rows
+  * J1's counts ([[RegisterStream.dualSink]]), J2's detail table
+  * ([[KeyedUpsertSink]]), and the inverted lists and cell masses of
+  * the persisted IVF index ([[graft.operators.IvfIndex]], fed by
+  * [[StreamAnnIngest]]). One instance manages one `outDir`; rows
   * follow `keySchema` plus a `bucket` partition column.
   *
   * '''Buckets belong to the store.''' A store is built with its bucket
@@ -35,13 +37,13 @@ import org.apache.spark.sql.types.StructType
   * (an epoch row keeps the one it was folded from). `combine` is
   * identity for most stores; the companion object has the two others:
   * [[TieredIndex.summed]] for additive stores ([[StreamContainment]]'s
-  * gram df, J1's counts: every epoch holds one row per group, and
-  * readers still sum across tiers) and [[TieredIndex.latestPerKey]]
-  * for keyed snapshots (J2: every epoch holds each key's newest row,
-  * and readers keep the newest across tiers).
+  * gram df, J1's counts, the IVF cell masses: every epoch holds one
+  * row per group, and readers still sum across tiers) and
+  * [[TieredIndex.latestPerKey]] for keyed snapshots (J2: every epoch
+  * holds each key's newest row, and readers keep the newest across
+  * tiers).
   *
-  * '''Layout''' (two tiers, the [[graft.operators.IvfIndex]]
-  * discipline):
+  * '''Layout''' (two tiers):
   *
   *  - '''recent tier''' `outDir/chunks/batch_id=N/bucket=B/` — one dir
   *    per micro-batch, written with dynamic partition overwrite so a

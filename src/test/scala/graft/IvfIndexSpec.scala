@@ -3,9 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, Similarity}
+import graft.streaming.StreamAnnIngest
 
 /** The persisted-IVF-index contracts:
   *
@@ -15,11 +17,12 @@ import graft.operators.{IvfIndex, Similarity}
   *      assignment and query-time scoring share one deterministic
   *      training path and one search kernel.
   *   2. PRUNED PROBE PLAN — the search physical plan reads the lists
-  *      relation with PartitionFilters on `cell` and NEVER scans the
-  *      corpus table: delta-batch cost is ∝ probed cells (the
-  *      round-12 scale fix).
-  *   3. ARTIFACT LIFECYCLE — builds commit atomically (temp + rename;
-  *      no .build- residue), loads validate stamps eagerly, and
+  *      store with PartitionFilters on its cell `bucket` and NEVER
+  *      scans the corpus table: delta-batch cost is ∝ probed cells
+  *      (the round-12 scale fix); the cell masses are read only by a
+  *      mass probe.
+  *   3. ARTIFACT LIFECYCLE — a build commits by writing its meta last,
+  *      a replayed batch id is one append, loads validate eagerly, and
   *      Artifacts.cached self-heals a torn artifact by rebuilding.
   */
 class IvfIndexSpec extends SparkTestBase {
@@ -88,6 +91,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("the probe plan is PARTITION-PRUNED: the lists scan carries a " +
     "cell PartitionFilter and the corpus table is never scanned — " +
     "no per-batch assignment projection anywhere") {
+    // the lists store's partition column is `bucket`, and bucket = cell
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 50)
     val path = tmpPath("ivf_plan")
@@ -102,7 +106,7 @@ class IvfIndexSpec extends SparkTestBase {
     assert(listScan.nonEmpty, p)
     assert(listScan.exists(l =>
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
-        .contains("cell")), p)
+        .contains("bucket")), p)
     // the query side reads the (tiny) delta slice of the corpus table
     // (twice pre-AQE: the probe relation feeds both the pruning
     // subquery and the broadcast); the CANDIDATE side must never touch
@@ -124,7 +128,7 @@ class IvfIndexSpec extends SparkTestBase {
       col("vec_id") < 50)
     val path = tmpPath("ivf_append")
     IvfIndex.build(base, path, nLists = 16)
-    IvfIndex.append(spark, path, delta)
+    IvfIndex.append(spark, path, delta, batchId = 1)
     val viaIndex = IvfIndex.search(spark, path, queries, k = 10,
       nProbe = 12)
     // the reference: the SAME frozen quantizer (trained on base only)
@@ -146,7 +150,7 @@ class IvfIndexSpec extends SparkTestBase {
     val qs = emb.filter(col("vec_id") < 5)
     val path = tmpPath("ivfpq_append")
     IvfIndex.build(base, path, nLists = 16, m = 32, ksub = 256)
-    IvfIndex.append(spark, path, delta)
+    IvfIndex.append(spark, path, delta, batchId = 1)
     val viaIndex = IvfIndex.search(spark, path, qs, k = 10, nProbe = 4)
     assert(viaIndex.count() > 0)
     // every returned candidate must carry a REAL pq_cosine (codes were
@@ -155,37 +159,43 @@ class IvfIndexSpec extends SparkTestBase {
     assert(viaIndex.filter(col("pq_cosine").isNull).count() === 0)
   }
 
-  test("a torn append is invisible: files in an uncommitted epoch are " +
-    "never selected, and the next append sweeps them (no duplicates)") {
+  test("a torn list/mass pair is replayed: the batch rewritten equals " +
+    "one clean append") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0)
     val queries = emb.filter(col("vec_id") % 10 === 0 &&
       col("vec_id") < 30)
+    def view(path: String) = (collectSorted(IvfIndex.search(spark, path,
+      queries, k = 5, nProbe = 1, probeMass = 0.5)),
+      IvfIndex.open(spark, path).cellMasses(spark).toSeq)
     val path = tmpPath("ivf_torn_append")
     IvfIndex.build(base, path, nLists = 8)
-    val before = collectSorted(IvfIndex.search(spark, path, queries,
-      k = 5, nProbe = 8))
-    // simulate a crash mid-append: epoch-1 list files exist, but
-    // cellstats and meta were never restamped
-    delta.select(col("vec_id"), col("embedding").as("v"))
-      .filter(col("v").isNotNull)
-      .withColumn("epoch", lit(1))
-      .withColumn("cell", lit(0))
-      .write.mode("append").partitionBy("epoch", "cell")
-      .parquet(s"$path/lists")
-    val torn = collectSorted(IvfIndex.search(spark, path, queries,
-      k = 5, nProbe = 8))
-    assert(torn === before) // the orphan epoch is never read
-    // a real append now sweeps the orphans and commits exactly one
-    // copy of the delta: results equal a clean build+append
-    IvfIndex.append(spark, path, delta)
-    val appended = collectSorted(IvfIndex.search(spark, path,
-      queries, k = 5, nProbe = 8))
+    // a crash inside batch 1: part of its lists landed, its masses did not
+    IvfIndex.append(spark, path, delta.limit(3), batchId = 1)
+    deleteDir(new java.io.File(s"$path/masses/chunks/batch_id=1"))
+    // the replay writes the whole batch over its own dirs in both stores
+    IvfIndex.append(spark, path, delta, batchId = 1)
     val cleanPath = tmpPath("ivf_clean_append")
     IvfIndex.build(base, cleanPath, nLists = 8)
-    IvfIndex.append(spark, cleanPath, delta)
-    assert(appended === collectSorted(IvfIndex.search(spark,
-      cleanPath, queries, k = 5, nProbe = 8)))
+    IvfIndex.append(spark, cleanPath, delta, batchId = 1)
+    assert(view(path) === view(cleanPath))
+  }
+
+  test("search reads the cell masses only when it probes by mass") {
+    val path = tmpPath("ivf_masses")
+    IvfIndex.build(emb, path, nLists = 8)
+    val qs = emb.filter(col("vec_id") < 3)
+    def search(mass: Double) = IvfIndex.search(spark, path, qs, k = 5,
+      nProbe = 2, probeMass = mass)
+    val (_, fixed) = jobsOf("ivf-fixed-probe")(search(0.0))
+    val (_, byMass) = jobsOf("ivf-mass-probe")(search(0.5))
+    assert(byMass.size === fixed.size + 1, (fixed, byMass))
+    // without the masses store a fixed probe still searches, and a mass
+    // probe fails loudly
+    deleteDir(new java.io.File(s"$path/masses"))
+    assert(search(0.0).count() > 0)
+    val e = intercept[IllegalArgumentException](search(0.5))
+    assert(e.getMessage.contains("no cell masses"), e.getMessage)
   }
 
   test("build is atomic: a committed path holds a complete index, no " +
@@ -206,61 +216,10 @@ class IvfIndexSpec extends SparkTestBase {
       parent.listFiles().map(_.getName).mkString(", "))
   }
 
-  test("a crashed builder's torn .build- dir is swept by the next " +
-    "build (dead pid), while a live concurrent builder's tmp dir " +
-    "survives the sweep") {
-    val path = tmpPath("ivf_sweep")
-    val parent = new java.io.File(path).getParentFile
-    // torn residue of a CRASHED builder: pid that no longer exists,
-    // backdated past the sweep age guard (a real torn dir is stale;
-    // the guard protects in-flight builders the pid check can't see)
-    val dead = new java.io.File(path + ".build-999999999")
-    assert(new java.io.File(dead, "lists").mkdirs())
-    val stale = System.currentTimeMillis() - IvfIndex.SweepMinAgeMs - 60000L
-    assert(new java.io.File(dead, "lists").setLastModified(stale))
-    assert(dead.setLastModified(stale))
-    // in-flight tmp of a LIVE foreign builder: pid 1 is always alive
-    // and never this JVM
-    val live = new java.io.File(path + ".build-1")
-    assert(new java.io.File(live, "lists").mkdirs())
-    // dead pid but RECENT mtime: the age guard keeps it (covers a
-    // live cross-host builder this pid namespace cannot see)
-    val fresh = new java.io.File(path + ".build-999999998")
-    assert(new java.io.File(fresh, "lists").mkdirs())
-    IvfIndex.build(emb, path, nLists = 4)
-    val names = parent.listFiles().map(_.getName).toSet
-    assert(!names.contains(dead.getName), names.mkString(", "))
-    assert(names.contains(live.getName), names.mkString(", "))
-    assert(names.contains(fresh.getName), names.mkString(", "))
-    deleteDir(live)
-    deleteDir(fresh)
-    // rebuild after the live builder "finished": now exactly one
-    // directory remains — the committed index
-    IvfIndex.build(emb, path, nLists = 4)
-    assert(parent.listFiles().map(_.getName).toSeq ===
-      Seq(new java.io.File(path).getName),
-      parent.listFiles().map(_.getName).mkString(", "))
-  }
-
-  test("loads validate eagerly: a truncated lists relation (cellstats " +
-    "stamp mismatch) and a missing quantizer both fail loudly") {
+  test("loads validate eagerly: a missing quantizer fails loudly") {
     val path = tmpPath("ivf_torn")
     IvfIndex.build(emb, path, nLists = 8)
     val qs = emb.filter(col("vec_id") < 3)
-    // poison the cellstats stamp: drop the meta n_vecs agreement by
-    // rewriting cellstats with one row removed
-    val stats = spark.read.parquet(s"$path/cellstats")
-    val poisoned = stats.limit(
-      stats.count().toInt - 1)
-    poisoned.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/cellstats_new")
-    deleteDir(new java.io.File(s"$path/cellstats"))
-    assert(new java.io.File(s"$path/cellstats_new")
-      .renameTo(new java.io.File(s"$path/cellstats")))
-    val e = intercept[IllegalArgumentException] {
-      IvfIndex.search(spark, path, qs, k = 5, nProbe = 2)
-    }
-    assert(e.getMessage.contains("n_vecs stamp"))
     deleteDir(new java.io.File(s"$path/quantizer"))
     intercept[Exception] {
       IvfIndex.search(spark, path, qs, k = 5, nProbe = 2)
@@ -287,6 +246,21 @@ class IvfIndexSpec extends SparkTestBase {
     // tear the artifact: nuke the quantizer so the eager load fails
     deleteDir(new java.io.File(dirF, "quantizer"))
     assert(run() > 0 && builds === 2) // self-healed with ONE rebuild
+    // a build torn before its meta write: search and sink start both
+    // fail loudly, and the cache rebuilds it once
+    deleteDir(new java.io.File(dirF, "meta"))
+    val stream = {
+      import spark.implicits._
+      implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+      MemoryStream[(Long, Array[Float])].toDF().toDF("vec_id", "embedding")
+    }
+    for (e <- Seq(
+        intercept[IllegalArgumentException](IvfIndex.search(spark,
+          dirF.toString, emb.filter(col("vec_id") < 3), k = 5, nProbe = 2)),
+        intercept[IllegalArgumentException](StreamAnnIngest.sink(stream,
+          dirF.toString, Files.createTempDirectory("ivf_ckpt").toString))))
+      assert(e.getMessage.contains("no committed index"), e.getMessage)
+    assert(run() > 0 && builds === 3)
     deleteDir(dirF)
   }
 

@@ -128,13 +128,13 @@ class QzMasterySpec extends SparkTestBase {
       .createTempDirectory("graft_upsert_").toString + "/detail"
     val batch0 = (1 to 32).map(i => (i, i * 10L)).toDF("uid", "v")
     val store = KeyedUpsertSink.open(spark, table, batch0.schema, Seq("uid"))
-    KeyedUpsertSink.upsert(store, batch0, 0L)
+    store.append(batch0, 0L)
     val before = tableBytes(table)
 
     // 8 replaced keys and 4 new ones
     val batch1 = ((1 to 8).map(i => (i, -i.toLong)) ++
       (33 to 36).map(i => (i, i * 10L))).toDF("uid", "v")
-    KeyedUpsertSink.upsert(store, batch1, 1L)
+    store.append(batch1, 1L)
     val after = tableBytes(table)
     // every earlier file is untouched, bit for bit; the batch only
     // added files under its own dir
@@ -150,7 +150,7 @@ class QzMasterySpec extends SparkTestBase {
     assert(contents.length === want.size) // one row per key
     assert(contents.toMap === want)
     // a replayed batch overwrites its own dir: same table
-    KeyedUpsertSink.upsert(store, batch1, 1L)
+    store.append(batch1, 1L)
     assert(contents.toMap === want)
     assert(contents.length === want.size)
   }

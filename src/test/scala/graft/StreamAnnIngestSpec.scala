@@ -12,9 +12,8 @@ import graft.streaming.StreamAnnIngest
 /** Streaming ANN ingestion mirrors batch [[IvfIndex.append]]: after
   * any prefix of micro-batches, searching the stream-fed index equals
   * the frozen-quantizer recompute over seed ∪ streamed vectors;
-  * appends are exactly-once under replay (the tag commits with the
-  * epoch bump); a leftover staged meta dir from a crashed commit
-  * never corrupts the index. */
+  * appends are exactly-once under replay (a batch id rewrites its own
+  * store dirs); the sink refuses to start on an absent or older index. */
 class StreamAnnIngestSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -70,54 +69,43 @@ class StreamAnnIngestSpec extends SparkTestBase {
     assert(collectSorted(viaIndex) === collectSorted(recompute))
   }
 
-  test("a replayed append under the same tag is a no-op: the tag " +
-    "commits atomically with the epoch bump, so retrying a committed " +
-    "batch never duplicates vectors") {
+  test("the same batch id twice equals one append") {
     val seed = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0)
-    val path = tmpPath("ivf_tag")
+    val path = tmpPath("ivf_replay")
     IvfIndex.build(seed, path, nLists = 8)
-    IvfIndex.append(spark, path, delta, tag = Some("batch_0"))
-    val once = spark.read.parquet(s"$path/lists").count()
-    val epochs = spark.read.parquet(s"$path/meta")
-      .select("n_epochs").collect()(0).getInt(0)
-    // the foreachBatch replay: same batch, same tag
-    IvfIndex.append(spark, path, delta, tag = Some("batch_0"))
-    assert(spark.read.parquet(s"$path/lists").count() === once)
-    assert(spark.read.parquet(s"$path/meta")
-      .select("n_epochs").collect()(0).getInt(0) === epochs)
-    // an UNtagged append still appends (batch semantics unchanged)
-    IvfIndex.append(spark, path, delta.limit(5))
-    assert(spark.read.parquet(s"$path/lists").count() === once + 5)
-  }
-
-  test("a leftover staged meta dir (crashed commit) is overwritten by " +
-    "the next append, and readers never see it") {
-    val seed = emb.filter(col("vec_id") % 10 =!= 0)
-    val path = tmpPath("ivf_metanext")
-    IvfIndex.build(seed, path, nLists = 8)
-    // plant a torn staged-meta attempt
-    val stale = new java.io.File(s"$path/meta_next")
-    assert(stale.mkdirs())
-    java.nio.file.Files.write(
-      new java.io.File(stale, "garbage").toPath, Array[Byte](1, 2, 3))
-    IvfIndex.append(spark, path,
-      emb.filter(col("vec_id") % 10 === 0), tag = Some("b1"))
-    // the append committed through the staged rename; the index loads
-    val queries = emb.filter(col("vec_id") < 30)
-    assert(IvfIndex.search(spark, path, queries, k = 5,
-      nProbe = 8).count() > 0)
+    def lists = IvfIndex.open(spark, path).lists
+      .corpusKeys(spark, Long.MaxValue).count()
+    def masses = IvfIndex.open(spark, path).cellMasses(spark).toSeq
+    IvfIndex.append(spark, path, delta, batchId = 1)
+    val (once, onceMasses) = (lists, masses)
+    // the foreachBatch replay: same batch, same id
+    IvfIndex.append(spark, path, delta, batchId = 1)
+    assert(lists === once)
+    assert(masses === onceMasses)
+    assert(onceMasses.sum === once)
+    // a new batch id still appends
+    IvfIndex.append(spark, path, delta.limit(5), batchId = 2)
+    assert(lists === once + 5)
   }
 
   test("the sink refuses to start without a pre-built index (the " +
     "frozen-quantizer contract)") {
     implicit val sql = spark.sqlContext
     val input = MemoryStream[Vec]
-    val err = intercept[IllegalArgumentException] {
-      StreamAnnIngest.sink(input.toDS().toDF("vec_id", "embedding"),
-        tmpPath("missing"),
+    def start(path: String) = intercept[IllegalArgumentException] {
+      StreamAnnIngest.sink(input.toDS().toDF("vec_id", "embedding"), path,
         Files.createTempDirectory("ann_noidx_ckpt").toString)
-    }
-    assert(err.getMessage.contains("build one from"), err.getMessage)
+    }.getMessage
+    val missing = start(tmpPath("missing"))
+    assert(missing.contains("build one from"), missing)
+    // an index in the older epoch layout (version 2 meta) fails at
+    // start with a rebuild message, before any trigger runs
+    val old = tmpPath("v2")
+    Seq((2, 8, 64, 450L, 0, 16, 1, "batch_0"))
+      .toDF("version", "n_lists", "dim", "n_vecs", "m", "ksub", "n_epochs",
+        "last_tag").write.parquet(s"$old/meta")
+    val v2 = start(old)
+    assert(v2.contains("version 2") && v2.contains("rebuild"), v2)
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.IvfIndex
 import graft.operators.Multimodal.MediaRecord
 import graft.sources.Models.QzEvent
 import graft.streaming._
@@ -27,7 +28,9 @@ import graft.streaming._
   *     epochs and folded recent directories are still on disk.
   *
   * The replayed trigger must sweep every leftover. The routes are the
-  * eight delta routes, J1's dual sink and J2's keyed upsert. A second
+  * eight delta routes, J1's dual sink, J2's keyed upsert and the IVF
+  * index's stream ingest, whose seed index is built before trigger 0
+  * and whose stream batch b is store batch b + 1. A second
   * table-driven case runs each real sink for 3 × compactEvery
   * triggers and checks every store stays bounded: at most
   * compactEvery recent batch directories and O(log n) live epochs.
@@ -75,6 +78,18 @@ class TieredIndexFaultSpec extends SparkTestBase {
 
   private def textDf(b: Int): DataFrame = textBatch(b).toDF("doc_id", "text")
 
+  // ANN: 8-dim vectors around four axis-aligned centres; a 40-vector
+  // seed index, four vectors per batch, three fixed queries
+  private def vec(id: Long): (Long, Array[Float]) = {
+    val r = new scala.util.Random(id)
+    (id, Array.tabulate(8)(d =>
+      (if (d % 4 == id % 4) 4f else 0f) + r.nextFloat()))
+  }
+  private def vecBatch(b: Int): Seq[(Long, Array[Float])] =
+    (0 until 4).map(i => vec(1000L + 10 * b + i))
+  private def vecDf(vs: Seq[(Long, Array[Float])]): DataFrame =
+    vs.toDF("vec_id", "embedding")
+
   // J1: register lines whose windows overlap the next batch's, over
   // all three platforms
   private def registerBatch(b: Int): Seq[String] = (0 until 6).map(i =>
@@ -119,7 +134,8 @@ class TieredIndexFaultSpec extends SparkTestBase {
       stores: String => Seq[TieredIndex],
       views: String => Seq[DataFrame],
       runSink: (String, String, Int, Int) => Unit,
-      sinkCompactEvery: Option[Int])
+      sinkCompactEvery: Option[Int],
+      seed: String => Unit = _ => ())
 
   private val routes = Seq(
     Route("StreamCorpusLoop",
@@ -203,14 +219,26 @@ class TieredIndexFaultSpec extends SparkTestBase {
     Route("KeyedUpsertSink",
       (out, b) => {
         val rows = keyedDf(b.toInt)
-        KeyedUpsertSink.upsert(
-          KeyedUpsertSink.open(spark, out, rows.schema, Seq("uid")), rows, b)
+        KeyedUpsertSink.open(spark, out, rows.schema, Seq("uid"))
+          .append(rows, b)
       },
       KeyedUpsertSink.stores(spark, _),
       out => Seq(KeyedUpsertSink.read(spark, out)),
       (out, ckpt, n, _) => runStream(n, qzBatch)(
         QzMasteryStream.startDetailSink(_, out, ckpt)),
-      Some(16)))
+      Some(16)),
+    Route("StreamAnnIngest",
+      (out, b) =>
+        IvfIndex.append(spark, out, vecDf(vecBatch(b.toInt)), b + 1),
+      IvfIndex.open(spark, _).stores,
+      out => Seq(IvfIndex.search(spark, out,
+          vecDf(Seq(5000L, 5001L, 5002L).map(vec)), k = 5, nProbe = 2),
+        IvfIndex.open(spark, out).cellMasses(spark).toSeq.zipWithIndex
+          .toDF("n", "cell")),
+      (out, ckpt, n, _) => runStream(n, vecBatch)(vs =>
+        StreamAnnIngest.sink(vs.toDF("vec_id", "embedding"), out, ckpt)),
+      Some(16),
+      out => IvfIndex.build(vecDf((0L until 40L).map(vec)), out, nLists = 4)))
 
   // ---- helpers ----------------------------------------------------
 
@@ -255,6 +283,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
       // the no-crash reference; the crash run starts from a copy of its
       // first two triggers
       val ref = Files.createTempDirectory(s"fault-ref-${r.name}-").toString
+      r.seed(ref)
       trigger(r, ref, 0L)
       trigger(r, ref, 1L)
       val out = Files.createTempDirectory(s"fault-${r.name}-").toString
@@ -309,6 +338,7 @@ class TieredIndexFaultSpec extends SparkTestBase {
       val out = Files.createTempDirectory(s"bounded-${r.name}-").toString
       val ckpt = Files.createTempDirectory(s"bounded-ckpt-${r.name}-")
         .toString
+      r.seed(out)
       r.runSink(out, ckpt, n, ce)
       r.stores(out).foreach { s =>
         val recent = s.recentIds(spark)
