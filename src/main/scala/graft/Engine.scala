@@ -52,6 +52,26 @@ object Engine {
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[LocalFs].getName)
 
+  /** The streaming state store. RocksDB keeps state off-heap:
+    * HDFSBackedStateStore keeps every key on the JVM heap (executor OOM
+    * once keyed state outgrows memory); RocksDB spills to local disk,
+    * the only state store that survives 100 TB-scale key cardinality.
+    * Changelog checkpointing makes a commit write the version's
+    * changed keys as one changelog file, where it would otherwise
+    * flush RocksDB, take a full checkpoint of its files, zip and copy
+    * it, and start an `rm -rf` per stateful partition to clean up.
+    * RocksDB still uploads a snapshot every 10 versions
+    * (`minDeltasForSnapshot`), so recovery loads the latest snapshot
+    * and replays at most 10 changelogs; Spark turns this on for an
+    * existing checkpoint too. Validated by the streaming specs, whose
+    * test session applies the same map. */
+  val stateStore: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider"),
+    ("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled") -> "true")
+
   def session(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
       shufflePartitions: Int =
@@ -73,15 +93,7 @@ object Engine {
       // with a checkpoint dir configured
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
-      // streaming state off-heap: HDFSBackedStateStore keeps every key
-      // on the JVM heap (executor OOM once keyed state outgrows
-      // memory); RocksDB spills to local disk and incrementally
-      // checkpoints, which is the only state store that survives
-      // 100 TB-scale key cardinality. Validated by the streaming specs
-      // (SparkTestBase uses the same provider).
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
+      .config(stateStore)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(localFs)
@@ -98,9 +110,7 @@ object Engine {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       minPartitionSize)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    stateStore.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -150,9 +150,10 @@ object IvfIndex {
   }
 
   /** Open the committed index at `path`: the meta (version and
-    * geometry), the quantizer and the codebooks, each validated
-    * eagerly — a missing or torn build, an older index version or a
-    * mixed artifact fails here, loudly. */
+    * geometry), the quantizer, the codebooks and the two stores'
+    * layouts, each validated eagerly — a missing or torn build, an
+    * older index version or store layout, or a mixed artifact fails
+    * here, loudly. */
   private[graft] def open(spark: SparkSession, path: String): Index = {
     val meta = new Path(s"$path/meta")
     require(meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -185,7 +186,9 @@ object IvfIndex {
           "artifact")
       pq
     }
-    new Index(path, nLists, centers, pq)
+    val index = new Index(path, nLists, centers, pq)
+    index.stores.foreach(_.checkLayout(spark))
+    index
   }
 
   /** Append a delta batch under the FROZEN quantizer — incremental

@@ -14,8 +14,8 @@ import graft.sources.LogParsers
   * parsed stream; the state store replaces `updateStateByKey`'s full-state
   * scan with incremental per-key updates, and the watermark bounds window
   * state (the reference has no late-data story at all — SURVEY.md §2.8).
-  * [[dualSink]] persists both aggregates as tagged counts in one
-  * one-bucket [[TieredIndex]] store whose folds sum them.
+  * [[dualSink]] persists both aggregates as one set of per-slide counts
+  * in a one-bucket [[TieredIndex]] store whose folds sum them.
   */
 object RegisterStream {
 
@@ -43,76 +43,74 @@ object RegisterStream {
   def cumulativeCounts(registers: DataFrame): DataFrame =
     registers.groupBy(col("platform")).agg(count(lit(1)).as("total"))
 
+  // J1's geometry is the reference's fixed one:
+  // reduceByKeyAndWindow(_ + _, Seconds(60), Seconds(6))
+  // (RegisterStreaming.scala:91, SURVEY.md §2.3)
+  private val WindowDur = "60 seconds"
+  private val SlideDur = "6 seconds"
+
   /** Single-read dual aggregation (reference parity: one cached DStream
     * feeding both aggregations, RegisterStreaming.scala:88-101). Each
     * micro-batch is one scan of the batch, one exchange and one
-    * [[TieredIndex]] append ([[foldBatch]]); both aggregates are
-    * additive across batches (a window's count is the sum of each
-    * batch's rows landing in it), so the read views just sum.
+    * [[TieredIndex]] append ([[foldBatch]]) of per-slide counts: one
+    * `(tumble_start, platform, n)` row per 6-second tumble and platform
+    * the batch has events in — what the reference's
+    * `reduceByKeyAndWindow` reduces once per slide before it combines
+    * the slides. The counts are additive across batches, so the store
+    * sums them when it folds and the read views expand and sum them.
     * Idempotence: a replayed batch overwrites its own `batch_id=N` dir,
     * never double-counts (unlike the reference, SURVEY.md §2.8). Both
-    * aggregates of a batch land in that one dir, so the two views
-    * always describe the same batches. Committed batches fold every
-    * 16 triggers into the store's base tier, summing by group. */
-  def dualSink(parsed: DataFrame, outDir: String, checkpoint: String,
-      windowDur: String = "60 seconds", slideDur: String = "6 seconds")
+    * aggregates are read from the same rows, so the two views always
+    * describe the same batches. Committed batches fold every 16
+    * triggers into the store's base tier, summing by group. */
+  def dualSink(parsed: DataFrame, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     parsed.writeStream
       .foreachBatch(TieredIndex.trigger[Row]("RegisterStream.dualSink",
-        Seq(store(outDir)), compactEvery = 16)(
-        foldBatch(outDir, _, _, windowDur, slideDur)))
+        Seq(store(outDir)), compactEvery = 16)(foldBatch(outDir, _, _)))
       .option("checkpointLocation", checkpoint)
       .start()
   }
 
-  /** J1's one store: `(kind, window_start, window_end, platform, n)`
-    * rows, `kind` = "window" for a sliding-window count and "total"
-    * for a platform total (whose window columns are null). */
+  /** J1's one store: `(tumble_start, platform, n)` — `n` events of
+    * `platform` in the 6-second tumble starting at `tumble_start`. */
   private[graft] def store(outDir: String): TieredIndex =
-    new TieredIndex(outDir, "kind string, window_start timestamp, " +
-      "window_end timestamp, platform string, n bigint",
-      TieredIndex.summed("n"))
+    new TieredIndex(outDir, "tumble_start timestamp, platform string, " +
+      "n bigint", TieredIndex.summed("n"))
 
-  /** One micro-batch's counts of both aggregates as tagged rows, in one
-    * pass: each event expands into its sliding windows, and exactly
-    * one of them — the latest, whose start lies in (t − slide, t] —
-    * also carries its platform-total copy. Rows without a parseable
-    * timestamp would be dropped by the window expansion but counted by
-    * the totals, so both aggregates exclude them and describe the same
-    * event set. */
+  /** One micro-batch's per-slide counts: its events grouped by their
+    * 6-second tumble and platform — a tumbling window, so the plan is a
+    * projection and one aggregate, with no per-window expansion. Rows
+    * without a timestamp fall in no tumble; they are left out of both
+    * aggregates, which then describe the same event set. */
   private[graft] def foldBatch(outDir: String, batch: DataFrame,
-      batchId: Long, windowDur: String = "60 seconds",
-      slideDur: String = "6 seconds"): Unit = {
-    val win = batch.filter(col("createTime").isNotNull)
-      .select(window(col("createTime"), windowDur, slideDur).as("w"),
-        col("createTime"), col("platform"))
-    val latest =
-      col("createTime") < col("w.start") + expr(s"INTERVAL $slideDur")
-    val kind = explode(when(latest, array(lit("window"), lit("total")))
-      .otherwise(array(lit("window"))))
-    def ifWindow(c: String) = when(col("kind") === "window", col(s"w.$c"))
-    store(outDir).append(win
-      .select(kind.as("kind"), col("w"), col("platform"))
-      .groupBy(col("kind"), ifWindow("start").as("window_start"),
-        ifWindow("end").as("window_end"), col("platform"))
+      batchId: Long): Unit =
+    store(outDir).append(batch.filter(col("createTime").isNotNull)
+      .groupBy(window(col("createTime"), SlideDur)("start")
+        .as("tumble_start"), col("platform"))
       .agg(count(lit(1)).as("n")), batchId)
-  }
 
-  private def rowsOfKind(spark: SparkSession, outDir: String,
-      kind: String): DataFrame =
+  private def tumbles(spark: SparkSession, outDir: String): DataFrame =
     store(outDir).corpusKeys(spark, Long.MaxValue)
-      .filter(col("kind") === kind)
 
-  /** Read view over [[dualSink]]'s windowed counts. Empty (with the
-    * right schema) before the first batch commits. */
+  /** Read view over [[dualSink]]'s windowed counts: each stored tumble
+    * expands into the 60s/6s windows that contain its start, and the
+    * windows sum their tumbles. Exact: a tumble starts on a multiple of
+    * the slide and is one slide long, so it lies wholly inside every
+    * window containing its start and outside every other — its events
+    * fall in exactly those windows. Empty (with the right schema)
+    * before the first batch commits. */
   def windowedView(spark: SparkSession, outDir: String): DataFrame =
-    rowsOfKind(spark, outDir, "window")
-      .groupBy(col("window_start"), col("window_end"), col("platform"))
+    tumbles(spark, outDir)
+      .groupBy(window(col("tumble_start"), WindowDur, SlideDur).as("w"),
+        col("platform"))
       .agg(sum(col("n")).as("n"))
+      .select(col("w.start").as("window_start"),
+        col("w.end").as("window_end"), col("platform"), col("n"))
 
   /** Read view over [[dualSink]]'s cumulative counts. Empty (with the
     * right schema) before the first batch commits. */
   def totalsView(spark: SparkSession, outDir: String): DataFrame =
-    rowsOfKind(spark, outDir, "total")
+    tumbles(spark, outDir)
       .groupBy(col("platform")).agg(sum(col("n")).as("total"))
 }

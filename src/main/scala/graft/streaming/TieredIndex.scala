@@ -24,12 +24,12 @@ import org.apache.spark.sql.types.StructType
   * takes plain key rows and writes `bucket` itself, [[probe]] reads
   * only the buckets a batch's own keys fall in, and
   * [[TieredIndex.trigger]] checks the on-disk layout and the recorded
-  * modulus once, at sink start. The modulus is baked into every
-  * partition value, so it is immutable per outDir. A store with no
-  * key has one bucket (`bucket = 0`): it is only ever read whole (an
-  * output view, or a relation a full join probes), shares the layout,
-  * the meta and the legacy checks of the bucketed stores, and its
-  * [[probe]] runs no job.
+  * modulus and row schema once, at sink start. The modulus is baked
+  * into every partition value, so it is immutable per outDir. A store
+  * with no key has one bucket (`bucket = 0`): it is only ever read
+  * whole (an output view, or a relation a full join probes), shares
+  * the layout, the meta and the legacy checks of the bucketed stores,
+  * and its [[probe]] runs no job.
   *
   * '''Fold/merge function.''' `combine` rewrites the rows a fold or a
   * merge writes: the key columns, `batch_id` and `bucket`, all of
@@ -105,7 +105,11 @@ import org.apache.spark.sql.types.StructType
   * every view: `delta=`/`base=` children, `batch_id=` children
   * directly under it, `bucket=` children (the swap-protocol keyed
   * table J2 used to write), or J1's `windowed`/`totals` contribution
-  * stores.
+  * stores. So does a store whose meta records another modulus or
+  * another row schema, or whose meta is the parquet directory an
+  * older build wrote, which records no schema: J1's older tagged rows,
+  * read under its per-slide schema, would give null tumbles and
+  * totals about 11× too high, with no error.
   */
 private[graft] final class TieredIndex(outDir: String, keySchema: String,
     combine: DataFrame => DataFrame = identity,
@@ -331,25 +335,35 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
     cleanup(spark)
   }
 
-  // ---- bucket-count metadata ------------------------------------
+  // ---- layout metadata -------------------------------------------
 
-  private def metaPath = s"$outDir/index_meta"
+  private def metaPath = new Path(s"$outDir/index_meta")
 
-  private def hasMeta(spark: SparkSession): Boolean =
-    fs(spark).exists(new Path(metaPath))
+  private def hasMeta(spark: SparkSession): Boolean = fs(spark).exists(metaPath)
 
-  private def readNBuckets(spark: SparkSession): Int = {
-    // read with its known schema: no schema-inference job per call
-    try spark.read.schema("n_buckets int").parquet(metaPath)
-      .collect()(0).getInt(0)
-    catch {
-      case e: Exception => throw new IllegalStateException(
-        s"TieredIndex: cannot read bucket-count metadata at $metaPath — " +
-          "the meta is torn or corrupt (a crash between meta-dir creation " +
-          "and parquet commit leaves an unreadable dir); delete the " +
-          "meta dir and restart the sink with the original nBuckets, " +
-          "or rebuild the index", e)
-    }
+  private val Rebuild = "Rebuild the store: wipe outDir + checkpoint " +
+    "and replay the stream."
+
+  /** What the meta records: the bucket modulus and the row schema. */
+  private val meta =
+    s"nBuckets=$nBuckets\nschema=${StructType.fromDDL(keySchema).toDDL}\n"
+
+  /** Check the recorded meta against this store's: the modulus is
+    * baked into every on-disk partition value, and rows of another
+    * schema would be read as this one's. */
+  private def validate(spark: SparkSession): Unit = {
+    val f = fs(spark)
+    if (f.getFileStatus(metaPath).isDirectory)
+      throw new IllegalStateException(s"TieredIndex: the meta at " +
+        s"$metaPath is a directory — the parquet meta of an older build " +
+        "(or a torn one), which recorded no row schema, so this build " +
+        s"cannot tell whether the store's rows are its own. $Rebuild")
+    val in = f.open(metaPath)
+    val stored = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    def show(m: String) = m.trim.replace("\n", ", ")
+    require(stored == meta, s"TieredIndex: the store at $outDir was " +
+      s"built with ${show(stored)}, got ${show(meta)} — the bucket " +
+      s"modulus and the row schema cannot change. $Rebuild")
   }
 
   /** Detect the layouts this store cannot read correctly:
@@ -372,8 +386,7 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
       .foreach(n => throw new IllegalStateException(
         s"TieredIndex: the store at $outDir holds an older store " +
           s"layout ($n) that this store does not read — ignoring it " +
-          "would silently drop its rows from every view. Rebuild the " +
-          "store: wipe outDir + checkpoint and replay the stream."))
+          s"would silently drop its rows from every view. $Rebuild"))
     val chunksRoot = new Path(recentRoot)
     val batchDirs =
       if (!f.exists(chunksRoot)) Nil
@@ -403,31 +416,23 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String,
   }
 
   /** Reject the legacy layouts ([[rejectLegacyLayout]]), then record
-    * the store's `nBuckets` once per outDir (atomically — write to a
-    * temp dir, rename into place; if another sink won the race,
-    * validate against the winner); later sinks must match, since the
-    * modulus is baked into every on-disk partition value. */
+    * the store's `nBuckets` and row schema once per outDir in a small
+    * text file, `index_meta` (atomically — write a temp file, rename it
+    * into place; if another sink won the race, validate against the
+    * winner); later sinks must match. File-system calls only: no Spark
+    * job. */
   private[graft] def checkLayout(spark: SparkSession): Unit = {
     rejectLegacyLayout(spark)
+    if (hasMeta(spark)) { validate(spark); return }
     val f = fs(spark)
-    def validate(): Unit = {
-      val stored = readNBuckets(spark)
-      require(stored == nBuckets,
-        s"TieredIndex: index at $outDir was built with " +
-          s"nBuckets=$stored, got $nBuckets — the bucket modulus " +
-          "cannot change")
-    }
-    if (hasMeta(spark)) { validate(); return }
-    import spark.implicits._
-    val tmp = new Path(s"$outDir/index_meta__tmp")
-    f.delete(tmp, true) // a crashed previous attempt
-    Seq(nBuckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (!f.rename(tmp, new Path(metaPath))) {
+    val tmp = new Path(s"$outDir/index_meta.tmp")
+    val out = f.create(tmp, true) // overwrites a crashed attempt's
+    try out.write(meta.getBytes("UTF-8")) finally out.close()
+    if (!f.rename(tmp, metaPath)) {
       // another sink created the meta concurrently — theirs is
       // authoritative
-      f.delete(tmp, true)
-      validate()
+      f.delete(tmp, false)
+      validate(spark)
     }
   }
 }
@@ -451,8 +456,9 @@ private[graft] object TieredIndex {
   /** A route's `foreachBatch` body: `fold` the batch into the route's
     * stores, then run each store's [[TieredIndex.maintain]] — inside the
     * serialized callback, which is the stores' single-writer contract.
-    * Built once, at sink start, where it checks each store's layout
-    * and modulus ([[TieredIndex.checkLayout]]) in the active session. */
+    * Built once, at sink start, where it checks each store's layout,
+    * modulus and schema ([[TieredIndex.checkLayout]]) in the active
+    * session. */
   def trigger[T](route: String, stores: Seq[TieredIndex],
       compactEvery: Int)(
       fold: (Dataset[T], Long) => Unit): (Dataset[T], Long) => Unit = {

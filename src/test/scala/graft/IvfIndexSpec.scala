@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -31,8 +29,7 @@ class IvfIndexSpec extends SparkTestBase {
   private def emb = Tables.embeddings(spark, dir)
 
   private def tmpPath(name: String): String =
-    new java.io.File(
-      Files.createTempDirectory("ivfindex_spec").toFile, name).toString
+    new java.io.File(tempDir("ivfindex_spec"), name).toString
 
   private def collectSorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -258,7 +255,7 @@ class IvfIndexSpec extends SparkTestBase {
         intercept[IllegalArgumentException](IvfIndex.search(spark,
           dirF.toString, emb.filter(col("vec_id") < 3), k = 5, nProbe = 2)),
         intercept[IllegalArgumentException](StreamAnnIngest.sink(stream,
-          dirF.toString, Files.createTempDirectory("ivf_ckpt").toString))))
+          dirF.toString, tempDir("ivf_ckpt")))))
       assert(e.getMessage.contains("no committed index"), e.getMessage)
     assert(run() > 0 && builds === 3)
     deleteDir(dirF)

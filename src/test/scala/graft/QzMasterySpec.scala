@@ -100,10 +100,8 @@ class QzMasterySpec extends SparkTestBase {
 
   test("keyed-upsert detail sink: on-duplicate-key-update semantics") {
     implicit val sql = spark.sqlContext
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_detail_").toString + "/detail"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_detail_ckpt_").toString
+    val table = tempDir("graft_detail_") + "/detail"
+    val ckpt = tempDir("graft_detail_ckpt_")
     val input = MemoryStream[QzEvent]
     val q = QzMasteryStream.startDetailSink(input.toDS(), table, ckpt)
     try {
@@ -124,8 +122,7 @@ class QzMasterySpec extends SparkTestBase {
 
   test("keyed-upsert sink: an upsert writes only its own batch dir") {
     import graft.streaming.KeyedUpsertSink
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_upsert_").toString + "/detail"
+    val table = tempDir("graft_upsert_") + "/detail"
     val batch0 = (1 to 32).map(i => (i, i * 10L)).toDF("uid", "v")
     val store = KeyedUpsertSink.open(spark, table, batch0.schema, Seq("uid"))
     store.append(batch0, 0L)
@@ -171,10 +168,8 @@ class QzMasterySpec extends SparkTestBase {
   test("keyed-upsert sink: a micro-batch runs one job and compiles no new code") {
     implicit val sql = spark.sqlContext
     import graft.streaming.KeyedUpsertSink
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_jobs_").toString + "/detail"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_jobs_ckpt_").toString
+    val table = tempDir("graft_jobs_") + "/detail"
+    val ckpt = tempDir("graft_jobs_ckpt_")
     val input = MemoryStream[QzEvent]
     val q = QzMasteryStream.startDetailSink(input.toDS(), table, ckpt)
     def batch(b: Int): Unit = {
@@ -205,8 +200,7 @@ class QzMasterySpec extends SparkTestBase {
   test("keyed-upsert sink: an empty micro-batch runs one job and writes " +
     "nothing") {
     import graft.streaming.KeyedUpsertSink
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_empty_").toString
+    val base = tempDir("graft_empty_")
     val table = base + "/detail"
     val empty = Seq.empty[(Int, Long)].toDF("uid", "v")
     val hook = KeyedUpsertSink.foreachBatchUpsert(spark, table,

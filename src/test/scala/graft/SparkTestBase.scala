@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{KMeans, Similarity}
@@ -53,6 +54,22 @@ trait SparkTestBase extends AnyFunSuite {
     f.delete(): Unit
   }
 
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh temp dir named `prefix…`, deleted when the running test
+    * ends, however it ends. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally
+      while (!tempDirs.isEmpty) Option(tempDirs.poll()).foreach(deleteDir)
+
   /** The frozen-quantizer reference of the IVF laws: the quantizer in
     * `centroids` (a [[Similarity.ivfCentroids]] relation) assigns
     * `corpus` inline, and the shared search kernel probes it — what
@@ -79,11 +96,10 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // run all streaming specs against the production state store
-      // (RocksDB, same as Engine.session) — not the default in-memory
-      // HDFSBackedStateStore that masks native-lib/serialization issues
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
+      // (RocksDB with changelog commits, as Engine.session) — not the
+      // default in-memory HDFSBackedStateStore that masks
+      // native-lib/serialization issues
+      .config(Engine.stateStore)
       // and against the production local filesystem
       .config(Engine.localFs)
       .getOrCreate()

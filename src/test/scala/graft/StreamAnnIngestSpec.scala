@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,7 +20,7 @@ class StreamAnnIngestSpec extends SparkTestBase {
 
   private def tmpPath(name: String): String =
     new java.io.File(
-      Files.createTempDirectory("ann_ingest_spec").toFile, name).toString
+      new java.io.File(tempDir("ann_ingest_spec")), name).toString
 
   private def collectSorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -40,7 +38,7 @@ class StreamAnnIngestSpec extends SparkTestBase {
     val (b0, rest) = streamedRows.splitAt(streamedRows.size / 3)
     val (b1, b2) = rest.splitAt(rest.size / 2)
     val path = tmpPath("ivf_stream")
-    val ckpt = Files.createTempDirectory("ann_ingest_ckpt").toString
+    val ckpt = tempDir("ann_ingest_ckpt")
     IvfIndex.build(seed, path, nLists = 16)
 
     val input = MemoryStream[Vec]
@@ -95,7 +93,7 @@ class StreamAnnIngestSpec extends SparkTestBase {
     val input = MemoryStream[Vec]
     def start(path: String) = intercept[IllegalArgumentException] {
       StreamAnnIngest.sink(input.toDS().toDF("vec_id", "embedding"), path,
-        Files.createTempDirectory("ann_noidx_ckpt").toString)
+        tempDir("ann_noidx_ckpt"))
     }.getMessage
     val missing = start(tmpPath("missing"))
     assert(missing.contains("build one from"), missing)

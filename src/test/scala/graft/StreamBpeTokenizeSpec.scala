@@ -114,8 +114,7 @@ class StreamBpeTokenizeSpec extends SparkTestBase {
       (3L, "€uro plain plain"))
     val docs = rows.toDF("doc_id", "text")
     val trained = Vocab.bpeMergesByte(docs, col("text"), nMerges = 6)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe-artifact-stream-").toString
+    val dir = tempDir("bpe-artifact-stream-")
     Vocab.saveBpeTokenizer(trained, dir, "byte", "</w>")
     val art = Vocab.loadBpeTokenizer(spark, dir)
 

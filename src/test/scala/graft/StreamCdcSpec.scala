@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -42,8 +40,8 @@ class StreamCdcSpec extends SparkTestBase {
         (4L, sharedB + " " + noise("mu", 5))),
       Seq((5L, noise("nu", 7) + " " + sharedB),
         (6L, noise("unrelated", 25))))
-    val out = Files.createTempDirectory("cdc_stream_out").toString
-    val ckpt = Files.createTempDirectory("cdc_stream_ckpt").toString
+    val out = tempDir("cdc_stream_out")
+    val ckpt = tempDir("cdc_stream_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out, ckpt)
@@ -73,10 +71,10 @@ class StreamCdcSpec extends SparkTestBase {
     val b1 = Seq((1L, noise("a", 10) + " " + sharedA),
       (2L, sharedA + " " + noise("b", 10)))
     val b2 = Seq((3L, noise("c", 6) + " " + sharedA + " " + noise("d", 6)))
-    val out = Files.createTempDirectory("cdc_replay_out").toString
+    val out = tempDir("cdc_replay_out")
 
     def run(): Unit = {
-      val ckpt = Files.createTempDirectory("cdc_replay_ckpt").toString
+      val ckpt = tempDir("cdc_replay_ckpt")
       val in = MemoryStream[(Long, String)]
       val q = StreamCdc.sink(in.toDF().toDF("doc_id", "text"), out, ckpt)
       try {
@@ -105,8 +103,8 @@ class StreamCdcSpec extends SparkTestBase {
       (2L, sharedA + " " + noise("f", 9)))
     val b2 = Seq((3L, noise("g", 5) + " " + sharedA + " " + noise("h", 5)),
       (4L, noise("solo", 30)))
-    val out = Files.createTempDirectory("cdc_restart_out").toString
-    val ckpt = Files.createTempDirectory("cdc_restart_ckpt").toString
+    val out = tempDir("cdc_restart_out")
+    val ckpt = tempDir("cdc_restart_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
@@ -144,8 +142,8 @@ class StreamCdcSpec extends SparkTestBase {
       (2L, sharedA + " " + noise("q", 5)))
     val docs2 = Seq((3L, noise("r", 5) + " " + sharedA + " " +
       noise("s", 5)))
-    val out = Files.createTempDirectory("cdc_cap_out").toString
-    val ckpt = Files.createTempDirectory("cdc_cap_ckpt").toString
+    val out = tempDir("cdc_cap_out")
+    val ckpt = tempDir("cdc_cap_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out,
@@ -173,8 +171,8 @@ class StreamCdcSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val corpus = Seq((1L, noise("a", 12) + " " + sharedA),
       (2L, sharedB + " " + noise("b", 12)))
-    val out = Files.createTempDirectory("cdc_idx_out").toString
-    val ckpt = Files.createTempDirectory("cdc_idx_ckpt").toString
+    val out = tempDir("cdc_idx_out")
+    val ckpt = tempDir("cdc_idx_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out, ckpt)
     try {
@@ -206,8 +204,8 @@ class StreamCdcSpec extends SparkTestBase {
       Seq((2L * i + 1, noise(s"a$i", 10) + " " + sharedA),
         (2L * i + 2, sharedB + " " + noise(s"b$i", 10)))
     }
-    val out = Files.createTempDirectory("cdc_compact_out").toString
-    val ckpt = Files.createTempDirectory("cdc_compact_ckpt").toString
+    val out = tempDir("cdc_compact_out")
+    val ckpt = tempDir("cdc_compact_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out,
       ckpt, nBuckets = 4, compactEvery = 2)
@@ -248,7 +246,7 @@ class StreamCdcSpec extends SparkTestBase {
     "and a merge only the two epochs it merges — the big base epoch " +
     "is NEVER rewritten until its own doubling point") {
     import graft.streaming.TieredIndex
-    val out = Files.createTempDirectory("cdc_lsm_out").toString
+    val out = tempDir("cdc_lsm_out")
     val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint",
       bucketKey = Some(col("fp")), nBuckets = 4)
     idx.checkLayout(spark)
@@ -300,12 +298,12 @@ class StreamCdcSpec extends SparkTestBase {
     "no meta) is rejected loudly at sink start instead of silently " +
     "dropping every legacy posting from pruned probes") {
     implicit val sql = spark.sqlContext
-    val out = Files.createTempDirectory("cdc_flat_out").toString
+    val out = tempDir("cdc_flat_out")
     // plant a flat-layout index: batch_id partitions, no bucket dirs,
     // no meta — what the pre-bucket StreamCdc wrote
     Seq((1L, 30, 1L, 0L)).toDF("fp", "len", "doc_id", "batch_id")
       .write.partitionBy("batch_id").parquet(s"$out/chunks")
-    val ckpt = Files.createTempDirectory("cdc_flat_ckpt").toString
+    val ckpt = tempDir("cdc_flat_ckpt")
     val in = MemoryStream[(Long, String)]
     val err = intercept[IllegalStateException] {
       StreamCdc.sink(in.toDF().toDF("doc_id", "text"), out, ckpt)
@@ -319,16 +317,17 @@ class StreamCdcSpec extends SparkTestBase {
   test("a torn bucket-count meta (unreadable dir) fails with a clear " +
     "corruption error, not a schema-inference mystery") {
     import graft.streaming.TieredIndex
-    val out = Files.createTempDirectory("cdc_meta_out").toString
-    // a crash between meta-dir creation and parquet commit leaves an
-    // empty dir
+    val out = tempDir("cdc_meta_out")
+    // an older build wrote the meta as a parquet dir; a crash between
+    // its creation and the parquet commit left it empty
     assert(new java.io.File(s"$out/index_meta").mkdirs())
     val idx = new TieredIndex(out, "fp bigint, len int, doc_id bigint",
       bucketKey = Some(col("fp")), nBuckets = 8)
     val err = intercept[IllegalStateException] {
       idx.checkLayout(spark)
     }
-    assert(err.getMessage.contains("torn or corrupt"), err.getMessage)
+    assert(err.getMessage.contains("older build") &&
+      err.getMessage.contains("Rebuild the store"), err.getMessage)
   }
 
   test("restart from checkpoint AFTER a compaction: the resumed query " +
@@ -341,8 +340,8 @@ class StreamCdcSpec extends SparkTestBase {
     }
     val post = Seq((100L, noise("z", 4) + " " + sharedA + " " +
       noise("y", 4)))
-    val out = Files.createTempDirectory("cdc_compres_out").toString
-    val ckpt = Files.createTempDirectory("cdc_compres_ckpt").toString
+    val out = tempDir("cdc_compres_out")
+    val ckpt = tempDir("cdc_compres_ckpt")
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
     val q1 = StreamCdc.sink(docs, out, ckpt, nBuckets = 4,
@@ -372,8 +371,8 @@ class StreamCdcSpec extends SparkTestBase {
       Seq((2L * i + 1, noise(s"e$i", 10) + " " + sharedA),
         (2L * i + 2, sharedB + " " + noise(s"f$i", 10)))
     }
-    val out = Files.createTempDirectory("cdc_prune_out").toString
-    val ckpt = Files.createTempDirectory("cdc_prune_ckpt").toString
+    val out = tempDir("cdc_prune_out")
+    val ckpt = tempDir("cdc_prune_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out,
       ckpt, nBuckets = 8, compactEvery = 2)
@@ -405,14 +404,14 @@ class StreamCdcSpec extends SparkTestBase {
     "different nBuckets fails loudly instead of silently mis-pruning") {
     implicit val sql = spark.sqlContext
     val docs = Seq((1L, noise("i", 10) + " " + sharedA))
-    val out = Files.createTempDirectory("cdc_nb_out").toString
-    val ck1 = Files.createTempDirectory("cdc_nb_ck1").toString
+    val out = tempDir("cdc_nb_out")
+    val ck1 = tempDir("cdc_nb_ck1")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out, ck1,
       nBuckets = 8)
     try { input.addData(docs); q.processAllAvailable() } finally q.stop()
 
-    val ck2 = Files.createTempDirectory("cdc_nb_ck2").toString
+    val ck2 = tempDir("cdc_nb_ck2")
     val in2 = MemoryStream[(Long, String)]
     val err = intercept[IllegalArgumentException] {
       StreamCdc.sink(in2.toDF().toDF("doc_id", "text"), out, ck2,
@@ -427,8 +426,8 @@ class StreamCdcSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val docs = Seq((1L, noise("g", 10) + " " + sharedA),
       (2L, sharedA + " " + noise("h", 10)))
-    val out = Files.createTempDirectory("cdc_torn_out").toString
-    val ckpt = Files.createTempDirectory("cdc_torn_ckpt").toString
+    val out = tempDir("cdc_torn_out")
+    val ckpt = tempDir("cdc_torn_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out, ckpt)
     try { input.addData(docs); q.processAllAvailable() } finally q.stop()
@@ -457,8 +456,8 @@ class StreamCdcSpec extends SparkTestBase {
     val b2 = Seq((3L, noise("r", 5) + " " + sharedB),
       (4L, sharedB + " " + noise("s", 5)))
     val b3 = Seq((5L, noise("t", 5) + " " + sharedA + " " + noise("u", 5)))
-    val out = Files.createTempDirectory("cdc_cross_out").toString
-    val ckpt = Files.createTempDirectory("cdc_cross_ckpt").toString
+    val out = tempDir("cdc_cross_out")
+    val ckpt = tempDir("cdc_cross_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCdc.sink(input.toDF().toDF("doc_id", "text"), out,
       ckpt, maxDocsPerChunk = 2)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -18,7 +16,7 @@ class StreamClustersSpec extends SparkTestBase {
     "set; replayed batches are idempotent; incomplete generations are " +
     "invisible") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-clusters-").toString
+    val dir = tempDir("stream-clusters-")
 
     val b1 = Seq((1L, 2L), (2L, 3L), (10L, 11L))
     val b2 = Seq((11L, 20L), (30L, 31L)) // merges 10s and 20, new 30s
@@ -28,7 +26,7 @@ class StreamClustersSpec extends SparkTestBase {
     val q = in.toDF().toDF("doc_a", "doc_b")
       .writeStream.foreachBatch(StreamClusters.sink(dir))
       .option("checkpointLocation",
-        Files.createTempDirectory("stream-clusters-ckpt-").toString)
+        tempDir("stream-clusters-ckpt-"))
       .start()
     try {
       def check(closed: Seq[(Long, Long)]): Unit = {
@@ -67,7 +65,7 @@ class StreamClustersSpec extends SparkTestBase {
   test("old generations prune themselves: after 10 batches at most two " +
     "generations remain, and replaying the last batch is a no-op") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-clusters-prune-").toString
+    val dir = tempDir("stream-clusters-prune-")
     // a chain 0-1-2-…-20 grown two edges per batch
     val batches = (0 until 10).map(i =>
       Seq((2L * i, 2L * i + 1), (2L * i + 1, 2L * i + 2)))
@@ -90,7 +88,7 @@ class StreamClustersSpec extends SparkTestBase {
 
   test("empty store reads as an empty labels relation with the right " +
     "schema") {
-    val dir = Files.createTempDirectory("stream-clusters-empty-").toString
+    val dir = tempDir("stream-clusters-empty-")
     val l = StreamClusters.labels(spark, s"$dir/nope")
     assert(l.columns.toSeq === Seq("node", "component"))
     assert(l.count() === 0)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -27,7 +25,7 @@ class StreamContainmentSpec extends SparkTestBase {
   test("N micro-batches equal batch containmentPairs after every " +
     "prefix; replay and compaction are no-ops; loop continues after") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-containment-").toString
+    val dir = tempDir("stream-containment-")
 
     val all = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -46,7 +44,7 @@ class StreamContainmentSpec extends SparkTestBase {
       .writeStream
       .foreachBatch(StreamContainment.sink(dir, threshold, n))
       .option("checkpointLocation",
-        Files.createTempDirectory("stream-containment-ckpt-").toString)
+        tempDir("stream-containment-ckpt-"))
       .start()
     try {
       var closed: Option[DataFrame] = None
@@ -130,7 +128,7 @@ class StreamContainmentSpec extends SparkTestBase {
   test("at threshold 1.0 the stream equals containmentPairs at 1.0 " +
     "(exact containment: one-gram probing prefixes)") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-containment-t1-").toString
+    val dir = tempDir("stream-containment-t1-")
     val all = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val (first, second) = all.splitAt(all.size / 2)
@@ -143,7 +141,7 @@ class StreamContainmentSpec extends SparkTestBase {
       .writeStream
       .foreachBatch(StreamContainment.sink(dir, 1.0, n))
       .option("checkpointLocation",
-        Files.createTempDirectory("stream-containment-t1-ckpt-").toString)
+        tempDir("stream-containment-t1-ckpt-"))
       .start()
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
@@ -156,7 +154,7 @@ class StreamContainmentSpec extends SparkTestBase {
 
   test("a threshold outside (0, 1] is rejected when the sink is built, " +
     "before any query starts") {
-    val dir = Files.createTempDirectory("stream-containment-bad-").toString
+    val dir = tempDir("stream-containment-bad-")
     for (t <- Seq(0.0, 1.5))
       intercept[IllegalArgumentException] {
         StreamContainment.sink(dir, threshold = t, n = n)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -21,7 +19,7 @@ class StreamCorpusLoopSpec extends SparkTestBase {
   test("N micro-batches through the loop equal the batch recompute " +
     "after every prefix; replayed batches are idempotent") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-corpus-loop-").toString
+    val dir = tempDir("stream-corpus-loop-")
 
     val all = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -39,7 +37,7 @@ class StreamCorpusLoopSpec extends SparkTestBase {
     val q = in.toDF().toDF("doc_id", "text")
       .writeStream.foreachBatch(StreamCorpusLoop.sink(dir))
       .option("checkpointLocation",
-        Files.createTempDirectory("stream-corpus-loop-ckpt-").toString)
+        tempDir("stream-corpus-loop-ckpt-"))
       .start()
     try {
       var closed: Option[DataFrame] = None
@@ -153,7 +151,7 @@ class StreamCorpusLoopSpec extends SparkTestBase {
     "compactEvery=5 keep the store's directory count bounded and the " +
     "artifacts equal to the batch recompute") {
     implicit val sql = spark.sqlContext
-    val dir = Files.createTempDirectory("stream-corpus-auto-").toString
+    val dir = tempDir("stream-corpus-auto-")
     val all = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
@@ -166,7 +164,7 @@ class StreamCorpusLoopSpec extends SparkTestBase {
       .writeStream
       .foreachBatch(StreamCorpusLoop.sink(dir, compactEvery = 5))
       .option("checkpointLocation",
-        Files.createTempDirectory("stream-corpus-auto-ckpt-").toString)
+        tempDir("stream-corpus-auto-ckpt-"))
       .start()
     try {
       for (s <- slices) { in.addData(s); q.processAllAvailable() }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -66,8 +64,8 @@ class StreamCrossModalSpec extends SparkTestBase {
       Seq((5L, textTwin(t4, "9876543210" * 3))), // text cross
       Seq((6L, mediaTwin(t4))),            // media cross over a fold
       Seq((7L, groupText(13))))            // singleton — never labeled
-    val out = Files.createTempDirectory("xmodal_stream_out").toString
-    val ckpt = Files.createTempDirectory("xmodal_stream_ckpt").toString
+    val out = tempDir("xmodal_stream_out")
+    val ckpt = tempDir("xmodal_stream_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamCrossModal.sink(input.toDF().toDF("doc_id", "text"),
@@ -99,8 +97,8 @@ class StreamCrossModalSpec extends SparkTestBase {
     val d1 = (1L, textTwin(t, "0" * 21))
     val d2 = (2L, textTwin(t, "1" * 23))
     val d3 = (3L, textTwin(t, "2" * 25))
-    val out = Files.createTempDirectory("xmodal_cap_out").toString
-    val ckpt = Files.createTempDirectory("xmodal_cap_ckpt").toString
+    val out = tempDir("xmodal_cap_out")
+    val ckpt = tempDir("xmodal_cap_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCrossModal.sink(input.toDF().toDF("doc_id", "text"),
       out, ckpt, maxParaDf = 2, nBuckets = 8)
@@ -122,10 +120,10 @@ class StreamCrossModalSpec extends SparkTestBase {
     val t = groupText(5)
     val b1 = Seq((1L, t), (2L, textTwin(t, "3" * 25)))
     val b2 = Seq((3L, mediaTwin(t)))
-    val out = Files.createTempDirectory("xmodal_replay_out").toString
+    val out = tempDir("xmodal_replay_out")
 
     def run(): Unit = {
-      val ckpt = Files.createTempDirectory("xmodal_replay_ck").toString
+      val ckpt = tempDir("xmodal_replay_ck")
       val in = MemoryStream[(Long, String)]
       val q = StreamCrossModal.sink(in.toDF().toDF("doc_id", "text"),
         out, ckpt, nBuckets = 8)
@@ -151,8 +149,8 @@ class StreamCrossModalSpec extends SparkTestBase {
       val t = groupText(17 + i)
       Seq((2L * i + 1, t), (2L * i + 2, mediaTwin(t)))
     }
-    val out = Files.createTempDirectory("xmodal_prune_out").toString
-    val ckpt = Files.createTempDirectory("xmodal_prune_ckpt").toString
+    val out = tempDir("xmodal_prune_out")
+    val ckpt = tempDir("xmodal_prune_ckpt")
     val input = MemoryStream[(Long, String)]
     val q = StreamCrossModal.sink(input.toDF().toDF("doc_id", "text"),
       out, ckpt, nBuckets = 8, compactEvery = 2)

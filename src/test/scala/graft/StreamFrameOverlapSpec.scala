@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -51,8 +49,8 @@ class StreamFrameOverlapSpec extends SparkTestBase {
       Seq(rec(7L, 10, 11)),                 // cross to batch 0
       Seq(rec(8L, 80, 81)),
       Seq(rec(9L, 50, 51, 50)))             // cross; repeated block
-    val out = Files.createTempDirectory("frame_stream_out").toString
-    val ckpt = Files.createTempDirectory("frame_stream_ckpt").toString
+    val out = tempDir("frame_stream_out")
+    val ckpt = tempDir("frame_stream_ckpt")
 
     val input = MemoryStream[MediaRecord]
     val q = StreamFrameOverlap.sink(input.toDS(), out, ckpt,
@@ -88,8 +86,8 @@ class StreamFrameOverlapSpec extends SparkTestBase {
     // keys and ALL pairs; the stream keeps (1,2) and emits nothing new
     val b0 = Seq(rec(1L, 10, 11), rec(2L, 10, 11))
     val b1 = Seq(rec(3L, 10, 11))
-    val out = Files.createTempDirectory("frame_cap_out").toString
-    val ckpt = Files.createTempDirectory("frame_cap_ckpt").toString
+    val out = tempDir("frame_cap_out")
+    val ckpt = tempDir("frame_cap_ckpt")
     val input = MemoryStream[MediaRecord]
     val q = StreamFrameOverlap.sink(input.toDS(), out, ckpt,
       maxMediaPerFrame = 2, nBuckets = 8)
@@ -112,10 +110,10 @@ class StreamFrameOverlapSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val b1 = Seq(rec(1L, 10, 11), rec(2L, 10, 11, 20))
     val b2 = Seq(rec(3L, 10, 11), rec(4L, 40, 41))
-    val out = Files.createTempDirectory("frame_replay_out").toString
+    val out = tempDir("frame_replay_out")
 
     def run(): Unit = {
-      val ckpt = Files.createTempDirectory("frame_replay_ckpt").toString
+      val ckpt = tempDir("frame_replay_ckpt")
       val in = MemoryStream[MediaRecord]
       val q = StreamFrameOverlap.sink(in.toDS(), out, ckpt, nBuckets = 8)
       try {
@@ -152,8 +150,8 @@ class StreamFrameOverlapSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val batches = (0 until 4).map(i =>
       Seq(rec(2L * i, 10 + i, 20 + i), rec(2L * i + 1, 40 + i, 50 + i)))
-    val out = Files.createTempDirectory("frame_prune_out").toString
-    val ckpt = Files.createTempDirectory("frame_prune_ckpt").toString
+    val out = tempDir("frame_prune_out")
+    val ckpt = tempDir("frame_prune_ckpt")
     val input = MemoryStream[MediaRecord]
     val q = StreamFrameOverlap.sink(input.toDS(), out, ckpt,
       nBuckets = 8, compactEvery = 2)

@@ -23,8 +23,7 @@ class StreamKMeansAssignSpec extends SparkTestBase {
     val cents = KMeans.trainCentroids(embs, k = 3, iters = 2)
 
     // artifact round trip: assign(loaded) must equal assign(trained)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmeans_artifact_").toString
+    val dir = tempDir("graft_kmeans_artifact_")
     KMeans.saveCentroids(cents, dir)
     val loaded = KMeans.loadCentroids(spark, dir)
     val want = KMeans.assign(embs, cents)
@@ -63,8 +62,7 @@ class StreamKMeansAssignSpec extends SparkTestBase {
       (i.toLong, Seq.tabulate(3)(j => (i * 0.1f + j))))
       .toDF("vec_id", "embedding")
     val cents = KMeans.trainCentroids(embs, k = 2, iters = 1)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmeans_bad_").toString
+    val dir = tempDir("graft_kmeans_bad_")
     KMeans.saveCentroids(cents, dir)
     // truncate the centroid table under the stamp
     val keep = spark.read.parquet(s"$dir/centroids")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -45,8 +43,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
       Seq(rec(8L, 10)),                           // cross to batch 0
       Seq(rec(9L, 90)),
       Seq(rec(10L, 50)))                          // cross to batch 1
-    val out = Files.createTempDirectory("media_stream_out").toString
-    val ckpt = Files.createTempDirectory("media_stream_ckpt").toString
+    val out = tempDir("media_stream_out")
+    val ckpt = tempDir("media_stream_ckpt")
 
     val input = MemoryStream[MediaRecord]
     val q = StreamMediaDedup.sink(input.toDS(), out, ckpt,
@@ -75,10 +73,10 @@ class StreamMediaDedupSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val b1 = Seq(rec(1L, 10), rec(2L, 10))
     val b2 = Seq(rec(3L, 10), rec(4L, 40))
-    val out = Files.createTempDirectory("media_replay_out").toString
+    val out = tempDir("media_replay_out")
 
     def run(): Unit = {
-      val ckpt = Files.createTempDirectory("media_replay_ckpt").toString
+      val ckpt = tempDir("media_replay_ckpt")
       val in = MemoryStream[MediaRecord]
       val q = StreamMediaDedup.sink(in.toDS(), out, ckpt,
         threshold = 0.999, nBuckets = 8)
@@ -109,8 +107,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val pre = (0 until 4).map(i => Seq(rec(i.toLong, 10 + i)))
     val post = Seq(rec(100L, 10)) // dups batch-0's payload
-    val out = Files.createTempDirectory("media_restart_out").toString
-    val ckpt = Files.createTempDirectory("media_restart_ckpt").toString
+    val out = tempDir("media_restart_out")
+    val ckpt = tempDir("media_restart_ckpt")
     val input = MemoryStream[MediaRecord]
     val q1 = StreamMediaDedup.sink(input.toDS(), out, ckpt,
       threshold = 0.999, nBuckets = 8, compactEvery = 2)
@@ -150,8 +148,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val batches = (0 until 4).map(i =>
       Seq(rec(2L * i, 10 + i), rec(2L * i + 1, 40 + i)))
-    val out = Files.createTempDirectory("media_prune_out").toString
-    val ckpt = Files.createTempDirectory("media_prune_ckpt").toString
+    val out = tempDir("media_prune_out")
+    val ckpt = tempDir("media_prune_ckpt")
     val input = MemoryStream[MediaRecord]
     val q = StreamMediaDedup.sink(input.toDS(), out, ckpt,
       threshold = 0.999, nBuckets = 8, compactEvery = 2)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -31,8 +29,8 @@ class StreamSpanDedupSpec extends SparkTestBase {
         (4L, runB)),                              // canonical holder
       Seq((5L, s"${toks("e", 2)} $runB ${toks("f", 2)}"), // cross-batch
         (6L, toks("solo", 9))))                   // untouched
-    val out = Files.createTempDirectory("span_dedup_out").toString
-    val ckpt = Files.createTempDirectory("span_dedup_ckpt").toString
+    val out = tempDir("span_dedup_out")
+    val ckpt = tempDir("span_dedup_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamSpanDedup.sink(input.toDF().toDF("doc_id", "text"),
@@ -61,8 +59,8 @@ class StreamSpanDedupSpec extends SparkTestBase {
     "re-running the sink over the same checkpointed data changes nothing") {
     implicit val sql = spark.sqlContext
     val run = toks("z", 5)
-    val out = Files.createTempDirectory("span_replay_out").toString
-    val ckpt = Files.createTempDirectory("span_replay_ckpt").toString
+    val out = tempDir("span_replay_out")
+    val ckpt = tempDir("span_replay_ckpt")
 
     val in1 = MemoryStream[(Long, String)]
     val q1 = StreamSpanDedup.sink(in1.toDF().toDF("doc_id", "text"),
@@ -79,7 +77,7 @@ class StreamSpanDedupSpec extends SparkTestBase {
     // second run, fresh checkpoint, same batches replayed into the same
     // outDir: dynamic partition overwrite + strictly-older probe must
     // leave the views identical
-    val ckpt2 = Files.createTempDirectory("span_replay_ckpt2").toString
+    val ckpt2 = tempDir("span_replay_ckpt2")
     val in2 = MemoryStream[(Long, String)]
     val q2 = StreamSpanDedup.sink(in2.toDF().toDF("doc_id", "text"),
       out, ckpt2, windowTokens = 5)

@@ -49,8 +49,7 @@ class StreamUnigramTokenizeSpec extends SparkTestBase {
     // artifact round trip + ids variant: encodeIds from the LOADED
     // vocabulary equals encodeIds from the trained one, and the
     // streaming ids projection agrees
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_unigram_artifact_").toString
+    val dir = tempDir("graft_unigram_artifact_")
     Unigram.saveUnigramTokenizer(vocab, dir)
     val loaded = Unigram.loadUnigramTokenizer(spark, dir)
     val wantIds = Unigram.encodeIds(docs, col("doc_id"), col("text"),
@@ -100,8 +99,7 @@ class StreamUnigramTokenizeSpec extends SparkTestBase {
       assert(got(2L) === (("", 0L)))
     } finally q.stop()
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_unigram_bad_").toString
+    val dir = tempDir("graft_unigram_bad_")
     Unigram.saveUnigramTokenizer(vocab, dir)
     // corrupt the stamp: drop a row from the vocab parquet
     val v = spark.read.parquet(s"$dir/vocab").filter($"piece" =!= "a")

@@ -49,8 +49,7 @@ class StreamWordpieceTokenizeSpec extends SparkTestBase {
     // artifact round trip + ids variant: wordpieceEncodeIds from the
     // LOADED vocabulary equals the trained one, and the streaming ids
     // projection agrees (stream ≡ batch on a loaded artifact)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_wordpiece_artifact_").toString
+    val dir = tempDir("graft_wordpiece_artifact_")
     Unigram.saveUnigramTokenizer(vocab, dir)
     val loaded = Unigram.loadUnigramTokenizer(spark, dir)
     val wantIds = Unigram.wordpieceEncodeIds(docs, col("doc_id"),

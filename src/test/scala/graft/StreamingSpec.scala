@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -112,8 +113,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("dual-sink: one stream read feeds both register aggregations") {
     implicit val sql = spark.sqlContext
-    val out = Files.createTempDirectory("graft_dual_").toString
-    val ckpt = Files.createTempDirectory("graft_dual_ckpt_").toString
+    val out = tempDir("graft_dual_")
+    val ckpt = tempDir("graft_dual_ckpt_")
 
     // views are empty (not failing) before the first batch commits
     assert(RegisterStream.totalsView(spark, out).count() === 0)
@@ -142,7 +143,7 @@ class StreamingSpec extends SparkTestBase {
 
     // replay: a fresh checkpoint re-delivers the same batches with the
     // same ids — dynamic partition overwrite must not double-count
-    val ckpt2 = Files.createTempDirectory("graft_dual_ckpt2_").toString
+    val ckpt2 = tempDir("graft_dual_ckpt2_")
     val replay = MemoryStream[String]
     val q2 = RegisterStream.dualSink(
       RegisterStream.parse(replay.toDF()), out, ckpt2)
@@ -161,8 +162,8 @@ class StreamingSpec extends SparkTestBase {
   test("dual-sink compaction: views identical before and after; retired " +
     "partitions garbage-collected; idempotent") {
     implicit val sql = spark.sqlContext
-    val out = Files.createTempDirectory("graft_compact_").toString
-    val ckpt = Files.createTempDirectory("graft_compact_ckpt_").toString
+    val out = tempDir("graft_compact_")
+    val ckpt = tempDir("graft_compact_ckpt_")
     val input = MemoryStream[String]
     val q = RegisterStream.dualSink(
       RegisterStream.parse(input.toDF()), out, ckpt)
@@ -213,8 +214,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("dual-sink: a micro-batch runs at most 2 jobs and compiles no new code") {
     implicit val sql = spark.sqlContext
-    val out = Files.createTempDirectory("graft_dual_jobs_").toString
-    val ckpt = Files.createTempDirectory("graft_dual_jobs_ckpt_").toString
+    val out = tempDir("graft_dual_jobs_")
+    val ckpt = tempDir("graft_dual_jobs_ckpt_")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -254,12 +255,73 @@ class StreamingSpec extends SparkTestBase {
       awaitPlans()
       assert(!plans.isEmpty)
       plans.forEach(p => assert(!p.contains("InMemory"), p))
+      // the batch aggregates per 6-second tumble: no sliding-window
+      // expansion before the exchange
+      plans.forEach(p => assert(!p.contains("Expand"), p))
       assert(RegisterStream.totalsView(spark, out).as[(String, Long)]
         .collect().toMap === Map("PC" -> 60L, "APP" -> 30L))
     } finally {
       spark.listenerManager.unregister(listener)
       q.stop()
     }
+  }
+
+  test("dual-sink: over 18 micro-batches (a fold included) the views " +
+    "equal the batch sliding counts and per-platform totals, events on " +
+    "and 1 µs before a slide boundary included") {
+    implicit val sql = spark.sqlContext
+    val out = tempDir("graft_dual_eq_")
+    val ckpt = tempDir("graft_dual_eq_ckpt_")
+    // `platform \t time` lines with microsecond times; an unparseable
+    // time reads as null and reaches the sink, which must skip it
+    def parse(lines: DataFrame): DataFrame = {
+      val f = split(col("value"), "\t")
+      lines.select(f(0).as("platform"),
+        f(1).try_cast("timestamp").as("createTime"))
+    }
+    val t0 = java.time.LocalDateTime.parse("2019-07-16T16:00:00")
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    def at(platform: String, us: Long) =
+      s"$platform\t${t0.plusNanos(us * 1000).format(fmt)}"
+    val slideUs = 6000000L
+    // each batch: an event on a slide boundary, one 1 µs before the
+    // next, one mid-slide whose windows overlap earlier batches', and
+    // every third batch a line with an unparseable time
+    val batches = (0 until 18).map { b =>
+      Seq(at("PC", (2 * b + 1) * slideUs),
+        at("APP", (2 * b + 2) * slideUs - 1),
+        at(Seq("PC", "APP", "Other")(b % 3), b * slideUs / 2 + 3000000L)) ++
+        (if (b % 3 == 0) Seq("PC\t2019-07-16 99:99:99") else Nil)
+    }
+    val input = MemoryStream[String]
+    val q = RegisterStream.dualSink(parse(input.toDF()), out, ckpt)
+    try batches.foreach { lines =>
+      input.addData(lines); q.processAllAvailable()
+    } finally q.stop()
+    assert(RegisterStream.store(out).liveEpochs(spark).nonEmpty)
+
+    val events = parse(batches.flatten.toDF("value"))
+      .filter($"createTime".isNotNull)
+    val windowed = RegisterStream.windowedView(spark, out)
+      .select(date_format($"window_start", "yyyy-MM-dd HH:mm:ss"),
+        $"platform", $"n").as[(String, String, Long)].collect()
+    val batchWindowed = graft.analytics.RegisterAnalytics.slidingCounts(
+        events, $"createTime", $"platform", "60 seconds", "6 seconds")
+      .as[(String, String, Long)].collect()
+    assert(windowed.length === batchWindowed.length)
+    assert(windowed.toSet === batchWindowed.toSet)
+    // slidingCounts also goes through tumbles; the one-level expansion
+    // of every raw event into its windows is the independent oracle
+    val expanded = events
+      .groupBy(window($"createTime", "60 seconds", "6 seconds").as("w"),
+        $"platform").count()
+      .select(date_format($"w.start", "yyyy-MM-dd HH:mm:ss"), $"platform",
+        $"count").as[(String, String, Long)].collect()
+    assert(windowed.toSet === expanded.toSet)
+    assert(RegisterStream.totalsView(spark, out).as[(String, Long)]
+      .collect().toMap === events.groupBy($"platform").count()
+      .as[(String, Long)].collect().toMap)
   }
 
   test("non-text stream source: the generic transport branch drives a " +
@@ -365,8 +427,8 @@ class StreamingSpec extends SparkTestBase {
       Seq((1L, baseA), (2L, baseA + "tail edit")),            // within-batch
       Seq((3L, baseA + "other tail"), (4L, baseB)),           // cross-batch
       Seq((5L, baseB + "tail edit"), (6L, other)))            // cross-batch
-    val out = Files.createTempDirectory("near_dedup_out").toString
-    val ckpt = Files.createTempDirectory("near_dedup_ckpt").toString
+    val out = tempDir("near_dedup_out")
+    val ckpt = tempDir("near_dedup_ckpt")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamNearDedup.sink(input.toDF().toDF("doc_id", "text"),
@@ -395,7 +457,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("fixture producers: generated logs parse cleanly end-to-end") {
     import graft.sources.{FixtureProducers, LogParsers}
-    val dir = Files.createTempDirectory("graft_prod_").toString
+    val dir = tempDir("graft_prod_")
     FixtureProducers.produce(
       FixtureProducers.registerLines(spark, 300, partitions = 3), dir)
     val parsed = LogParsers.parseRegister(spark.read.text(dir).toDF("value"))
@@ -414,7 +476,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("end-to-end: file-source stream equals batch over the same logs") {
-    val dir = Files.createTempDirectory("graft_logs_").toString
+    val dir = tempDir("graft_logs_")
     val lines = registerLines(5, "1", "2019-07-16 10:00:00") ++
       registerLines(3, "2", "2019-07-16 11:30:00") ++
       Seq("malformed line") ++
@@ -445,8 +507,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("raw archive: day-partitioned exactly-once file sink") {
     implicit val sql = spark.sqlContext
-    val out = Files.createTempDirectory("graft_archive_").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt_").toString
+    val out = tempDir("graft_archive_")
+    val ckpt = tempDir("graft_ckpt_")
     val input = MemoryStream[(String, String)]
     val records = input.toDF().toDF("key", "value")
       .withColumn("ts", try_to_timestamp(col("key")))

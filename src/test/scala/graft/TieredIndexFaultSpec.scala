@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -282,11 +280,11 @@ class TieredIndexFaultSpec extends SparkTestBase {
     for (r <- routes) {
       // the no-crash reference; the crash run starts from a copy of its
       // first two triggers
-      val ref = Files.createTempDirectory(s"fault-ref-${r.name}-").toString
+      val ref = tempDir(s"fault-ref-${r.name}-")
       r.seed(ref)
       trigger(r, ref, 0L)
       trigger(r, ref, 1L)
-      val out = Files.createTempDirectory(s"fault-${r.name}-").toString
+      val out = tempDir(s"fault-${r.name}-")
       FileUtils.copyDirectory(new java.io.File(ref), new java.io.File(out))
       (2 until nBatches).foreach(b => trigger(r, ref, b.toLong))
       val want = r.views(ref).map(rowsOf)
@@ -335,9 +333,8 @@ class TieredIndexFaultSpec extends SparkTestBase {
     for (r <- routes) {
       val ce = r.sinkCompactEvery.getOrElse(CompactEvery)
       val n = 3 * ce
-      val out = Files.createTempDirectory(s"bounded-${r.name}-").toString
-      val ckpt = Files.createTempDirectory(s"bounded-ckpt-${r.name}-")
-        .toString
+      val out = tempDir(s"bounded-${r.name}-")
+      val ckpt = tempDir(s"bounded-ckpt-${r.name}-")
       r.seed(out)
       r.runSink(out, ckpt, n, ce)
       r.stores(out).foreach { s =>
@@ -363,40 +360,40 @@ class TieredIndexFaultSpec extends SparkTestBase {
 
   test("a store root holding delta=/base= children (the old corpus-loop " +
     "layout) fails loudly at sink start and asks for a rebuild") {
-    val dir = Files.createTempDirectory("legacy-delta-").toString
+    val dir = tempDir("legacy-delta-")
     Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/accepted/delta=0")
     Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/accepted/base=1")
-    val ckpt = Files.createTempDirectory("legacy-delta-ckpt-").toString
+    val ckpt = tempDir("legacy-delta-ckpt-")
     startFails(runText(1)(foreachBatch(_, ckpt)(StreamCorpusLoop.sink(dir))))
   }
 
   test("a store root holding batch_id= children directly (the old " +
     "near-dedup and pairs layout) fails loudly at sink start and asks " +
     "for a rebuild") {
-    val out = Files.createTempDirectory("legacy-batchid-").toString
+    val out = tempDir("legacy-batchid-")
     Seq((1L, 2L, 0.9, 0L)).toDF("doc_a", "doc_b", "jaccard", "batch_id")
       .write.partitionBy("batch_id").parquet(s"$out/pairs")
-    val ckpt = Files.createTempDirectory("legacy-batchid-ckpt-").toString
+    val ckpt = tempDir("legacy-batchid-ckpt-")
     startFails(runText(1)(StreamNearDedup.sink(_, out, ckpt)))
   }
 
   test("a J1 output dir holding windowed/totals contribution stores (the " +
     "old dual-sink layout) fails loudly at sink start and asks for a " +
     "rebuild") {
-    val out = Files.createTempDirectory("legacy-dual-").toString
+    val out = tempDir("legacy-dual-")
     Seq(("PC", 1L, 0L)).toDF("platform", "n", "batch_id")
       .write.partitionBy("batch_id").parquet(s"$out/totals")
-    val ckpt = Files.createTempDirectory("legacy-dual-ckpt-").toString
+    val ckpt = tempDir("legacy-dual-ckpt-")
     startFails(runStream(1, registerBatch)(lines => RegisterStream
       .dualSink(RegisterStream.parse(lines.toDF()), out, ckpt)))
   }
 
   test("a J2 table holding bucket= children (the old swap-protocol " +
     "layout) fails loudly at sink start and asks for a rebuild") {
-    val table = Files.createTempDirectory("legacy-swap-").toString + "/t"
+    val table = tempDir("legacy-swap-") + "/t"
     Seq((1, 10L, 0)).toDF("uid", "v", "bucket")
       .write.partitionBy("bucket").parquet(table)
-    val ckpt = Files.createTempDirectory("legacy-swap-ckpt-").toString
+    val ckpt = tempDir("legacy-swap-ckpt-")
     startFails(runStream(1, qzBatch)(
       QzMasteryStream.startDetailSink(_, table, ckpt)))
   }

@@ -4,14 +4,17 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.TieredIndex
+import graft.streaming.{RegisterStream, TieredIndex}
 
 /** Job-count and pruning laws of [[TieredIndex.probe]], the read every
   * bucketed streaming route makes per micro-batch: the store computes
   * the batch's buckets itself, so what a probe costs is the store's
-  * contract, not each route's. */
+  * contract, not each route's. Then the laws of the layout check every
+  * sink start makes: no job, and a store of another row schema or of
+  * an older build's meta fails. */
 class TieredIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -27,7 +30,7 @@ class TieredIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     * one base epoch, batch 2 in the recent tier. */
   private def filled(name: String, idx: String => TieredIndex)
       : (String, TieredIndex) = {
-    val dir = Files.createTempDirectory(name).toString
+    val dir = tempDir(name)
     val s = idx(dir)
     s.checkLayout(spark)
     s.append(part(0), 0L)
@@ -70,5 +73,46 @@ class TieredIndexSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       } finally w.close()
     }
     assert(want >= 4 && scanned.sum === want, s"$scanned vs $want")
+  }
+
+  test("checkLayout runs no job, on a fresh store and on an existing one") {
+    val dir = tempDir("tiered_meta")
+    def store = new TieredIndex(dir, schema, bucketKey = Some(col("fp")),
+      nBuckets = 8)
+    val (_, fresh) = jobsOf("layout-fresh")(store.checkLayout(spark))
+    assert(fresh.isEmpty, s"jobs (id, tasks): $fresh")
+    store.append(part(0), 0L)
+    val (_, existing) = jobsOf("layout-existing")(store.checkLayout(spark))
+    assert(existing.isEmpty, s"jobs (id, tasks): $existing")
+  }
+
+  test("checkLayout: a store built with another row schema fails and " +
+    "asks for a rebuild") {
+    val dir = tempDir("tiered_schema")
+    new TieredIndex(dir, schema).checkLayout(spark)
+    val err = intercept[IllegalArgumentException](
+      new TieredIndex(dir, "fp bigint, doc_id string").checkLayout(spark))
+    assert(err.getMessage.contains("row schema") &&
+      err.getMessage.contains("Rebuild the store"), err.getMessage)
+  }
+
+  test("a J1 store in the older tagged-row layout, with its parquet " +
+    "meta, fails at dual-sink start instead of reading its rows as " +
+    "per-slide counts") {
+    implicit val sql = spark.sqlContext
+    val out = tempDir("tiered_j1_tagged")
+    val ckpt = tempDir("tiered_j1_tagged_ckpt")
+    // what the older build wrote: a parquet meta dir and one batch of
+    // (kind, window_start, window_end, platform, n) rows
+    Seq(1).toDF("n_buckets").coalesce(1).write.parquet(s"$out/index_meta")
+    val ts = java.sql.Timestamp.valueOf("2019-07-16 16:01:00")
+    Seq(("window", Some(ts), Some(ts), "PC", 3L, 0),
+        ("total", None, None, "PC", 3L, 0))
+      .toDF("kind", "window_start", "window_end", "platform", "n", "bucket")
+      .write.partitionBy("bucket").parquet(s"$out/chunks/batch_id=0")
+    val input = MemoryStream[String]
+    val err = intercept[IllegalStateException](RegisterStream.dualSink(
+      RegisterStream.parse(input.toDF()), out, ckpt))
+    assert(err.getMessage.contains("Rebuild the store"), err.getMessage)
   }
 }
